@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with per-query `[wall, cpu, gc]` seconds
   * and totals at the scale factor in SPARK_GRAFT_SF_DIR. A warmup pass at
   * sf0.001 first JIT-compiles the generated code paths so the timings
@@ -15,22 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // STATIC conf, must be set at session build: the default 100-entry
-      // codegen class cache evicts every query's generated classes long
-      // before its second timed pass in a 181-query session (~900 codegen
-      // stages/pass), so pass B re-pays Janino compilation + fresh JIT
-      // for every stage — cpu inflation with flat gc, growing with query
-      // count. Sized to hold the whole session's stages.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.ensureConf(spark)
+    val spark = Tables.localSession()
 
     // optional arg: regex over query names (local iteration only — the
     // driver always runs with no args)
@@ -138,17 +121,8 @@ object Bench {
       if (ok) (dt, dc, dg, l0, dj, cc) else (-1.0, -1.0, -1.0, l0, dj, cc)
     }
 
-    // Optional seeded order shuffle (local attribution runs only — the
-    // driver never sets it): a session-position effect (JIT/code-cache
-    // pressure growing with queries run) follows POSITION under reorder,
-    // while a genuinely slower query stays slow at any position.
-    val ordered = sys.env.get("SPARK_GRAFT_ORDER_SEED") match {
-      case Some(seed) => new scala.util.Random(seed.toLong).shuffle(names)
-      case None       => names
-    }
-
     // warmup at the smallest sf (JIT + parquet footer caches)
-    ordered.foreach { name =>
+    names.foreach { name =>
       try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
       catch { case _: Throwable => () }
       finally sweep()
@@ -162,10 +136,10 @@ object Bench {
     // the inflation to the other end of the alphabet. Interleaving whole
     // passes puts every query's second run in steady state, so
     // min(passA, passB) is transient-free for all of them.
-    val passA = ordered.map(name => name -> time(name)).toMap
+    val passA = names.map(name => name -> time(name)).toMap
     // keep the full tuple of the faster pass — mixing passes would pair
     // a wall time with another run's CPU/GC/JIT burn
-    val resultsFull = ordered.map { name =>
+    val resultsFull = names.map { name =>
       val a = passA(name)
       val b = time(name)
       name -> (if (a._1 < 0 || b._1 < 0) (-1.0, -1.0, -1.0, a._4, a._5, a._6)
@@ -197,11 +171,11 @@ object Bench {
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val cpuTotal = results.map(_._2._2).filter(_ >= 0).sum
     val gcTotal = results.map(_._2._3).filter(_ >= 0).sum
-    // cores = the parallelism the run ACTUALLY used (local[$cpus]), not
-    // availableProcessors(): the driver re-runs the bench at a lower
-    // SPARK_GRAFT_CPUS to measure scaling, and an 8-core artifact that
-    // says "cores":32 poisons that analysis (r18 verdict finding #3).
-    val cores = cpus
+    // cores = the parallelism the run ACTUALLY used, not the host's
+    // processor count: the bench is re-run at a lower SPARK_GRAFT_CPUS to
+    // measure scaling, and an 8-core artifact that says "cores":32
+    // poisons that analysis.
+    val cores = spark.sparkContext.defaultParallelism
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     def render(qs: Seq[(String, (Double, Double, Double))]): String = {
@@ -218,16 +192,16 @@ object Bench {
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","cpu_total":${r3(cpuTotal)},"gc_total":${r3(gcTotal)},"cores":$cores,"load_avg":${r3(loadAvg)},"n_total":${results.size},"n_queries":${qs.size},"queries":$m,"sf":"$sfDir"}"""
     }
     // The driver parses the final JSON line out of a ~2000-char tail
-    // capture; 1900 keeps the whole line inside that window (with newline
-    // margin) while carrying ~40+ of the slowest queries instead of 29.
-    val budget = 1900
-    var line = render(results)
-    if (line.length > budget) {
-      val bySlowest = results.sortBy(-_._2._1)
-      var keep = bySlowest.size
-      while (keep > 1 && render(bySlowest.take(keep).sortBy(_._1)).length > budget) keep -= 1
-      line = render(bySlowest.take(keep).sortBy(_._1))
-    }
+    // capture. A 1700-char budget leaves ~300 chars of margin for the
+    // newline and anything printed after the line. Over budget, keep the
+    // slowest queries that fit, down to none: the query-less line is ~230
+    // chars plus the sf path, so the loop always ends within budget.
+    val budget = 1700
+    val bySlowest = results.sortBy(-_._2._1)
+    def lineKeeping(k: Int): String = render(bySlowest.take(k).sortBy(_._1))
+    var keep = bySlowest.size
+    var line = lineKeeping(keep)
+    while (keep > 0 && line.length > budget) { keep -= 1; line = lineKeeping(keep) }
     // Machine-parseable artifact with the FULL per-query table (the
     // stdout line is budgeted to the driver's tail window and may drop
     // fast queries): one JSON object at a stable path in the repo root.

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import graft.runtime.{Capability, ModuleSpec, Session}
 import graft.streaming.LogAnalyser
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Engine boot binary — declarative deployment parity with the reference
@@ -54,13 +53,7 @@ object Main {
         case other => throw new IllegalArgumentException(s"unknown flag: $other")
       }
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession()
     val engine = Graft.boot(spark, root)
 
     specs.result().foreach { spec =>

@@ -7,7 +7,6 @@ import graft.channel.ChannelRegistry
 import graft.runtime.{Capability, ModuleSpec, QueryManager, Session}
 import graft.streaming.LogAnalyser
 import graft.udf.WasmHost
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end consumer-style drive of the engine core: boots a registry +
@@ -18,12 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession()
     import spark.implicits._
 
     val root = Files.createTempDirectory("graft_demo")

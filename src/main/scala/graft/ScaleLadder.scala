@@ -193,22 +193,8 @@ object ScaleLadder {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val ladderDir = sys.env.getOrElse("SPARK_GRAFT_LADDER_DIR", "/tmp/graft_scale_x10")
     val factor = sys.env.getOrElse("SPARK_GRAFT_LADDER_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // the partition-scaling variant (r17 verdict #5): production scales
-    // shuffle partitions with data; this knob measures that flattening
-    // instead of stating it (default = cpus, the fixed-32 regime the
-    // ×10→×30 segment exponents of 1.15–1.21 were measured under)
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val nameFilter = args.lift(0).map(_.r)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.ensureConf(spark)
+    val spark = Tables.localSession()
 
     buildCorpus(spark, base, ladderDir, factor)
 

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.channel.ChannelRegistry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming micro-benchmark (BASELINE.md "streaming micro-bench" row):
@@ -15,15 +14,8 @@ import org.apache.spark.sql.functions._
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.ensureConf(spark)
+    val spark = Tables.localSession()
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
 
     val events = Tables.events(spark, sfDir)
     val n = events.count()
@@ -56,7 +48,7 @@ object StreamBench {
         .agg(count(lit(1)).as("n"), Tables.exactSum(col("value")).as("v"))
         .writeStream.outputMode("complete").format("memory")
         .queryName("streambench").start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      finally spark.conf.set("spark.sql.shuffle.partitions", width)
     try q.processAllAvailable() finally q.stop()
     val querySec = (System.nanoTime() - t1) / 1e9
     val outRows = spark.table("streambench").count()
@@ -71,7 +63,7 @@ object StreamBench {
         .agg(count(lit(1)).as("n"), Tables.exactSum(col("value")).as("v"))
         .writeStream.outputMode("complete").format("memory")
         .queryName("streambench_v2").start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      finally spark.conf.set("spark.sql.shuffle.partitions", width)
     try q2.processAllAvailable() finally q2.stop()
     val v2Sec = (System.nanoTime() - t2) / 1e9
     val v2Rows = spark.table("streambench_v2").count()

@@ -8,7 +8,8 @@ import org.apache.spark.sql.Column
   *
   * All reads go through [[Tables.t]] so that required runtime confs are in
   * place no matter who constructed the SparkSession (the driver's smoke
-  * harness builds its own).
+  * harness builds its own); graft's own mains build theirs with
+  * [[Tables.localSession]].
   */
 object Tables {
 
@@ -25,6 +26,32 @@ object Tables {
     // Deterministic plans at small scale, efficient at large: AQE coalesces
     // the 32 shuffle partitions when maps are tiny.
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  /** THE session every graft main runs on: `local[n]` with n =
+    * `SPARK_GRAFT_CPUS` (default: the host's available processors),
+    * shuffle width n, UI off, plus [[ensureConf]]. A `spark.master` Spark
+    * was already given (spark-submit `--master`, `-Dspark.master`) wins —
+    * the master is a deployment setting, not a per-main choice. */
+  def localSession(): SparkSession = {
+    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val builder = SparkSession.builder()
+      .config("spark.sql.shuffle.partitions", n)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // STATIC conf, must be set at session build: the default 100-entry
+      // codegen class cache evicts every query's generated classes long
+      // before its second run in a 233-query session (~900 codegen
+      // stages per pass), so each rerun re-pays Janino compilation and
+      // fresh JIT — cpu inflation with flat gc. Sized to hold the whole
+      // session's stages.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+    if (!sys.props.contains("spark.master")) builder.master(s"local[$n]")
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    ensureConf(spark)
+    spark
   }
 
   /** Footer-inferred schema per table path, computed once per JVM: every

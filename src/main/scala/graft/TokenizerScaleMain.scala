@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Production-constant tokenizer training runs (BENCH.md round-14
   * record): each family's trainer at realistic dials — batched merge
   * modes at m=16 from a top-64 ranking, unigram at MaxPiece=8 with a
@@ -16,14 +14,7 @@ import org.apache.spark.sql.SparkSession
 object TokenizerScaleMain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.ensureConf(spark)
+    val spark = Tables.localSession()
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Vocabulary-scale tokenizer fixture (VERDICT r14 #6): the sf0.1 corpus
@@ -53,13 +52,7 @@ object TokenizerVocabScaleMain {
   def main(args: Array[String]): Unit = {
     val rounds = args.lift(0).map(_.toInt).getOrElse(520)
     val nWords = args.lift(1).map(_.toInt).getOrElse(30000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession()
     import spark.implicits._
 
     // Zipf frequencies over a deduped hash-derived vocabulary: the merge
@@ -70,7 +63,7 @@ object TokenizerVocabScaleMain {
       .groupBy(_._1).map { case (w, g) => (w, g.map(_._2).sum) }.toSeq
     println(s"VOCABSCALE vocab=${vocab.size} words (from $nWords indices)")
     val w0 = vocab.toDF("w", "freq")
-      .repartition(cpus.toInt)
+      .repartition(spark.sparkContext.defaultParallelism)
       .withColumn("syms", split(trim(regexp_replace(col("w"), "(.)", "$1 ")), " "))
 
     def drive(family: String)(train: ((Int, Int, Double) => Unit) => Int): Unit = {

@@ -42,45 +42,5 @@ object WasmMicro {
       val per = dt / (n.toLong * math.max(1, nThreads))
       println(f"round $round: ${dt / 1e6}%.1f ms wall, $per%d ns/invoke-per-thread (~${per / 1700}%d ns/op) sink=$sink")
     }
-    if (args.contains("spark")) sparkPath()
-  }
-
-  /** The exact q_wasm_vector_norm pipeline with in-closure timing: how
-    * much of the task cpu is the guest invoke vs everything around it. */
-  private def sparkPath(): Unit = {
-    import org.apache.spark.sql.functions._
-    val s = org.apache.spark.sql.SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    import s.implicits._
-    val moduleBytes = graft.queries.WasmOps.l2normModuleForBench
-    val invokeNs = s.sparkContext.longAccumulator("invokeNs")
-    val rowsAcc = s.sparkContext.longAccumulator("rows")
-    (1 to 2).foreach { round =>
-      invokeNs.reset(); rowsAcc.reset()
-      val t0 = System.nanoTime()
-      val n = Tables.spread(Tables.embeddings(s, "/root/testdata/sf0.1")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-          col("vec_id"))
-        .as[(Long, Seq[Double])]
-        .mapPartitions { rows =>
-          val guest = new graft.udf.wasm.WasmModule(moduleBytes)
-          rows.map { case (id, v) =>
-            val bb = java.nio.ByteBuffer.allocate(8 * v.size)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            v.foreach(bb.putDouble)
-            val i0 = System.nanoTime()
-            guest.writeMemory(0, bb.array())
-            val bits = guest.invoke("l2norm", v.size.toLong).get
-            invokeNs.add(System.nanoTime() - i0)
-            rowsAcc.add(1)
-            (id, java.lang.Double.longBitsToDouble(bits))
-          }
-        }.toDF("vec_id", "raw").count()
-      println(f"SPARK round $round wall=${(System.nanoTime() - t0) / 1e9}%.2fs rows=$n " +
-        f"invokeCpu=${invokeNs.value / 1e9}%.2fs perRow=${invokeNs.value / math.max(1, rowsAcc.value)}%d ns")
-    }
-    s.stop()
   }
 }

@@ -981,8 +981,13 @@ object Channel {
     }
   }
 
-  private[channel] def deleteRecursively(p: Path): Unit = {
-    Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+  /** Recursive delete, deepest entries first; symlinks are removed, not
+    * followed (Files.walk does not traverse them). The one recursive
+    * delete in graft; the walk stream is closed on every path. */
+  private[graft] def deleteRecursively(p: Path): Unit = {
+    val walk = Files.walk(p)
+    try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    finally walk.close()
   }
 }
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.channel.Channel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet-staged intermediate relations — the 100 TB gate-run pattern.
@@ -40,7 +41,7 @@ private[queries] object Artifacts {
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       staged.forEach((_, v) =>
-        try Staging.deleteTree(v._2)
+        try Channel.deleteRecursively(v._2)
         catch { case _: java.io.IOException => () })))
   }
 
@@ -56,7 +57,7 @@ private[queries] object Artifacts {
     staged.forEach { (k, v) =>
       if (v._1.isStopped && staged.remove(k, v)) {
         keyLocks.remove(k)
-        try Staging.deleteTree(v._2)
+        try Channel.deleteRecursively(v._2)
         catch { case _: java.io.IOException => () }
       }
     }
@@ -101,7 +102,7 @@ private[queries] object Artifacts {
         // registered (and thus sweepable / shutdown-removed) on success
         try derive.write.mode("overwrite").parquet(dir.toString)
         catch { case e: Throwable =>
-          try Staging.deleteTree(dir)
+          try Channel.deleteRecursively(dir)
           catch { case _: java.io.IOException => () }
           throw e
         }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.channel.Channel
 import graft.functions.Codec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -117,7 +118,7 @@ object CodecOps {
           .agg(count(lit(1)).as("n"), Tables.exactSum(col("value")).as("total"))
           .orderBy(col("event_type"))
           .localCheckpoint()
-      } finally Staging.deleteTree(root)
+      } finally Channel.deleteRecursively(root)
     }
   )
 }

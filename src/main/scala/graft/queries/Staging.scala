@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.channel.Channel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,23 +13,11 @@ import org.apache.spark.sql.functions._
   */
 private[queries] object Staging {
 
-  /** Recursive temp-tree removal — THE one copy of the cleanup contract
-    * (deepest-first deleteIfExists; symlinks are removed, not followed —
-    * Files.walk does not traverse them). Every staged-input/staged-output
-    * site routes through here. */
-  def deleteTree(root: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(root)
-    try walk.iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
-  }
-
   /** Fresh temp dir handed to `body`, deleted on the way out — success or
     * failure. */
   def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
     val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    try body(tmp) finally deleteTree(tmp)
+    try body(tmp) finally Channel.deleteRecursively(tmp)
   }
 
   /** Write `df` as `nFiles` range-partitioned parquet files under a fresh
@@ -97,7 +86,7 @@ private[queries] object Staging {
   // Measured and rejected here (r19, verdict task #1): pinning the RocksDB
   // state-store provider (+ changelog checkpointing) around `start` the
   // same way. Per-trigger profile on q_stream_right_join/q_stream_sessions
-  // (StreamProfileMain, quiet host): wall 7.16→7.35 s / 4.20→4.05 s —
+  // (durationMs phases, quiet host): wall 7.16→7.35 s / 4.20→4.05 s —
   // sentinel batches ~10% faster (addBatch 716→641 ms), data batches
   // slower (summed store update 1081→1745 ms), summed commit flat
   // (~2.0-2.4 s over 32 instances either way), per-store memory 3.3→33 MB.

@@ -3,6 +3,7 @@ package graft.queries
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.{Q, Tables}
+import graft.channel.Channel
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -288,7 +289,7 @@ object Streamish {
         val q = sizedStart(s, 8)(agg.writeStream.outputMode("complete")
           .format("memory").queryName(sink).start())
         try q.processAllAvailable() finally q.stop()
-      } finally Staging.deleteTree(root)
+      } finally Channel.deleteRecursively(root)
       s.table(sink).orderBy(col("day"), col("event_type"))
     },
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.channel.Channel
 import graft.functions.{SignLsh, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1535,7 +1536,7 @@ object VectorOps {
       // dirs — drop any stale copy and rebuild the union from the
       // authoritative b$id dirs (compaction re-fires as ticks accumulate)
       val staleBase = java.nio.file.Paths.get(out, "postings_base")
-      if (java.nio.file.Files.isDirectory(staleBase)) Staging.deleteTree(staleBase)
+      if (java.nio.file.Files.isDirectory(staleBase)) Channel.deleteRecursively(staleBase)
       if (!java.nio.file.Files.isDirectory(root)) return 0
       val ids = {
         val st = java.nio.file.Files.list(root)
@@ -1575,7 +1576,7 @@ object VectorOps {
           .write.mode("overwrite").parquet(next.toString)
         base = Some(s.read.parquet(next.toString))
         listed += 1 // the re-read of the fresh compact dir (1/compactEvery ticks)
-        baseDir.filter(_ != next).foreach(Staging.deleteTree)
+        baseDir.filter(_ != next).foreach(Channel.deleteRecursively)
         baseDir = Some(next)
         perBatch.clear()
       }

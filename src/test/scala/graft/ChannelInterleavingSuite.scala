@@ -174,13 +174,7 @@ class ChannelInterleavingSuite extends SparkSpec {
           assert(Channel.readHead(dir).contains((strict, weak)),
             s"[$label #$k] head not caught up to ($strict,$weak)")
           total += 1
-        } finally {
-          val walk = Files.walk(dir)
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          } finally walk.close()
-        }
+        } finally Channel.deleteRecursively(dir)
       }
     }
     info(s"$total schedules enumerated, all clean")
@@ -346,13 +340,7 @@ class ChannelInterleavingSuite extends SparkSpec {
           s"[#$k] quiescent ends ($strict,$weak) vs committed $committed")
         assert(Channel.readHead(dir).contains((strict, weak)))
         total += 1
-      } finally {
-        val walk = Files.walk(dir)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        } finally walk.close()
-      }
+      } finally Channel.deleteRecursively(dir)
     }
     info(s"$total multi-op schedules enumerated, all clean")
     assert(total == 1287)

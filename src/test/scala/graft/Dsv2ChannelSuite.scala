@@ -237,9 +237,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     // evict the middle batch out from under future subscribers
     val victim = Channel.listBatches(ch.dir)(1)
     assert(victim.getFileName.toString.startsWith("batch_0000000000"))
-    val walk = Files.walk(victim)
-    try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    finally walk.close()
+    Channel.deleteRecursively(victim)
 
     // weak: ReaderBehind parity — skip ahead, deliver what exists
     val weakName = runToSink(ch.readStreamV2(weak = true).select("id"))
@@ -570,9 +568,5 @@ class Dsv2ChannelSuite extends SparkSpec {
     val grouped = parts.map(_.asInstanceOf[graft.sources.ChannelInputPartition]
       .files.map(_.path).toSeq).toSeq
     assert(grouped == Seq(Seq("a", "b"), Seq("c"), Seq("d"), Seq("e")))
-  }
-
-  private implicit class IterOps[T](it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = scala.jdk.CollectionConverters.IteratorHasAsScala(it).asScala
   }
 }

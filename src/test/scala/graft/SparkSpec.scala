@@ -31,14 +31,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * dirs recursively so repeated sbt test runs don't litter /tmp. */
   override def afterAll(): Unit = {
     tmpDirs.synchronized(tmpDirs.toList).foreach { p =>
-      try {
-        val walk = java.nio.file.Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        } finally walk.close()
-      } catch { case _: java.io.IOException => () }
+      try graft.channel.Channel.deleteRecursively(p)
+      catch { case _: java.io.IOException => () }
     }
     super.afterAll()
   }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
+import graft.channel.Channel
 import scala.util.{Failure, Success, Try}
 
 /** Chaos contract for the Artifacts liveness window (r17 verdict #7):
@@ -42,7 +43,7 @@ class ArtifactChaosSuite extends SparkSpec {
         // now bound to concrete files), then yank the root out from
         // under it — the documented residual window, made deterministic
         val df = run()
-        Staging.deleteTree(root)
+        Channel.deleteRecursively(root)
         Try(df.collect().map(_.toString).sorted.toSeq) match {
           case Success(rows) => assert(rows == ref,
             s"$name returned WRONG rows after the sweep — silent corruption, " +
