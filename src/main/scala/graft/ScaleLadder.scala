@@ -202,7 +202,6 @@ object ScaleLadder {
     spark.sparkContext.addSparkListener(agg)
     val stateAgg = new StateAgg
     spark.streams.addListener(stateAgg)
-    def sweep(): Unit = spark.sharedState.cacheManager.clearCache()
 
     val names = LadderQueries
       .filter(n => nameFilter.forall(_.findFirstIn(n).isDefined))
@@ -211,7 +210,6 @@ object ScaleLadder {
     names.foreach { n =>
       try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
       catch { case _: Throwable => () }
-      finally sweep()
     }
     System.gc()
 
@@ -226,7 +224,7 @@ object ScaleLadder {
       val wall = (System.nanoTime() - t0) / 1e9
       settle(agg) // also long enough for in-flight progress events
       val s1 = agg.snap()
-      sweep(); System.gc()
+      System.gc()
       Run(wall, (s1._1 - s0._1) / 1e9, s1._2 - s0._2, s1._3 - s0._3,
         s1._4 - s0._4, s1._5, stateAgg.rows.get, stateAgg.mem.get)
     }

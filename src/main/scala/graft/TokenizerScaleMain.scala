@@ -38,11 +38,10 @@ object TokenizerScaleMain {
     println(s"SCALE wordpiece_batched merges=${wp.size} " +
       s"rounds=${wp.map(_._1).maxOption.getOrElse(0)}")
 
-    val (kept, words) = timed("unigram maxPiece=8 budget=8192 seedCap=1000000") {
+    val kept = timed("unigram maxPiece=8 budget=8192 seedCap=1000000") {
       queries.UnigramOps.trainWith(spark, sfDir,
         maxPiece = 8, rounds = 2, budget = 8192, seedCap = 1000000)
     }
-    words.unpersist()
     println(s"SCALE unigram kept=${kept.size} " +
       s"multi=${kept.count(_._1.length > 1)} singles=${kept.count(_._1.length == 1)}")
     spark.stop()

@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * no driver-side state, no assumption the largest component fits
   * anywhere.
   *
-  * Each iteration truncates lineage with an eager localCheckpoint (the
-  * loop would otherwise stack two shuffles per round into one
-  * ever-deepening plan). On a production cluster with executor loss,
+  * Each iteration truncates lineage with a lazy localCheckpoint,
+  * materialized by that round's convergence probe (the loop would
+  * otherwise stack two shuffles per round into one ever-deepening
+  * plan). On a production cluster with executor loss,
   * swap in reliable `checkpoint()` against the cluster checkpoint dir;
   * the algorithm is oblivious to which.
   *

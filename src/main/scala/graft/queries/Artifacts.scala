@@ -3,7 +3,21 @@ package graft.queries
 import graft.channel.Channel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Parquet-staged intermediate relations — the 100 TB gate-run pattern.
+/** The one owner of materialization in the query layer: every
+  * `persist`/`unpersist` under `src/main` lives in this file, and no
+  * query leaves an entry in the session's `CacheManager` once its `run`
+  * returns. A query that needs a relation held gets it one of three ways:
+  *  - [[scoped]]: persisted for the driver actions of one block (counts,
+  *    collects, training passes, a stream run), released at block end;
+  *  - `localCheckpoint()`, called directly: materialized and
+  *    lineage-free, for a returned plan whose branches re-read an
+  *    expensive subtree; the ContextCleaner frees its blocks when the
+  *    plan is garbage-collected, and it never enters `CacheManager`;
+  *  - [[parquet]]: staged once per (context, sfDir) as a parquet artifact
+  *    that many queries share (below).
+  * The tokenizer trainers' round loops go through [[rounds]].
+  *
+  * Parquet-staged intermediate relations — the 100 TB gate-run pattern.
   *
   * A curation gate re-uses reduced relations (the char-LM's (doc, gram, n)
   * counts, the unigram LM's (doc, word, n) counts, the LSH dup graph)
@@ -29,6 +43,58 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * non-default root including the failed-derivation sweep there.
   */
 private[queries] object Artifacts {
+
+  /** `body` over `df` persisted, released when `body` returns or throws.
+    * A lazy plan that `body` returns and that reads the relation again
+    * recomputes it from lineage once the scope is closed — so a scope
+    * only pays off for reads that run inside it. */
+  def scoped[A](df: DataFrame)(body: DataFrame => A): A = {
+    val held = df.persist()
+    try body(held) finally { held.unpersist(); () }
+  }
+
+  /** A trainer's round loop: `step(r, w)` derives round r's table from
+    * round r−1's `w` (r = 1..n), or returns None when nothing is left to
+    * merge. Round 0 is persisted; every later round is materialized by
+    * `localCheckpoint`, which also truncates lineage — a step reads its
+    * input twice, so a persist-only chain would double the logical plan
+    * every round (2^rounds nodes at production round counts). The
+    * previous round is released as soon as the next one is
+    * materialized, so at most two rounds hold storage, on the failure
+    * path too. Returns the last round's table, lineage-free: the last
+    * checkpoint itself, or a checkpoint of round 0 when no round ran.
+    * Its blocks are freed when the caller drops it. */
+  def rounds(w0: DataFrame, n: Int)
+      (step: (Int, DataFrame) => Option[DataFrame]): DataFrame = {
+    val seed = w0.persist()
+    // a checkpointed round's storage sits behind its plan's LogicalRDD
+    // leaf; Dataset.unpersist only covers CacheManager entries (the
+    // seed), and otherwise those blocks wait for driver GC
+    def release(w: DataFrame): Unit =
+      if (w eq seed) { seed.unpersist(); () }
+      else w.queryExecution.analyzed.foreach {
+        case l: org.apache.spark.sql.execution.LogicalRDD =>
+          l.rdd.unpersist(blocking = false); ()
+        case _ => ()
+      }
+    var w = seed
+    var r = 1
+    var more = true
+    try {
+      while (more && r <= n) {
+        step(r, w) match {
+          case Some(next) =>
+            val done = next.localCheckpoint()
+            release(w)
+            w = done
+          case None => more = false
+        }
+        r += 1
+      }
+      if (w eq seed) seed.localCheckpoint() else w
+    } catch { case e: Throwable => release(w); throw e }
+    finally { seed.unpersist(); () }
+  }
 
   private val staged = new java.util.concurrent.ConcurrentHashMap[
     (Long, String), (org.apache.spark.SparkContext, java.nio.file.Path)]()

@@ -248,22 +248,63 @@ object CurationOps {
        |  FROM $p t LEFT JOIN kept$i k ON t.w = k.w)""".stripMargin
   }
 
-  /** Eagerly release a per-round table's storage. Dataset.unpersist
-    * only covers CacheManager entries (round 1's persisted seed
-    * relation); a localCheckpoint's MEMORY_AND_DISK blocks otherwise
-    * wait for driver GC + ContextCleaner — GC-timing-dependent peak
-    * storage over a production 30k/m-round loop instead of a bounded
-    * two live rounds. The checkpoint RDD lives behind the plan's
-    * LogicalRDD leaf. Safe only once nothing will re-read `df` (every
-    * call site releases the PREVIOUS round after the next round's
-    * checkpoint has materialized). */
-  private def releaseRound(df: org.apache.spark.sql.DataFrame): Unit = {
-    df.unpersist()
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false); ()
-      case _ => ()
+  /** [[Artifacts.rounds]] for the batched trainers, reporting
+    * `onRound(round, merges so far, round wall seconds)` for every round
+    * entered. A round's wall includes its checkpoint, which runs after
+    * the step returns, so it spans from one step's start to the next's. */
+  private def timedRounds(w0: org.apache.spark.sql.DataFrame, n: Int,
+      onRound: (Int, Int, Double) => Unit, merged: => Int)
+      (step: (Int, org.apache.spark.sql.DataFrame) =>
+        Option[org.apache.spark.sql.DataFrame]): Unit = {
+    var (last, t0) = (0, 0L)
+    def report(): Unit =
+      if (last > 0) onRound(last, merged, (System.nanoTime() - t0) / 1e9)
+    Artifacts.rounds(w0, n) { (r, w) =>
+      report()
+      last = r
+      t0 = System.nanoTime()
+      step(r, w)
     }
+    report()
+  }
+
+  /** Greedy SYMBOL-DISJOINT selection of up to `m` rows from a pair
+    * ranking (pair string in column 0) — the driver-side twin of the
+    * oracle's …sel chains. */
+  private def disjointTop(rank: Seq[org.apache.spark.sql.Row], m: Int)
+      : Seq[org.apache.spark.sql.Row] = {
+    val used = scala.collection.mutable.Set.empty[String]
+    val sel = scala.collection.mutable.Buffer.empty[org.apache.spark.sql.Row]
+    for (row <- rank if sel.size < m) {
+      val syms = row.getString(0).split(' ')
+      if (!syms.exists(used)) { sel += row; used ++= syms }
+    }
+    sel.toSeq
+  }
+
+  /** The top-`k` BPE pair ranking of a symbol table: `(pr, c)` by
+    * corpus-weighted count desc, pair asc. */
+  private def bpeRank(w: org.apache.spark.sql.DataFrame, k: Int)
+      : Array[org.apache.spark.sql.Row] =
+    pairRows(w).groupBy($("pr")).agg(sum($("freq")).as("c"))
+      .orderBy($("c").desc, $("pr")).limit(k).collect()
+
+  /** The top-`k` WordPiece ranking of a symbol table: `(pr, cab, ca, cb)`
+    * by likelihood ratio cab/(ca·cb) desc, pair asc — one pair-count and
+    * one symbol-count aggregate, both vocab-scale. */
+  private def wpRank(w: org.apache.spark.sql.DataFrame, k: Int)
+      : Array[org.apache.spark.sql.Row] = {
+    val sc = w.select($("freq"), explode($("syms")).as("s"))
+      .groupBy($("s")).agg(sum($("freq")).as("c"))
+    val score = col("cab").cast("double") /
+      (col("ca").cast("double") * col("cb").cast("double"))
+    pairRows(w).groupBy($("pr")).agg(sum($("freq")).as("cab"))
+      .join(sc.select(col("s").as("sa"), col("c").as("ca")),
+        split($("pr"), " ").getItem(0) === col("sa"))
+      .join(sc.select(col("s").as("sb"), col("c").as("cb")),
+        split($("pr"), " ").getItem(1) === col("sb"))
+      .orderBy(score.desc, $("pr")).limit(k)
+      .select($("pr"), $("cab"), $("ca"), $("cb")).collect()
   }
 
   /** Batched-BPE dials: rounds × up-to-m merges per round, selected
@@ -365,48 +406,13 @@ object CurationOps {
       rounds: Int, m: Int, topK: Int,
       onRound: (Int, Int, Double) => Unit = (_, _, _) => ())
       : Seq[(Int, Int, String, Long)] = {
-    import org.apache.spark.sql.expressions.Window
-    var w = w0.persist()
     val merges = scala.collection.mutable.Buffer.empty[(Int, Int, String, Long)]
-    var exhausted = false
-    for (r <- 1 to rounds if !exhausted) {
-      val tRound = System.nanoTime()
-      val pairs = pairRows(w)
-      val rank = pairs.groupBy($("pr")).agg(sum($("freq")).as("c"))
-        .orderBy($("c").desc, $("pr")).limit(topK).collect()
-      // greedy symbol-disjoint selection over the bounded ranking — the
-      // driver-side twin of the oracle's bsel chain
-      val used = scala.collection.mutable.Set.empty[String]
-      val sel = scala.collection.mutable.Buffer.empty[(String, Long)]
-      for (row <- rank if sel.size < m) {
-        val syms = row.getString(0).split(' ')
-        if (!syms.exists(used)) { sel += ((row.getString(0), row.getLong(1))); used ++= syms }
-      }
-      if (sel.isEmpty) exhausted = true
-      else {
-        sel.zipWithIndex.foreach { case ((p, c), i) => merges += ((r, i + 1, p, c)) }
-        val rn = row_number().over(Window.partitionBy($("w"), $("pr")).orderBy($("i")))
-        val kept = pairs.filter($("pr").isin(sel.map(_._1).toSeq: _*))
-          .select($("w"), $("pr"), $("i"))
-          .withColumn("island", $("i") - rn)
-          .withColumn("pio", row_number()
-            .over(Window.partitionBy($("w"), $("pr"), $("island")).orderBy($("i"))))
-          .filter($("pio") % 2 === 1)
-          .groupBy($("w")).agg(collect_list($("i")).as("kept"))
-          .withColumnRenamed("w", "kw")
-        // localCheckpoint, NOT persist+count: the round materializes
-        // either way, but persist keeps the LOGICAL plan, and
-        // rebuildSyms references w twice — the plan doubles every round
-        // (2^rounds nodes; a production 30k/m-round loop OOMs building
-        // explain strings before any data moves — found by
-        // TokenizerScaleMain). Checkpointing resets it to an RDD scan.
-        val prev = w
-        w = rebuildSyms(w, kept).localCheckpoint()
-        releaseRound(prev)
-      }
-      onRound(r, merges.size, (System.nanoTime() - tRound) / 1e9)
+    timedRounds(w0, rounds, onRound, merges.size) { (r, w) =>
+      val sel = disjointTop(bpeRank(w, topK).toSeq, m)
+      sel.zipWithIndex.foreach { case (row, i) =>
+        merges += ((r, i + 1, row.getString(0), row.getLong(1))) }
+      if (sel.isEmpty) None else Some(applyMerges(w, sel.map(_.getString(0))))
     }
-    releaseRound(w)
     merges.toSeq
   }
 
@@ -692,62 +698,15 @@ object CurationOps {
       rounds: Int, m: Int, topK: Int,
       onRound: (Int, Int, Double) => Unit = (_, _, _) => ())
       : Seq[(Int, Int, String, Long, Long, Long)] = {
-    import org.apache.spark.sql.expressions.Window
-    var w = w0.persist()
     val merges =
       scala.collection.mutable.Buffer.empty[(Int, Int, String, Long, Long, Long)]
-    var exhausted = false
-    for (r <- 1 to rounds if !exhausted) {
-      val tRound = System.nanoTime()
-      val pairs = pairRows(w)
-      val sc = w.select($("freq"), explode($("syms")).as("s"))
-        .groupBy($("s")).agg(sum($("freq")).as("c"))
-      val score = col("cab").cast("double") /
-        (col("ca").cast("double") * col("cb").cast("double"))
-      val rank = pairs.groupBy($("pr")).agg(sum($("freq")).as("cab"))
-        .join(sc.select(col("s").as("sa"), col("c").as("ca")),
-          split($("pr"), " ").getItem(0) === col("sa"))
-        .join(sc.select(col("s").as("sb"), col("c").as("cb")),
-          split($("pr"), " ").getItem(1) === col("sb"))
-        .orderBy(score.desc, $("pr")).limit(topK)
-        .select($("pr"), $("cab"), $("ca"), $("cb")).collect()
-      // greedy symbol-disjoint selection over the bounded ranking — the
-      // driver-side twin of the oracle's wbsel chain
-      val used = scala.collection.mutable.Set.empty[String]
-      val sel = scala.collection.mutable.Buffer.empty[(String, Long, Long, Long)]
-      for (row <- rank if sel.size < m) {
-        val syms = row.getString(0).split(' ')
-        if (!syms.exists(used)) {
-          sel += ((row.getString(0), row.getLong(1), row.getLong(2), row.getLong(3)))
-          used ++= syms
-        }
-      }
-      if (sel.isEmpty) exhausted = true
-      else {
-        sel.zipWithIndex.foreach { case ((p, cab, ca, cb), i) =>
-          merges += ((r, i + 1, p, cab, ca, cb)) }
-        val rn = row_number().over(Window.partitionBy($("w"), $("pr")).orderBy($("i")))
-        val kept = pairs.filter($("pr").isin(sel.map(_._1).toSeq: _*))
-          .select($("w"), $("pr"), $("i"))
-          .withColumn("island", $("i") - rn)
-          .withColumn("pio", row_number()
-            .over(Window.partitionBy($("w"), $("pr"), $("island")).orderBy($("i"))))
-          .filter($("pio") % 2 === 1)
-          .groupBy($("w")).agg(collect_list($("i")).as("kept"))
-          .withColumnRenamed("w", "kw")
-        // localCheckpoint, NOT persist+count: the round materializes
-        // either way, but persist keeps the LOGICAL plan, and
-        // rebuildSyms references w twice — the plan doubles every round
-        // (2^rounds nodes; a production 30k/m-round loop OOMs building
-        // explain strings before any data moves — found by
-        // TokenizerScaleMain). Checkpointing resets it to an RDD scan.
-        val prev = w
-        w = rebuildSyms(w, kept).localCheckpoint()
-        releaseRound(prev)
-      }
-      onRound(r, merges.size, (System.nanoTime() - tRound) / 1e9)
+    timedRounds(w0, rounds, onRound, merges.size) { (r, w) =>
+      val sel = disjointTop(wpRank(w, topK).toSeq, m)
+      sel.zipWithIndex.foreach { case (row, i) =>
+        merges += ((r, i + 1, row.getString(0), row.getLong(1), row.getLong(2),
+          row.getLong(3))) }
+      if (sel.isEmpty) None else Some(applyMerges(w, sel.map(_.getString(0))))
     }
-    releaseRound(w)
     merges.toSeq
   }
 
@@ -765,62 +724,33 @@ object CurationOps {
   /** WordPiece training loop: per round, the best pair by likelihood
     * score (one TakeOrderedAndProject over the pair-count/symbol-count
     * join — a single-row driver collect, metadata-scale), then the SAME
-    * greedy merge application as BPE ([[applyMerge]] — one transform
+    * greedy merge application as BPE ([[applyMerges]] — one transform
     * definition across both families). Returns (pair, cab, ca, cb) per
-    * merge and (when needFinal) the lineage-free final symbol table —
-    * None otherwise: the last round's frame has had its localCheckpoint
-    * blocks released, so returning it would hand the caller a frame
-    * that fails with 'checkpoint block not found' on first evaluation. */
-  private def wpTrainOn(docs: org.apache.spark.sql.DataFrame,
-      needFinal: Boolean)
-      : (Seq[(String, Long, Long, Long)], Option[org.apache.spark.sql.DataFrame]) =
-    wpTrainOnWords(wordSymsRel(docs), needFinal)
+    * merge and the lineage-free final symbol table (see
+    * [[Artifacts.rounds]]). */
+  private def wpTrainOn(docs: org.apache.spark.sql.DataFrame)
+      : (Seq[(String, Long, Long, Long)], org.apache.spark.sql.DataFrame) =
+    wpTrainOnWords(wordSymsRel(docs))
 
   /** [[wpTrainOn]] over a PRE-BUILT (w, freq, syms) table — the seam
     * q_incremental_wordpiece_merges trains through (WordPiece's
     * sufficient statistic is the SAME word-frequency table as BPE's:
     * both the pair count c(ab) and the unit counts c(a), c(b) behind
     * the likelihood ratio are freq-weighted sums over distinct words). */
-  private[graft] def wpTrainOnWords(w0: org.apache.spark.sql.DataFrame,
-      needFinal: Boolean)
-      : (Seq[(String, Long, Long, Long)], Option[org.apache.spark.sql.DataFrame]) = {
-    var w = w0.persist()
+  private[graft] def wpTrainOnWords(w0: org.apache.spark.sql.DataFrame)
+      : (Seq[(String, Long, Long, Long)], org.apache.spark.sql.DataFrame) = {
     val merges = scala.collection.mutable.Buffer.empty[(String, Long, Long, Long)]
-    var exhausted = false
-    for (_ <- 1 to WpRounds if !exhausted) {
-      val sc = w.select($("freq"), explode($("syms")).as("s"))
-        .groupBy($("s")).agg(sum($("freq")).as("c"))
-      val score = col("cab").cast("double") /
-        (col("ca").cast("double") * col("cb").cast("double"))
-      val bestRows = pairRows(w).groupBy($("pr")).agg(sum($("freq")).as("cab"))
-        .join(sc.select(col("s").as("sa"), col("c").as("ca")),
-          split($("pr"), " ").getItem(0) === col("sa"))
-        .join(sc.select(col("s").as("sb"), col("c").as("cb")),
-          split($("pr"), " ").getItem(1) === col("sb"))
-        .orderBy(score.desc, $("pr"))
-        .limit(1)
-        .select($("pr"), $("cab"), $("ca"), $("cb")).collect()
-      if (bestRows.isEmpty) { exhausted = true }
-      else {
-        val r = bestRows(0)
+    val fin = Artifacts.rounds(w0, WpRounds) { (_, w) =>
+      wpRank(w, 1).headOption.map { r =>
         merges += ((r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        // localCheckpoint per round — lineage truncation, see the
-        // batched loop's note (the plan otherwise doubles per round)
-        val prev = w
-        w = applyMerge(w, r.getString(0)).localCheckpoint()
-        releaseRound(prev)
+        applyMerges(w, Seq(r.getString(0)))
       }
     }
-    if (!needFinal) { releaseRound(w); (merges.toSeq, None) }
-    else {
-      val fin = w.localCheckpoint()
-      releaseRound(w)
-      (merges.toSeq, Some(fin))
-    }
+    (merges.toSeq, fin)
   }
 
-  /** Run the BPE merge loop on the engine: returns the learned merges
-    * (pair, corpus count) and the per-word symbol table after all
+  /** The BPE merge loop ([[bpeTrainOnWords]]) returns the learned
+    * merges (pair, corpus count) and the per-word symbol table after all
     * rounds. The per-round best pair is a single-row driver collect
     * (like Lloyd centroid training — metadata-scale); everything else
     * is per-word distributed work: the pair count is a map-side-combined
@@ -882,86 +812,56 @@ object CurationOps {
           x => x.isNotNull)))
       .select($("w"), $("freq"), $("syms"))
 
-  /** Apply ONE learned merge `bp` to a per-word symbol table with the
-    * TRUE greedy left-to-right rule (islands of consecutive match
-    * positions — which only arise for self-pairs — keep every other
-    * position). Shared by the training loop and the OOV replay encode. */
-  private def applyMerge(w: org.apache.spark.sql.DataFrame, bp: String)
+  /** Apply the SYMBOL-DISJOINT merges `prs` simultaneously to a per-word
+    * symbol table with the TRUE greedy left-to-right rule (islands of
+    * consecutive match positions — which only arise for self-pairs —
+    * keep every other position). Disjointness means no two merges can
+    * claim overlapping positions, so the combined kept list is
+    * well-defined. One merge is the classic round; shared by every
+    * training loop and the OOV replay encode. */
+  private def applyMerges(w: org.apache.spark.sql.DataFrame, prs: Seq[String])
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val rn = row_number().over(Window.partitionBy($("w")).orderBy($("i")))
-    val kept = pairRows(w).filter($("pr") === bp).select($("w"), $("i"))
+    // rn runs over each pair's positions in turn (ordered by pair, then
+    // position), so i − rn is constant exactly along a run of consecutive
+    // positions of one pair; every window and the aggregate partition on
+    // the word first, so one exchange on `w` serves them all
+    val rn = row_number().over(Window.partitionBy($("w")).orderBy($("pr"), $("i")))
+    val kept = pairRows(w).filter($("pr").isin(prs: _*))
+      .select($("w"), $("pr"), $("i"))
       .withColumn("island", $("i") - rn)
-      .withColumn("pio",
-        row_number().over(Window.partitionBy($("w"), $("island")).orderBy($("i"))))
+      .withColumn("pio", row_number()
+        .over(Window.partitionBy($("w"), $("pr"), $("island")).orderBy($("i"))))
       .filter($("pio") % 2 === 1)
       .groupBy($("w")).agg(collect_list($("i")).as("kept"))
       .withColumnRenamed("w", "kw")
     rebuildSyms(w, kept)
   }
 
-  private def bpeTrain(s: org.apache.spark.sql.SparkSession, d: String,
-      needFinal: Boolean = true)
-      : (Seq[(String, Long)], Option[org.apache.spark.sql.DataFrame]) =
-    bpeTrainOn(Tables.documents(s, d), needFinal)
+  private def bpeTrain(s: org.apache.spark.sql.SparkSession, d: String)
+      : (Seq[(String, Long)], org.apache.spark.sql.DataFrame) =
+    bpeTrainOn(Tables.documents(s, d))
 
-  // final table is Some only when needFinal — see wpTrainOn's note on
-  // the released-blocks trap
-  private def bpeTrainOn(docs: org.apache.spark.sql.DataFrame,
-      needFinal: Boolean)
-      : (Seq[(String, Long)], Option[org.apache.spark.sql.DataFrame]) =
-    bpeTrainOnWords(wordSymsRel(docs), needFinal)
+  private def bpeTrainOn(docs: org.apache.spark.sql.DataFrame)
+      : (Seq[(String, Long)], org.apache.spark.sql.DataFrame) =
+    bpeTrainOnWords(wordSymsRel(docs))
 
   /** [[bpeTrainOn]] over a PRE-BUILT (w, freq, syms) table — the seam
     * q_incremental_bpe_merges trains through (its word table combines a
     * stored hist artifact with the new batch's counts instead of a
-    * full-corpus scan). */
-  private[graft] def bpeTrainOnWords(w0: org.apache.spark.sql.DataFrame,
-      needFinal: Boolean)
-      : (Seq[(String, Long)], Option[org.apache.spark.sql.DataFrame]) = {
-    var w = w0
-    // Each round reads the previous round's table TWICE (best-pair count
-    // + merge application) and feeds the next — uncached, round k would
-    // recompute rounds 1..k-1 every time (2^k blowup at a real corpus).
-    // Persist per round, drop the previous round's cache as soon as the
-    // next is materialized by its best-pair collect. When needFinal the
-    // caller receives a localCheckpoint of the final round (see below)
-    // and the round cache is dropped here either way.
-    w = w.persist()
+    * full-corpus scan). Returns the merges and the lineage-free final
+    * symbol table (see [[Artifacts.rounds]]). */
+  private[graft] def bpeTrainOnWords(w0: org.apache.spark.sql.DataFrame)
+      : (Seq[(String, Long)], org.apache.spark.sql.DataFrame) = {
     val merges = scala.collection.mutable.Buffer.empty[(String, Long)]
-    var exhausted = false
-    for (_ <- 1 to BpeRounds if !exhausted) {
-      val bestRows = pairRows(w).groupBy($("pr")).agg(sum($("freq")).as("c"))
-        .orderBy($("c").desc, $("pr")).limit(1).collect()
-      if (bestRows.isEmpty) { exhausted = true } // every word fully merged
-      else {
-      val best = bestRows(0)
-      val (bp, bc) = (best.getString(0), best.getLong(1))
-      merges += ((bp, bc))
-      // localCheckpoint per round — materializes AND truncates lineage
-      // (applyMerge references w twice; a persist-only chain doubles the
-      // logical plan every round — 2^rounds nodes at production round
-      // counts, found by TokenizerScaleMain)
-      val prev = w
-      w = applyMerge(w, bp).localCheckpoint()
-      releaseRound(prev)
+    // an empty ranking means every word is fully merged
+    val fin = Artifacts.rounds(w0, BpeRounds) { (_, w) =>
+      bpeRank(w, 1).headOption.map { best =>
+        merges += ((best.getString(0), best.getLong(1)))
+        applyMerges(w, Seq(best.getString(0)))
       }
     }
-    if (!needFinal) { releaseRound(w); (merges.toSeq, None) }
-    else {
-      // Hand the caller a LINEAGE-FREE materialized table and release the
-      // round cache HERE: localCheckpoint stores the per-word symbol
-      // table (distinct-words scale, the same footprint the round cache
-      // held) under ContextCleaner ownership, reclaimed when the caller's
-      // result is GC'd — unlike a handed-off persist(), which leaks
-      // executor memory per invocation unless every caller remembers to
-      // sweep. (On a real cluster an executor loss invalidates local
-      // checkpoint blocks — a production training job would use a
-      // reliable checkpoint dir; the artifact is metadata-scale.)
-      val fin = w.localCheckpoint()
-      releaseRound(w)
-      (merges.toSeq, Some(fin))
-    }
+    (merges.toSeq, fin)
   }
 
   /** Shared q_line_dedup / q_stream_line_dedup oracle: cross-document
@@ -1041,7 +941,7 @@ object CurationOps {
     // replays the identical algorithm (including the greedy-overlap
     // islands rule for self-pairs) via generated SQL rounds.
     Q("q_bpe_merges", bpeMergesSql) { (s, d) =>
-      val (merges, _) = bpeTrain(s, d, needFinal = false)
+      val (merges, _) = bpeTrain(s, d)
       val rows = merges.zipWithIndex.map { case ((p, c), i) => (i + 1, p, c) }
       import s.implicits._
       rows.toDF("rank", "pair", "cnt").orderBy($("rank"))
@@ -1070,8 +970,7 @@ object CurationOps {
     // derivation verbatim, so a stale artifact, a dropped batch, or a
     // drifted combine hash-mismatches the gate.
     Q("q_incremental_bpe_merges", bpeMergesSql) { (s, d) =>
-      val (merges, _) = bpeTrainOnWords(symsFromFreq(incTokWordFreq(s, d)),
-        needFinal = false)
+      val (merges, _) = bpeTrainOnWords(symsFromFreq(incTokWordFreq(s, d)))
       val rows = merges.zipWithIndex.map { case ((p, c), i) => (i + 1, p, c) }
       import s.implicits._
       rows.toDF("rank", "pair", "cnt").orderBy($("rank"))
@@ -1088,7 +987,7 @@ object CurationOps {
         |SELECT s AS symbol, CAST(SUM(freq) AS BIGINT) AS cnt
         |FROM (SELECT unnest(syms) AS s, freq FROM w${BpeRounds + 1})
         |GROUP BY s ORDER BY cnt DESC, symbol""".stripMargin) { (s, d) =>
-      val (_, Some(wFinal)) = (bpeTrain(s, d): @unchecked)
+      val (_, wFinal) = bpeTrain(s, d)
       // wFinal is a lineage-free localCheckpoint — storage is reclaimed
       // with the result, no cache handoff
       wFinal.select(explode($("syms")).as("symbol"), $("freq"))
@@ -1138,20 +1037,13 @@ object CurationOps {
     Q("q_bpe_oov", bpeOovSql) { (s, d) =>
       val docs = Tables.documents(s, d)
       val h = substring(md5($("doc_id").cast("string").cast("binary")), 1, 1)
-      val (merges, _) = bpeTrainOn(docs.filter(h <= "b"), needFinal = false)
-      // per-merge materialize-and-release, like the training loop: each
-      // applyMerge references its input TWICE (kept + rebuild), so an
-      // uncached chain would duplicate the tokenize subtree 2^m-fold
-      var tw = wordSymsRel(docs.filter(h > "d")).persist()
-      for ((bp, _) <- merges) {
-        val prev = tw
-        tw = applyMerge(tw, bp).localCheckpoint() // lineage truncation per round
-        releaseRound(prev)
+      val (merges, _) = bpeTrainOn(docs.filter(h <= "b"))
+      // the training loop's round discipline: each applyMerges reads its
+      // input TWICE (kept + rebuild), so an unmaterialized chain would
+      // duplicate the tokenize subtree 2^m-fold
+      val fin = Artifacts.rounds(wordSymsRel(docs.filter(h > "d")), merges.size) {
+        (r, tw) => Some(applyMerges(tw, Seq(merges(r - 1)._1)))
       }
-      // lineage-free handoff (the bpeTrain pattern): storage follows the
-      // result's GC lifetime instead of leaking a persist
-      val fin = tw.localCheckpoint()
-      releaseRound(tw)
       fin.select($("w").as("word"), $("freq").cast("long").as("freq"),
           length($("w")).cast("int").as("n_sym_before"),
           size($("syms")).cast("int").as("n_sym_after"))
@@ -1165,9 +1057,9 @@ object CurationOps {
     // of distinct words (broadcast or co-shuffled on the word key), and
     // the encode pass itself is embarrassingly parallel.
     Q("q_bpe_encode", bpeEncodeSql) { (s, d) =>
-      val (_, Some(wFinal)) = (bpeTrain(s, d): @unchecked)
+      val (_, wFinal) = bpeTrain(s, d)
       // wFinal is a lineage-free localCheckpoint — GC-reclaimed with the
-      // result, nothing to sweep
+      // result
       val table = wFinal.select(
         col("w").as("tw"),
         length($("w")).as("len_before"),
@@ -1190,7 +1082,7 @@ object CurationOps {
     // |langs| rows with integer sums (ratios of exact integers —
     // deterministic without DECIMAL staging).
     Q("q_bpe_fertility", bpeFertilitySql) { (s, d) =>
-      val (_, Some(wFinal)) = (bpeTrain(s, d): @unchecked)
+      val (_, wFinal) = bpeTrain(s, d)
       val table = wFinal.select(col("w").as("tw"),
         length($("w")).as("len_before"), size($("syms")).as("len_after"))
       Tables.documents(s, d)
@@ -1220,7 +1112,7 @@ object CurationOps {
     // winner's score, so the gate re-derives the selection without a
     // double ever crossing engines.
     Q("q_wordpiece_merges", wpMergesSql) { (s, d) =>
-      val (merges, _) = wpTrainOn(Tables.documents(s, d), needFinal = false)
+      val (merges, _) = wpTrainOn(Tables.documents(s, d))
       val rows = merges.zipWithIndex.map { case ((p, cab, ca, cb), i) =>
         (i + 1, p, cab, ca, cb) }
       import s.implicits._
@@ -1238,8 +1130,7 @@ object CurationOps {
     // likelihood winners can flip too); the oracle is q_wordpiece_merges'
     // full-corpus derivation verbatim.
     Q("q_incremental_wordpiece_merges", wpMergesSql) { (s, d) =>
-      val (merges, _) = wpTrainOnWords(symsFromFreq(incTokWordFreq(s, d)),
-        needFinal = false)
+      val (merges, _) = wpTrainOnWords(symsFromFreq(incTokWordFreq(s, d)))
       val rows = merges.zipWithIndex.map { case ((p, cab, ca, cb), i) =>
         (i + 1, p, cab, ca, cb) }
       import s.implicits._
@@ -1287,7 +1178,7 @@ object CurationOps {
     // training trajectory oracle-checkable: a wrong round-2 winner
     // changes some word's final segmentation and hash-mismatches.
     Q("q_wordpiece_encode", wpEncodeSql) { (s, d) =>
-      val (_, Some(wFinal)) = wpTrainOn(Tables.documents(s, d), needFinal = true): @unchecked
+      val (_, wFinal) = wpTrainOn(Tables.documents(s, d))
       val table = wFinal.select(
         col("w").as("tw"),
         length($("w")).as("len_before"),
@@ -1320,7 +1211,7 @@ object CurationOps {
         |FROM (SELECT lang, unnest(string_split(text,' ')) AS w FROM documents) d
         |JOIN wp1 ON d.w = wp1.w JOIN wp${WpRounds + 1} ON d.w = wp${WpRounds + 1}.w
         |GROUP BY d.lang ORDER BY d.lang""".stripMargin) { (s, d) =>
-      val (_, Some(wFinal)) = wpTrainOn(Tables.documents(s, d), needFinal = true): @unchecked
+      val (_, wFinal) = wpTrainOn(Tables.documents(s, d))
       val table = wFinal.select(col("w").as("tw"),
         length($("w")).as("len_before"), size($("syms")).as("len_after"))
       Tables.documents(s, d)
@@ -1352,15 +1243,13 @@ object CurationOps {
     // hash-mismatches.
     Q("q_stream_bpe_encode", bpeEncodeSql) { (s, d) =>
       Tables.ensureConf(s)
-      val (_, Some(wFinal)) = (bpeTrain(s, d): @unchecked)
-      // cache the derived encode table once — wFinal is already a
-      // materialized localCheckpoint, but each micro-batch broadcast
-      // would re-project it otherwise
-      val table = wFinal.select(col("w").as("tw"),
-        length($("w")).as("len_before"), size($("syms")).as("len_after"))
-        .persist()
-      table.count()
-      try {
+      val (_, wFinal) = bpeTrain(s, d)
+      // hold the derived encode table for the stream run — wFinal is
+      // already a materialized localCheckpoint, but each micro-batch
+      // broadcast would re-project it otherwise
+      Artifacts.scoped(wFinal.select(col("w").as("tw"),
+          length($("w")).as("len_before"), size($("syms")).as("len_after"))) { table =>
+        table.count()
         Staging.withTempDir("graft_stream_bpe_out") { out =>
           Staging.withStagedInput(
             Tables.documents(s, d).select($("doc_id"), $("text")),
@@ -1383,7 +1272,7 @@ object CurationOps {
           }
           Staging.drainParquet(s, s"$out/res", $("doc_id"))
         }
-      } finally table.unpersist()
+      }
     },
 
     // ---- WordPiece serving AT INGEST — completes the family symmetry
@@ -1394,12 +1283,10 @@ object CurationOps {
     // stale table or dropped batch hash-mismatches.
     Q("q_stream_wordpiece_encode", wpEncodeSql) { (s, d) =>
       Tables.ensureConf(s)
-      val (_, Some(wFinal)) = wpTrainOn(Tables.documents(s, d), needFinal = true): @unchecked
-      val table = wFinal.select(col("w").as("tw"),
-        length($("w")).as("len_before"), size($("syms")).as("len_after"))
-        .persist()
-      table.count()
-      try {
+      val (_, wFinal) = wpTrainOn(Tables.documents(s, d))
+      Artifacts.scoped(wFinal.select(col("w").as("tw"),
+          length($("w")).as("len_before"), size($("syms")).as("len_after"))) { table =>
+        table.count()
         Staging.withTempDir("graft_stream_wp_out") { out =>
           Staging.withStagedInput(
             Tables.documents(s, d).select($("doc_id"), $("text")),
@@ -1422,7 +1309,7 @@ object CurationOps {
           }
           Staging.drainParquet(s, s"$out/res", $("doc_id"))
         }
-      } finally table.unpersist()
+      }
     },
 
     // ---- Context-window chunking: overlapping 64-token windows with
@@ -1718,8 +1605,7 @@ object CurationOps {
           val q = stream.writeStream.outputMode("append")
             .option("checkpointLocation", s"$out/ck")
             .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, id: Long) =>
-              val occ = segRows(bdf.select($("doc_id"), $("text"))).persist()
-              try {
+              Artifacts.scoped(segRows(bdf.select($("doc_id"), $("text")))) { occ =>
                 val batchMin = occ.groupBy($("h")).agg(min($("pk")).as("bpk"))
                 val seenDir = new java.io.File(s"$out/seen")
                 // prune the store to THIS batch's hashes before the min
@@ -1749,7 +1635,7 @@ object CurationOps {
                 Staging.writeBatch(
                   batchMin.select($("h"), $("bpk").as("spk")),
                   s"$out/seen", id)
-              } finally occ.unpersist()
+              }
             }
             .start()
           try q.processAllAvailable() finally q.stop()
@@ -1828,13 +1714,11 @@ object CurationOps {
         |GROUP BY sw.source, sn.n ORDER BY sw.source""".stripMargin) { (s, d) =>
       Tables.ensureConf(s)
       // baseline: corpus word counts + total, trained in batch
-      val base = Tables.documents(s, d)
-        .select(explode(TextFunctions.tokens($("text"))).as("w"))
-        .groupBy($("w")).agg(count(lit(1)).as("cc"))
-        .withColumnRenamed("w", "cw_w")
-        .persist()
-      val nCorp = base.agg(sum($("cc"))).collect()(0).getLong(0)
-      try {
+      Artifacts.scoped(Tables.documents(s, d)
+          .select(explode(TextFunctions.tokens($("text"))).as("w"))
+          .groupBy($("w")).agg(count(lit(1)).as("cc"))
+          .withColumnRenamed("w", "cw_w")) { base =>
+        val nCorp = base.agg(sum($("cc"))).collect()(0).getLong(0)
         Staging.withTempDir("graft_stream_drift_out") { out =>
           Staging.withStagedInput(
             Tables.documents(s, d).select($("source"), $("text")),
@@ -1866,7 +1750,7 @@ object CurationOps {
           }
           Staging.drainParquet(s, s"$out/res", $("source"))
         }
-      } finally base.unpersist()
+      }
     },
 
     // ---- PII redaction audit: scrub emails, IPv4 addresses, and an

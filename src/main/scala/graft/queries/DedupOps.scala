@@ -42,13 +42,13 @@ object DedupOps {
     s"$idCol % $NewDocModulus ${if (not) "<>" else "="} 0"
   private[graft] def isNewDoc = isNewId("doc_id")
 
-  /** Distinct (doc_id, shingle-hash) relation, cached — it feeds
-    * self-joins and per-doc counts multiple times per query; without the
-    * cache the explode+distinct subtree (a shuffle each) re-runs per
-    * consumer. The shingle travels as its xxhash64 — every downstream
-    * shuffle (the distinct, the per-shingle groups, the candidate
-    * verify) moves 8-byte keys instead of ~80-char strings, a ~10×
-    * shuffle-payload cut that matters more with every scale-up. Distinct
+  /** Distinct (doc_id, shingle-hash) relation — it feeds self-joins and
+    * per-doc counts multiple times per query; every consumer shares the
+    * distinct's one exchange (ReusedExchange), so the explode runs once
+    * per query without a cache. The shingle travels as its xxhash64 —
+    * every downstream shuffle (the distinct, the per-shingle groups, the
+    * candidate verify) moves 8-byte keys instead of ~80-char strings, a
+    * ~10× shuffle-payload cut that matters more with every scale-up. Distinct
     * hashes = distinct shingles modulo 64-bit collisions (≈n²/2⁶⁵ —
     * deterministic per corpus, and the DuckDB oracle counts raw strings,
     * so a colliding corpus would turn the gate red rather than silently
@@ -60,7 +60,6 @@ object DedupOps {
       .select(col("doc_id"),
         explode(TextFunctions.shingleHashes(col("text"), 3)).as("s"))
       .distinct()
-      .cache()
 
   /** Exact Jaccard over a GIVEN candidate pair set: two equi-joins against
     * the shingle relation count the shared distinct shingles per pair,
@@ -277,7 +276,9 @@ object DedupOps {
     * q_ngram_jaccard (pair listing) and q_dedup_clusters (grouping).
     * Shape notes live on q_ngram_jaccard below. */
   private def ngramJaccardPairs(s: SparkSession, d: String): DataFrame = {
-    val sh = shingleRel(s, d)
+    // checkpointed: the per-doc counts and the pair emission each finish
+    // the distinct over the shared exchange otherwise
+    val sh = shingleRel(s, d).localCheckpoint()
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // pair generation per shingle GROUP, not a self-join: one shuffle on
     // the shingle key, each group emits its ordered doc pairs in place
@@ -312,18 +313,14 @@ object DedupOps {
     * band keys; the exact kernel only ever touches candidates. Eager
     * localCheckpoint: the result is near-dup-PAIR-scale (tiny next to the
     * corpus) and the [[minhashVerifiedPairs]] artifact re-serves it, so
-    * lineage must be severed — and once the pairs are materialized the
-    * shingle cache backing the derivation is dropped (no session-lifetime
-    * executor-cache residue). */
+    * lineage must be severed. */
   private def deriveVerifiedPairs(s: SparkSession, d: String): DataFrame = {
     val sh = shingleRel(s, d)
-    try {
-      val sig = sh.groupBy(col("doc_id"))
-        .agg(graft.functions.MinHashSignature.minhashSig(col("s"), 64).as("sig"))
-      val cands = MinHash.candidates(
-        MinHash.bands(sig, "doc_id", numBands = 16, numHashes = 64), "doc_id")
-      exactJaccard(sh, cands).filter(col("jaccard") >= 0.8).localCheckpoint()
-    } finally { sh.unpersist(false); () }
+    val sig = sh.groupBy(col("doc_id"))
+      .agg(graft.functions.MinHashSignature.minhashSig(col("s"), 64).as("sig"))
+    val cands = MinHash.candidates(
+      MinHash.bands(sig, "doc_id", numBands = 16, numHashes = 64), "doc_id")
+    exactJaccard(sh, cands).filter(col("jaccard") >= 0.8).localCheckpoint()
   }
 
   /** ONE LSH-verified pair graph per (SparkContext, sfDir) — the dup-graph
@@ -562,7 +559,6 @@ object DedupOps {
       val pairs = minhashVerifiedPairs(s, d).select(col("doc_a"), col("doc_b"))
       val e = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
         .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-        .cache()
       val deg = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       val nv = deg.count()
       var r = deg.select(col("u").as("node"), lit(1.0 / nv).as("r"))
@@ -981,7 +977,6 @@ object DedupOps {
       val L = 30 // k + w - 1: the winnowing guarantee length
       val docs = Tables.spread(Tables.documents(s, d), col("doc_id"))
         .select(col("doc_id"), TextFunctions.normalize(col("text")).as("norm"))
-        .cache()
       // ordered pair emission inside a key group (the ngramJaccardPairs
       // pattern): groupBy key → sorted doc list → in-task combinatorics
       def pairsByKey(rel: DataFrame, key: String): DataFrame =
@@ -992,7 +987,7 @@ object DedupOps {
           .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       val prints = docs.select(col("doc_id"),
         explode(graft.functions.Winnow.fingerprints(col("norm"), k = 24, window = 7)).as("fp"))
-      val cands = pairsByKey(prints, "fp").distinct().cache()
+      val cands = pairsByKey(prints, "fp").distinct()
       // exact verify: |shared distinct 30-grams| per pair, emitted from
       // per-gram groups — over CANDIDATE DOCS ONLY. The winnowing
       // guarantee cuts both ways: any pair sharing a 30-gram shares a

@@ -346,39 +346,36 @@ object RetrievalOps {
       val top5 = bm25Scores(s, d)
         .orderBy(col("bm25").desc, col("doc_id")).limit(5)
         .select(col("doc_id"))
-      // the retrieved list gates the corpus scan — 5 docs survive
-      val toks = Tables.documents(s, d).join(broadcast(top5), "doc_id")
-        .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
-        .cache()
-      // 1-based positions over ALL tokens (empties included) — the
-      // oracle's generate_subscripts numbering
-      val hits = toks
-        .select(col("doc_id"), posexplode(col("tk")).as(Seq("p0", "word")))
-        .filter(col("word").isin(QueryTerms: _*))
-        .select(col("doc_id"), (col("p0") + 1).as("pos"))
-        .cache()
-      try {
-        val a = hits.select(col("doc_id"), col("pos").as("start"))
-        val b = hits.select(col("doc_id").as("doc_b"), col("pos").as("pos_b"))
-        val win = a.join(b, col("doc_b") === col("doc_id") &&
-            col("pos_b") >= col("start") && col("pos_b") < col("start") + 32)
-          .groupBy(col("doc_id"), col("start"))
-          .agg(count(lit(1)).as("n_hits"))
-        val best = win
-          .withColumn("rn", row_number().over(Window.partitionBy(col("doc_id"))
-            .orderBy(col("n_hits").desc, col("start"))))
-          .filter(col("rn") === 1)
-        val res = best.join(toks, "doc_id")
-          .select(col("doc_id"),
-            col("start").cast("long").as("passage_start"),
-            col("n_hits").cast("long").as("n_hits"),
-            concat_ws(" ", slice(col("tk"), col("start"), lit(32))).as("passage"))
-          .orderBy(col("doc_id"))
-        // both caches serve multi-consumer sub-plans of THIS query only;
-        // localize the ≤5-row answer so they can be dropped here instead
-        // of accumulating executor storage for the session lifetime
-        s.createDataFrame(res.collectAsList(), res.schema)
-      } finally { hits.unpersist(false); toks.unpersist(false); () }
+      // the retrieved list gates the corpus scan — 5 docs survive. Both
+      // scopes serve multi-consumer sub-plans of THIS query only; the
+      // ≤5-row answer is localized before they close
+      Artifacts.scoped(Tables.documents(s, d).join(broadcast(top5), "doc_id")
+          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))) { toks =>
+        // 1-based positions over ALL tokens (empties included) — the
+        // oracle's generate_subscripts numbering
+        Artifacts.scoped(toks
+            .select(col("doc_id"), posexplode(col("tk")).as(Seq("p0", "word")))
+            .filter(col("word").isin(QueryTerms: _*))
+            .select(col("doc_id"), (col("p0") + 1).as("pos"))) { hits =>
+          val a = hits.select(col("doc_id"), col("pos").as("start"))
+          val b = hits.select(col("doc_id").as("doc_b"), col("pos").as("pos_b"))
+          val win = a.join(b, col("doc_b") === col("doc_id") &&
+              col("pos_b") >= col("start") && col("pos_b") < col("start") + 32)
+            .groupBy(col("doc_id"), col("start"))
+            .agg(count(lit(1)).as("n_hits"))
+          val best = win
+            .withColumn("rn", row_number().over(Window.partitionBy(col("doc_id"))
+              .orderBy(col("n_hits").desc, col("start"))))
+            .filter(col("rn") === 1)
+          val res = best.join(toks, "doc_id")
+            .select(col("doc_id"),
+              col("start").cast("long").as("passage_start"),
+              col("n_hits").cast("long").as("n_hits"),
+              concat_ws(" ", slice(col("tk"), col("start"), lit(32))).as("passage"))
+            .orderBy(col("doc_id"))
+          s.createDataFrame(res.collectAsList(), res.schema)
+        }
+      }
     },
 
     // ---- Lexical index maintenance AT INGEST: documents stream in and

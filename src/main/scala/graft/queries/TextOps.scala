@@ -159,9 +159,10 @@ object TextOps {
       |scored AS (SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
       |             round(CAST(s AS DOUBLE) / n_tok, 6) AS xent FROM sc)""".stripMargin
 
-  /** (doc_id, n_tok, xent) unigram-LM scores, persisted (one row per DOC,
-    * 3 narrow columns — orders of magnitude smaller than the corpus;
-    * lifetime delegated to the harness sweep). ONE explode pass reduced
+  /** (doc_id, n_tok, xent) unigram-LM scores (one row per DOC, 3 narrow
+    * columns — orders of magnitude smaller than the corpus). Uncached:
+    * its consumers' branches share the per-doc aggregate's exchange
+    * (ReusedExchange). ONE explode pass reduced
     * to the lm_dwc (doc, word, n) artifact: the vocab aggregate and the
     * scoring join both scan the columnar artifact instead of each
     * re-paying the corpus scan+explode. n × DECIMAL (6dp cost) is exact,
@@ -179,11 +180,12 @@ object TextOps {
       .select(col("doc_id"), col("n"),
         round(-log(col("tf").cast("double") / col("ntot")), 6).as("c"))
       .groupBy(col("doc_id"))
-      .agg(sum(col("n")).as("n_tok"),
-        sum(col("c").cast("decimal(18,6)") * col("n")).cast("double").as("s"))
+      // sums in the order the score reads them: the mean branch's pruned
+      // aggregate then equals this one, so both share one exchange
+      .agg(sum(col("c").cast("decimal(18,6)") * col("n")).cast("double").as("s"),
+        sum(col("n")).as("n_tok"))
       .select(col("doc_id"), col("n_tok"),
         round(col("s") / col("n_tok"), 6).as("xent"))
-      .persist()
   }
 
   /** Corpus (doc, word, n) token counts — staged once as a parquet
@@ -884,8 +886,10 @@ object TextOps {
       val words = docs
         .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("word"))
         .filter(col("word") =!= "")
+      // checkpointed: the df branch prunes the count column, so the two
+      // branches share no exchange and would each re-run the explode
       val tf = words.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-        .cache()
+        .localCheckpoint()
       // tf rows are already one-per-(doc,word): df is a plain count over
       // them — no second corpus explode, no COUNT DISTINCT expand
       val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
@@ -1006,13 +1010,13 @@ object TextOps {
         .select(col("doc_id"), col("text"),
           splitTag.as("split")))
       // benchmark side: distinct (doc, shingle-hash) pairs — metadata-scale
-      // in production, so persisting it for the two bloom-building jobs +
-      // the verify join is a dimension-table cache, not a corpus cache.
+      // in production. Checkpointed: the bloom-building jobs AND the
+      // returned verify join read it, and it is derived once.
       val te = docs.filter(col("split") === "test")
         .select(col("doc_id"),
           explode(TextFunctions.shingleHashes(col("text"), 13)).as("s"))
         .distinct()
-        .persist()
+        .localCheckpoint()
       val bloom = Bloom.buildLong(te.select(col("s")), "s", fpp = 1e-3)
       // corpus side: scan → explode → hash → BLOOM FILTER (map-side, inside
       // whole-stage codegen) → distinct over survivors only. No train
@@ -1024,11 +1028,6 @@ object TextOps {
       // exact verify: a bloom false positive is a train shingle NOT in the
       // benchmark set, so the equi-join with te eliminates it; members pass
       // the bloom unconditionally — the join result is exactly te ∩ train.
-      // Cache lifetime: te stays persisted until the CALLER materializes
-      // this (lazy) result — it cannot be unpersisted inside the closure
-      // without recomputing the benchmark side in the verify join. Both
-      // harnesses sweep the cache manager after each query; a long-lived
-      // session invoking queries directly inherits that contract.
       te.join(broadcast(trCand), "s")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
         .orderBy(col("doc_id"))
@@ -1066,12 +1065,10 @@ object TextOps {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
           splitTag.as("split"))
-      val te = docs.filter(col("split") === "test")
-        .select(col("doc_id"),
-          explode(TextFunctions.shingleHashes(col("text"), 13)).as("s"))
-        .distinct()
-        .persist()
-      try {
+      Artifacts.scoped(docs.filter(col("split") === "test")
+          .select(col("doc_id"),
+            explode(TextFunctions.shingleHashes(col("text"), 13)).as("s"))
+          .distinct()) { te =>
         val bloom = Bloom.buildLong(te.select(col("s")), "s", fpp = 1e-3)
         val sink = s"graft_stream_decon_${deconRun.incrementAndGet()}"
         // bounded sink drain (matched pairs only) → distinct (a train
@@ -1097,7 +1094,7 @@ object TextOps {
             .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
             .orderBy(col("doc_id"))
         }
-      } finally te.unpersist()
+      }
     },
 
     // ---- INCREMENTAL decontamination — the refresh-quartet seam for the
@@ -1199,12 +1196,10 @@ object TextOps {
           splitTag.as("split"))
       // benchmark shingles over NORMALIZED text (shingles must be a pure
       // function of the fingerprint so keeper choice can't leak into them)
-      val te = docs.filter(col("split") === "test")
-        .select(explode(TextFunctions.shingleHashes(
-          TextFunctions.normalize(col("text")), 13)).as("s"))
-        .distinct()
-        .persist()
-      try {
+      Artifacts.scoped(docs.filter(col("split") === "test")
+          .select(explode(TextFunctions.shingleHashes(
+            TextFunctions.normalize(col("text")), 13)).as("s"))
+          .distinct()) { te =>
         val bloom = Bloom.buildLong(te, "s", fpp = 1e-3)
         val sink = s"graft_stream_curation_${curationRun.incrementAndGet()}"
         // bounded drain: one row per contaminated-shingle OCCURRENCE —
@@ -1234,7 +1229,7 @@ object TextOps {
           _.groupBy(col("fp")).agg(count(lit(1)).as("n_hits"))
             .orderBy(col("fp"))
         }
-      } finally te.unpersist()
+      }
     },
 
     // ---- Source-mixing weights: per-source token shares and the
@@ -1857,13 +1852,13 @@ object TextOps {
         |  CAST(n_unique AS BIGINT) AS n_unique,
         |  round(CAST(n_unique AS DOUBLE) / n_sh, 6) AS novelty
         |FROM p ORDER BY doc_id""".stripMargin) { (s, d) =>
-      // cached: consumed twice (df derivation + the join back) — one
-      // corpus explode, not two; harness sweep owns the lifetime
+      // consumed twice (df derivation + the join back); both branches
+      // share the distinct's exchange (ReusedExchange) — one corpus
+      // explode, not two
       val sh = Tables.documents(s, d)
         .select(col("doc_id"),
           explode(TextFunctions.shingleHashes(col("text"), 13)).as("s"))
         .distinct()
-        .cache()
       val df = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
       sh.join(df, "s")
         .groupBy(col("doc_id"))
@@ -2456,7 +2451,8 @@ object TextOps {
          |  CAST(SUM(n_tok) AS BIGINT) AS n_tok,
          |  MIN(xent) AS xent_min, MAX(xent) AS xent_max
          |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin) { (s, d) =>
-      val scored = lmScored(s, d)
+      // checkpointed: three branches (histogram, count, bucketing) read it
+      val scored = lmScored(s, d).localCheckpoint()
       val h = scored.groupBy(col("xent")).agg(count(lit(1)).as("cnt"))
       val nn = scored.agg(count(lit(1)).as("n"))
       // bounded single-partition window: one histogram row per DISTINCT
@@ -2548,11 +2544,12 @@ object TextOps {
       // the oracle's per-OCCURRENCE decimal sum bit-for-bit.
       val scored = dgc.join(model, "g")
         .groupBy(col("doc_id"))
-        .agg(sum(col("n")).as("n_tri"),
-          sum(col("cost").cast("decimal(18,6)") * col("n")).cast("double").as("s"))
+        // sums in the order the score reads them: the mean branch's pruned
+        // aggregate then equals this one, so both share one exchange
+        .agg(sum(col("cost").cast("decimal(18,6)") * col("n")).cast("double").as("s"),
+          sum(col("n")).as("n_tri"))
         .select(col("doc_id"), col("n_tri"),
           round(col("s") / col("n_tri"), 6).as("xent"))
-        .persist()
       val mu = scored.agg(
         round(Tables.exactSum(col("xent"), 6) / count(lit(1)), 6).as("mu"))
       scored.crossJoin(broadcast(mu))
@@ -2627,11 +2624,12 @@ object TextOps {
         |FROM scored CROSS JOIN m ORDER BY doc_id""".stripMargin) { (s, d) =>
       val scored = bilmDbc(s, d).join(bilmModel(s, d), "g")
         .groupBy(col("doc_id"))
-        .agg(sum(col("n")).as("n_bg"),
-          sum(col("mcost") * col("n")).as("smicro"))
+        // sums in the order the score reads them: the mean branch's pruned
+        // aggregate then equals this one, so both share one exchange
+        .agg(sum(col("mcost") * col("n")).as("smicro"),
+          sum(col("n")).as("n_bg"))
         .select(col("doc_id"), col("n_bg"),
           expr("(2 * smicro + n_bg) div (2 * n_bg)").as("xm"))
-        .persist()
       val m = scored.agg(count(lit(1)).as("k"), sum(col("xm")).as("txm"))
       scored.crossJoin(broadcast(m))
         .select(col("doc_id"), col("n_bg"),
@@ -2688,11 +2686,12 @@ object TextOps {
         |FROM scored CROSS JOIN m ORDER BY doc_id""".stripMargin) { (s, d) =>
       val scored = bilmDbc(s, d).join(knModel(s, d), "g")
         .groupBy(col("doc_id"))
-        .agg(sum(col("n")).as("n_bg"),
-          sum(col("mcost") * col("n")).as("smicro"))
+        // sums in the order the score reads them: the mean branch's pruned
+        // aggregate then equals this one, so both share one exchange
+        .agg(sum(col("mcost") * col("n")).as("smicro"),
+          sum(col("n")).as("n_bg"))
         .select(col("doc_id"), col("n_bg"),
           expr("(2 * smicro + n_bg) div (2 * n_bg)").as("xm"))
-        .persist()
       val m = scored.agg(count(lit(1)).as("k"), sum(col("xm")).as("txm"))
       scored.crossJoin(broadcast(m))
         .select(col("doc_id"), col("n_bg"),
@@ -2704,8 +2703,8 @@ object TextOps {
 
     // ---- The bigram LM SERVED AT INGEST — the streaming twin
     // (q_stream_dsir's offline-train / online-score shape): the model
-    // trains offline on the stored corpus (the relation above,
-    // persisted), each arriving micro-batch derives its own (doc,
+    // trains offline on the stored corpus (the relation above, held for
+    // the stream run), each arriving micro-batch derives its own (doc,
     // bigram, n) counts array-side and scores them against the
     // broadcast-joined model, and only the per-doc integer partials
     // (n_bg, smicro — mergeable by construction) ride the idempotent
@@ -2746,8 +2745,7 @@ object TextOps {
         |  CAST(xm AS DOUBLE) <= CAST(txm AS DOUBLE) / k AS keep
         |FROM scored CROSS JOIN m ORDER BY doc_id""".stripMargin) { (s, d) =>
       Tables.ensureConf(s)
-      val model = bilmModel(s, d).persist()
-      try {
+      Artifacts.scoped(bilmModel(s, d)) { model =>
         Staging.withTempDir("graft_stream_bilm_out") { out =>
           Staging.withStagedInput(
             Tables.documents(s, d).select("doc_id", "text"),
@@ -2775,7 +2773,6 @@ object TextOps {
           val scored = Staging.drainParquet(s, s"$out/scores")
             .select(col("doc_id"), col("n_bg"),
               expr("(2 * smicro + n_bg) div (2 * n_bg)").as("xm"))
-            .persist()
           val m = scored.agg(count(lit(1)).as("k"), sum(col("xm")).as("txm"))
           scored.crossJoin(broadcast(m))
             .select(col("doc_id"), col("n_bg"),
@@ -2784,7 +2781,7 @@ object TextOps {
                 col("txm").cast("double") / col("k")).as("keep"))
             .orderBy(col("doc_id"))
         }
-      } finally { model.unpersist(false); () }
+      }
     },
 
     // ---- Per-document character-entropy — the quality signal that
@@ -2835,14 +2832,16 @@ object TextOps {
         |FROM h CROSS JOIN m ORDER BY doc_id""".stripMargin) { (s, d) =>
       // the native one-pass kernel (functions/CharEntropy.scala): the
       // per-char terms replicate Spark's own log2/round bit-for-bit, so
-      // this is the HOF chain's exact output at O(n) per row
+      // this is the HOF chain's exact output at O(n) per row. Checkpointed:
+      // the subtree is map-only, so there is no exchange for the mean and
+      // the flag branches to share, and each would re-run the kernel
       val h = Tables.documents(s, d)
         .select(col("doc_id"),
           graft.functions.CharEntropyMicroBits(col("text")).as("st"))
         .select(col("doc_id"), col("st.n_chars").as("n_chars"),
           col("st.em").as("em"))
         .filter(col("n_chars") > 0)
-        .persist()
+        .localCheckpoint()
       val m = h.agg(count(lit(1)).as("k"), sum(col("em")).as("tem"))
       h.crossJoin(broadcast(m))
         .select(col("doc_id"), col("n_chars"),
@@ -3137,9 +3136,8 @@ object TextOps {
     * to the full table. */
   private[graft] def trainQualityWeightsOn(
       featsIn: org.apache.spark.sql.DataFrame): Array[Double] = {
-    val feats = featsIn.persist()
     val w = Array(0.0, 0.0, 0.0, 0.0)
-    try {
+    Artifacts.scoped(featsIn) { feats =>
       for (_ <- 1 to 3) {
         val resid = col("y") - sigmoidCol(w)
         val g = feats.agg(
@@ -3153,7 +3151,7 @@ object TextOps {
             1000000.0
       }
       w
-    } finally { feats.unpersist(false); () }
+    }
   }
 
   /** Scoring: a pure map with the trained literal weights — zero hash

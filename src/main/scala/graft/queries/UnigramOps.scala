@@ -256,61 +256,56 @@ object UnigramOps {
     * corpus whose raw candidate set exceeds it. */
   private[graft] def seedCounts(words: DataFrame,
       maxPiece: Int = MaxPiece, seedCap: Int = SeedCap): Map[String, Long] = {
-    val pieceCounts = words
+    // two actions (singles collect + capped multis) — scoped so the
+    // substring explosion and its aggregate run once, not twice
+    Artifacts.scoped(words
       .select(col("w"), col("f"),
         explode(sequence(lit(1), lit(maxPiece))).as("L"))
       .filter(length(col("w")) >= col("L"))
       .select(col("w"), col("f"), col("L"),
         explode(sequence(lit(1), length(col("w")) - col("L") + 1)).as("st"))
       .select(expr("substring(w, st, L)").as("piece"), col("f"))
-      .groupBy(col("piece")).agg(sum(col("f")).as("c"))
-      // two actions (singles collect + capped multis) — persisted so the
-      // substring explosion and its aggregate run once, not twice
-      .persist()
-    try {
+      .groupBy(col("piece")).agg(sum(col("f")).as("c"))) { pieceCounts =>
       val singles = pieceCounts.filter(length(col("piece")) === 1)
         .collect().map(r => r.getString(0) -> r.getLong(1))
       val multis = pieceCounts.filter(length(col("piece")) > 1)
         .orderBy(col("c").desc, col("piece")).limit(seedCap)
         .collect().map(r => r.getString(0) -> r.getLong(1))
       (singles ++ multis).toMap
-    } finally { pieceCounts.unpersist(); () }
+    }
   }
 
   /** Training loop at arbitrary dials — the gate queries run it at the
     * demonstration constants (via [[train]], which the generated oracle
     * SQL mirrors); TokenizerScaleMain runs it at production constants
     * (MaxPiece 8, multi-kB budget, 10⁶ seed cap) to prove the loop
-    * structure beyond the demo dials. Returns (kept piece counts, the
-    * persisted word relation — caller unpersists). */
+    * structure beyond the demo dials. Returns the kept piece counts. */
   private[graft] def trainWith(s: SparkSession, d: String, maxPiece: Int,
-      rounds: Int, budget: Int, seedCap: Int): (Seq[(String, Long)], DataFrame) =
+      rounds: Int, budget: Int, seedCap: Int): Seq[(String, Long)] =
     trainWithWords(wordRel(s, d), maxPiece, rounds, budget, seedCap)
 
   /** [[trainWith]] over a PRE-BUILT (w, f) table — the seam
     * q_incremental_unigram_tokenizer trains through. */
   private[graft] def trainWithWords(wordsIn: DataFrame, maxPiece: Int,
-      rounds: Int, budget: Int, seedCap: Int): (Seq[(String, Long)], DataFrame) = {
-    val words = wordsIn.persist()
-    words.count() // materialized once; every EM pass re-reads the cache
-    // seed: frequency-weighted substring occurrences, 1..maxPiece chars,
-    // multi-char cardinality capped at seedCap before the driver collect
-    val seed = seedCounts(words, maxPiece, seedCap)
-    val chars = seed.keySet.filter(_.length == 1)
-    var counts = seed
-    (1 to rounds).foreach { _ =>
-      counts = emCounts(segment(words, microNats(counts), maxPiece), chars)
+      rounds: Int, budget: Int, seedCap: Int): Seq[(String, Long)] =
+    Artifacts.scoped(wordsIn) { words =>
+      words.count() // materialized once; every EM pass re-reads the cache
+      // seed: frequency-weighted substring occurrences, 1..maxPiece chars,
+      // multi-char cardinality capped at seedCap before the driver collect
+      val seed = seedCounts(words, maxPiece, seedCap)
+      val chars = seed.keySet.filter(_.length == 1)
+      var counts = seed
+      (1 to rounds).foreach { _ =>
+        counts = emCounts(segment(words, microNats(counts), maxPiece), chars)
+      }
+      // prune: all single chars + top-budget multi-char by (c DESC, piece)
+      val keptMulti = counts.toSeq.filter(_._1.length > 1)
+        .sortBy { case (p, c) => (-c, p) }.take(budget)
+      counts.toSeq.filter(_._1.length == 1) ++ keptMulti
     }
-    // prune: all single chars + top-budget multi-char by (c DESC, piece)
-    val keptMulti = counts.toSeq.filter(_._1.length > 1)
-      .sortBy { case (p, c) => (-c, p) }.take(budget)
-    val kept = counts.toSeq.filter(_._1.length == 1) ++ keptMulti
-    (kept, words)
-  }
 
-  /** Full training run at the gate constants: returns (kept piece
-    * counts, word relation). */
-  private def train(s: SparkSession, d: String): (Seq[(String, Long)], DataFrame) =
+  /** Full training run at the gate constants: the kept piece counts. */
+  private def train(s: SparkSession, d: String): Seq[(String, Long)] =
     trainWith(s, d, MaxPiece, Rounds, Budget, SeedCap)
 
   private def roundLogp(c: Long, t: Long): Double =
@@ -328,13 +323,11 @@ object UnigramOps {
     // hash-mismatch.
     Q("q_unigram_tokenizer", tokenizerSql) { (s, d) =>
       import s.implicits._
-      val (kept, words) = train(s, d)
-      try {
-        val t = kept.map(_._2).sum
-        kept.map { case (p, c) => (p, c, roundLogp(c, t)) }
-          .toDF("piece", "cnt", "logp")
-          .orderBy(col("cnt").desc, col("piece"))
-      } finally { words.unpersist(); () }
+      val kept = train(s, d)
+      val t = kept.map(_._2).sum
+      kept.map { case (p, c) => (p, c, roundLogp(c, t)) }
+        .toDF("piece", "cnt", "logp")
+        .orderBy(col("cnt").desc, col("piece"))
     },
 
     // ---- INCREMENTAL unigram training — the third tokenizer family on
@@ -350,14 +343,12 @@ object UnigramOps {
     // artifact or drifted combine hash-mismatches.
     Q("q_incremental_unigram_tokenizer", tokenizerSql) { (s, d) =>
       import s.implicits._
-      val (kept, words) = trainWithWords(incUnigramWords(s, d),
+      val kept = trainWithWords(incUnigramWords(s, d),
         MaxPiece, Rounds, Budget, SeedCap)
-      try {
-        val t = kept.map(_._2).sum
-        kept.map { case (p, c) => (p, c, roundLogp(c, t)) }
-          .toDF("piece", "cnt", "logp")
-          .orderBy(col("cnt").desc, col("piece"))
-      } finally { words.unpersist(); () }
+      val t = kept.map(_._2).sum
+      kept.map { case (p, c) => (p, c, roundLogp(c, t)) }
+        .toDF("piece", "cnt", "logp")
+        .orderBy(col("cnt").desc, col("piece"))
     },
 
     // ---- Per-language fertility/compression under the trained unigram
@@ -382,22 +373,19 @@ object UnigramOps {
          |JOIN e ON d.w = e.w
          |WHERE d.w <> ''
          |GROUP BY d.lang ORDER BY d.lang""".stripMargin) { (s, d) =>
-      val (kept, words) = train(s, d)
-      try {
-        val enc = segment(words, microNats(kept.toMap))
-          .select(col("w").as("tw"), size(split(col("seg"), " ")).as("np"))
-        Tables.documents(s, d)
-          .select(col("lang"), explode(split(col("text"), " ")).as("w"))
-          .filter(col("w") =!= "")
-          .join(broadcast(enc), col("w") === col("tw"))
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_words"), sum(col("np")).as("n_pieces"),
-            sum(length(col("w"))).as("n_chars"))
-          .select(col("lang"), col("n_words"), col("n_pieces"),
-            round(col("n_pieces").cast("double") / col("n_words"), 6).as("fertility"),
-            round(col("n_pieces").cast("double") / col("n_chars"), 6).as("compression"))
-          .orderBy(col("lang"))
-      } finally { words.unpersist(); () }
+      val enc = segment(wordRel(s, d), microNats(train(s, d).toMap))
+        .select(col("w").as("tw"), size(split(col("seg"), " ")).as("np"))
+      Tables.documents(s, d)
+        .select(col("lang"), explode(split(col("text"), " ")).as("w"))
+        .filter(col("w") =!= "")
+        .join(broadcast(enc), col("w") === col("tw"))
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_words"), sum(col("np")).as("n_pieces"),
+          sum(length(col("w"))).as("n_chars"))
+        .select(col("lang"), col("n_words"), col("n_pieces"),
+          round(col("n_pieces").cast("double") / col("n_words"), 6).as("fertility"),
+          round(col("n_pieces").cast("double") / col("n_chars"), 6).as("compression"))
+        .orderBy(col("lang"))
     },
 
     // ---- Unigram encode AT INGEST — the q_stream_bpe_encode twin for
@@ -421,11 +409,8 @@ object UnigramOps {
          |WHERE d.w <> ''
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
       Tables.ensureConf(s)
-      val (kept, words) = train(s, d)
-      val enc = segment(words, microNats(kept.toMap))
-        .select(col("w").as("tw"), size(split(col("seg"), " ")).as("np"))
-        .persist()
-      try {
+      Artifacts.scoped(segment(wordRel(s, d), microNats(train(s, d).toMap))
+          .select(col("w").as("tw"), size(split(col("seg"), " ")).as("np"))) { enc =>
         enc.count() // materialize once; each trigger broadcasts the table
         Staging.withTempDir("graft_stream_uni_out") { out =>
           Staging.withStagedInput(
@@ -450,7 +435,7 @@ object UnigramOps {
           }
           Staging.drainParquet(s, s"$out/res", col("doc_id"))
         }
-      } finally { enc.unpersist(); words.unpersist(); () }
+      }
     },
 
     // ---- Tokenizer SERVING: Viterbi-encode every distinct corpus word
@@ -460,15 +445,11 @@ object UnigramOps {
     // broadcast-map pass; the oracle re-enumerates every segmentation
     // of every word against the same final vocabulary.
     Q("q_unigram_encode", encodeSql) { (s, d) =>
-      val (kept, words) = train(s, d)
-      try {
-        val lp = microNats(kept.toMap)
-        segment(words, lp)
-          .select(col("w").as("word"), col("f").as("freq"),
-            col("seg").as("pieces"),
-            size(split(col("seg"), " ")).cast("long").as("n_pieces"))
-          .orderBy(col("word"))
-      } finally { words.unpersist(); () }
+      segment(wordRel(s, d), microNats(train(s, d).toMap))
+        .select(col("w").as("word"), col("f").as("freq"),
+          col("seg").as("pieces"),
+          size(split(col("seg"), " ")).cast("long").as("n_pieces"))
+        .orderBy(col("word"))
     }
   )
 }

@@ -66,24 +66,21 @@ object VectorOps {
 
   /** (vec_id, v, cluster) — the cell-blocked SemDeDup components (first-K
     * quantizer, within-cell exact-cosine edges, alternating-star
-    * connected components). Cache lifetime: the cached relation is still
-    * consulted when the CALLER materializes the (lazy, per-vector — not
-    * collectable at scale) result, so it cannot be unpersisted here;
-    * both harnesses sweep the cache manager after each query. */
+    * connected components). */
   private def embedComponents(s: SparkSession, d: String): DataFrame =
     // staged ONCE per (context, sfDir) as a parquet artifact: FOUR gate
     // consumers (q_embed_clusters, q_semdedup_keep, q_stream_semdedup,
     // and their downstream relations) each re-derived the full
-    // clustering chain before — the harness sweeps executor cache
-    // between queries, so cache() shared nothing across them (~70
+    // clustering chain before — an executor cache is released when
+    // its query returns, so it shared nothing across them (~70
     // combined cpu-s of re-derivation at sf0.1). Every consumer's
     // oracle still states the full derivation, so a stale artifact
     // hash-mismatches. The derive materializes via localCheckpoint so
-    // the corpus cache can release before the artifact write returns.
+    // the corpus scope can close before the artifact write runs.
     Artifacts.parquet(s, d, "sem_components") {
-      val e = embedRel(s, d).persist()
-      try componentsCells(e, quantCentroids(e)).localCheckpoint()
-      finally { e.unpersist(); () }
+      Artifacts.scoped(embedRel(s, d)) { e =>
+        componentsCells(e, quantCentroids(e)).localCheckpoint()
+      }
     }
 
   /** First-k coarse-quantizer centroids of a (vec_id, v) relation
@@ -717,17 +714,15 @@ object VectorOps {
       // scd feeds BOTH decision consumers (keeper agg + join back) —
       // un-materialized, every consumer subtree re-derives the whole
       // clustering (profiled at ~29 of 35 cpu-s re-derivation). x is
-      // cached (exploded, dims×corpus, dropped right after); scd is
-      // checkpointed (one narrow row per vector — the decision relation
-      // a production run materializes anyway).
-      val x = embedComponents(s, d)
-        .select(col("cluster"), col("vec_id"),
-          posexplode(col("v")).as(Seq("i", "x")))
-        .persist()
-      try {
+      // scoped (exploded, dims×corpus, held for scd's checkpoint job
+      // only); scd is checkpointed (one narrow row per vector — the
+      // decision relation a production run materializes anyway).
+      Artifacts.scoped(embedComponents(s, d)
+          .select(col("cluster"), col("vec_id"),
+            posexplode(col("v")).as(Seq("i", "x")))) { x =>
         val scd = semdedupCentCos(x, semdedupCentroids(x)).localCheckpoint()
         semdedupDecision(scd).orderBy(col("vec_id"))
-      } finally { x.unpersist(); () }
+      }
     },
 
     // ---- STREAMING SemDeDup twin — the retention rule SERVED at ingest
@@ -745,14 +740,12 @@ object VectorOps {
     // centroid, or train/serve scoring skew hash-mismatches.
     Q("q_stream_semdedup", semdedupKeepSql) { (s, d) =>
       Tables.ensureConf(s)
-      val comp = embedComponents(s, d).persist()
-      try {
+      Artifacts.scoped(embedComponents(s, d)) { comp =>
         comp.count() // materialize: every trigger joins the snapshot
         val lab = comp.select(col("vec_id"), col("cluster"))
         val x0 = comp.select(col("cluster"), col("vec_id"),
           posexplode(col("v")).as(Seq("i", "x")))
-        val cm = semdedupCentroids(x0).persist()
-        try {
+        Artifacts.scoped(semdedupCentroids(x0)) { cm =>
           cm.count()
           Staging.withStagedInput(embedRel(s, d), "vec_id", nFiles = 3,
             prefix = "graft_stream_semdedup") { in =>
@@ -776,8 +769,8 @@ object VectorOps {
                 .orderBy(col("vec_id"))
             }
           }
-        } finally cm.unpersist()
-      } finally comp.unpersist()
+        }
+      }
     },
 
     // ---- INCREMENTAL SemDeDup — the embedding analogue of
@@ -807,27 +800,18 @@ object VectorOps {
     Q("q_incremental_semdedup", incSemdedupSql) { (s, d) =>
       val e = embedRel(s, d)
       val isNew = DedupOps.isNewId("vec_id")
-      val hist = e.filter(!isNew).persist()
-      // shared snapshot derivation, built AT MOST ONCE and only if some
-      // artifact is missing (first snapshot run); on a refresh all three
-      // artifacts hit and the historical corpus is never scanned
-      // evaluated at most once, and ONLY inside the derive closures (a
-      // refresh run with all artifacts staged never scans the
-      // historical corpus); shared between the quant artifact and the
-      // clustering so the first snapshot build pays one count + collect
-      lazy val histCents = quantCentroids(hist)
-      var compCache: DataFrame = null
-      def comp: DataFrame = {
-        if (compCache == null) {
-          compCache = componentsCells(hist, histCents).persist()
-          compCache.count()
-        }
-        compCache
-      }
-      def explodeX(c: DataFrame): DataFrame =
-        c.select(col("cluster"), col("vec_id"),
-          posexplode(col("v")).as(Seq("i", "x")))
-      try {
+      Artifacts.scoped(e.filter(!isNew)) { hist =>
+        // shared snapshot derivation, built AT MOST ONCE and only if some
+        // artifact is missing (first snapshot run): evaluated ONLY inside
+        // the derive closures, so a refresh run with all artifacts staged
+        // never scans the historical corpus; shared between the quant
+        // artifact and the clustering so the first snapshot build pays
+        // one count + collect
+        lazy val histCents = quantCentroids(hist)
+        lazy val comp = componentsCells(hist, histCents).localCheckpoint()
+        def explodeX(c: DataFrame): DataFrame =
+          c.select(col("cluster"), col("vec_id"),
+            posexplode(col("v")).as(Seq("i", "x")))
         val quant = Artifacts.parquet(s, d, "inc_sem_quant") {
           import s.implicits._
           histCents.zipWithIndex
@@ -850,10 +834,6 @@ object VectorOps {
         val merged = ledger.select(col("cluster"), col("vec_id"), col("cent_cos"))
           .unionByName(npick)
         semdedupDecision(merged).orderBy(col("vec_id"))
-      } finally {
-        hist.unpersist()
-        if (compCache != null) compCache.unpersist()
-        ()
       }
     },
 
@@ -939,7 +919,9 @@ object VectorOps {
         |        round(list_cosine_similarity(v, cv), 6) AS cent_sim
         |      FROM asg)
         |WHERE cent_sim < 0.2 ORDER BY vec_id""".stripMargin) { (s, d) =>
-      val e = embedRel(s, d).cache()
+      // checkpointed: the count, the centroid collect and the returned
+      // plan all read the cast vectors
+      val e = embedRel(s, d).localCheckpoint()
       val k = math.max(1L, e.count() / 32L).toInt
       val cents = e.filter(col("vec_id") < k).orderBy(col("vec_id"))
         .select(col("v")).collect().map(_.getSeq[Double](0).toIndexedSeq).toIndexedSeq
@@ -1120,8 +1102,7 @@ object VectorOps {
         |ORDER BY src, sim DESC, nbr""".stripMargin) { (s, d) =>
       Tables.ensureConf(s)
       val e = embedRel(s, d)
-      val corpus = e.select(col("vec_id").as("nbr"), col("v").as("vb")).persist()
-      try {
+      Artifacts.scoped(e.select(col("vec_id").as("nbr"), col("v").as("vb"))) { corpus =>
         corpus.count() // materialize once: every trigger scans the cache
         val probes = e.filter(col("vec_id") < 50)
           .select(col("vec_id").as("src"), col("v").as("va"))
@@ -1151,7 +1132,7 @@ object VectorOps {
             Staging.drainParquet(s, outDir, col("src"), col("sim").desc, col("nbr"))
           }
         }
-      } finally corpus.unpersist()
+      }
     },
 
     // ---- INDEX-SERVED streaming ANN: the scale path of q_stream_knn.
@@ -1175,16 +1156,13 @@ object VectorOps {
         |  true AS recall_ok
         |FROM embeddings""".stripMargin) { (s, d) =>
       Tables.ensureConf(s)
-      val e = embedRel(s, d).cache()
-      try {
+      Artifacts.scoped(embedRel(s, d)) { e =>
         val centroids = ivfCentroids(e)
-        val postings = e.select(
+        Artifacts.scoped(e.select(
             element_at(graft.functions.VectorExpressions.nearestCells(
               col("v"), centroids, 1), 1).as("cell"),
-            col("vec_id").as("nbr"), unitNorm(col("v")).as("vbn"))
-          .cache()
-        postings.count() // materialize the index before serving starts
-        try {
+            col("vec_id").as("nbr"), unitNorm(col("v")).as("vbn"))) { postings =>
+          postings.count() // materialize the index before serving starts
           val probes = e.filter(col("vec_id") < 100)
             .select(col("vec_id").as("src"), col("v").as("va"))
           val served = Staging.withStagedInput(probes, "src", nFiles = 2,
@@ -1234,8 +1212,8 @@ object VectorOps {
           probes.agg(count(lit(1)).as("n_queries")).crossJoin(stats)
             .select(col("n_queries"), col("n_answered"),
               (col("n_hits").cast("double") / col("n_queries") >= 0.6).as("recall_ok"))
-        } finally postings.unpersist()
-      } finally e.unpersist()
+        }
+      }
     },
 
     // ---- Streaming INDEX MAINTENANCE: the other half of the serving
@@ -1258,8 +1236,7 @@ object VectorOps {
         |  true AS recall_ok
         |FROM embeddings""".stripMargin) { (s, d) =>
       Tables.ensureConf(s)
-      val e = embedRel(s, d).cache()
-      try {
+      Artifacts.scoped(embedRel(s, d)) { e =>
         val n = e.count()
         // quantizer from the bootstrap half only — the STREAM owns all
         // posting construction, including for vectors the quantizer
@@ -1322,7 +1299,7 @@ object VectorOps {
           // verdict out as a LOCAL relation
           s.createDataFrame(verdict.collectAsList(), verdict.schema)
         }
-      } finally e.unpersist()
+      }
     },
 
     // ---- DRIFT-MONITORED quantizer rebuild — the missing maintenance
@@ -1351,10 +1328,9 @@ object VectorOps {
          |  true AS recall_ok_rebuilt
          |FROM embeddings""".stripMargin) { (s, d) =>
       val (cent0, histPost, index0, queries) = annDriftState(s, d)
-      // cached: feeds the monitor join, the exact reference, the retrain
+      // scoped: feeds the monitor join, the exact reference, the retrain
       // passes and the rebuilt assignment — 6+ scans otherwise
-      val index = index0.cache()
-      try {
+      Artifacts.scoped(index0) { index =>
         val nHist = histPost.count()
         val nNew = index.count() - nHist
         val nQ = queries.count()
@@ -1371,14 +1347,14 @@ object VectorOps {
         val frozenHits = probedHits(index, cent0, queries, 6).head().getLong(0)
         val vecs = index.select(col("nbr"), col("vbn"))
         val cent1 = retrainFromIndex(vecs)
-        // cached: the monitor's served join and exact reference both scan
+        // scoped: the monitor's served join and exact reference both scan
         // the rebuilt assignment (NearestCells over the full index twice
         // otherwise)
-        val rebuilt = indexRows(vecs, "nbr", "vbn", cent1, normalize = false).cache()
         val qVbn = queries.select(col("src"), col("qvn").as("pv"), col("qvn"))
-        val rebuiltHits =
-          try probedHits(rebuilt, cent1, qVbn, 6).head().getLong(0)
-          finally { rebuilt.unpersist(); () }
+        val rebuiltHits = Artifacts.scoped(
+            indexRows(vecs, "nbr", "vbn", cent1, normalize = false)) { rebuilt =>
+          probedHits(rebuilt, cent1, qVbn, 6).head().getLong(0)
+        }
         import s.implicits._
         Seq((nHist + nNew, nNew, nQ,
           frozenHits * 100 < nQ * 61,   // rebuild_due: floor 0.6 approached
@@ -1386,7 +1362,7 @@ object VectorOps {
           rebuiltHits * 10 >= nQ * 6))  // rebuilt index restores/holds it
           .toDF("n_vectors", "n_new", "n_queries", "rebuild_due",
             "recall_ok_frozen", "recall_ok_rebuilt")
-      } finally { index.unpersist(); () }
+      }
     },
 
     // ---- The drift monitor AT INGEST — q_ann_drift_rebuild's
@@ -1417,8 +1393,7 @@ object VectorOps {
         |  false AS rebuild_due
         |FROM embeddings""".stripMargin) { (s, d) =>
       Tables.ensureConf(s)
-      val e = embedRel(s, d).cache()
-      try {
+      Artifacts.scoped(embedRel(s, d)) { e =>
         val n = e.count()
         // the monitoring contract is 4 triggers × 12-probe samples; a
         // corpus that cannot fill it fails HERE with a diagnostic, not
@@ -1480,7 +1455,7 @@ object VectorOps {
               "12-probe sample (skewed id range?)")
           out0
         }
-      } finally { e.unpersist(); () }
+      }
     }
   )
 
@@ -1582,15 +1557,13 @@ object VectorOps {
       }
       dirsListedLastTick = listed
       val acc = (base.toSeq ++ perBatch.values).reduce(_.union(_))
-      // micro-batch-scale sample; cached so the served/exact passes
-      // don't re-sort the batch. cache (not localCheckpoint): unpersist
-      // actually releases CacheManager entries, whereas localCheckpoint
-      // blocks outlive Dataset.unpersist until the RDD is GC'd — the
-      // per-tick leak a long-lived stream cannot afford.
-      val sample = batch.orderBy(col("vec_id")).limit(12)
-        .select(col("vec_id").as("src"), col("v").as("pv"),
-          unitNorm(col("v")).as("qvn")).cache()
-      try {
+      // micro-batch-scale sample; scoped so the served/exact passes
+      // don't re-sort the batch. A scope (not localCheckpoint) releases
+      // at tick end, whereas localCheckpoint blocks wait until the RDD is
+      // GC'd — the per-tick leak a long-lived stream cannot afford.
+      Artifacts.scoped(batch.orderBy(col("vec_id")).limit(12)
+          .select(col("vec_id").as("src"), col("v").as("pv"),
+            unitNorm(col("v")).as("qvn"))) { sample =>
         // hits AND the probe count ride the one probedHits job — the
         // old separate sample.count() cost a scheduling round trip per
         // trigger for a 12-row count (r18). Denominator contract (r19,
@@ -1608,7 +1581,7 @@ object VectorOps {
           Seq((id, hits, nb, hits * 100 < nb * 61))
             .toDF("trigger", "n_hits", "n_probes", "rebuild_due"),
           s"$out/verdicts", id)
-      } finally { sample.unpersist(); () }
+      }
     }
   }
 
@@ -1778,8 +1751,9 @@ object VectorOps {
       : (IndexedSeq[IndexedSeq[Double]], DataFrame, DataFrame, DataFrame) = {
     Tables.ensureConf(s)
     val cent0Df = Artifacts.parquet(s, d, "ann_drift_centroids") {
-      val h = embedRel(s, d).filter(!DedupOps.isNewId("vec_id")).cache()
-      try centroidDf(s, ivfCentroids(h)) finally h.unpersist()
+      Artifacts.scoped(embedRel(s, d).filter(!DedupOps.isNewId("vec_id"))) { h =>
+        centroidDf(s, ivfCentroids(h))
+      }
     }
     val cent0 = centroidsOf(cent0Df)
     val histPost = Artifacts.parquet(s, d, "ann_drift_postings") {
@@ -1813,20 +1787,22 @@ object VectorOps {
   /** IVF ANN full neighbor listing `(src, cell, nbr, sim)` — the operator
     * behind q_ann_ivf; public so recall regression tests probe it. */
   def annIvfNeighbors(s: SparkSession, d: String): DataFrame = {
-    // cached: the count, centroid sample, two Lloyd passes and the
+    // scoped: the count, centroid sample, two Lloyd passes and the
     // probe assignment all re-scan e otherwise (6 jobs x scan+shuffle)
-    val e = embedRel(s, d).cache()
-    val centroids = ivfCentroids(e)
-    // multi-probe: the query side searches its 6 nearest cells (recall@1
-    // 0.25 @1 probe → 0.63 @4 → 0.73-0.77 @6 on the test embeddings — the
-    // probe count is IVF's recall/cost dial, and near-uniform synthetic
-    // embeddings NEED more probes than clustered real ones because cell
-    // boundaries carry little structure). All 16 distances evaluate
-    // in ONE fused pass per vector (NearestCells); the stored side's
-    // home cell is probe_cells[0].
-    val probed = e.withColumn("probe_cells",
-        graft.functions.VectorExpressions.nearestCells(col("v"), centroids, 6))
-      .withColumn("vn", unitNorm(col("v"))).cache()
+    val probed = Artifacts.scoped(embedRel(s, d)) { e =>
+      val centroids = ivfCentroids(e)
+      // multi-probe: the query side searches its 6 nearest cells (recall@1
+      // 0.25 @1 probe → 0.63 @4 → 0.73-0.77 @6 on the test embeddings — the
+      // probe count is IVF's recall/cost dial, and near-uniform synthetic
+      // embeddings NEED more probes than clustered real ones because cell
+      // boundaries carry little structure). All 16 distances evaluate
+      // in ONE fused pass per vector (NearestCells); the stored side's
+      // home cell is probe_cells[0]. Checkpointed: both join sides below
+      // read it, and NearestCells would otherwise run twice per vector.
+      e.withColumn("probe_cells",
+          graft.functions.VectorExpressions.nearestCells(col("v"), centroids, 6))
+        .withColumn("vn", unitNorm(col("v"))).localCheckpoint()
+    }
     val a = probed.select(col("vec_id").as("src"), col("vn").as("va"),
       explode(col("probe_cells")).as("cell"))
     val b = probed.select(element_at(col("probe_cells"), 1).as("cell"),
@@ -1851,7 +1827,9 @@ object VectorOps {
   /** PQ ANN top-10 `(vec_id, sim)` for query vector 0 — the operator
     * behind q_ann_pq; public so recall regression tests probe it. */
   def annPqTopk(s: SparkSession, d: String): DataFrame = {
-    val e = embedRel(s, d).cache()
+    // checkpointed: codebook training, the query-vector fetch, the
+    // count and the returned plan all read the cast vectors
+    val e = embedRel(s, d).localCheckpoint()
     val cb = graft.functions.ProductQuantizer.train(e, "v", "vec_id", m = 16)
     val q0 = e.filter(col("vec_id") === 0)
       .select(col("v")).head().getSeq[Double](0).toIndexedSeq
@@ -1876,8 +1854,9 @@ object VectorOps {
     * operator behind q_ann_lsh; public so recall regression tests probe
     * it. */
   def annLshNeighbors(s: SparkSession, d: String): DataFrame = {
-    // cached: feeds the count, the banding pass and both vector sides
-    val e = embedRel(s, d).cache()
+    // uncached: the count is a footer read, and the banding pass and
+    // both vector sides are parquet scans of the embeddings
+    val e = embedRel(s, d)
     // Plane count auto-sizes with n so per-bucket populations stay
     // ~targetBucket: candidate volume is Σ pop² per bucket, so a fixed
     // plane count degenerates to all-pairs as n grows (at n=2000 a

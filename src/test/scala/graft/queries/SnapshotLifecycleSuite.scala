@@ -217,7 +217,7 @@ class SnapshotLifecycleSuite extends SparkSpec {
         wf = store("wf", wf.union(CurationOps.wordFreqRel(batch(t)))
           .groupBy(col("w")).agg(sum(col("freq")).as("freq")))
       val (merges, _) = CurationOps.bpeTrainOnWords(
-        CurationOps.symsFromFreq(wf), needFinal = false)
+        CurationOps.symsFromFreq(wf))
       val wantMerges = SparkEntry.queries("q_bpe_merges")(spark, d)
         .collect().map(r => (r.getString(1), r.getLong(2))).toSeq
       assert(merges.nonEmpty && merges == wantMerges,
@@ -237,7 +237,7 @@ class SnapshotLifecycleSuite extends SparkSpec {
       // the same word-freq state serves WordPiece's refresh; the unigram
       // family maintains its own (w, f) state the same way
       val (wpMerges, _) = CurationOps.wpTrainOnWords(
-        CurationOps.symsFromFreq(wf), needFinal = false)
+        CurationOps.symsFromFreq(wf))
       val wantWp = SparkEntry.queries("q_wordpiece_merges")(spark, d)
         .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
       assert(wpMerges.nonEmpty && wpMerges == wantWp,
@@ -246,15 +246,13 @@ class SnapshotLifecycleSuite extends SparkSpec {
       for (t <- 1 to 2)
         uw = store("uwf", uw.union(UnigramOps.wordRelOf(batch(t)))
           .groupBy(col("w")).agg(sum(col("f")).as("f")))
-      val (kept, words) = UnigramOps.trainWithWords(uw, UnigramOps.MaxPiece,
+      val kept = UnigramOps.trainWithWords(uw, UnigramOps.MaxPiece,
         UnigramOps.Rounds, UnigramOps.Budget, UnigramOps.SeedCap)
-      try {
-        val wantUg = SparkEntry.queries("q_unigram_tokenizer")(spark, d)
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        assert(kept.nonEmpty && kept.sortBy { case (p, c) => (-c, p) } ==
-          wantUg.sortBy { case (p, c) => (-c, p) },
-          "unigram retrain from the maintained word-freq state diverged")
-      } finally { words.unpersist(); () }
+      val wantUg = SparkEntry.queries("q_unigram_tokenizer")(spark, d)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      assert(kept.nonEmpty && kept.sortBy { case (p, c) => (-c, p) } ==
+        wantUg.sortBy { case (p, c) => (-c, p) },
+        "unigram retrain from the maintained word-freq state diverged")
 
       // quality-feature state: per-doc rows append
       var feats = store("qfeats", TextOps.qualityFeatures(batch(0)))
