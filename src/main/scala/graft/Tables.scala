@@ -102,8 +102,8 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame =
     normalizeEventsTs(t(s, d, "events"))
 
-  /** Same normalization for a DataFrame read off events.parquet directly
-    * (the streaming queries' staged file sources). Safe on either form. */
+  /** The [[events]] normalization on a DataFrame read off events.parquet.
+    * Safe on either form. */
   def normalizeEventsTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => df

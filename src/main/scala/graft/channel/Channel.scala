@@ -354,8 +354,6 @@ final class Channel private[channel] (
     Channel.advanceHead(dir)
   }
 
-  /** Channel health/metrics row (ops surface; droppedBytes is the
-    * ReaderBehind accounting, reference messaging/src/lib.rs:106-110). */
   /** Release reservation markers older than `olderThanMs` — the
     * maintenance action for CRASHED writers, whose pending `_res_` seq
     * otherwise parks every strict subscription's visible end forever
@@ -507,6 +505,8 @@ final class Channel private[channel] (
     pruned
   }
 
+  /** Channel health/metrics row (ops surface; droppedBytes is the
+    * ReaderBehind accounting, reference messaging/src/lib.rs:106-110). */
   def metrics(): DataFrame = {
     import spark.implicits._
     val batches = listBatches(dir)
@@ -916,11 +916,6 @@ object Channel {
     n.dropWhile(!_.isDigit).takeWhile(_.isDigit).toLong
   }
 
-  /** All live data directories in seq order. A `compact_N` dir holds every
-    * frame with seq < N, so its rename-into-place atomically supersedes
-    * lower-seq entries: if a crash interrupted compact() between the move
-    * and the source deletes, the leftovers are filtered here (and swept
-    * lazily) rather than double-read. */
   /** Directory-scan counter (observability + the O(1)-offset-planning
     * regression test's probe: an idle stream trigger must not list). */
   private[graft] val listDirCalls = new java.util.concurrent.atomic.AtomicLong(0)
@@ -933,6 +928,11 @@ object Channel {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
+  /** All live data directories in seq order. A `compact_N` dir holds every
+    * frame with seq < N, so its rename-into-place atomically supersedes
+    * lower-seq entries: if a crash interrupted compact() between the move
+    * and the source deletes, the leftovers are filtered here (and swept
+    * lazily) rather than double-read. */
   private[graft] def listBatches(dir: Path): Seq[Path] = {
     if (!Files.exists(dir)) return Nil
     batchesFrom(listDir(dir))

@@ -838,6 +838,31 @@ object CurationOps {
     rebuildSyms(w, kept)
   }
 
+  /** Serve a trained (w, syms) symbol table at ingest — the stream twin
+    * body shared by BPE and WordPiece: each trigger tokenizes its
+    * documents, broadcast-joins them onto the table and writes per-doc
+    * symbol totals to the ledger (docs are range-staged by doc_id, so a
+    * doc never straddles batches). The derived encode table is held for
+    * the stream run — `wFinal` is already materialized, but each
+    * micro-batch broadcast would re-project it otherwise. */
+  private def streamEncode(s: org.apache.spark.sql.SparkSession, d: String,
+                           wFinal: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    Artifacts.scoped(wFinal.select(col("w").as("tw"),
+        length($("w")).as("len_before"), size($("syms")).as("len_after"))) { table =>
+      table.count()
+      Staging.ledger(Tables.documents(s, d).select($("doc_id"), $("text")),
+          "doc_id", 2) { (bdf, id, out) =>
+        Staging.writeBatch(bdf
+          .select($("doc_id"), explode(TextFunctions.tokens($("text"))).as("w"))
+          .join(broadcast(table), col("w") === col("tw"))
+          .groupBy($("doc_id"))
+          .agg(sum($("len_before")).cast("int").as("n_sym_before"),
+            sum($("len_after")).cast("int").as("n_sym_after")),
+          s"$out/res", id)
+      }(out => Staging.drainParquet(s, s"$out/res", $("doc_id")))
+    }
+
   private def bpeTrain(s: org.apache.spark.sql.SparkSession, d: String)
       : (Seq[(String, Long)], org.apache.spark.sql.DataFrame) =
     bpeTrainOn(Tables.documents(s, d))
@@ -1242,37 +1267,7 @@ object CurationOps {
     // dropped batch, double emission, or stale merge table
     // hash-mismatches.
     Q("q_stream_bpe_encode", bpeEncodeSql) { (s, d) =>
-      Tables.ensureConf(s)
-      val (_, wFinal) = bpeTrain(s, d)
-      // hold the derived encode table for the stream run — wFinal is
-      // already a materialized localCheckpoint, but each micro-batch
-      // broadcast would re-project it otherwise
-      Artifacts.scoped(wFinal.select(col("w").as("tw"),
-          length($("w")).as("len_before"), size($("syms")).as("len_after"))) { table =>
-        table.count()
-        Staging.withTempDir("graft_stream_bpe_out") { out =>
-          Staging.withStagedInput(
-            Tables.documents(s, d).select($("doc_id"), $("text")),
-            "doc_id", nFiles = 2, prefix = "graft_stream_bpe") { in =>
-            val schema = s.read.parquet(in).schema
-            val stream = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-              .select($("doc_id"), explode(TextFunctions.tokens($("text"))).as("w"))
-              .join(broadcast(table), col("w") === col("tw"))
-            val q = stream.writeStream.outputMode("append")
-              .option("checkpointLocation", s"$out/ck")
-              .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, id: Long) =>
-                Staging.writeBatch(bdf.groupBy($("doc_id"))
-                  .agg(sum($("len_before")).cast("int").as("n_sym_before"),
-                    sum($("len_after")).cast("int").as("n_sym_after")),
-                  s"$out/res", id)
-              }
-              .start()
-            try q.processAllAvailable() finally q.stop()
-          }
-          Staging.drainParquet(s, s"$out/res", $("doc_id"))
-        }
-      }
+      streamEncode(s, d, bpeTrain(s, d)._2)
     },
 
     // ---- WordPiece serving AT INGEST — completes the family symmetry
@@ -1282,34 +1277,7 @@ object CurationOps {
     // and the drain shares q_wordpiece_encode's oracle verbatim — a
     // stale table or dropped batch hash-mismatches.
     Q("q_stream_wordpiece_encode", wpEncodeSql) { (s, d) =>
-      Tables.ensureConf(s)
-      val (_, wFinal) = wpTrainOn(Tables.documents(s, d))
-      Artifacts.scoped(wFinal.select(col("w").as("tw"),
-          length($("w")).as("len_before"), size($("syms")).as("len_after"))) { table =>
-        table.count()
-        Staging.withTempDir("graft_stream_wp_out") { out =>
-          Staging.withStagedInput(
-            Tables.documents(s, d).select($("doc_id"), $("text")),
-            "doc_id", nFiles = 2, prefix = "graft_stream_wp") { in =>
-            val schema = s.read.parquet(in).schema
-            val stream = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-              .select($("doc_id"), explode(TextFunctions.tokens($("text"))).as("w"))
-              .join(broadcast(table), col("w") === col("tw"))
-            val q = stream.writeStream.outputMode("append")
-              .option("checkpointLocation", s"$out/ck")
-              .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, id: Long) =>
-                Staging.writeBatch(bdf.groupBy($("doc_id"))
-                  .agg(sum($("len_before")).cast("int").as("n_sym_before"),
-                    sum($("len_after")).cast("int").as("n_sym_after")),
-                  s"$out/res", id)
-              }
-              .start()
-            try q.processAllAvailable() finally q.stop()
-          }
-          Staging.drainParquet(s, s"$out/res", $("doc_id"))
-        }
-      }
+      streamEncode(s, d, wpTrainOn(Tables.documents(s, d))._2)
     },
 
     // ---- Context-window chunking: overlapping 64-token windows with
@@ -1356,23 +1324,10 @@ object CurationOps {
     // verbatim — a dropped batch, a double-applied batch, or any drift
     // between the batch and stream projections hash-mismatches.
     Q("q_stream_html_extract", htmlExtractSql) { (s, d) =>
-      Staging.withTempDir("graft_stream_html_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select($("doc_id"), $("text")),
-          "doc_id", nFiles = 3, prefix = "graft_stream_html") { in =>
-          val schema = s.read.parquet(in).schema
-          val stream = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-          val q = stream.writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(htmlExtractRows(bdf), s"$out/res", id)
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        Staging.drainParquet(s, s"$out/res", $("doc_id"))
-      }
+      Staging.ledger(Tables.documents(s, d).select($("doc_id"), $("text")),
+          "doc_id", 3) { (bdf, id, out) =>
+        Staging.writeBatch(htmlExtractRows(bdf), s"$out/res", id)
+      }(out => Staging.drainParquet(s, s"$out/res", $("doc_id")))
     },
 
     // ---- Doc-internal repeated-paragraph removal — the Gopher REWRITE
@@ -1461,28 +1416,15 @@ object CurationOps {
     // the md5-audited output hash-mismatches, so exactly-once ledger
     // maintenance is observationally verified.
     Q("q_stream_line_dedup", lineDedupSql) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_ldp_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select($("doc_id"), $("text")),
-          "doc_id", nFiles = 3, prefix = "graft_stream_ldp") { in =>
-          val schema = s.read.parquet(in).schema
-          val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, id: Long) =>
-              val bp = lineParas(bdf.select($("doc_id"), $("text")))
-              Staging.writeBatch(bp, s"$out/paras", id)
-              Staging.writeBatch(
-                bp.select($("h"), $("doc_id")).distinct()
-                  .groupBy($("h")).agg(count(lit(1)).as("dfp")),
-                s"$out/dfs", id)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+      Staging.ledger(Tables.documents(s, d).select($("doc_id"), $("text")),
+          "doc_id", 3) { (bdf, id, out) =>
+        val bp = lineParas(bdf)
+        Staging.writeBatch(bp, s"$out/paras", id)
+        Staging.writeBatch(
+          bp.select($("h"), $("doc_id")).distinct()
+            .groupBy($("h")).agg(count(lit(1)).as("dfp")),
+          s"$out/dfs", id)
+      } { out =>
         val paras = s.read.option("recursiveFileLookup", "true")
           .parquet(s"$out/paras")
         val dfc = s.read.option("recursiveFileLookup", "true")
@@ -1594,54 +1536,40 @@ object CurationOps {
     // store is the hash-keyed dedup ledger (compact-able like any
     // channel topic); each trigger's join against it is hash-bucketed.
     Q("q_stream_span_dedup", spanDedupSql) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_span_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select($("doc_id"), $("text")),
-          "doc_id", nFiles = 4, prefix = "graft_stream_span") { in =>
-          val schema = s.read.parquet(in).schema
-          val stream = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-          val q = stream.writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, id: Long) =>
-              Artifacts.scoped(segRows(bdf.select($("doc_id"), $("text")))) { occ =>
-                val batchMin = occ.groupBy($("h")).agg(min($("pk")).as("bpk"))
-                val seenDir = new java.io.File(s"$out/seen")
-                // prune the store to THIS batch's hashes before the min
-                // aggregate — only they can affect the join, and the
-                // semi-join keeps per-trigger store work bounded by batch
-                // size instead of shuffling every historical hash (the
-                // store itself is the compact-able dedup ledger at scale)
-                val seenMin =
-                  if (seenDir.exists)
-                    s.read.option("recursiveFileLookup", "true")
-                      .parquet(seenDir.toString)
-                      // per-trigger batch-sized broadcast; at very large
-                      // triggers drop the hint → shuffled semi-join
-                      .join(broadcast(batchMin.select($("h"))), Seq("h"), "left_semi")
-                      .groupBy($("h")).agg(min($("spk")).as("spk"))
-                  else batchMin.select($("h"), $("bpk").as("spk")).limit(0)
-                val fst = batchMin
-                  .join(seenMin.withColumnRenamed("h", "sh"),
-                    col("h") === col("sh"), "left_outer")
-                  .select($("h").as("f_h"),
-                    least($("bpk"), coalesce($("spk"), $("bpk"))).as("first_pk"))
-                Staging.writeBatch(
-                  spanRebuild(occ.join(fst, col("h") === col("f_h"))),
-                  s"$out/res", id)
-                // checkpoint this batch's minima AFTER judging (replay
-                // re-reads them; least() makes that a no-op)
-                Staging.writeBatch(
-                  batchMin.select($("h"), $("bpk").as("spk")),
-                  s"$out/seen", id)
-              }
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
+      Staging.ledger(Tables.documents(s, d).select($("doc_id"), $("text")),
+          "doc_id", 4) { (bdf, id, out) =>
+        Artifacts.scoped(segRows(bdf)) { occ =>
+          val batchMin = occ.groupBy($("h")).agg(min($("pk")).as("bpk"))
+          val seenDir = new java.io.File(s"$out/seen")
+          // prune the store to THIS batch's hashes before the min
+          // aggregate — only they can affect the join, and the
+          // semi-join keeps per-trigger store work bounded by batch
+          // size instead of shuffling every historical hash (the
+          // store itself is the compact-able dedup ledger at scale)
+          val seenMin =
+            if (seenDir.exists)
+              s.read.option("recursiveFileLookup", "true")
+                .parquet(seenDir.toString)
+                // per-trigger batch-sized broadcast; at very large
+                // triggers drop the hint → shuffled semi-join
+                .join(broadcast(batchMin.select($("h"))), Seq("h"), "left_semi")
+                .groupBy($("h")).agg(min($("spk")).as("spk"))
+            else batchMin.select($("h"), $("bpk").as("spk")).limit(0)
+          val fst = batchMin
+            .join(seenMin.withColumnRenamed("h", "sh"),
+              col("h") === col("sh"), "left_outer")
+            .select($("h").as("f_h"),
+              least($("bpk"), coalesce($("spk"), $("bpk"))).as("first_pk"))
+          Staging.writeBatch(
+            spanRebuild(occ.join(fst, col("h") === col("f_h"))),
+            s"$out/res", id)
+          // checkpoint this batch's minima AFTER judging (replay
+          // re-reads them; least() makes that a no-op)
+          Staging.writeBatch(
+            batchMin.select($("h"), $("bpk").as("spk")),
+            s"$out/seen", id)
         }
-        Staging.drainParquet(s, s"$out/res", $("doc_id"))
-      }
+      }(out => Staging.drainParquet(s, s"$out/res", $("doc_id")))
     },
 
     // ---- Distribution-shift monitoring: per-source unigram KL
@@ -1712,44 +1640,30 @@ object CurationOps {
         |FROM sw JOIN sn ON sw.source = sn.source
         |JOIN cw ON sw.w = cw.w CROSS JOIN cn
         |GROUP BY sw.source, sn.n ORDER BY sw.source""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       // baseline: corpus word counts + total, trained in batch
       Artifacts.scoped(Tables.documents(s, d)
           .select(explode(TextFunctions.tokens($("text"))).as("w"))
           .groupBy($("w")).agg(count(lit(1)).as("cc"))
           .withColumnRenamed("w", "cw_w")) { base =>
         val nCorp = base.agg(sum($("cc"))).collect()(0).getLong(0)
-        Staging.withTempDir("graft_stream_drift_out") { out =>
-          Staging.withStagedInput(
-            Tables.documents(s, d).select($("source"), $("text")),
-            "source", nFiles = 2, prefix = "graft_stream_drift") { in =>
-            val schema = s.read.parquet(in).schema
-            val stream = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-            val q = stream.writeStream.outputMode("append")
-              .option("checkpointLocation", s"$out/ck")
-              .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, id: Long) =>
-                val sw = bdf
-                  .select($("source"), explode(TextFunctions.tokens($("text"))).as("w"))
-                  .groupBy($("source"), $("w")).agg(count(lit(1)).as("c"))
-                val sn = sw.groupBy($("source")).agg(sum($("c")).as("n"))
-                  .withColumnRenamed("source", "sn_source")
-                val p = $("c").cast("double") / $("n").cast("double")
-                val qq = $("cc").cast("double") / lit(nCorp).cast("double")
-                Staging.writeBatch(
-                  sw.join(broadcast(sn), col("source") === col("sn_source"))
-                    .join(broadcast(base), col("w") === col("cw_w"))
-                    .groupBy($("source"), $("n"))
-                    .agg(sum(round(p * log(p / qq), 6).cast("decimal(18,6)"))
-                      .cast("double").as("kl"))
-                    .select($("source"), $("n").as("n_tok"), $("kl")),
-                  s"$out/res", id)
-              }
-              .start()
-            try q.processAllAvailable() finally q.stop()
-          }
-          Staging.drainParquet(s, s"$out/res", $("source"))
-        }
+        Staging.ledger(Tables.documents(s, d).select($("source"), $("text")),
+            "source", 2) { (bdf, id, out) =>
+          val sw = bdf
+            .select($("source"), explode(TextFunctions.tokens($("text"))).as("w"))
+            .groupBy($("source"), $("w")).agg(count(lit(1)).as("c"))
+          val sn = sw.groupBy($("source")).agg(sum($("c")).as("n"))
+            .withColumnRenamed("source", "sn_source")
+          val p = $("c").cast("double") / $("n").cast("double")
+          val qq = $("cc").cast("double") / lit(nCorp).cast("double")
+          Staging.writeBatch(
+            sw.join(broadcast(sn), col("source") === col("sn_source"))
+              .join(broadcast(base), col("w") === col("cw_w"))
+              .groupBy($("source"), $("n"))
+              .agg(sum(round(p * log(p / qq), 6).cast("decimal(18,6)"))
+                .cast("double").as("kl"))
+              .select($("source"), $("n").as("n_tok"), $("kl")),
+            s"$out/res", id)
+        }(out => Staging.drainParquet(s, s"$out/res", $("source")))
       }
     },
 
@@ -1787,26 +1701,12 @@ object CurationOps {
     // pattern, or a chunk-boundary drift hash-mismatches.
     Q("q_stream_ingest_prep",
       chunkSql(s"SELECT doc_id, $redactSqlExpr AS text FROM documents")) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_prep_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select($("doc_id"), $("text")),
-          "doc_id", nFiles = 2, prefix = "graft_stream_prep") { in =>
-          val schema = s.read.parquet(in).schema
-          val stream = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-          val q = stream.writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(
-                chunkRows(bdf.select($("doc_id"), redacted($("text")).as("text"))),
-                s"$out/res", id)
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        Staging.drainParquet(s, s"$out/res", $("doc_id"), $("chunk_id"))
-      }
+      Staging.ledger(Tables.documents(s, d).select($("doc_id"), $("text")),
+          "doc_id", 2) { (bdf, id, out) =>
+        Staging.writeBatch(
+          chunkRows(bdf.select($("doc_id"), redacted($("text")).as("text"))),
+          s"$out/res", id)
+      }(out => Staging.drainParquet(s, s"$out/res", $("doc_id"), $("chunk_id")))
     }
   )
 }

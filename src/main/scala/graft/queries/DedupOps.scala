@@ -13,7 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  private[queries] val neardupRun = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** THE new-batch membership predicate of every incremental-dedup seam
     * in this file — one definition on purpose: the exactness of
@@ -917,31 +916,19 @@ object DedupOps {
         |FROM p JOIN d da ON p.doc_a = da.doc_id JOIN d db ON p.doc_b = db.doc_id
         |WHERE CAST(shared AS DOUBLE) / (da.n + db.n - shared) >= 0.8
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       import s.implicits._
-      val sink = s"graft_stream_neardup_${neardupRun.incrementAndGet()}"
       // stage the corpus as 4 range-partitioned files → 4 micro-batches:
       // near-dup pairs span batches, so they are found through state,
       // not within-batch luck; the sink is bounded (one row per verified
       // near-dup pair)
-      Staging.runAndDrain(s, sink) {
-        Staging.withStagedInput(
-          Tables.documents(s, d).select(col("doc_id"), col("text")),
-          "doc_id", nFiles = 4, prefix = "graft_stream_neardup") { in =>
-          val schema = s.read.parquet(in).schema
-          val stream = graft.streaming.StreamingNearDup.pairs(
-            s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-              .as[(Long, String)],
-            threshold = 0.8)
-          val q = Staging.sizedStart(s, 8)(stream.writeStream
-            .outputMode("append").format("memory").queryName(sink).start())
-          try q.processAllAvailable() finally q.stop()
+      Staging.replay(Tables.documents(s, d).select(col("doc_id"), col("text")),
+        Seq(col("doc_id")), 4) { src =>
+        Staging.view(graft.streaming.StreamingNearDup.pairs(
+            src.as[(Long, String)], threshold = 0.8)) {
+          _.select(col("doc_a"), col("doc_b"), col("shared"),
+              col("n_a"), col("n_b"), col("jaccard"))
+            .orderBy(col("doc_a"), col("doc_b"))
         }
-      } {
-        _.select(col("doc_a"), col("doc_b"), col("shared"),
-            col("n_a"), col("n_b"), col("jaccard"))
-          .orderBy(col("doc_a"), col("doc_b"))
       }
     },
 

@@ -347,35 +347,23 @@ object MultimodalOps {
         |  CAST(SUM(fr) AS BIGINT) AS sum_frames,
         |  CAST(SUM(n_sampled) AS BIGINT) AS sum_sampled
         |FROM rs GROUP BY out_w, out_h ORDER BY out_w, out_h""".stripMargin) { (s, d) =>
-      graft.Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_media_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select(col("doc_id"), col("text")),
-          "doc_id", nFiles = 2, prefix = "graft_stream_media") { in =>
-          val schema = s.read.parquet(in).schema
-          val stream = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-          val q = stream.writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, id: Long) =>
-              val n = length(col("text").cast("binary"))
-              val meta = bdf.select(
-                col("doc_id"),
-                Multimodal.fakeWidth(n).cast("int").as("w"),
-                Multimodal.fakeHeight(n).cast("int").as("h"),
-                Multimodal.fakeFrames(n).cast("int").as("fr"))
-              val kept = meta.filter(col("fr") >= 10)
-              val (ow, oh) = Multimodal.resizeDims(col("w"), col("h"), 256)
-              Staging.writeBatch(
-                kept.select(col("doc_id"), col("fr"),
-                  ow.cast("int").as("out_w"), oh.cast("int").as("out_h"),
-                  size(Multimodal.sampleFrameIdx(col("fr"), 5)).cast("long")
-                    .as("n_sampled")),
-                s"$out/res", id)
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+      Staging.ledger(Tables.documents(s, d).select(col("doc_id"), col("text")),
+          "doc_id", 2) { (bdf, id, out) =>
+        val n = length(col("text").cast("binary"))
+        val meta = bdf.select(
+          col("doc_id"),
+          Multimodal.fakeWidth(n).cast("int").as("w"),
+          Multimodal.fakeHeight(n).cast("int").as("h"),
+          Multimodal.fakeFrames(n).cast("int").as("fr"))
+        val kept = meta.filter(col("fr") >= 10)
+        val (ow, oh) = Multimodal.resizeDims(col("w"), col("h"), 256)
+        Staging.writeBatch(
+          kept.select(col("doc_id"), col("fr"),
+            ow.cast("int").as("out_w"), oh.cast("int").as("out_h"),
+            size(Multimodal.sampleFrameIdx(col("fr"), 5)).cast("long")
+              .as("n_sampled")),
+          s"$out/res", id)
+      } { out =>
         val perDoc = Staging.drainParquet(s, s"$out/res", col("doc_id"))
         perDoc.groupBy(col("out_w"), col("out_h"))
           .agg(count(lit(1)).as("n_media"),

@@ -163,31 +163,16 @@ object PrivacyOps {
          |  CAST(length(red) AS BIGINT) AS n_red,
          |  md5(red) AS red_md5
          |FROM red ORDER BY doc_id""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_pii_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select("doc_id", "text"),
-          "doc_id", nFiles = 3, prefix = "graft_stream_pii") { in =>
-          val schema = s.read.parquet(in).schema
-          val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(
-                batch.select(col("doc_id"), rawCol.as("raw"))
-                  .withColumn("red", redactedCol)
-                  .select(col("doc_id"),
-                    length(col("raw")).cast("long").as("n_raw"),
-                    length(col("red")).cast("long").as("n_red"),
-                    md5(col("red").cast("binary")).as("red_md5")),
-                s"$out/red", id)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        Staging.drainParquet(s, s"$out/red").orderBy(col("doc_id"))
-      }
+      Staging.ledger(Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", 3) { (batch, id, out) =>
+        Staging.writeBatch(
+          batch.select(col("doc_id"), rawCol.as("raw"))
+            .withColumn("red", redactedCol)
+            .select(col("doc_id"),
+              length(col("raw")).cast("long").as("n_raw"),
+              length(col("red")).cast("long").as("n_red"),
+              md5(col("red").cast("binary")).as("red_md5")),
+          s"$out/red", id)
+      }(out => Staging.drainParquet(s, s"$out/red", col("doc_id")))
     })
 }

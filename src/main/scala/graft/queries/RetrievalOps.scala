@@ -394,33 +394,21 @@ object RetrievalOps {
       s"""WITH $bm25Ctes
          |SELECT doc_id, bm25 FROM sc
          |ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_bm25_out") { out =>
-        Staging.withStagedInput(Tables.documents(s, d).select("doc_id", "text"),
-          "doc_id", nFiles = 2, prefix = "graft_stream_bm25") { in =>
-          val schema = s.read.parquet(in).schema
-          val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              // dl > 0: token-less docs are outside the oracle's
-              // ww-derived length stats (same contract as bm25Scores)
-              Staging.writeBatch(batch.select(col("doc_id"),
-                size(nonEmptyTokens).as("dl")).filter(col("dl") > 0),
-                s"$out/doclens", id)
-              Staging.writeBatch(batch
-                .select(col("doc_id"),
-                  explode(TextFunctions.tokens(col("text"))).as("word"))
-                .filter(col("word").isin(QueryTerms: _*))
-                .groupBy(col("doc_id"), col("word"))
-                .agg(count(lit(1)).as("tf")),
-                s"$out/postings", id)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+      Staging.ledger(Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", 2) { (batch, id, out) =>
+        // dl > 0: token-less docs are outside the oracle's
+        // ww-derived length stats (same contract as bm25Scores)
+        Staging.writeBatch(batch.select(col("doc_id"),
+          size(nonEmptyTokens).as("dl")).filter(col("dl") > 0),
+          s"$out/doclens", id)
+        Staging.writeBatch(batch
+          .select(col("doc_id"),
+            explode(TextFunctions.tokens(col("text"))).as("word"))
+          .filter(col("word").isin(QueryTerms: _*))
+          .groupBy(col("doc_id"), col("word"))
+          .agg(count(lit(1)).as("tf")),
+          s"$out/postings", id)
+      } { out =>
         val doclens = s.read.option("recursiveFileLookup", "true")
           .parquet(s"$out/doclens")
         val postings = s.read.option("recursiveFileLookup", "true")

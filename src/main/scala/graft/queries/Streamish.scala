@@ -1,9 +1,7 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.{Q, Tables}
-import graft.channel.Channel
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -11,54 +9,42 @@ import org.apache.spark.sql.expressions.Window
   * batch-verifiable queries over the `events` stream table. Each query is
   * the batch equivalent of a pipeline the reference ships as an example;
   * live Structured-Streaming forms live in graft.streaming (ScalaTest
-  * covered), and `q_stream_window` additionally runs a real streaming query
-  * inside the correctness gate (streaming result == batch SQL oracle).
+  * covered), and every `q_stream_*` query here additionally runs a real
+  * streaming query inside the correctness gate (streaming result == batch
+  * SQL oracle) through the [[Staging]] driver's view form.
   */
 object Streamish {
 
-  private val streamRun = new AtomicInteger(0)
+  /** Purchases ⋈ the same user's clicks from the preceding hour, as a
+    * live stream-stream join of two filtered, watermarked legs of ONE
+    * source (the file listing and scan happen once per micro-batch
+    * instead of twice). */
+  private def intervalJoin(src: DataFrame, joinType: String): DataFrame = {
+    def side(tpe: String, prefix: String) =
+      src.filter(col("event_type") === tpe)
+        .select(col("event_id").as(s"${prefix}_id"),
+          col("user_id").as(s"${prefix}_user"),
+          expr("timestamp_micros(ts div 1000)").as(s"${prefix}_ts"))
+        .withWatermark(s"${prefix}_ts", "1 hour")
+    side("purchase", "p").join(side("click", "c"),
+      col("p_user") === col("c_user") &&
+        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+        col("c_ts") <= col("p_ts"),
+      joinType)
+  }
 
-  /** Start a streaming query with state partitions sized to the data: the
-    * shuffle-partition count is frozen into the checkpoint at first start,
-    * and each stateful operator keeps one state store per partition — at
-    * gate scale 32 near-empty stores are pure overhead, at 100 TB the same
-    * dial turns the other way. Restores the session conf immediately after
-    * start (batch queries keep the configured width). */
-  private def sizedStart(s: org.apache.spark.sql.SparkSession, parts: Int)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery) =
-    Staging.sizedStart(s, parts)(start)
-
-  /** Stage the events table inside a fresh temp directory (the file-stream
-    * source only accepts directories; a real deployment's channel topics
-    * are directories already — see graft.channel) and clean it up
-    * RECURSIVELY once the query has run: File.deleteOnExit can't remove
-    * non-empty directories, so repeated harness runs would leak one temp
-    * dir per run. The memory-sink result survives the cleanup — only the
-    * staged input goes. */
-  private def withStagedEvents[T](d: String, label: String)(f: String => T): T =
-    Staging.withTempDir(s"graft_stream_$label") { tmp =>
-      // the cleanup walk removes the symlink itself without following it
-      java.nio.file.Files.createSymbolicLink(tmp.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$d/events.parquet"))
-      f(tmp.toString)
-    }
-
-  /** Shared scaffold for the OUTER stream-stream interval joins
-    * (purchases ⋈ preceding-hour clicks by user): event-time-ordered
-    * replay of the events table (3 range-staged batches — the
-    * cross-batch join/eviction claims need >= 3 stateful triggers and
-    * get exactly that plus the two sentinels), one source
-    * split into two filtered watermarked legs, two flush sentinels
-    * carrying one row PER SIDE (each leg computes its own watermark from
-    * its filtered rows; the global watermark is their min, so both legs
-    * must see sentinel event times), memory-sink drain through `shape`.
-    * The join family differs only in `joinType` and the drain, so the
-    * sentinel/watermark contract lives in exactly one place. */
-  private def intervalJoinStream(s: org.apache.spark.sql.SparkSession, d: String,
-                                 joinType: String, label: String)(
-      shape: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    Tables.ensureConf(s)
+  /** Shared scaffold for the OUTER stream-stream interval joins:
+    * event-time-ordered replay of the events table (3 range-staged
+    * batches — the cross-batch join/eviction claims need >= 3 stateful
+    * triggers and get exactly that plus the two sentinels), two flush
+    * sentinels carrying one row PER SIDE (each leg computes its own
+    * watermark from its filtered rows; the global watermark is their min,
+    * so both legs must see sentinel event times), memory-sink drain
+    * through `shape`. The join family differs only in `joinType` and the
+    * drain, so the sentinel/watermark contract lives in exactly one
+    * place. */
+  private def intervalJoinStream(s: SparkSession, d: String, joinType: String)(
+      shape: DataFrame => DataFrame): DataFrame = {
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
     val maxTs = ev.agg(max(col("ts"))).head().getLong(0)
@@ -67,29 +53,9 @@ object Streamish {
         org.apache.spark.sql.Row(-1L, -1L, "purchase", ts),
         org.apache.spark.sql.Row(-2L, -1L, "click", ts)),
       ev.schema)
-    val sink = s"graft_stream_${label}_${streamRun.incrementAndGet()}"
-    Staging.withOrderedReplay(ev, Seq(col("ts"), col("event_id")), 3,
-      s"graft_stream_$label",
-      Seq(flush(maxTs + 3 * hourNs), flush(maxTs + 48 * hourNs))) { in =>
-      val schema = s.read.parquet(in).schema
-      Staging.runAndDrain(s, sink) {
-        val src = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-        def side(tpe: String, prefix: String) =
-          src.filter(col("event_type") === tpe)
-            .select(col("event_id").as(s"${prefix}_id"),
-              col("user_id").as(s"${prefix}_user"),
-              expr("timestamp_micros(ts div 1000)").as(s"${prefix}_ts"))
-            .withWatermark(s"${prefix}_ts", "1 hour")
-        val joined = side("purchase", "p").join(side("click", "c"),
-          col("p_user") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-            col("c_ts") <= col("p_ts"),
-          joinType)
-        val q = sizedStart(s, 8)(joined.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start())
-        try q.processAllAvailable() finally q.stop()
-      }(shape)
+    Staging.replay(ev, Seq(col("ts"), col("event_id")), 3,
+      Seq(flush(maxTs + 3 * hourNs), flush(maxTs + 48 * hourNs))) { src =>
+      Staging.view(intervalJoin(src, joinType))(shape)
     }
   }
 
@@ -245,20 +211,13 @@ object Streamish {
       """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
         |  COUNT(*) AS n
         |FROM events GROUP BY day, event_type ORDER BY day, event_type""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      val sink = s"graft_stream_window_${streamRun.incrementAndGet()}"
-      withStagedEvents(d, "events") { tmp =>
-        val stream = Tables.normalizeEventsTs(
-          s.readStream.schema(schema).parquet(tmp))
-        val agg = stream
-          .groupBy(Tables.tsDay("ts").as("day"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-        val q = sizedStart(s, 8)(agg.writeStream.outputMode("complete")
-          .format("memory").queryName(sink).start())
-        try q.processAllAvailable() finally q.stop()
+      // the whole table is one staged file → one trigger
+      Staging.replay(Tables.events(s, d).select(col("ts"), col("event_type")),
+        Seq(col("ts")), 1) { src =>
+        Staging.view(src.groupBy(Tables.tsDay("ts").as("day"), col("event_type"))
+          .agg(count(lit(1)).as("n")), "complete")(
+          _.orderBy(col("day"), col("event_type")))
       }
-      s.table(sink).orderBy(col("day"), col("event_type"))
     },
 
     // ---- The DSv2 channel connector's STREAMING path inside the
@@ -273,24 +232,18 @@ object Streamish {
         |  COUNT(*) AS n
         |FROM events WHERE event_type IN ('click', 'purchase')
         |GROUP BY day, event_type ORDER BY day, event_type""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_chan")
-      val sink = s"graft_stream_chan_${streamRun.incrementAndGet()}"
-      try {
+      Staging.withTempDir { root =>
         val reg = new graft.channel.ChannelRegistry(s, root)
         val slice = Tables.events(s, d)
           .filter(col("event_type").isin("click", "purchase"))
           .select(col("event_id"), col("ts"), col("event_type"))
         val ch = reg.create("evstream", slice.schema)
         ch.write(slice, writerId = 1)
-        val agg = ch.readStreamV2()
+        Staging.view(ch.readStreamV2()
           .groupBy(Tables.tsDay("ts").as("day"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-        val q = sizedStart(s, 8)(agg.writeStream.outputMode("complete")
-          .format("memory").queryName(sink).start())
-        try q.processAllAvailable() finally q.stop()
-      } finally Channel.deleteRecursively(root)
-      s.table(sink).orderBy(col("day"), col("event_type"))
+          .agg(count(lit(1)).as("n")), "complete")(
+          _.orderBy(col("day"), col("event_type")))
+      }
     },
 
     // ---- Exact interpolated percentiles per group (both engines use the
@@ -461,32 +414,22 @@ object Streamish {
         |           THEN 1 ELSE 0 END AS new_session
         |    FROM events))
         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head().getLong(0) // watermark sentinel base
       val hourNs = 3600L * 1000000000L
       def flush(ts: Long) = s.range(1).select(lit(-1L).as("event_id"),
         lit(-1L).as("user_id"), lit(ts).as("ts"))
-      val sink = s"graft_stream_sessions_${streamRun.incrementAndGet()}"
       // event-time-ordered replay on (ts, event_id): a 0-second watermark
       // drops nothing; two sentinels drive the watermark past every real
       // session and trigger the emitting batch
-      Staging.withOrderedReplay(ev, Seq(col("ts"), col("event_id")), 4,
-        "graft_stream_sessions",
-        Seq(flush(maxTs + 2 * hourNs), flush(maxTs + 48 * hourNs))) { in =>
-        val schema = s.read.parquet(in).schema
-        Staging.runAndDrain(s, sink) {
-          val sessions = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-            .withColumn("ets", expr("timestamp_micros(ts div 1000)"))
-            .withWatermark("ets", "0 seconds")
-            .groupBy(session_window(col("ets"), "1 hour").as("sw"), col("user_id"))
-            .agg(count(lit(1)).as("cnt"))
-            .select(col("user_id"), col("cnt"))
-          val q = sizedStart(s, 8)(sessions.writeStream.outputMode("append")
-            .format("memory").queryName(sink).start())
-          try q.processAllAvailable() finally q.stop()
-        } {
+      Staging.replay(ev, Seq(col("ts"), col("event_id")), 4,
+        Seq(flush(maxTs + 2 * hourNs), flush(maxTs + 48 * hourNs))) { src =>
+        Staging.view(src
+          .withColumn("ets", expr("timestamp_micros(ts div 1000)"))
+          .withWatermark("ets", "0 seconds")
+          .groupBy(session_window(col("ets"), "1 hour").as("sw"), col("user_id"))
+          .agg(count(lit(1)).as("cnt"))
+          .select(col("user_id"), col("cnt"))) {
           _.filter(col("user_id") >= 0)
             .groupBy(col("user_id"))
             .agg(count(lit(1)).as("n_sessions"), sum(col("cnt")).as("n_events"))
@@ -521,22 +464,17 @@ object Streamish {
     Q("q_stream_dedup",
       """SELECT DISTINCT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day
         |FROM events ORDER BY user_id, day""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      val sink = s"graft_stream_dedup_${streamRun.incrementAndGet()}"
-      withStagedEvents(d, "dedup") { tmp =>
-        val stream = Tables.normalizeEventsTs(
-          s.readStream.schema(schema).parquet(tmp))
+      // one staged file → one trigger: nothing arrives behind the watermark
+      Staging.replay(Tables.events(s, d).select(col("user_id"), col("ts")),
+        Seq(col("ts")), 1) { src =>
+        Staging.view(src
           .withColumn("ets", expr("timestamp_micros(ts div 1000)"))
           .withColumn("day", Tables.tsDay("ts"))
           .withWatermark("ets", "1 hour")
           .dropDuplicatesWithinWatermark(Seq("user_id", "day"))
-          .select(col("user_id"), col("day"))
-        val q = sizedStart(s, 8)(stream.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start())
-        try q.processAllAvailable() finally q.stop()
+          .select(col("user_id"), col("day")))(
+          _.orderBy(col("user_id"), col("day")))
       }
-      s.table(sink).orderBy(col("user_id"), col("day"))
     },
 
     // ---- Watermarked stream-stream interval join in the gate: purchases
@@ -553,31 +491,14 @@ object Streamish {
         |  AND epoch_us(c.ts) BETWEEN epoch_us(p.ts) - 3600000000
         |                         AND epoch_us(p.ts)
         |ORDER BY p_id, c_id""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      val sink = s"graft_stream_join_${streamRun.incrementAndGet()}"
-      withStagedEvents(d, "join") { tmp =>
-        // one source, two filtered legs (streaming self-join): the file
-        // listing and scan happen once per micro-batch instead of twice
-        val src = Tables.normalizeEventsTs(
-          s.readStream.schema(schema).parquet(tmp))
-        def side(tpe: String, prefix: String) =
-          src.filter(col("event_type") === tpe)
-            .select(col("event_id").as(s"${prefix}_id"),
-              col("user_id").as(s"${prefix}_user"),
-              expr("timestamp_micros(ts div 1000)").as(s"${prefix}_ts"))
-            .withWatermark(s"${prefix}_ts", "1 hour")
-        val joined = side("purchase", "p").join(side("click", "c"),
-          col("p_user") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-            col("c_ts") <= col("p_ts"))
-        val q = sizedStart(s, 8)(joined.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start())
-        try q.processAllAvailable() finally q.stop()
+      val ev = Tables.events(s, d)
+        .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
+      Staging.replay(ev, Seq(col("ts")), 1) { src =>
+        Staging.view(intervalJoin(src, "inner")) {
+          _.select(col("p_id"), col("c_id"), col("p_user").as("user_id"))
+            .orderBy(col("p_id"), col("c_id"))
+        }
       }
-      s.table(sink)
-        .select(col("p_id"), col("c_id"), col("p_user").as("user_id"))
-        .orderBy(col("p_id"), col("c_id"))
     },
 
     // ---- Watermarked stream-stream LEFT OUTER interval join: every
@@ -604,7 +525,7 @@ object Streamish {
         |  AND epoch_us(c.ts) BETWEEN epoch_us(p.ts) - 3600000000
         |                         AND epoch_us(p.ts)
         |ORDER BY p_id, c_id""".stripMargin) { (s, d) =>
-      intervalJoinStream(s, d, "left_outer", "ljoin") {
+      intervalJoinStream(s, d, "left_outer") {
         _.filter(col("p_user") >= 0)
           .select(col("p_id"), coalesce(col("c_id"), lit(-1L)).as("c_id"),
             col("p_user").as("user_id"))
@@ -630,7 +551,7 @@ object Streamish {
         |  AND epoch_us(c.ts) BETWEEN epoch_us(p.ts) - 3600000000
         |                         AND epoch_us(p.ts)
         |ORDER BY p_id, c_id""".stripMargin) { (s, d) =>
-      intervalJoinStream(s, d, "full_outer", "fjoin") {
+      intervalJoinStream(s, d, "full_outer") {
         _.filter(coalesce(col("p_user"), col("c_user")) >= 0)
           .select(coalesce(col("p_id"), lit(-1L)).as("p_id"),
             coalesce(col("c_id"), lit(-1L)).as("c_id"),
@@ -655,7 +576,7 @@ object Streamish {
         |  AND epoch_us(c.ts) BETWEEN epoch_us(p.ts) - 3600000000
         |                         AND epoch_us(p.ts)
         |ORDER BY c_id, p_id""".stripMargin) { (s, d) =>
-      intervalJoinStream(s, d, "right_outer", "rjoin") {
+      intervalJoinStream(s, d, "right_outer") {
         _.filter(col("c_user") >= 0)
           .select(coalesce(col("p_id"), lit(-1L)).as("p_id"), col("c_id"),
             col("c_user").as("user_id"))
@@ -690,7 +611,6 @@ object Streamish {
         |FROM p LEFT JOIN sg ON p.user_id = sg.user_id
         |  AND sg.t <= p.t AND p.t < sg.t_to
         |ORDER BY p.event_id""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       val e = Tables.events(s, d).withColumn("t", expr("ts div 1000"))
       val w = Window.partitionBy(col("d_user")).orderBy(col("t_from"), col("dim_event_id"))
       val dim = e.filter(col("event_type") === "signup")
@@ -699,24 +619,16 @@ object Streamish {
         .withColumn("t_to", lead(col("t_from"), 1, Long.MaxValue).over(w))
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("t"))
-      val sink = s"graft_stream_dim_${streamRun.incrementAndGet()}"
-      Staging.withOrderedReplay(purchases, Seq(col("t"), col("event_id")), 4,
-        "graft_stream_dim", Seq.empty) { in =>
-        val schema = s.read.parquet(in).schema
-        Staging.runAndDrain(s, sink) {
-          val enriched = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-            .join(broadcast(dim),
-              col("user_id") === col("d_user") &&
-                col("t_from") <= col("t") && col("t") < col("t_to"),
-              "left_outer")
-            .select(col("event_id"), col("user_id"), col("t"),
-              coalesce(col("dim_event_id"), lit(-1L)).as("dim_event_id"),
-              round(coalesce(col("dim_value"), lit(-1.0)), 6).as("dim_value"))
-          val q = enriched.writeStream.outputMode("append")
-            .format("memory").queryName(sink).start()
-          try q.processAllAvailable() finally q.stop()
-        }(_.orderBy(col("event_id")))
+      Staging.replay(purchases, Seq(col("t"), col("event_id")), 4) { src =>
+        Staging.view(src
+          .join(broadcast(dim),
+            col("user_id") === col("d_user") &&
+              col("t_from") <= col("t") && col("t") < col("t_to"),
+            "left_outer")
+          .select(col("event_id"), col("user_id"), col("t"),
+            coalesce(col("dim_event_id"), lit(-1L)).as("dim_event_id"),
+            round(coalesce(col("dim_value"), lit(-1.0)), 6).as("dim_value")))(
+          _.orderBy(col("event_id")))
       }
     },
 
@@ -742,21 +654,11 @@ object Streamish {
         |ORDER BY s.user_id""".stripMargin) { (s, d) =>
       import s.implicits._
       import graft.streaming.FunnelMatch
-      Tables.ensureConf(s)
       val ev = Tables.events(s, d)
         .select(col("user_id"), col("event_id"), col("event_type"),
           expr("ts div 1000").as("t"))
-      Staging.withStagedInput(ev, "event_id", nFiles = 3,
-        prefix = "graft_stream_funnel") { in =>
-        val schema = s.read.parquet(in).schema
-        val sink = s"graft_stream_funnel_${streamRun.incrementAndGet()}"
-        Staging.runAndDrain(s, sink) {
-          val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in).as[FunnelMatch.Ev]
-          val q = sizedStart(s, 8)(FunnelMatch(src).writeStream
-            .outputMode("append").format("memory").queryName(sink).start())
-          try q.processAllAvailable() finally q.stop()
-        }(_.orderBy(col("user_id")))
+      Staging.replay(ev, Seq(col("event_id")), 3) { src =>
+        Staging.view(FunnelMatch(src.as[FunnelMatch.Ev]))(_.orderBy(col("user_id")))
       }
     },
 
@@ -785,12 +687,11 @@ object Streamish {
         |ORDER BY seq""".stripMargin) { (s, d) =>
       import s.implicits._
       import graft.streaming.ConfigFold
-      Tables.ensureConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      val sink = s"graft_stream_state_${streamRun.incrementAndGet()}"
-      withStagedEvents(d, "state") { tmp =>
-        val tagged = Tables.normalizeEventsTs(
-          s.readStream.schema(schema).parquet(tmp))
+      val ev = Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
+      // the whole table is one staged file → one trigger
+      Staging.replay(ev, Seq(col("event_id")), 1) { src =>
+        val tagged = src
           .filter(col("event_type").isin("signup", "purchase"))
           .select(
             col("user_id").cast("string").as("key"),
@@ -799,16 +700,14 @@ object Streamish {
             greatest(lit(1), floor(col("value") / 50.0).cast("int")).as("multiplier"),
             col("event_id").cast("string").as("payload"))
           .as[ConfigFold.Tagged]
-        val q = sizedStart(s, 8)(ConfigFold(tagged).writeStream.outputMode("append")
-          .format("memory").queryName(sink).start())
-        try q.processAllAvailable() finally q.stop()
+        Staging.view(ConfigFold(tagged)) {
+          _.select(col("seq"), col("key"),
+            col("configVersion").as("config_version"),
+            col("multiplier"),
+            col("output"))
+            .orderBy(col("seq"))
+        }
       }
-      s.table(sink).select(
-        col("seq"), col("key"),
-        col("configVersion").as("config_version"),
-        col("multiplier"),
-        col("output"))
-        .orderBy(col("seq"))
     }
   )
 }

@@ -26,8 +26,6 @@ object TemporalOps {
       |FROM r WHERE rn = 1 AND event_type <> 'error'
       |ORDER BY user_id""".stripMargin
 
-  private val upsertRun = new java.util.concurrent.atomic.AtomicInteger(0)
-
   val all: Seq[Q] = Seq(
 
     // ---- As-of join: each purchase event picks up the user's most recent
@@ -177,28 +175,17 @@ object TemporalOps {
     // re-delivered batch would surface as a stale or shifted `last_*`
     // column. The view is |keys| rows by construction (bounded sink).
     Q("q_stream_upsert", upsertViewSql) { (s, d) =>
-      Tables.ensureConf(s)
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      val sink = s"graft_stream_upsert_${upsertRun.incrementAndGet()}"
-      Staging.withStagedInput(ev, "event_id", nFiles = 3,
-        prefix = "graft_stream_upsert") { in =>
-        val schema = s.read.parquet(in).schema
-        Staging.runAndDrain(s, sink) {
-          // sizedStart: the per-key state store otherwise freezes the
-          // session's 32 shuffle partitions into the checkpoint — 32
-          // mostly-idle state tasks per trigger at bench batch sizes
-          val q = Staging.sizedStart(s, 8)(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-              .parquet(in)
-              .groupBy(col("user_id"))
-              .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
-                col("value"))).as("last"))
-              .writeStream.outputMode("complete").format("memory")
-              .queryName(sink).start())
-          try q.processAllAvailable() finally q.stop()
-        } { df =>
+      Staging.replay(ev, Seq(col("event_id")), 3) { src =>
+        // the view form sizes the per-key state store: otherwise it
+        // freezes the session's shuffle width (SPARK_GRAFT_CPUS) into the
+        // checkpoint — mostly-idle state tasks per trigger at bench batch
+        // sizes on a wide host
+        Staging.view(src.groupBy(col("user_id"))
+          .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
+            col("value"))).as("last")), "complete") { df =>
           df.filter(col("last.event_type") =!= "error")
             .select(col("user_id"), col("last.event_id").as("last_event_id"),
               col("last.event_type").as("last_type"),

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  private val deconRun = new java.util.concurrent.atomic.AtomicLong()
-  private val curationRun = new java.util.concurrent.atomic.AtomicLong()
-
   /** Deterministic content-hash train/val/test tag (12/16, 2/16, 2/16 by
     * the first md5 hex digit of the doc id) — the split gate shared by
     * every split-aware query here; each oracle carries the same CASE. */
@@ -1061,7 +1058,6 @@ object TextOps {
         |SELECT te.doc_id, COUNT(*) AS n_hits
         |FROM te JOIN tr ON te.s = tr.s
         |GROUP BY te.doc_id ORDER BY te.doc_id""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
           splitTag.as("split"))
@@ -1070,29 +1066,21 @@ object TextOps {
             explode(TextFunctions.shingleHashes(col("text"), 13)).as("s"))
           .distinct()) { te =>
         val bloom = Bloom.buildLong(te.select(col("s")), "s", fpp = 1e-3)
-        val sink = s"graft_stream_decon_${deconRun.incrementAndGet()}"
         // bounded sink drain (matched pairs only) → distinct (a train
         // shingle recurring across micro-batches emitted its pair once per
         // batch) → per-doc counts
-        Staging.runAndDrain(s, sink) {
-          Staging.withStagedInput(
-            docs.filter(col("split") === "train").select(col("doc_id"), col("text")),
-            "doc_id", nFiles = 2, prefix = "graft_stream_decon") { in =>
-            val schema = s.read.parquet(in).schema
-            val matches = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-              .select(explode(TextFunctions.shingleHashes(col("text"), 13)).as("s"))
-              .filter(Bloom.mightContainLong(bloom, col("s")))
-              .join(broadcast(te), "s") // stream-static exact verify
-              .select(col("doc_id"), col("s"))
-            val q = matches.writeStream.outputMode("append")
-              .format("memory").queryName(sink).start()
-            try q.processAllAvailable() finally q.stop()
+        Staging.replay(
+          docs.filter(col("split") === "train").select(col("doc_id"), col("text")),
+          Seq(col("doc_id")), 2) { src =>
+          Staging.view(src
+            .select(explode(TextFunctions.shingleHashes(col("text"), 13)).as("s"))
+            .filter(Bloom.mightContainLong(bloom, col("s")))
+            .join(broadcast(te), "s") // stream-static exact verify
+            .select(col("doc_id"), col("s"))) {
+            _.distinct()
+              .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
+              .orderBy(col("doc_id"))
           }
-        } {
-          _.distinct()
-            .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
-            .orderBy(col("doc_id"))
         }
       }
     },
@@ -1190,7 +1178,6 @@ object TextOps {
         |            unnest(range(1, len(t) - 11)) AS u(i) WHERE len(t) >= 13)
         |SELECT ks.fp, COUNT(*) AS n_hits FROM ks JOIN ts USING (s)
         |GROUP BY ks.fp ORDER BY ks.fp""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
           splitTag.as("split"))
@@ -1201,33 +1188,25 @@ object TextOps {
             TextFunctions.normalize(col("text")), 13)).as("s"))
           .distinct()) { te =>
         val bloom = Bloom.buildLong(te, "s", fpp = 1e-3)
-        val sink = s"graft_stream_curation_${curationRun.incrementAndGet()}"
         // bounded drain: one row per contaminated-shingle OCCURRENCE —
         // deliberately NOT distinct'd (see the emission-sensitivity note
         // in the header comment)
-        Staging.runAndDrain(s, sink) {
-          Staging.withStagedInput(
-            docs.filter(col("split") === "train").select(col("doc_id"), col("text")),
-            "doc_id", nFiles = 4, prefix = "graft_stream_curation") { in =>
-            val schema = s.read.parquet(in).schema
-            val curated = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-              .filter(TextFunctions.tokenCount(col("text")).between(20, 1000))
-              .withColumn("norm", TextFunctions.normalize(col("text")))
-              .withColumn("fp", substring(md5(col("norm").cast("binary")), 1, 16))
-              .dropDuplicates("fp")
-              .select(col("fp"),
-                explode(TextFunctions.shingleHashes(col("norm"), 13)).as("s"))
-              .filter(Bloom.mightContainLong(bloom, col("s")))
-              .join(broadcast(te), "s")
-              .select(col("fp"), col("s"))
-            val q = Staging.sizedStart(s, 8)(curated.writeStream
-              .outputMode("append").format("memory").queryName(sink).start())
-            try q.processAllAvailable() finally q.stop()
+        Staging.replay(
+          docs.filter(col("split") === "train").select(col("doc_id"), col("text")),
+          Seq(col("doc_id")), 4) { src =>
+          Staging.view(src
+            .filter(TextFunctions.tokenCount(col("text")).between(20, 1000))
+            .withColumn("norm", TextFunctions.normalize(col("text")))
+            .withColumn("fp", substring(md5(col("norm").cast("binary")), 1, 16))
+            .dropDuplicates("fp")
+            .select(col("fp"),
+              explode(TextFunctions.shingleHashes(col("norm"), 13)).as("s"))
+            .filter(Bloom.mightContainLong(bloom, col("s")))
+            .join(broadcast(te), "s")
+            .select(col("fp"), col("s"))) {
+            _.groupBy(col("fp")).agg(count(lit(1)).as("n_hits"))
+              .orderBy(col("fp"))
           }
-        } {
-          _.groupBy(col("fp")).agg(count(lit(1)).as("n_hits"))
-            .orderBy(col("fp"))
         }
       }
     },
@@ -1318,28 +1297,15 @@ object TextOps {
         |  round((CAST(pw AS DOUBLE) / CAST(spw AS DOUBLE)) * (total / toks), 6)
         |    AS epochs
         |FROM p, tot ORDER BY source""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_tmix_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select("doc_id", "source", "text"),
-          "doc_id", nFiles = 3, prefix = "graft_stream_tmix") { in =>
-          val schema = s.read.parquet(in).schema
-          val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(
-                batch.groupBy(col("source"))
-                  .agg(count(lit(1)).as("n_docs"),
-                    sum(TextFunctions.tokenCount(col("text"))).cast("long")
-                      .as("toks")),
-                s"$out/ledger", id)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+      Staging.ledger(Tables.documents(s, d).select("doc_id", "source", "text"),
+          "doc_id", 3) { (batch, id, out) =>
+        Staging.writeBatch(
+          batch.groupBy(col("source"))
+            .agg(count(lit(1)).as("n_docs"),
+              sum(TextFunctions.tokenCount(col("text"))).cast("long")
+                .as("toks")),
+          s"$out/ledger", id)
+      } { out =>
         val base = Staging.drainParquet(s, s"$out/ledger")
           .groupBy(col("source"))
           .agg(sum(col("n_docs")).as("n_docs"), sum(col("toks")).as("toks"))
@@ -1456,26 +1422,13 @@ object TextOps {
     },
 
     Q("q_stream_priority_sample", prioritySampleSql) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_psample_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select("doc_id", "n_chars"),
-          "doc_id", nFiles = 3, prefix = "graft_stream_psample") { in =>
-          val schema = s.read.parquet(in).schema
-          val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(
-                priorityScored(batch)
-                  .orderBy(col("skey").desc, col("doc_id")).limit(50),
-                s"$out/reservoir", id)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+      Staging.ledger(Tables.documents(s, d).select("doc_id", "n_chars"),
+          "doc_id", 3) { (batch, id, out) =>
+        Staging.writeBatch(
+          priorityScored(batch)
+            .orderBy(col("skey").desc, col("doc_id")).limit(50),
+          s"$out/reservoir", id)
+      } { out =>
         // the reservoir dies with the temp dir — the shared drain
         // localizes it (≤50 rows × triggers by construction); the final
         // cutoff is the limit on the ordered local relation
@@ -1495,28 +1448,15 @@ object TextOps {
     // the oracle is the BATCH sampler's SQL verbatim — a dropped or
     // double-counted trigger shifts the quota draw and hash-mismatches.
     Q("q_stream_stratified_sample", stratifiedSampleSql) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_ssample_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select("doc_id", "source", "n_chars"),
-          "doc_id", nFiles = 3, prefix = "graft_stream_ssample") { in =>
-          val schema = s.read.parquet(in).schema
-          val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(
-                graft.plans.TopKPerKey(
-                  priorityScored(batch, extra = Seq("source")),
-                  Seq("source"), Seq(col("skey").desc, col("doc_id").asc),
-                  k = 10),
-                s"$out/quota", id)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+      Staging.ledger(Tables.documents(s, d).select("doc_id", "source", "n_chars"),
+          "doc_id", 3) { (batch, id, out) =>
+        Staging.writeBatch(
+          graft.plans.TopKPerKey(
+            priorityScored(batch, extra = Seq("source")),
+            Seq("source"), Seq(col("skey").desc, col("doc_id").asc),
+            k = 10),
+          s"$out/quota", id)
+      } { out =>
         // final per-source cut over the bounded ledger (≤ 10 × strata ×
         // triggers rows by construction — drained local)
         graft.plans.TopKPerKey(
@@ -1562,27 +1502,14 @@ object TextOps {
     // batch oracle: a dropped/replayed trigger or any train/serve
     // feature skew shifts the drawn sample and hash-mismatches.
     Q("q_stream_dsir", dsirSql) { (s, d) =>
-      Tables.ensureConf(s)
       val lam = dsirLambda(s, d).localCheckpoint() // trained once, offline
-      Staging.withTempDir("graft_stream_dsir_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select("doc_id", "lang", "text"),
-          "doc_id", nFiles = 3, prefix = "graft_stream_dsir") { in =>
-          val schema = s.read.parquet(in).schema
-          val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(
-                dsirScored(dsirBuckets(batch), lam)
-                  .orderBy(col("gkey").desc, col("doc_id")).limit(100),
-                s"$out/sel", id)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+      Staging.ledger(Tables.documents(s, d).select("doc_id", "lang", "text"),
+          "doc_id", 3) { (batch, id, out) =>
+        Staging.writeBatch(
+          dsirScored(dsirBuckets(batch), lam)
+            .orderBy(col("gkey").desc, col("doc_id")).limit(100),
+          s"$out/sel", id)
+      } { out =>
         Staging.drainParquet(s, s"$out/sel",
           col("gkey").desc, col("doc_id")).limit(100)
       }
@@ -1739,26 +1666,13 @@ object TextOps {
         |CROSS JOIN (VALUES (0.5), (0.9), (0.99), (1.0)) t(q)
         |WHERE cum >= ceil(q * n)
         |GROUP BY q ORDER BY q""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_slq_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select("doc_id", "text"),
-          "doc_id", nFiles = 3, prefix = "graft_stream_slq") { in =>
-          val schema = s.read.parquet(in).schema
-          val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(
-                batch.select(TextFunctions.tokenCountNonEmpty(col("text")).as("n_tok"))
-                  .groupBy(col("n_tok")).agg(count(lit(1)).as("cnt")),
-                s"$out/hist", id)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+      Staging.ledger(Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", 3) { (batch, id, out) =>
+        Staging.writeBatch(
+          batch.select(TextFunctions.tokenCountNonEmpty(col("text")).as("n_tok"))
+            .groupBy(col("n_tok")).agg(count(lit(1)).as("cnt")),
+          s"$out/hist", id)
+      } { out =>
         // merge the per-trigger histograms (counts sum) and run the
         // identical bounded nearest-rank pick over the merged histogram
         val h = Staging.drainParquet(s, s"$out/hist")
@@ -1944,23 +1858,10 @@ object TextOps {
     // write; the drain shares the batch oracle verbatim, so a dropped
     // trigger or a train/serve rule drift hash-mismatches.
     Q("q_stream_gopher_quality", gopherSql) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_gopher_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select("doc_id", "text"),
-          "doc_id", nFiles = 3, prefix = "graft_stream_gopher") { in =>
-          val schema = s.read.parquet(in).schema
-          val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(gopherRules(batch), s"$out/rules", id)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+      Staging.ledger(Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", 3) { (batch, id, out) =>
+        Staging.writeBatch(gopherRules(batch), s"$out/rules", id)
+      } { out =>
         Staging.drainParquet(s, s"$out/rules").orderBy(col("doc_id"))
       }
     },
@@ -1994,23 +1895,10 @@ object TextOps {
     // verbatim, so a dropped trigger or train/serve rule drift
     // hash-mismatches.
     Q("q_stream_c4_clean", c4Sql) { (s, d) =>
-      Tables.ensureConf(s)
-      Staging.withTempDir("graft_stream_c4_out") { out =>
-        Staging.withStagedInput(
-          Tables.documents(s, d).select("doc_id", "text"),
-          "doc_id", nFiles = 3, prefix = "graft_stream_c4") { in =>
-          val schema = s.read.parquet(in).schema
-          val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(c4Rows(batch), s"$out/rows", id)
-              ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+      Staging.ledger(Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", 3) { (batch, id, out) =>
+        Staging.writeBatch(c4Rows(batch), s"$out/rows", id)
+      } { out =>
         Staging.drainParquet(s, s"$out/rows").orderBy(col("doc_id"))
       }
     },
@@ -2299,7 +2187,7 @@ object TextOps {
       val docs = Tables.documents(s, d).select(
         col("doc_id"), col("lang"), col("source"),
         TextFunctions.tokenCount(col("text")).as("n_tok"))
-      Staging.withTempDir("graft_publish") { tmp =>
+      Staging.withTempDir { tmp =>
         val out = s"$tmp/corpus"
         docs.repartition(col("lang"))
           .write.partitionBy("lang").mode("overwrite").parquet(out)
@@ -2744,32 +2632,19 @@ object TextOps {
         |SELECT doc_id, n_bg, CAST(xm AS DOUBLE) / 1000000.0 AS xent,
         |  CAST(xm AS DOUBLE) <= CAST(txm AS DOUBLE) / k AS keep
         |FROM scored CROSS JOIN m ORDER BY doc_id""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       Artifacts.scoped(bilmModel(s, d)) { model =>
-        Staging.withTempDir("graft_stream_bilm_out") { out =>
-          Staging.withStagedInput(
-            Tables.documents(s, d).select("doc_id", "text"),
-            "doc_id", nFiles = 3, prefix = "graft_stream_bilm") { in =>
-            val schema = s.read.parquet(in).schema
-            val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-              .parquet(in)
-              .writeStream.outputMode("append")
-              .option("checkpointLocation", s"$out/ck")
-              .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-                // model stays UN-hinted: vocab²-bounded but unbounded —
-                // AQE broadcasts whichever side fits (per-trigger batches
-                // are small, so normally the batch side)
-                Staging.writeBatch(
-                  docBigrams(batch).join(model, "g")
-                    .groupBy(col("doc_id"))
-                    .agg(sum(col("n")).as("n_bg"),
-                      sum(col("mcost") * col("n")).as("smicro")),
-                  s"$out/scores", id)
-                ()
-              }
-              .start()
-            try q.processAllAvailable() finally q.stop()
-          }
+        Staging.ledger(Tables.documents(s, d).select("doc_id", "text"),
+            "doc_id", 3) { (batch, id, out) =>
+          // model stays UN-hinted: vocab²-bounded but unbounded —
+          // AQE broadcasts whichever side fits (per-trigger batches
+          // are small, so normally the batch side)
+          Staging.writeBatch(
+            docBigrams(batch).join(model, "g")
+              .groupBy(col("doc_id"))
+              .agg(sum(col("n")).as("n_bg"),
+                sum(col("mcost") * col("n")).as("smicro")),
+            s"$out/scores", id)
+        } { out =>
           val scored = Staging.drainParquet(s, s"$out/scores")
             .select(col("doc_id"), col("n_bg"),
               expr("(2 * smicro + n_bg) div (2 * n_bg)").as("xm"))
@@ -2959,23 +2834,11 @@ object TextOps {
     // the batch and stream scorers hash-mismatches.
     Q("q_stream_quality_classifier", qualityClassifierSql) { (s, d) =>
       val w = trainQualityWeights(s, d)
-      Staging.withTempDir("graft_stream_qc_out") { out =>
-        Staging.withStagedInput(
+      Staging.ledger(
           Tables.documents(s, d).select(col("doc_id"), col("text"), col("lang")),
-          "doc_id", nFiles = 3, prefix = "graft_stream_qc") { in =>
-          val schema = s.read.parquet(in).schema
-          val stream = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(in)
-          val q = stream.writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/ck")
-            .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, id: Long) =>
-              Staging.writeBatch(scoreQuality(bdf, w), s"$out/res", id)
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        Staging.drainParquet(s, s"$out/res", col("doc_id"))
-      }
+          "doc_id", 3) { (bdf, id, out) =>
+        Staging.writeBatch(scoreQuality(bdf, w), s"$out/res", id)
+      }(out => Staging.drainParquet(s, s"$out/res", col("doc_id")))
     },
 
     // ---- Classifier EVALUATION — the metrics row that gates whether a

@@ -408,33 +408,19 @@ object UnigramOps {
          |JOIN e ON d.w = e.w
          |WHERE d.w <> ''
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       Artifacts.scoped(segment(wordRel(s, d), microNats(train(s, d).toMap))
           .select(col("w").as("tw"), size(split(col("seg"), " ")).as("np"))) { enc =>
         enc.count() // materialize once; each trigger broadcasts the table
-        Staging.withTempDir("graft_stream_uni_out") { out =>
-          Staging.withStagedInput(
-            Tables.documents(s, d).select(col("doc_id"), col("text")),
-            "doc_id", nFiles = 2, prefix = "graft_stream_uni") { in =>
-            val schema = s.read.parquet(in).schema
-            val q = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-              .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-              .filter(col("w") =!= "")
-              .join(broadcast(enc), col("w") === col("tw"))
-              .writeStream.outputMode("append")
-              .option("checkpointLocation", s"$out/ck")
-              .foreachBatch { (bdf: DataFrame, id: Long) =>
-                Staging.writeBatch(bdf.groupBy(col("doc_id"))
-                  .agg(count(lit(1)).as("n_words"), sum(col("np")).as("n_pieces")),
-                  s"$out/res", id)
-                ()
-              }
-              .start()
-            try q.processAllAvailable() finally q.stop()
-          }
-          Staging.drainParquet(s, s"$out/res", col("doc_id"))
-        }
+        Staging.ledger(Tables.documents(s, d).select(col("doc_id"), col("text")),
+            "doc_id", 2) { (bdf, id, out) =>
+          Staging.writeBatch(bdf
+            .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+            .filter(col("w") =!= "")
+            .join(broadcast(enc), col("w") === col("tw"))
+            .groupBy(col("doc_id"))
+            .agg(count(lit(1)).as("n_words"), sum(col("np")).as("n_pieces")),
+            s"$out/res", id)
+        }(out => Staging.drainParquet(s, s"$out/res", col("doc_id")))
       }
     },
 

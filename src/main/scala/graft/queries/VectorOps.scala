@@ -739,7 +739,6 @@ object VectorOps {
     // q_semdedup_keep's oracle verbatim — a dropped trigger, a stale
     // centroid, or train/serve scoring skew hash-mismatches.
     Q("q_stream_semdedup", semdedupKeepSql) { (s, d) =>
-      Tables.ensureConf(s)
       Artifacts.scoped(embedComponents(s, d)) { comp =>
         comp.count() // materialize: every trigger joins the snapshot
         val lab = comp.select(col("vec_id"), col("cluster"))
@@ -747,28 +746,12 @@ object VectorOps {
           posexplode(col("v")).as(Seq("i", "x")))
         Artifacts.scoped(semdedupCentroids(x0)) { cm =>
           cm.count()
-          Staging.withStagedInput(embedRel(s, d), "vec_id", nFiles = 3,
-            prefix = "graft_stream_semdedup") { in =>
-            Staging.withTempDir("graft_stream_semdedup_out") { out =>
-              val outDir = s"$out/scored"
-              val schema = s.read.parquet(in).schema
-              val q = s.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1).parquet(in)
-                .writeStream.outputMode("append")
-                .option("checkpointLocation", s"$out/ck")
-                .foreachBatch { (batch: DataFrame, id: Long) =>
-                  val xb = batch.join(lab, "vec_id")
-                    .select(col("cluster"), col("vec_id"),
-                      posexplode(col("v")).as(Seq("i", "x")))
-                  Staging.writeBatch(semdedupCentCos(xb, cm), outDir, id)
-                  ()
-                }
-                .start()
-              try q.processAllAvailable() finally q.stop()
-              semdedupDecision(Staging.drainParquet(s, outDir))
-                .orderBy(col("vec_id"))
-            }
-          }
+          Staging.ledger(embedRel(s, d), "vec_id", 3) { (batch, id, out) =>
+            val xb = batch.join(lab, "vec_id")
+              .select(col("cluster"), col("vec_id"),
+                posexplode(col("v")).as(Seq("i", "x")))
+            Staging.writeBatch(semdedupCentCos(xb, cm), out, id)
+          }(out => semdedupDecision(Staging.drainParquet(s, out)).orderBy(col("vec_id")))
         }
       }
     },
@@ -1100,38 +1083,23 @@ object VectorOps {
         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY sim DESC, nbr) AS rn
         |  FROM p) WHERE rn <= 3
         |ORDER BY src, sim DESC, nbr""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       val e = embedRel(s, d)
       Artifacts.scoped(e.select(col("vec_id").as("nbr"), col("v").as("vb"))) { corpus =>
         corpus.count() // materialize once: every trigger scans the cache
         val probes = e.filter(col("vec_id") < 50)
           .select(col("vec_id").as("src"), col("v").as("va"))
-        Staging.withStagedInput(probes, "src", nFiles = 2,
-          prefix = "graft_stream_knn") { in =>
-          Staging.withTempDir("graft_stream_knn_out") { tmpOut =>
-            val outDir = s"$tmpOut/topk"
-            val schema = s.read.parquet(in).schema
-            val q = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-              .writeStream.outputMode("append")
-              .foreachBatch { (batch: DataFrame, id: Long) =>
-                val scored = broadcast(batch).crossJoin(corpus)
-                  .filter(col("nbr") =!= col("src"))
-                  .select(col("src"), col("nbr"),
-                    round(VectorFunctions.cosine(col("va"), col("vb")), 6)
-                      .as("sim"))
-                Staging.writeBatch(
-                  graft.plans.TopKPerKey(scored, Seq("src"),
-                      Seq(col("sim").desc, col("nbr").asc), k = 3)
-                    .select(col("src"), col("nbr"), col("sim")),
-                  outDir, id)
-                () // Unit sink contract
-              }
-              .start()
-            try q.processAllAvailable() finally q.stop()
-            Staging.drainParquet(s, outDir, col("src"), col("sim").desc, col("nbr"))
-          }
-        }
+        Staging.ledger(probes, "src", 2) { (batch, id, out) =>
+          val scored = broadcast(batch).crossJoin(corpus)
+            .filter(col("nbr") =!= col("src"))
+            .select(col("src"), col("nbr"),
+              round(VectorFunctions.cosine(col("va"), col("vb")), 6)
+                .as("sim"))
+          Staging.writeBatch(
+            graft.plans.TopKPerKey(scored, Seq("src"),
+                Seq(col("sim").desc, col("nbr").asc), k = 3)
+              .select(col("src"), col("nbr"), col("sim")),
+            out, id)
+        }(out => Staging.drainParquet(s, out, col("src"), col("sim").desc, col("nbr")))
       }
     },
 
@@ -1155,7 +1123,6 @@ object VectorOps {
         |  CAST(LEAST(COUNT(*), 100) AS BIGINT) AS n_answered,
         |  true AS recall_ok
         |FROM embeddings""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       Artifacts.scoped(embedRel(s, d)) { e =>
         val centroids = ivfCentroids(e)
         Artifacts.scoped(e.select(
@@ -1165,39 +1132,25 @@ object VectorOps {
           postings.count() // materialize the index before serving starts
           val probes = e.filter(col("vec_id") < 100)
             .select(col("vec_id").as("src"), col("v").as("va"))
-          val served = Staging.withStagedInput(probes, "src", nFiles = 2,
-            prefix = "graft_stream_ann") { in =>
-            Staging.withTempDir("graft_stream_ann_out") { tmpOut =>
-              val outDir = s"$tmpOut/ann"
-              val schema = s.read.parquet(in).schema
-              val q = s.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1).parquet(in)
-                .writeStream.outputMode("append")
-                .foreachBatch { (batch: DataFrame, id: Long) =>
-                  val probed = batch.withColumn("probe_cells",
-                      graft.functions.VectorExpressions.nearestCells(
-                        col("va"), centroids, 6))
-                    .withColumn("van", unitNorm(col("va")))
-                  Staging.writeBatch(
-                    broadcast(probed)
-                      .select(col("src"), col("van"),
-                        explode(col("probe_cells")).as("cell"))
-                      .join(postings, Seq("cell"))
-                      .filter(col("src") =!= col("nbr"))
-                      .select(col("src"), col("nbr"),
-                        VectorFunctions.dot(col("van"), col("vbn")).as("sim"))
-                      .groupBy(col("src"))
-                      .agg(min(struct((-col("sim")).as("ns"), col("nbr").as("nb"))).as("m"))
-                      .select(col("src"), col("m.nb").as("nbr"),
-                        round(-col("m.ns"), 6).as("sim")),
-                    outDir, id)
-                  ()
-                }
-                .start()
-              try q.processAllAvailable() finally q.stop()
-              Staging.drainParquet(s, outDir)
-            }
-          }
+          val served = Staging.ledger(probes, "src", 2) { (batch, id, out) =>
+            val probed = batch.withColumn("probe_cells",
+                graft.functions.VectorExpressions.nearestCells(
+                  col("va"), centroids, 6))
+              .withColumn("van", unitNorm(col("va")))
+            Staging.writeBatch(
+              broadcast(probed)
+                .select(col("src"), col("van"),
+                  explode(col("probe_cells")).as("cell"))
+                .join(postings, Seq("cell"))
+                .filter(col("src") =!= col("nbr"))
+                .select(col("src"), col("nbr"),
+                  VectorFunctions.dot(col("van"), col("vbn")).as("sim"))
+                .groupBy(col("src"))
+                .agg(min(struct((-col("sim")).as("ns"), col("nbr").as("nb"))).as("m"))
+                .select(col("src"), col("m.nb").as("nbr"),
+                  round(-col("m.ns"), 6).as("sim")),
+              out, id)
+          }(out => Staging.drainParquet(s, out))
           // recall verdict against the exact best similarity per query
           // (one broadcast linear pass — O(probes·n), never O(n²))
           val exact1 = broadcast(probes.withColumn("van", unitNorm(col("va"))))
@@ -1235,32 +1188,20 @@ object VectorOps {
         |  CAST(LEAST(COUNT(*), 100) AS BIGINT) AS n_queries,
         |  true AS recall_ok
         |FROM embeddings""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       Artifacts.scoped(embedRel(s, d)) { e =>
         val n = e.count()
         // quantizer from the bootstrap half only — the STREAM owns all
         // posting construction, including for vectors the quantizer
         // never saw (the production shape: train once, index forever)
         val centroids = ivfCentroids(e.filter(col("vec_id") < n / 2))
-        Staging.withTempDir("graft_stream_idx_out") { out =>
-          Staging.withStagedInput(e.select(col("vec_id"), col("v")),
-            "vec_id", nFiles = 2, prefix = "graft_stream_idx") { in =>
-            val schema = s.read.parquet(in).schema
-            val q = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-              .writeStream.outputMode("append")
-              .option("checkpointLocation", s"$out/ck")
-              .foreachBatch { (batch: DataFrame, id: Long) =>
-                Staging.writeBatch(batch.select(
-                  element_at(graft.functions.VectorExpressions.nearestCells(
-                    col("v"), centroids, 1), 1).as("cell"),
-                  col("vec_id").as("nbr"), unitNorm(col("v")).as("vbn")),
-                  s"$out/postings", id)
-                ()
-              }
-              .start()
-            try q.processAllAvailable() finally q.stop()
-          }
+        Staging.ledger(e.select(col("vec_id"), col("v")),
+            "vec_id", 2) { (batch, id, out) =>
+          Staging.writeBatch(batch.select(
+            element_at(graft.functions.VectorExpressions.nearestCells(
+              col("v"), centroids, 1), 1).as("cell"),
+            col("vec_id").as("nbr"), unitNorm(col("v")).as("vbn")),
+            s"$out/postings", id)
+        } { out =>
           val postings = s.read.option("recursiveFileLookup", "true")
             .parquet(s"$out/postings")
           val probes = e.filter(col("vec_id") < 100)
@@ -1392,7 +1333,6 @@ object VectorOps {
         |  CAST(48 AS BIGINT) AS n_probes,
         |  false AS rebuild_due
         |FROM embeddings""".stripMargin) { (s, d) =>
-      Tables.ensureConf(s)
       Artifacts.scoped(embedRel(s, d)) { e =>
         val n = e.count()
         // the monitoring contract is 4 triggers × 12-probe samples; a
@@ -1403,24 +1343,15 @@ object VectorOps {
           s"12-probe per-batch samples); got $n — corpus too small for " +
           "the pooled-verdict contract")
         val centroids = ivfCentroids(e.filter(col("vec_id") < n / 2))
-        Staging.withTempDir("graft_stream_drift_out") { out =>
-          Staging.withStagedInput(e.select(col("vec_id"), col("v")),
-            "vec_id", nFiles = 4, prefix = "graft_stream_drift") { in =>
-            val schema = s.read.parquet(in).schema
-            // one maintainer state per query run: the accumulated-index
-            // cursor lives here, not in per-tick filesystem walks
-            val mon = new DriftMonitorState(s, centroids, out.toString)
-            val q = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(in)
-              .writeStream.outputMode("append")
-              .option("checkpointLocation", s"$out/ck")
-              .foreachBatch { (batch: DataFrame, id: Long) =>
-                mon.tick(batch, id)
-                ()
-              }
-              .start()
-            try q.processAllAvailable() finally q.stop()
-          }
+        // one maintainer state per query run, opened on the first trigger
+        // (the ledger dir is the driver's): the accumulated-index cursor
+        // lives here, not in per-tick filesystem walks
+        var mon: DriftMonitorState = null
+        Staging.ledger(e.select(col("vec_id"), col("v")),
+            "vec_id", 4) { (batch, id, out) =>
+          if (mon == null) mon = new DriftMonitorState(s, centroids, out)
+          mon.tick(batch, id)
+        } { out =>
           val verdicts = s.read.option("recursiveFileLookup", "true")
             .parquet(s"$out/verdicts")
           val postings = s.read.option("recursiveFileLookup", "true")

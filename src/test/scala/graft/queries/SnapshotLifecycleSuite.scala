@@ -289,8 +289,8 @@ class SnapshotLifecycleSuite extends SparkSpec {
           col("v"), centroids, 1), 1).as("cell"),
         col("vec_id").as("nbr"))
       val outRoot = tmpDir("lc_stream_idx").toString
-      Staging.withStagedInput(e.select(col("vec_id"), col("v")),
-        "vec_id", nFiles = 6, prefix = "lc_stream_idx_in") { in =>
+      Staging.stage(e.select(col("vec_id"), col("v")),
+        Seq(col("vec_id")), nFiles = 6) { in =>
         val schema = spark.read.parquet(in).schema
         // deterministic mid-lifecycle cut: hold the later range files
         // OUT of the source dir so even a host fast enough to drain

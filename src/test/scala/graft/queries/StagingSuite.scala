@@ -1,44 +1,63 @@
 package graft.queries
 
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
-/** The Staging harness's cleanup CONTRACT is load-bearing for long-lived
-  * sessions (a failed gate query must not leak memory-sink views, cached
-  * relations, or temp trees) — so the failure paths are tested directly,
+/** The Staging driver's cleanup CONTRACT is load-bearing for long-lived
+  * sessions (a failed gate query must not leak memory-sink views, running
+  * streams, or temp trees) — so the failure paths are tested directly,
   * not assumed from the happy path.
   */
 class StagingSuite extends graft.SparkSpec {
 
-  test("runAndDrain drops the sink view even when the streaming run throws") {
+  private val sf0001 =
+    java.nio.file.Paths.get(sys.props("user.home"), "testdata", "sf0.001").toString
+
+  private def tempViews(): Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  private def causes(t: Throwable): Iterator[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+
+  test("view drops the sink view even when the streaming run throws") {
     import spark.implicits._
-    val sink = "staging_suite_fail_sink"
-    val boom = intercept[RuntimeException] {
-      Staging.runAndDrain(spark, sink) {
-        // simulate a memory sink that registered its view, then a
-        // micro-batch failure
-        Seq((1L, "a")).toDF("id", "v").createOrReplaceTempView(sink)
-        throw new RuntimeException("batch failed")
-      } { identity }
+    val before = tempViews()
+    // the memory sink registers its view at start; the first micro-batch
+    // then fails
+    val failing = udf { (id: Long) =>
+      if (id >= 0) throw new RuntimeException("batch failed")
+      id
     }
-    assert(boom.getMessage == "batch failed")
-    assert(!spark.catalog.tableExists(sink),
-      "failed run leaked the memory-sink view")
+    val boom = intercept[StreamingQueryException] {
+      Staging.replay(Seq((1L, "a")).toDF("id", "v"), Seq(col("id")), 1) { src =>
+        Staging.view(src.select(failing(col("id")).as("id")))(identity)
+      }
+    }
+    assert(causes(boom).exists(e => Option(e.getMessage).exists(_.contains("batch failed"))))
+    assert(tempViews() == before, "failed run leaked the memory-sink view")
   }
 
-  test("runAndDrain tolerates a failure BEFORE the sink view exists") {
-    val thrown = intercept[RuntimeException] {
-      Staging.runAndDrain(spark, "staging_suite_never_registered") {
-        throw new RuntimeException("failed before start")
-      } { identity }
+  test("view tolerates a failure BEFORE the sink view exists") {
+    import spark.implicits._
+    val before = tempViews()
+    // complete mode without an aggregation is refused at start, before
+    // the memory sink registers anything
+    val thrown = intercept[AnalysisException] {
+      Staging.replay(Seq((1L, "a")).toDF("id", "v"), Seq(col("id")), 1) { src =>
+        Staging.view(src, "complete")(identity)
+      }
     }
-    assert(thrown.getMessage == "failed before start")
+    assert(thrown.getMessage.contains("Invalid streaming output mode: complete"))
+    assert(tempViews() == before)
   }
 
-  test("withStagedInput removes the staged tree on success and on failure") {
+  test("stage removes the staged tree on success and on failure") {
     import spark.implicits._
     val df = Seq((1L, "x"), (2L, "y")).toDF("doc_id", "text")
     var staged: java.nio.file.Path = null
-    Staging.withStagedInput(df, "doc_id", nFiles = 2, prefix = "staging_suite_ok") { in =>
+    Staging.stage(df, Seq(col("doc_id")), nFiles = 2) { in =>
       staged = java.nio.file.Paths.get(in)
       assert(java.nio.file.Files.exists(staged), "input not staged")
       assert(spark.read.parquet(in).count() == 2)
@@ -47,7 +66,7 @@ class StagingSuite extends graft.SparkSpec {
 
     var staged2: java.nio.file.Path = null
     intercept[RuntimeException] {
-      Staging.withStagedInput(df, "doc_id", nFiles = 2, prefix = "staging_suite_fail") { in =>
+      Staging.stage(df, Seq(col("doc_id")), nFiles = 2) { in =>
         staged2 = java.nio.file.Paths.get(in)
         throw new RuntimeException("body failed")
       }
@@ -55,13 +74,15 @@ class StagingSuite extends graft.SparkSpec {
     assert(!java.nio.file.Files.exists(staged2), "staged tree survived failure")
   }
 
-  test("runAndDrain returns a LOCAL relation (survives sink drop)") {
+  test("view returns a LOCAL relation (survives sink drop)") {
     import spark.implicits._
-    val sink = "staging_suite_local"
-    val out = Staging.runAndDrain(spark, sink) {
-      Seq((2L, "b"), (1L, "a")).toDF("id", "v").createOrReplaceTempView(sink)
-    } { _.orderBy(col("id")) }
-    assert(!spark.catalog.tableExists(sink))
+    val before = tempViews()
+    val out = Staging.replay(Seq((2L, "b"), (1L, "a")).toDF("id", "v"),
+        Seq(col("id")), 2) { src =>
+      Staging.view(src)(_.orderBy(col("id")))
+    }
+    assert(tempViews() == before)
+    assert(out.queryExecution.analyzed.isInstanceOf[LocalRelation])
     // the sink view is gone — the result must still be materializable
     assert(out.select("id").as[Long].collect().toSeq == Seq(1L, 2L))
   }
@@ -84,7 +105,7 @@ class StagingSuite extends graft.SparkSpec {
     // exactly the batch answer — nothing missing, nothing doubled.
     val docs = (0L until 40L).map(i => (i, s"v$i")).toDF("doc_id", "text")
     val outRoot = tmpDir("wb_restart").toString
-    Staging.withStagedInput(docs, "doc_id", nFiles = 4, prefix = "wb_restart_in") { in =>
+    Staging.stage(docs, Seq(col("doc_id")), nFiles = 4) { in =>
       val schema = spark.read.parquet(in).schema
       def run(stopAfterBatches: Option[Int]): Unit = {
         val q = spark.readStream.schema(schema)
@@ -112,5 +133,35 @@ class StagingSuite extends graft.SparkSpec {
       assert(got == (0L until 40L).map(i => (i, s"V$i")),
         s"restart lost or duplicated rows: ${got.size} rows")
     }
+  }
+
+  test("streaming twins leave no temp view and no active stream in the session") {
+    // the memory-sink twins that once returned a lazy read of their sink
+    // (each kept its rows in driver memory for the session lifetime)
+    val names = Seq("q_stream_window", "q_stream_channel", "q_stream_dedup",
+      "q_stream_join", "q_stream_state_fold")
+    val before = tempViews()
+    names.foreach { n =>
+      val rows = graft.SparkEntry.queries(n)(spark, sf0001).collect()
+      assert(rows.nonEmpty, s"$n returned no rows")
+    }
+    assert(tempViews() == before, s"leftover temp views: ${tempViews() -- before}")
+    assert(spark.streams.active.isEmpty,
+      s"active streams left: ${spark.streams.active.map(_.name).mkString(", ")}")
+  }
+
+  test("only Staging runs streams: no stream scaffold elsewhere under queries/") {
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    assert(java.nio.file.Files.isDirectory(dir), s"sources not found at $dir")
+    val files = dir.toFile.listFiles().filter(_.getName.endsWith(".scala"))
+    val patterns = Seq("processAllAvailable", "maxFilesPerTrigger",
+      "checkpointLocation", "format(\"memory\")")
+    val hits = for {
+      f <- files.toSeq if f.getName != "Staging.scala"
+      src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      p <- patterns if src.contains(p)
+    } yield s"${f.getName}: $p"
+    assert(files.exists(_.getName == "Staging.scala"))
+    assert(hits.isEmpty, s"stream scaffolds outside Staging: ${hits.mkString("; ")}")
   }
 }
