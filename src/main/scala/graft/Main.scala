@@ -28,7 +28,7 @@ object Main {
       val ch = g.registry.getOrCreate(uri.replaceAll("[^A-Za-z0-9]", "_"), schema)
       g.atlas.insert(uri, ch.name)
       val q = g.queries.start("log-analyser", session, Set(Capability.ChannelRead)) { _ =>
-        LogAnalyser.alerts(ch.readStream(),
+        LogAnalyser.alerts(ch.readStreamV2(),
           windowSeconds = args.getOrElse("window", "5").toInt)
           .writeStream.outputMode("complete").format("console").start()
       }

@@ -47,7 +47,7 @@ object PipelineDemo {
 
     // pipeline: channel → window → threshold alert (streaming)
     val q = qm.start("log-analyser", session, Set(Capability.ChannelRead)) { s =>
-      LogAnalyser.alerts(ch.readStream(), windowSeconds = 5)
+      LogAnalyser.alerts(ch.readStreamV2(), windowSeconds = 5)
         .writeStream.outputMode("complete").format("memory")
         .queryName("alerts").start()
     }

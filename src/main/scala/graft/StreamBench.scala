@@ -3,13 +3,15 @@ package graft
 import java.nio.file.Files
 
 import graft.channel.ChannelRegistry
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming micro-benchmark (BASELINE.md "streaming micro-bench" row):
   * events (sf dir from SPARK_GRAFT_SF_DIR) are written into a durable
-  * channel in micro-batches, then a channel-source → tumbling-window-agg →
-  * sink query consumes everything; reports end-to-end rows/s for both
-  * legs. This is the M2 slice under load rather than under test.
+  * channel in micro-batches, then a channel subscription (the
+  * `graft-channel` connector) → tumbling-window-agg → sink query consumes
+  * everything; reports end-to-end rows/s for both legs. This is the M2
+  * slice under load rather than under test.
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
@@ -37,40 +39,30 @@ object StreamBench {
     val ingestSec = (System.nanoTime() - t0) / 1e9
     require(ch.read().count() == n, "concurrent ingest lost or duplicated rows")
 
-    // query leg: strong subscription → day window → counts by type.
-    // State partitions sized to the aggregate's key count (150 windows):
-    // the shuffle-partition width freezes into the streaming checkpoint,
-    // and near-empty state stores are pure per-batch overhead.
+    // query leg: strong seq-offset subscription → day window → counts by
+    // type. State partitions sized to the aggregate's key count (150
+    // windows): the shuffle-partition width freezes into the streaming
+    // checkpoint, and near-empty state stores are pure per-batch overhead.
+    def byDay(df: DataFrame): DataFrame =
+      df.groupBy(Tables.tsDay("ts").as("day"), col("event_type"))
+        .agg(count(lit(1)).as("n"), Tables.exactSum(col("value")).as("v"))
     val t1 = System.nanoTime()
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q = try ch.readStream()
-        .groupBy(Tables.tsDay("ts").as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), Tables.exactSum(col("value")).as("v"))
+    val q = try byDay(ch.readStreamV2())
         .writeStream.outputMode("complete").format("memory")
         .queryName("streambench").start()
       finally spark.conf.set("spark.sql.shuffle.partitions", width)
     try q.processAllAvailable() finally q.stop()
     val querySec = (System.nanoTime() - t1) / 1e9
-    val outRows = spark.table("streambench").count()
+    val streamed = spark.table("streambench")
+    val outRows = streamed.count()
+    // cross-check: the stream's window rows equal the same aggregation
+    // over a batch read of the topic
+    val batch = byDay(ch.read())
+    require(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
+      "streamed window rows differ from the batch aggregation over ch.read()")
 
-    // DSv2 leg: the same subscription through the seq-offset connector
-    // (graft.sources.ChannelSource) — measures the connector's scan path
-    // against the file-stream source on identical data and aggregation.
-    val t2 = System.nanoTime()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q2 = try ch.readStreamV2()
-        .groupBy(Tables.tsDay("ts").as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), Tables.exactSum(col("value")).as("v"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("streambench_v2").start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", width)
-    try q2.processAllAvailable() finally q2.stop()
-    val v2Sec = (System.nanoTime() - t2) / 1e9
-    val v2Rows = spark.table("streambench_v2").count()
-    require(v2Rows == outRows,
-      s"DSv2 leg window rows ($v2Rows) != file-source leg ($outRows)")
-
-    println(f"""{"metric":"stream_rows_per_sec","ingest_rps":${n / ingestSec}%.0f,"query_rps":${n / querySec}%.0f,"query_v2_rps":${n / v2Sec}%.0f,"rows":$n,"ingest_sec":$ingestSec%.2f,"query_sec":$querySec%.2f,"query_v2_sec":$v2Sec%.2f,"window_rows":$outRows,"sf":"$sfDir"}""")
+    println(f"""{"metric":"stream_rows_per_sec","ingest_rps":${n / ingestSec}%.0f,"query_rps":${n / querySec}%.0f,"rows":$n,"ingest_sec":$ingestSec%.2f,"query_sec":$querySec%.2f,"window_rows":$outRows,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -12,10 +12,14 @@ import org.apache.spark.sql.types.StructType
 /** A named, durable, many-writer many-reader topic — the Spark-native form
   * of the reference's Channel (ring-buffer MPMC byte channel,
   * subsystem/messaging/src/lib.rs:69-102). Physical backing is an
-  * append-only directory of parquet micro-batch files; readers are batch
-  * scans or file-stream sources, so Structured Streaming's checkpointing
-  * gives strong-reader (lossless) semantics for free — strictly stronger
-  * than the reference's at-least-once (SURVEY §2.9).
+  * append-only directory of parquet micro-batch files, one sequence
+  * number per batch. Every reader is the `graft-channel` connector
+  * ([[graft.sources.ChannelSource]]) with the seq as its cursor — the
+  * reference's one reader type (lib.rs:80-83, reader.rs:319-396):
+  * [[read]] (live batch scan), [[readSnapshot]] (pinned seq range) and
+  * [[readStreamV2]] (strong or weak subscription; checkpointed seq
+  * offsets make it lossless, strictly stronger than the reference's
+  * at-least-once, SURVEY §2.9).
   *
   * Reference-semantic features carried over:
   *  - `_writer_id` stamped on every record (IoFrame.writer_id,
@@ -188,48 +192,19 @@ final class Channel private[channel] (
     }
   }
 
-  /** Batch read of everything currently in the topic, in offset order for
-    * single-partition channels. Weak-reader semantics fall out naturally:
-    * already-evicted batches simply aren't there (skip-ahead parity,
+  /** Batch read of everything in the topic through the connector, in
+    * total `(_seq, _writer_id, _offset)` order for single-partition
+    * channels. Building the DataFrame runs no job and lists nothing: the
+    * topic is listed each time the plan executes, so a DataFrame (or a
+    * [[ChannelRegistry.registerViews]] view) built once sees later
+    * writes. Weak-reader semantics fall out naturally: already-evicted
+    * batches simply aren't there (skip-ahead parity,
     * messaging/src/reader.rs:342-396). */
   def read(): DataFrame = {
     if (isTerminated) throw ChannelClosed(name, "terminated")
-    val batches = listBatches(dir)
-    if (batches.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        withWriterId(schema))
-    } else {
-      val df = spark.read.schema(withWriterId(schema)).parquet(batches.map(_.toString): _*)
-      // total offset order for ordered channels (reservation-order parity;
-      // writer id breaks ties between concurrent same-seq reservations)
-      if (partitions == 1) df.orderBy(col(SeqCol), col(WriterIdCol), col(OffsetCol)) else df
-    }
-  }
-
-  /** Strong (lossless) subscription: a file-stream source over the topic
-    * directory. Each StreamingQuery gets the full data (broadcast pub/sub,
-    * J5); checkpointed progress makes it exactly-once.
-    *
-    * `weak = true` is the weak-reader class (reference
-    * messaging/src/reader.rs:342-396): if Drop-mode eviction prunes
-    * batches out from under the reader, it skips ahead instead of failing
-    * (`ignoreMissingFiles`) — the Kafka `failOnDataLoss=false` analogue;
-    * the data loss itself is accounted by [[droppedBytes]]. */
-  def readStream(weak: Boolean = false): DataFrame = {
-    if (isTerminated) throw ChannelClosed(name, "terminated")
-    spark.readStream.schema(withWriterId(schema))
-      .option("maxFilesPerTrigger", "64") // bounded ingest per micro-batch
-      .option("ignoreMissingFiles", weak.toString)
-      .parquet(s"$dir/batch_*")
-  }
-
-  /** DSv2 batch read ([[graft.sources.ChannelSource]]): same data as
-    * [[read]], planned through the connector (bin-packed input partitions,
-    * native parquet pushdown/pruning), unordered — callers order
-    * explicitly when they need the channel's total order. */
-  def readV2(): DataFrame = {
-    if (isTerminated) throw ChannelClosed(name, "terminated")
-    spark.read.format("graft-channel").load(dir.toString)
+    val df = spark.read.format("graft-channel").load(dir.toString)
+    // writer id breaks ties between concurrent same-seq reservations
+    if (partitions == 1) df.orderBy(col(SeqCol), col(WriterIdCol), col(OffsetCol)) else df
   }
 
   /** Current exclusive end cursor — pass as `endSeq` to [[readSnapshot]]
@@ -257,12 +232,15 @@ final class Channel private[channel] (
       .load(dir.toString)
   }
 
-  /** DSv2 streaming subscription with seq-based offsets
+  /** The topic's subscription, with seq-based offsets
     * ([[graft.sources.ChannelSource]] — latest-start weak readers,
-    * maxBatchesPerTrigger admission control, data-loss detection).
-    * Strong for concurrent multi-writer topics too: writers reserve their
-    * seq atomically before writing and the stream's visible end waits on
-    * pending reservations.
+    * maxBatchesPerTrigger admission control (unset: a trigger takes all
+    * committed batches), data-loss detection). Every StreamingQuery gets
+    * the full data (broadcast pub/sub, J5). Strong for concurrent
+    * multi-writer topics too: writers reserve their seq atomically before
+    * writing and the stream's visible end waits on pending reservations.
+    * `weak = true` skips evicted seqs instead of failing (reader.rs:
+    * 342-396); the loss is accounted by [[droppedBytes]].
     *
     * Weak readers park at an in-flight seq rather than skipping it (a
     * crashed writer must not cause silent loss), and SELF-HEAL: if the
@@ -310,20 +288,21 @@ final class Channel private[channel] (
     * `_writer_id`) are already data in the stored files, so offset order
     * and attribution survive compaction.
     *
-    * The compacted output is named `compact_*`, OUTSIDE the `batch_*` glob
-    * that [[readStream]] subscriptions watch: a checkpointed subscriber has
-    * already ingested the original batches, so re-listing their contents
-    * under a new file would double-deliver the whole topic. Consequence:
-    * streaming subscriptions (existing and new) see only post-compaction
-    * appends; batch [[read]] always sees everything. Not safe concurrently
+    * The compacted output is named `compact_N`, and subscriptions plan
+    * `batch_*` dirs only: a checkpointed subscriber has already ingested
+    * the original batches, so delivering their contents again under a
+    * new dir would double-deliver the whole topic. Seq N itself is a
+    * benign hole to strong subscriptions. Consequence: streaming
+    * subscriptions (existing and new) see only post-compaction appends;
+    * batch [[read]] always sees everything, and a [[readSnapshot]] pin
+    * reaching into compacted history fails loudly. Not safe concurrently
     * with writers (call from a maintenance window / drained topic). */
   def compact(): Unit = {
     val batches = listBatches(dir)
     if (batches.size <= 1) return
-    val df = spark.read.schema(withWriterId(schema)).parquet(batches.map(_.toString): _*)
     val seq = nextSeq(dir)
     val tmp = dir.resolve(s"_compacting")
-    df.coalesce(math.max(1, partitions)).write.mode("overwrite").parquet(tmp.toString)
+    read().coalesce(math.max(1, partitions)).write.mode("overwrite").parquet(tmp.toString)
     // Carry every absorbed (writerId, epochId) marker into the compact dir
     // (_EPOCHS, one `w<id>_e<epoch>` per line — an underscore-prefixed file,
     // invisible to parquet scans) so writeEpoch idempotence survives the
@@ -1050,14 +1029,11 @@ final class ChannelRegistry(spark: SparkSession, root: Path) {
   }
 
   /** SQL surface: register every topic (or a glob subset) as a temp view
-    * `<prefix><name>`, so `spark.sql("SELECT … FROM graft_logs")` reads
-    * the topic with FULL Catalyst treatment — the view resolves to the
-    * native parquet scan, so predicate pushdown, column pruning, and
-    * partition planning all apply. The DSv2 connector
-    * ([[graft.sources.ChannelSource]], `format("graft-channel")`) is the
-    * programmatic twin: same parquet machinery underneath, plus seq-offset
-    * streaming. Views are snapshots of the topic's batch view;
-    * re-register to pick up newly created topics. */
+    * `<prefix><name>` over [[Channel.read]], so `spark.sql("SELECT … FROM
+    * graft_logs")` reads the topic through the connector with predicate
+    * pushdown and column pruning intact. Views are live: each query over
+    * one lists the topic again and sees every batch committed by then.
+    * Re-register to pick up newly created topics. */
   def registerViews(prefix: String = "graft_", glob: String = "*"): Seq[String] =
     list(glob).map { name =>
       val view = prefix + name

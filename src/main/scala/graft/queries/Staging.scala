@@ -50,7 +50,10 @@ private[queries] object Staging {
                flushes: Seq[DataFrame] = Nil)(body: String => T): T =
     withTempDir { tmp =>
       val in = s"$tmp/in"
-      df.repartitionByRange(nFiles, rangeCols: _*).write.parquet(in)
+      // one file needs no range exchange: the whole relation is batch 0
+      val ranged =
+        if (nFiles == 1) df.coalesce(1) else df.repartitionByRange(nFiles, rangeCols: _*)
+      ranged.write.parquet(in)
       flushes.zipWithIndex.foreach { case (fl, i) =>
         val dir = s"$tmp/flush$i"
         fl.coalesce(1).write.parquet(dir)

@@ -619,16 +619,20 @@ object Streamish {
         .withColumn("t_to", lead(col("t_from"), 1, Long.MaxValue).over(w))
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("t"))
-      Staging.replay(purchases, Seq(col("t"), col("event_id")), 4) { src =>
-        Staging.view(src
-          .join(broadcast(dim),
-            col("user_id") === col("d_user") &&
-              col("t_from") <= col("t") && col("t") < col("t_to"),
-            "left_outer")
-          .select(col("event_id"), col("user_id"), col("t"),
-            coalesce(col("dim_event_id"), lit(-1L)).as("dim_event_id"),
-            round(coalesce(col("dim_value"), lit(-1.0)), 6).as("dim_value")))(
-          _.orderBy(col("event_id")))
+      // the dimension is built once for all 4 triggers: held for the
+      // stream's run, released before the query returns
+      Artifacts.scoped(dim) { held =>
+        Staging.replay(purchases, Seq(col("t"), col("event_id")), 4) { src =>
+          Staging.view(src
+            .join(broadcast(held),
+              col("user_id") === col("d_user") &&
+                col("t_from") <= col("t") && col("t") < col("t_to"),
+              "left_outer")
+            .select(col("event_id"), col("user_id"), col("t"),
+              coalesce(col("dim_event_id"), lit(-1L)).as("dim_event_id"),
+              round(coalesce(col("dim_value"), lit(-1.0)), 6).as("dim_value")))(
+            _.orderBy(col("event_id")))
+        }
       }
     },
 

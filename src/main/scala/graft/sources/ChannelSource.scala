@@ -22,31 +22,34 @@ import graft.channel.Channel
 
 /** DataSource V2 integration for graft channels: `spark.read.format
   * ("graft-channel").load(topicDir)` and `spark.readStream.format
-  * ("graft-channel")...`.
+  * ("graft-channel")...` — the ONE read path for a topic. `Channel.read`,
+  * `Channel.readSnapshot`, `Channel.readStreamV2` and the
+  * `ChannelRegistry.registerViews` SQL views are all this connector.
   *
   * The batch/stream READERS delegate to Spark's own parquet machinery
   * ([[GraftSqlBridge.parquetReadFunc]]), so predicate pushdown (row-group +
-  * page skipping) and column pruning are the native parquet ones — this is
-  * why the source exists alongside [[graft.channel.ChannelRegistry
-  * .registerViews]] (SQL convenience) rather than replacing it: both paths
-  * bottom out in the same scan machinery.
+  * page skipping) and column pruning are the native parquet ones. A batch
+  * scan lists the topic when it plans input partitions, i.e. at each
+  * execution — never while a DataFrame is being built.
   *
-  * What DSv2 adds over the file-stream `Channel.readStream`:
+  * The connector's rules:
   *   - **seq-based offsets**: a micro-batch is a contiguous range of
   *     channel sequence numbers `[start, end)` — compact, human-readable
-  *     checkpoint state (vs the file source's per-file log), mirroring the
-  *     reference's 64-bit channel cursors
-  *     (/root/reference/subsystem/messaging/src/lib.rs:80-83);
+  *     checkpoint state, mirroring the reference's 64-bit channel cursors
+  *     (reference subsystem/messaging/src/lib.rs:80-83);
   *   - **latest-start weak readers**: `startingOffsets=latest` begins at
   *     the committed tail, the reference's weak-subscribe semantics
-  *     (reader.rs:319-349) that the file source cannot express (it always
-  *     replays the directory);
+  *     (reader.rs:319-349); the default `earliest` replays the topic;
   *   - **admission control**: `maxBatchesPerTrigger` bounds each
-  *     micro-batch in channel batches (Park-style flow control);
+  *     micro-batch in channel batches (Park-style flow control); unset, a
+  *     trigger takes everything committed;
   *   - **data-loss accounting**: `weak=true` skips seq ranges evicted by
   *     Drop-mode channels (ReaderBehind parity, reader.rs:342-396);
   *     `weak=false` (default, strong reader) fails on a gap instead of
-  *     silently losing data.
+  *     silently losing data;
+  *   - **progress identity**: the stream describes itself as
+  *     `GraftChannel[<topic dir>]`, which is how `Channel.ackFromProgress`
+  *     finds its topic in `StreamingQueryProgress`.
   *
   * Mid-write safety is mode-specific. STRONG readers plan only below the
   * strict end, which parks at the lowest pending `_res_` reservation
@@ -64,8 +67,8 @@ import graft.channel.Channel
   * sweep tombstones it into a benign hole). The plan site additionally
   * filters any dir lacking `_SUCCESS` as defense-in-depth. Streaming
   * planning reads `batch_*` dirs only — `compact_*` rewrites are
-  * invisible to subscriptions (same contract as [[Channel.readStream]]:
-  * a checkpointed subscriber already ingested the originals).
+  * invisible to subscriptions (a checkpointed subscriber already
+  * ingested the originals), while batch scans read both.
   *
   * Scale: batch scans bin-pack parquet files into input partitions by
   * `spark.sql.files.maxPartitionBytes`, so a long-lived topic with

@@ -67,12 +67,14 @@ final class Publisher[T: Encoder](val channel: Channel) {
 }
 
 /** Strong typed reader (S2): batch view or streaming subscription; every
-  * subscriber sees the whole topic (broadcast). */
+  * subscriber sees the whole topic (broadcast). The stream is the topic's
+  * seq-cursor subscription with the connector's default pacing: each
+  * trigger takes every batch committed so far. */
 final class Subscriber[T: Encoder](val channel: Channel) {
   private val enc = implicitly[Encoder[T]]
   private def payloadCols = enc.schema.fieldNames.map(col).toSeq
   def snapshot(): Dataset[T] = channel.read().select(payloadCols: _*).as[T](enc)
-  def stream(): Dataset[T] = channel.readStream().select(payloadCols: _*).as[T](enc)
+  def stream(): Dataset[T] = channel.readStreamV2().select(payloadCols: _*).as[T](enc)
 }
 
 /** Work-queue (J4): each record belongs to exactly one worker, and the
@@ -151,7 +153,9 @@ final class Client[Req, Rep](sb: Switchboard, service: String)(
   * channel through a handler into the response channel —
   * `try_for_each(req → responder.send)` parity (reference
   * examples/echo/src/lib.rs:25-62). Safe to start before any client: both
-  * channels attach-or-create. */
+  * channels attach-or-create. The request subscription takes every
+  * committed request batch per trigger, and its progress names the
+  * request topic, so `QueryManager.autoAck` can drive its retention. */
 final class Server[Req, Rep](sb: Switchboard, service: String)(
     implicit reqEnc: Encoder[Correlated[Req]],
     repEnc: Encoder[Correlated[Rep]]) {
@@ -160,7 +164,7 @@ final class Server[Req, Rep](sb: Switchboard, service: String)(
   def serve(checkpoint: Path)(handler: Req => Rep): StreamingQuery = {
     val reqCh = sb.registry.getOrCreate(s"$service-req", reqEnc.schema)
     val repCh = sb.registry.getOrCreate(s"$service-rep", repEnc.schema)
-    val requests = reqCh.readStream()
+    val requests = reqCh.readStreamV2()
       .select(col("request_id"), col("body")).as[Correlated[Req]](reqEnc)
     val responses: Dataset[Correlated[Rep]] =
       requests.map(c => Correlated(c.request_id, handler(c.body)))(repEnc)

@@ -129,7 +129,7 @@ class ChannelSuite extends SparkSpec {
     val reg = new ChannelRegistry(spark, tmpDir("chan"))
     val ch = reg.create("t7", schema)
     ch.write(Seq((1, "a"), (2, "b")).toDF("id", "msg"), 1)
-    val q = ch.readStream().groupBy().agg(count(lit(1)).as("n"))
+    val q = ch.readStreamV2().groupBy().agg(count(lit(1)).as("n"))
       .writeStream.outputMode("complete").format("memory")
       .queryName("chan_stream").start()
     try q.processAllAvailable() finally q.stop()
@@ -143,7 +143,7 @@ class ChannelSuite extends SparkSpec {
     src.write(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "msg"), 1)
     val ck = tmpDir("ck")
     val q = dst.sink(
-      src.readStream().select(col("id"), col("msg")),
+      src.readStreamV2().select(col("id"), col("msg")),
       writerId = 9, checkpoint = ck, availableNow = true)
     q.awaitTermination(30000)
     val rows = dst.read().select("id", Channel.WriterIdCol).as[(Int, Int)]
@@ -159,7 +159,7 @@ class ChannelSuite extends SparkSpec {
     val ck = tmpDir("ck_r")
     src.write(Seq((1, "a"), (2, "b")).toDF("id", "msg"), 1)
     def runLeg(): Unit = {
-      val q = dst.sink(src.readStream().select(col("id"), col("msg")),
+      val q = dst.sink(src.readStreamV2().select(col("id"), col("msg")),
         writerId = 9, checkpoint = ck, availableNow = true)
       q.awaitTermination(30000)
     }
@@ -178,7 +178,7 @@ class ChannelSuite extends SparkSpec {
     val ch = reg.create("t8", schema, capacityBytes = 4 * 1024, dropMode = true)
     (0 until 6).foreach(i => ch.write(Seq((i, "y" * 100)).toDF("id", "msg"), 0))
     assert(ch.droppedBytes > 0)
-    val q = ch.readStream(weak = true).groupBy().agg(count(lit(1)).as("n"))
+    val q = ch.readStreamV2(weak = true).groupBy().agg(count(lit(1)).as("n"))
       .writeStream.outputMode("complete").format("memory")
       .queryName("weak_stream").start()
     try q.processAllAvailable() finally q.stop()
@@ -228,8 +228,9 @@ class ChannelSuite extends SparkSpec {
       .as[(Int, Int)].collect().toSeq
     ch.compact()
     assert(ch.metrics().collect().head.getAs[Long]("n_batches") == 1)
-    // Compacted output lives OUTSIDE the `batch_*` glob readStream watches,
-    // so checkpointed subscribers don't re-ingest the whole topic.
+    // Compacted output is a `compact_*` dir, which subscriptions never
+    // plan (they read `batch_*` dirs only), so checkpointed subscribers
+    // don't re-ingest the whole topic; batch reads see it.
     val names = java.nio.file.Files.list(ch.dir).iterator().asScala
       .map(_.getFileName.toString).toSeq
     assert(names.exists(_.startsWith("compact_")))
@@ -277,5 +278,66 @@ class ChannelSuite extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [") && plan.contains("GreaterThanOrEqual(id,2)"),
       s"filter not pushed to the scan:\n$plan")
+  }
+
+  test("building read() on a many-batch topic runs no Spark job") {
+    // 40 batch dirs is past the 32-path threshold at which a parquet
+    // path scan lists its inputs with a Spark job while the DataFrame is
+    // built; the connector lists only when the plan executes
+    val reg = new ChannelRegistry(spark, tmpDir("chan_nojob"))
+    val ch = reg.create("nojob", schema)
+    (0 until 40).foreach(i => ch.write(Seq((i, s"m$i")).toDF("id", "msg"), 0))
+    val buildJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    def group(p: java.util.Properties) =
+      Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id")))
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        group(e.properties) match {
+          case Some("read_build") => buildJobs.incrementAndGet()
+          case Some("read_flush") => flushed.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("read_build", "build read()")
+      val df = try ch.read() finally sc.clearJobGroup()
+      // the listener bus delivers in order: once the flush job's start
+      // arrives, every job started while building has been counted
+      sc.setJobGroup("read_flush", "flush the listener bus")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(buildJobs.get == 0, s"building read() ran ${buildJobs.get} job(s)")
+      assert(df.count() == 40)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a registerViews view is live: it sees a batch written after registration") {
+    val reg = new ChannelRegistry(spark, tmpDir("chan_live"))
+    val ch = reg.create("livet", schema)
+    ch.write(Seq((1, "a")).toDF("id", "msg"), 0)
+    val views = reg.registerViews(prefix = "live_")
+    try {
+      assert(spark.sql("SELECT id FROM live_livet").as[Int].collect().toSeq == Seq(1))
+      ch.write(Seq((2, "b")).toDF("id", "msg"), 0)
+      assert(spark.sql("SELECT id FROM live_livet ORDER BY id").as[Int].collect().toSeq ==
+        Seq(1, 2), "the view did not see the batch written after registration")
+    } finally views.foreach(spark.catalog.dropTempView)
+  }
+
+  test("channel/ reads a topic only through the connector: no read-side .parquet(") {
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/channel")
+    assert(java.nio.file.Files.isDirectory(dir), s"sources not found at $dir")
+    val files = dir.toFile.listFiles().filter(_.getName.endsWith(".scala")).toSeq
+    assert(files.exists(_.getName == "Channel.scala"))
+    // every remaining .parquet( call is a write of a batch or compact dir
+    val reads = for {
+      f <- files
+      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if line.contains(".parquet(") && !line.contains(".write.")
+    } yield s"${f.getName}:${n + 1}: ${line.trim}"
+    assert(reads.isEmpty, s"read-side parquet path scans: ${reads.mkString("; ")}")
   }
 }

@@ -40,12 +40,19 @@ class Dsv2ChannelSuite extends SparkSpec {
     ch.write(Seq((1, "a"), (2, "b")).toDF("id", "msg"), writerId = 1)
     ch.write(Seq((3, "c"), (4, "d")).toDF("id", "msg"), writerId = 2)
 
-    val v2 = ch.readV2()
+    val v2 = spark.read.format("graft-channel").load(ch.dir.toString)
     assert(v2.columns.toSet == Set("id", "msg", Channel.WriterIdCol,
       Channel.SeqCol, Channel.OffsetCol))
     assert(v2.select("id").as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
+    // parity: Channel.read (the connector in total order) returns exactly
+    // a plain parquet scan of the topic's batch dirs in that order
+    val reference = spark.read.parquet(Channel.listBatches(ch.dir).map(_.toString): _*)
+      .orderBy(Channel.SeqCol, Channel.WriterIdCol, Channel.OffsetCol)
+    val read = ch.read()
+    assert(read.collect().toSeq ==
+      reference.select(read.columns.map(col): _*).collect().toSeq)
 
-    val q = ch.readV2().filter($"id" >= 3).select("msg")
+    val q = v2.filter($"id" >= 3).select("msg")
     assert(q.as[String].collect().sorted.toSeq == Seq("c", "d"))
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("GraftChannelScan") &&
@@ -503,7 +510,7 @@ class Dsv2ChannelSuite extends SparkSpec {
       ch.readSnapshot(endSeq = pin).collect()
     }
     // unpinned reads still see everything
-    assert(ch.readV2().select("id").as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
+    assert(ch.read().select("id").as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
   }
 
   test("offset planning is O(1): an idle trigger on a 10k-batch topic does not list") {

@@ -33,10 +33,10 @@ class OrchestratorSuite extends SparkSpec {
       .toDF("key", "seq", "payload"), 2)
 
     val tagged =
-      cfg.readStream().select(col("key"), col("seq"), lit(true).as("isConfig"),
+      cfg.readStreamV2().select(col("key"), col("seq"), lit(true).as("isConfig"),
           col("multiplier"), lit("").as("payload"))
         .unionByName(
-          work.readStream().select(col("key"), col("seq"), lit(false).as("isConfig"),
+          work.readStreamV2().select(col("key"), col("seq"), lit(false).as("isConfig"),
             lit(0).as("multiplier"), col("payload")))
         .as[ConfigFold.Tagged]
 

@@ -93,4 +93,27 @@ class SwitchboardSuite extends SparkSpec {
     val seen = board.subscriber[Tick]("shared").snapshot().collect().map(_.n).sorted
     assert(seen.toSeq == Seq(1, 2))
   }
+
+  test("autoAck on a server subscription advances the request topic's reader head") {
+    import spark.implicits._
+    val board = sb()
+    val client = board.client[EchoReq, EchoRep]("acked")
+    client.request(EchoReq("one"))
+    client.request(EchoReq("two"))
+    val q = board.server[EchoReq, EchoRep]("acked")
+      .serve(tmpDir("ck"))(r => EchoRep(r.msg, r.msg.length))
+    val qm = new graft.runtime.QueryManager(spark)
+    var listener: org.apache.spark.sql.streaming.StreamingQueryListener = null
+    try {
+      q.processAllAvailable()
+      val requests = board.registry.get("acked-req")
+      listener = qm.autoAck(q, requests, "server")
+      // two request batches (seqs 0 and 1) processed: the head is past both
+      assert(requests.readerHeads("server") == 2L,
+        s"autoAck did not advance the server's head: ${requests.readerHeads}")
+    } finally {
+      q.stop()
+      if (listener != null) qm.detachProgressLogger(listener)
+    }
+  }
 }
