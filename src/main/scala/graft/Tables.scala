@@ -120,8 +120,12 @@ object Tables {
     * the whole map pass runs on one core; a production multi-file table
     * (a 100 TB input has thousands of splits) already parallelizes, and
     * there an unconditional corpus-wide exchange before a map-only pass
-    * is a real, avoidable cost. The partition-count probe is plan-time
-    * only (`.rdd` builds the physical plan; no job runs). When `keys` are
+    * is a real, avoidable cost. The partition-count probe is NOT always
+    * plan-time only: when `df` contains a shuffle, adaptive execution
+    * runs that shuffle stage to learn the final partition count
+    * (`df.rdd.getNumPartitions` materializes it), and the action later
+    * runs the stage again in its own execution; over a plan without a
+    * shuffle no job runs. When `keys` are
     * given the spread is hash-partitioned on them so a downstream
     * groupBy/join on the same keys reuses the exchange. */
   def spread(df: DataFrame, keys: Column*): DataFrame = {

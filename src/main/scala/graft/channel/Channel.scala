@@ -51,6 +51,13 @@ final class Channel private[channel] (
 
   @volatile private var droppedBytesCount: Long = 0L
 
+  /** Size of every committed batch dir this handle has seen, by dir
+    * name. A dir with `_SUCCESS` is immutable, so it is sized once; the
+    * cache is filled lazily, by the first write, not when the handle
+    * opens. */
+  private val committedSizes =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
   def isDrained: Boolean = Files.exists(dir.resolve(DrainMarker))
   def isTerminated: Boolean = Files.exists(dir.resolve(TerminateMarker))
 
@@ -62,6 +69,18 @@ final class Channel private[channel] (
     * [[ChannelBackpressure]] when the write would exceed capacity (the
     * caller is "parked" — in streaming use, the trigger retries). Drop
     * mode: evicts oldest batches to make room and records dropped bytes.
+    *
+    * Two write paths, one on-disk result. Rows already on the driver
+    * (`df`'s plan is a `LocalRelation`: ingress flushes, publishes built
+    * from a local `Seq`) are written by the driver with Spark's parquet
+    * writer and run no Spark job ([[LocalAppend]]); any other DataFrame
+    * is written by a Spark job through the Hadoop committer.
+    *
+    * Capacity accounting does not walk the topic: the handle sizes each
+    * committed batch dir once (committed dirs are immutable), so a write
+    * lists the topic's names three times — the pre-claim snapshot, the
+    * post-claim re-check and the post-commit listing — and sizes only its
+    * own batch (and dirs other handles committed since its last write).
     *
     * Sequence allocation is slice-reservation parity
     * (messaging/src/lib.rs:491-519) adapted to shared directories: the
@@ -101,15 +120,17 @@ final class Channel private[channel] (
     if (isTerminated) throw ChannelClosed(name, "terminated")
     if (isDrained) throw ChannelClosed(name, "drained")
     SchemaRegistry.check(name, schemaHash, df.schema)
+    // One listing serves the park check and the reservation floor.
+    val entries = listDir(dir)
     // Park mode parks BEFORE accepting the frame (reference
     // messaging/src/writer.rs:166-199): a full channel must reject the
     // write without making it visible, or a retrying writer duplicates it.
     // Synchronized with enforceCapacity so two same-handle writers can't
-    // both pass a nearly-full check. The size is re-walked from the
-    // directory (not cached) deliberately: other handles/processes write
-    // the same topic, so the directory is the only source of truth.
+    // both pass a nearly-full check. The names come from the directory
+    // (other handles/processes write the same topic, so it is the only
+    // source of truth); only the sizes of committed dirs are remembered.
     if (!dropMode) synchronized {
-      val current = listBatches(dir).map(dirSize).sum
+      val current = topicBytes(batchesFrom(entries))
       if (current >= capacityBytes) throw ChannelBackpressure(name, current, capacityBytes)
     }
     // ATOMIC seq reservation (slice-reservation parity upgraded from
@@ -122,14 +143,18 @@ final class Channel private[channel] (
     // strong for multi-writer topics. A writer that crashes mid-write
     // leaves its marker and parks the seq cursor for DSv2 streams until
     // compact() (or sweepStale) clears it — blocked beats silently lossy.
-    val batch = reserveSeq(dir)
+    val batch = reserveSeq(dir, entries)
     val target = dir.resolve(f"batch_$batch%012d" + s"_w${writerId}_$unique")
     try {
-      df.withColumn(WriterIdCol, lit(writerId))
-        .withColumn(SeqCol, lit(batch))
-        .withColumn(OffsetCol, monotonically_increasing_id())
-        .coalesce(math.max(1, partitions))
-        .write.mode("errorifexists").parquet(target.toString)
+      LocalAppend.rowsOf(df) match {
+        case Some(rows) => LocalAppend.write(spark, target, df.schema, rows, writerId, batch)
+        case None =>
+          df.withColumn(WriterIdCol, lit(writerId))
+            .withColumn(SeqCol, lit(batch))
+            .withColumn(OffsetCol, monotonically_increasing_id())
+            .coalesce(math.max(1, partitions))
+            .write.mode("errorifexists").parquet(target.toString)
+      }
       Files.deleteIfExists(dir.resolve(f"$ResPrefix$batch%012d"))
     } catch {
       // A failed write leaves no committed dir: tombstone the seq
@@ -138,20 +163,47 @@ final class Channel private[channel] (
       // reservation would park every stream on a routine failure.
       case t: Throwable => markAborted(dir, batch); throw t
     }
+    // One post-commit listing serves capacity enforcement and the head.
     // Publish the new committed head even when capacity enforcement
     // un-publishes this very batch (the abort tombstone still unblocks
-    // the cursor) — O(1) offset planning for every subscriber.
-    try enforceCapacity(justWritten = Some(target))
-    finally advanceHead(dir)
+    // the cursor) — O(1) offset planning for every subscriber. Eviction
+    // removes only the oldest batches, so it cannot move the head this
+    // listing yields.
+    val committed = listDir(dir)
+    try enforceCapacity(batchesFrom(committed), justWritten = target)
+    finally advanceHead(dir, committed)
   }
 
-  private def enforceCapacity(justWritten: Option[Path] = None): Unit = synchronized {
-    var batches = listBatches(dir)
-    var total = batches.map(dirSize).sum
+  /** Bytes held by `batches`, sizing only the dirs not yet known to be
+    * committed; names gone from the listing leave the cache. */
+  private def topicBytes(batches: Seq[Path]): Long = {
+    val live = batches.iterator.map(_.getFileName.toString).toSet
+    committedSizes.keySet.removeIf(n => !live(n))
+    batches.iterator.map(batchBytes).sum
+  }
+
+  /** One batch dir's size: remembered once the dir is committed (checked
+    * BEFORE sizing, so a dir that commits mid-walk is not remembered at
+    * its partial size). */
+  private def batchBytes(p: Path): Long = {
+    val n = p.getFileName.toString
+    val known = committedSizes.get(n)
+    if (known != null) known.longValue
+    else {
+      val committed = Files.exists(p.resolve("_SUCCESS"))
+      val size = dirSize(p)
+      if (committed) committedSizes.put(n, size)
+      size
+    }
+  }
+
+  private def enforceCapacity(listed: Seq[Path], justWritten: Path): Unit = synchronized {
+    var batches = listed
+    var total = topicBytes(batches)
     if (total <= capacityBytes) return
     if (!dropMode) {
-      // The batch size wasn't knowable before the distributed write ran;
-      // un-publish it so the rejected frame is never visible to readers
+      // The batch size wasn't knowable before the write ran; un-publish
+      // it so the rejected frame is never visible to readers
       // (tombstoned: the un-published seq must read as aborted, not lost).
       // Tombstone BEFORE deleting: our _res_ marker is already released,
       // so between a delete and a late tombstone the seq would have no
@@ -159,9 +211,10 @@ final class Channel private[channel] (
       // re-check relies on never existing. A rival writer could claim the
       // seq, commit real data, and then have THIS writer's tombstone land
       // on top of it, making strict readers skip a committed batch.
-      justWritten.foreach { p =>
-        markAborted(dir, batchSeq(p)); total -= dirSize(p); deleteRecursively(p)
-      }
+      markAborted(dir, batchSeq(justWritten))
+      total -= batchBytes(justWritten)
+      committedSizes.remove(justWritten.getFileName.toString)
+      deleteRecursively(justWritten)
       throw ChannelBackpressure(name, total, capacityBytes)
     }
     // Drop mode: evict oldest whole batches (frame-pruning parity,
@@ -173,7 +226,7 @@ final class Channel private[channel] (
     val toEvict = Seq.newBuilder[(Path, Long)]
     while (total > capacityBytes && batches.size > 1) {
       val oldest = batches.head
-      val sz = dirSize(oldest)
+      val sz = batchBytes(oldest)
       toEvict += ((oldest, sz))
       batches = batches.tail
       total -= sz
@@ -187,24 +240,26 @@ final class Channel private[channel] (
       advancePrunedFloor(dir, floor)
     }
     evicting.foreach { case (p, sz) =>
+      committedSizes.remove(p.getFileName.toString)
       deleteRecursively(p)
       droppedBytesCount += sz
     }
   }
 
-  /** Batch read of everything in the topic through the connector, in
-    * total `(_seq, _writer_id, _offset)` order for single-partition
-    * channels. Building the DataFrame runs no job and lists nothing: the
-    * topic is listed each time the plan executes, so a DataFrame (or a
-    * [[ChannelRegistry.registerViews]] view) built once sees later
-    * writes. Weak-reader semantics fall out naturally: already-evicted
-    * batches simply aren't there (skip-ahead parity,
+  /** Batch read of everything in the topic through the connector. On a
+    * single-partition channel the scan itself delivers the total
+    * `(_seq, _writer_id, _offset)` order (the connector plans batch dirs
+    * in seq order, each one file in `_offset` order), so the plan carries
+    * no logical sort, and column pruning under an aggregate scans only
+    * the columns the query uses. Building the DataFrame runs no job and lists
+    * nothing: the topic is listed each time the plan executes, so a
+    * DataFrame (or a [[ChannelRegistry.registerViews]] view) built once
+    * sees later writes. Weak-reader semantics fall out naturally:
+    * already-evicted batches simply aren't there (skip-ahead parity,
     * messaging/src/reader.rs:342-396). */
   def read(): DataFrame = {
     if (isTerminated) throw ChannelClosed(name, "terminated")
-    val df = spark.read.format("graft-channel").load(dir.toString)
-    // writer id breaks ties between concurrent same-seq reservations
-    if (partitions == 1) df.orderBy(col(SeqCol), col(WriterIdCol), col(OffsetCol)) else df
+    spark.read.format("graft-channel").load(dir.toString)
   }
 
   /** Current exclusive end cursor — pass as `endSeq` to [[readSnapshot]]
@@ -493,7 +548,7 @@ final class Channel private[channel] (
     // head (what gates the next prune), and the head count — the three
     // numbers an operator needs to see WHY history is (not) shrinking
     val heads = readerHeads
-    Seq((name, batches.size.toLong, batches.map(dirSize).sum,
+    Seq((name, batches.size.toLong, topicBytes(batches),
       droppedBytesCount, isDrained, isTerminated,
       (try Channel.prunedFloor(dir) catch { case _: IllegalStateException => -1L }),
       heads.values.minOption.getOrElse(-1L), heads.size.toLong))
@@ -613,12 +668,17 @@ object Channel {
     * offset planning; it runs on the WRITE path (see [[advanceHead]]) so
     * triggers read the published cursor in O(1) instead of re-listing a
     * possibly million-dir topic. */
-  private[graft] def committedEnds(dir: Path): (Long, Long) = {
-    val dirs = listDir(dir)
+  private[graft] def committedEnds(dir: Path): (Long, Long) =
+    committedEnds(dir, listDir(dir))
+
+  /** [[committedEnds]] over one directory listing; `_SUCCESS` is checked
+    * from the highest seq down, so a write stats O(1) dirs, not all. */
+  private[graft] def committedEnds(dir: Path, entries: Seq[Path]): (Long, Long) = {
+    val dirs = entries
       .filter(_.getFileName.toString.startsWith("batch_"))
       .groupBy(batchSeq).toSeq.sortBy(_._1)
     def committed(p: Path) = Files.exists(p.resolve("_SUCCESS"))
-    val pendingRes = resSeqs(dir)
+    val pendingRes = seqsWith(entries, ResPrefix)
     // No-committed-prefix fallback: the end is the LOWEST trace of an
     // unresolved writer — batch dir OR bare `_res_` reservation. Taking
     // only the first dir here was order-sensitive: a failed write's
@@ -630,11 +690,11 @@ object Channel {
     // because every NEW trace lands above all existing ones
     // (reserveSeq's floor spans batches, markers, tombstones, and the
     // published cursor).
-    val end = dirs.collect { case (seq, ds) if ds.forall(committed) => seq }
-      .lastOption.map(_ + 1)
+    val end = dirs.reverseIterator
+      .collectFirst { case (seq, ds) if ds.forall(committed) => seq + 1 }
       .getOrElse(
         (dirs.headOption.map(_._1).toSeq ++ pendingRes.headOption.toSeq)
-          .minOption.getOrElse(nextSeq(dir)))
+          .minOption.getOrElse(nextSeqFrom(entries)))
     val dirMap = dirs.toMap
     val strict = pendingRes
       .filterNot(s => dirMap.get(s).exists(_.forall(committed)))
@@ -655,9 +715,8 @@ object Channel {
   }
 
   /** Publish the committed head cursor (atomic tmp+rename). Called after
-    * every commit/abort/compact: the amortized cost rides the write path,
-    * which already walks the directory for capacity accounting, leaving
-    * offset planning O(1) per trigger.
+    * every commit/abort/compact: one listing per publish rides the write
+    * path, leaving offset planning O(1) per trigger.
     *
     * The cursor is ADVISORY, not the source of truth — and that is what
     * makes the unsynchronized read-compare-move here safe. Two racing
@@ -670,15 +729,19 @@ object Channel {
     * writer that crashes between commit and publish. Serializing
     * publication (file lock / retry loop) would buy nothing but
     * contention on the hot write path. */
-  private[graft] def advanceHead(dir: Path): Unit = {
-    val (strict, weakEnd) = committedEnds(dir)
+  private[graft] def advanceHead(dir: Path): Unit = advanceHead(dir, listDir(dir))
+
+  /** [[advanceHead]] over one directory listing (the cursor and the
+    * leaked-tmp sweep both derive from it). */
+  private[graft] def advanceHead(dir: Path, entries: Seq[Path]): Unit = {
+    val (strict, weakEnd) = committedEnds(dir, entries)
     val cur = readHead(dir)
     val (ns, nw) = (math.max(strict, cur.fold(0L)(_._1)),
       math.max(weakEnd, cur.fold(0L)(_._2)))
     if (cur.forall { case (s, w) => ns > s || nw > w }) {
       // sweep tmp files a crashed writer leaked (age-gated: a LIVE tmp
       // exists for milliseconds between create and move)
-      try listDir(dir)
+      try entries
         .filter(_.getFileName.toString.startsWith("_head"))
         .filter(_.getFileName.toString.endsWith(".tmp"))
         .filter { p =>
@@ -702,10 +765,12 @@ object Channel {
   /** Sequence numbers currently reserved by in-flight (or crashed)
     * writers. Underscore prefix keeps markers invisible to parquet scans
     * and listBatches. */
-  private[graft] def resSeqs(dir: Path): Seq[Long] =
-    listDir(dir).filter(_.getFileName.toString.startsWith(ResPrefix))
-      .map(p => p.getFileName.toString.drop(ResPrefix.length).toLong)
-      .sorted
+  private[graft] def resSeqs(dir: Path): Seq[Long] = seqsWith(listDir(dir), ResPrefix)
+
+  /** Sorted seqs of the `prefix<seq>` markers in one listing. */
+  private def seqsWith(entries: Seq[Path], prefix: String): Seq[Long] =
+    entries.map(_.getFileName.toString).filter(_.startsWith(prefix))
+      .map(_.drop(prefix.length).toLong).sorted
 
   /** Claim the next free sequence number with an atomic createDirectory
     * on its `_res_` marker — two writers (any JVMs) can never share a seq.
@@ -723,16 +788,20 @@ object Channel {
     * marker-delete), `compact_` dir (writer-free window) — visible
     * BEFORE the marker is released, so holding the marker and seeing no
     * trace proves the seq is genuinely fresh. One extra listing per
-    * reservation, on a write path that already walks the directory for
-    * capacity accounting. */
-  private[graft] def reserveSeq(dir: Path): Long = {
+    * reservation. */
+  private[graft] def reserveSeq(dir: Path): Long = reserveSeq(dir, listDir(dir))
+
+  /** [[reserveSeq]] with its floor taken from one listing of `dir` —
+    * the writer's pre-claim snapshot. A stale snapshot only starts the
+    * search low; the post-claim re-check rejects a used seq either way. */
+  private[graft] def reserveSeq(dir: Path, entries: Seq[Path]): Long = {
     // the published head cursor joins the floor computation: batch dirs
     // below it may have been pruned/evicted WITHOUT tombstones, and a
     // seq below the committed end must never be re-issued (a subscriber
     // whose offset already passed it would silently skip the new data)
-    var s = Seq(nextSeq(dir),
-      resSeqs(dir).lastOption.map(_ + 1).getOrElse(0L),
-      abortSeqs(dir).lastOption.map(_ + 1).getOrElse(0L),
+    var s = Seq(nextSeqFrom(entries),
+      seqsWith(entries, ResPrefix).lastOption.map(_ + 1).getOrElse(0L),
+      seqsWith(entries, AbortPrefix).lastOption.map(_ + 1).getOrElse(0L),
       readHead(dir).map(_._2).getOrElse(0L)).max
     while (true) {
       if (!tryReserve(dir, s)) s += 1
@@ -762,10 +831,7 @@ object Channel {
     * never held data (strict readers skip them; [[reserveSeq]] never
     * reuses them — a reused aborted seq would sit BEHIND stream offsets
     * that already passed it). */
-  private[graft] def abortSeqs(dir: Path): Seq[Long] =
-    listDir(dir).filter(_.getFileName.toString.startsWith(AbortPrefix))
-      .map(p => p.getFileName.toString.drop(AbortPrefix.length).toLong)
-      .sorted
+  private[graft] def abortSeqs(dir: Path): Seq[Long] = seqsWith(listDir(dir), AbortPrefix)
 
   /** Static body of [[Channel.sweepStale]] — also invoked by the weak
     * DSv2 planner's age-gated self-sweep ([[graft.sources]]), which has
@@ -899,6 +965,10 @@ object Channel {
     * regression test's probe: an idle stream trigger must not list). */
   private[graft] val listDirCalls = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Batch-dir size walks (the capacity-accounting test's probe: a write
+    * sizes only the dirs it has not seen committed). */
+  private[graft] val dirSizeCalls = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** Files.list with the stream CLOSED (only the iterator is consumed
     * otherwise, leaking a directory handle per call until GC). */
   private[graft] def listDir(dir: Path): Seq[Path] = {
@@ -923,22 +993,24 @@ object Channel {
     * single-snapshot walk so the sweep's and the readers' notions of
     * "live batches" cannot drift. */
   private[graft] def batchesFrom(entries: Seq[Path]): Seq[Path] = {
+    // seqs parsed once per dir, not once per comparison of the sort
     val all = entries
       .filter { p =>
         val n = p.getFileName.toString
         n.startsWith("batch_") || n.startsWith("compact_")
       }
-      .sortBy(batchSeq)
-    val lastCompact = all.filter(_.getFileName.toString.startsWith("compact_"))
-      .map(batchSeq).maxOption
-    lastCompact match {
-      case Some(c) => all.filter(p => batchSeq(p) >= c)
-      case None => all
-    }
+      .map(p => (batchSeq(p), p)).sortBy(_._1)
+    val lastCompact = all.collect {
+      case (s, p) if p.getFileName.toString.startsWith("compact_") => s
+    }.maxOption
+    lastCompact.fold(all)(c => all.filter(_._1 >= c)).map(_._2)
   }
 
   private[graft] def nextSeq(dir: Path): Long =
     listBatches(dir).lastOption.map(batchSeq(_) + 1).getOrElse(0L)
+
+  private def nextSeqFrom(entries: Seq[Path]): Long =
+    batchesFrom(entries).lastOption.map(batchSeq(_) + 1).getOrElse(0L)
 
   /** Best-effort recursive size. The capacity walk races concurrent
     * writers by design (other handles commit batches while this one
@@ -948,6 +1020,7 @@ object Channel {
     * observed a rival's in-flight commit. Capacity is a soft limit over
     * a moving directory; exactness under concurrency is not on offer. */
   private[channel] def dirSize(p: Path): Long = {
+    dirSizeCalls.incrementAndGet()
     try {
       val walk = Files.walk(p)
       try walk.iterator().asScala.map { f =>

@@ -23,6 +23,16 @@ import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
   * external dependency; a QUIC driver would slot into the same
   * record-flow seam.
   *
+  * No-delay rule: the JDK server writes a response's headers and body
+  * as two segments, and without TCP_NODELAY the body waits for the
+  * client's delayed ACK of the headers (~40 ms), which held a keep-alive
+  * client to about 20 acknowledgements/s. This object therefore sets
+  * `sun.net.httpserver.nodelay=true` when it initializes, unless the
+  * user set the property. The JDK reads it ONCE per JVM, when its server
+  * configuration class loads, i.e. at the first `HttpServer.create` of
+  * the process; [[start]] is graft's only caller, and a server created
+  * elsewhere before it fixes the setting for the JVM.
+  *
   * Production note: the serial executor preserves arrival order but makes
   * request-TIME the edge's scarce resource — deploy with the JDK's
   * `sun.net.httpserver.maxReqTime`/`maxRspTime` set (they default to
@@ -30,6 +40,9 @@ import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
   * stalling client (slowloris) parks the edge on a blocking read.
   */
 object HttpIngress {
+
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
 
   /** Largest accepted request body — one hostile client must not be able
     * to balloon edge memory (requests above it get 413, unbuffered).

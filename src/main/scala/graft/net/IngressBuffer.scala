@@ -7,7 +7,11 @@ import org.apache.spark.sql.{Encoder, SparkSession}
 
 /** Shared accept-buffer → channel flush logic for ingress edges (HTTP,
   * QUIC): accepted records queue here and land in the channel as one
-  * micro-batch per `flush()`.
+  * micro-batch per `flush()`. The batch is a local Dataset (a
+  * `LocalRelation` of the drained records), so [[Channel.write]] appends
+  * it from the driver without a Spark job, and its capacity check sizes
+  * only the new batch dir — a flush costs one small parquet file, not a
+  * job plus a walk of the topic.
   *
   * A rejected channel write (backpressure / closed) RESTORES the drained
   * batch — the edge already acknowledged those requests. The restore is

@@ -93,10 +93,8 @@ object CodecOps {
 
     // ---- Channel roundtrip through the DSv2 connector: an events slice
     // is published into a fresh topic (writer-attributed parquet batches)
-    // and read back unordered through the graft-channel connector, pinned
-    // at the topic's cursor. Not Channel.read: the connector prunes columns
-    // before the optimizer drops read()'s sort under the aggregate, so that
-    // scan would also read the three metadata columns. The whole
+    // and read back with Channel.read, whose plan has no sort, so the
+    // aggregate's scan reads only event_type and value. The whole
     // write→commit→scan path sits inside the correctness gate, and the
     // oracle never sees the channel, so any loss/duplication/metadata leak
     // in the connector breaks the hash. The aggregate is localCheckpointed
@@ -116,7 +114,7 @@ object CodecOps {
           .select(col("event_id"), col("event_type"), col("value"))
         val ch = reg.create("rt", slice.schema)
         ch.write(slice, writerId = 1)
-        ch.readSnapshot(endSeq = ch.cursor())
+        ch.read()
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), Tables.exactSum(col("value")).as("total"))
           .orderBy(col("event_type"))

@@ -73,7 +73,9 @@ import graft.channel.Channel
   * Scale: batch scans bin-pack parquet files into input partitions by
   * `spark.sql.files.maxPartitionBytes`, so a long-lived topic with
   * thousands of micro-batch files plans a bounded task count instead of
-  * one task per tiny file.
+  * one task per tiny file. Files are packed in seq order, so a
+  * single-partition topic's batch scan returns rows in its total
+  * `(_seq, _writer_id, _offset)` order with no sort in the plan.
   */
 final class ChannelSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-channel"
@@ -216,6 +218,12 @@ final class ChannelScan(spark: SparkSession, dataSchema: StructType,
             startSeq.forall(s >= _) && endSeq.forall(s < _)
         }
       }
+      // Partitions follow the dirs' seq order (one dir per seq) and each
+      // batch dir of a single-partition topic holds one file in `_offset`
+      // order, so the scan's row order IS the topic's total order —
+      // `Channel.read` needs no logical sort (which would keep the
+      // metadata columns in the scan under an aggregate: column pruning
+      // runs before sort elimination).
       val files = batches.flatMap(ChannelSource.dataFiles)
         .map(p => FileSlice(p.toString, Files.size(p)))
       ChannelScan.binPack(files,

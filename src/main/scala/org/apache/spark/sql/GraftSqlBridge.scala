@@ -23,6 +23,11 @@ object GraftSqlBridge {
   def planOf(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan
 
+  /** A fresh Hadoop configuration with the session's SQL settings — the
+    * one a write job of this session would start from. */
+  def newHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
   /** EAGER Column → Expression conversion. `toExpression` can return a
     * lazy wrapper still holding `sql.internal` ColumnNodes — fine inside
     * Spark's own operators, but not serializable into task closures of

@@ -340,4 +340,111 @@ class ChannelSuite extends SparkSpec {
     } yield s"${f.getName}:${n + 1}: ${line.trim}"
     assert(reads.isEmpty, s"read-side parquet path scans: ${reads.mkString("; ")}")
   }
+
+  /** Jobs started while `body` runs, counted by a listener on a job
+    * group; a flush job afterwards guarantees the bus delivered them. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    def group(p: java.util.Properties) =
+      Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id")))
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        group(e.properties) match {
+          case Some("counted") => jobs.incrementAndGet()
+          case Some("bus_flush") => flushed.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("counted", "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("bus_flush", "flush the listener bus")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a driver-local write runs no Spark job; a distributed one does") {
+    val reg = new ChannelRegistry(spark, tmpDir("chan_local"))
+    val ch = reg.create("local", schema)
+    val local = jobsDuring(ch.write(Seq((1, "a"), (2, "b")).toDF("id", "msg"), 0))
+    assert(local == 0, s"a driver-local write ran $local job(s)")
+    val distributed = jobsDuring(ch.write(spark.range(3).select(
+      col("id").cast("int").as("id"), lit("d").as("msg")), 0))
+    assert(distributed >= 1, "the job path ran no job: the listener saw nothing")
+    assert(ch.read().select("id").as[Int].collect().toSeq == Seq(1, 2, 0, 1, 2))
+  }
+
+  test("a driver-written batch reads back like a job-written one") {
+    val reg = new ChannelRegistry(spark, tmpDir("chan_paths"))
+    val ch = reg.create("paths", schema)
+    val rows = (0 until 50).map(i => (i, if (i % 7 == 0) null else s"m$i"))
+    val local = rows.toDF("id", "msg")
+    ch.write(local, 3)             // seq 0: the driver writes it
+    ch.write(local.coalesce(1), 3) // seq 1: a Spark job writes it
+    val driver = ch.readSnapshot(endSeq = 1)
+    val job = ch.readSnapshot(endSeq = 2, startSeq = 1)
+    assert(driver.schema == job.schema)
+    val cols = driver.columns.filterNot(_ == Channel.SeqCol).map(col).toIndexedSeq
+    val d = driver.select(cols: _*).collect().toSeq
+    assert(d == job.select(cols: _*).collect().toSeq)
+    assert(d.map(_.getAs[Long](Channel.OffsetCol)) == (0L until 50L))
+    // the files themselves carry the same parquet schema
+    def fileSchema(seq: Long) = {
+      val batch = Channel.listBatches(ch.dir).find(Channel.batchSeq(_) == seq).get
+      assert(java.nio.file.Files.exists(batch.resolve("_SUCCESS")))
+      val files = graft.sources.ChannelSource.dataFiles(batch)
+      assert(files.size == 1, s"seq $seq: ${files.map(_.getFileName)}")
+      spark.read.parquet(files.head.toString).schema
+    }
+    assert(fileSchema(0) == fileSchema(1))
+  }
+
+  test("a write on a 200-batch topic lists it 3 times and sizes only its own batch") {
+    val reg = new ChannelRegistry(spark, tmpDir("chan_o1"))
+    val ch = reg.create("o1", schema)
+    (0 until 200).foreach(i => ch.write(Seq((i, "x")).toDF("id", "msg"), 0))
+    // the handle sizes committed dirs lazily, once: a fresh handle's
+    // first write sizes the topic, its next write only its own batch
+    val fresh = reg.get("o1")
+    fresh.write(Seq((200, "x")).toDF("id", "msg"), 0)
+    val (lists, sizes) = (Channel.listDirCalls.get(), Channel.dirSizeCalls.get())
+    fresh.write(Seq((201, "x")).toDF("id", "msg"), 0)
+    val listed = Channel.listDirCalls.get() - lists
+    val sized = Channel.dirSizeCalls.get() - sizes
+    assert(listed <= 3, s"a write listed the topic $listed times")
+    assert(sized == 1, s"a write sized $sized batch dirs")
+    assert(fresh.metrics().collect().head.getAs[Long]("n_batches") == 202)
+  }
+
+  test("read() delivers total order with no sort; aggregates scan only used columns") {
+    val reg = new ChannelRegistry(spark, tmpDir("chan_order"))
+    val ch = reg.create("order", schema)
+    (0 until 12).foreach(i => ch.write(Seq((2 * i, s"m${i % 3}"), (2 * i + 1, "z")).toDF("id", "msg"), i % 4))
+    val key = Seq(Channel.SeqCol, Channel.WriterIdCol, Channel.OffsetCol)
+    val prior = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1") // a partition per file
+    try {
+      val df = ch.read()
+      assert(df.rdd.getNumPartitions == 12)
+      val rows = df.select("id", key: _*).collect().toSeq
+      assert(rows.map(_.getInt(0)) == (0 until 24))
+      assert(rows.map(r => (r.getLong(1), r.getInt(2), r.getLong(3))) ==
+        rows.map(r => (r.getLong(1), r.getInt(2), r.getLong(3))).sorted)
+      assert(df.queryExecution.optimizedPlan.collectFirst {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s }.isEmpty)
+      val agg = df.groupBy("msg").agg(count(lit(1)).as("n"))
+      val scanned = agg.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+          r.output.map(_.name)
+      }
+      assert(scanned == Seq(Seq("msg")), s"the aggregate scans $scanned")
+      assert(agg.orderBy("msg").as[(String, Long)].collect().toSeq ==
+        Seq(("m0", 4L), ("m1", 4L), ("m2", 4L), ("z", 12L)))
+    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prior)
+  }
 }

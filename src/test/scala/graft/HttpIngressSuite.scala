@@ -144,4 +144,51 @@ class HttpIngressSuite extends SparkSpec {
       assert(ch.read().count() == 0)
     } finally ingress.stop()
   }
+
+  test("one keep-alive client sending back to back is acknowledged at line rate") {
+    // The JDK server writes headers and body as two segments; without
+    // TCP_NODELAY the body waits on the client's delayed ACK (~40 ms),
+    // which held one connection to about 20 acknowledgements/s.
+    val reg = new ChannelRegistry(spark, tmpDir("httprate"))
+    val ch = reg.create("rate_in", HttpIngress.schema)
+    val ingress = HttpIngress.start(spark, ch)
+    val sock = new java.net.Socket("127.0.0.1", ingress.port)
+    try {
+      sock.setTcpNoDelay(true) // the client sends each request as one segment
+      sock.setSoTimeout(10000)
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      val req = ("POST /ingest HTTP/1.1\r\nHost: 127.0.0.1\r\nContent-Length: 2\r\n\r\n{}")
+        .getBytes("UTF-8")
+      def line(): String = {
+        val b = new StringBuilder
+        var c = in.read()
+        while (c != '\n') { require(c >= 0, "connection closed"); if (c != '\r') b += c.toChar; c = in.read() }
+        b.toString
+      }
+      def status(): Int = {
+        val code = line().split(" ")(1).toInt
+        var len = 0
+        var h = line()
+        while (h.nonEmpty) {
+          if (h.toLowerCase.startsWith("content-length:")) len = h.drop(15).trim.toInt
+          h = line()
+        }
+        in.readNBytes(len)
+        code
+      }
+      val t0 = System.nanoTime()
+      var acked = 0
+      while (acked < 400 && System.nanoTime() - t0 < 5000000000L) {
+        out.write(req); out.flush()
+        assert(status() == 202)
+        acked += 1
+      }
+      val perS = acked / ((System.nanoTime() - t0) / 1e9)
+      info(f"$acked requests, $perS%.0f acknowledgements/s on one connection")
+      assert(perS >= 200, f"one keep-alive connection got $perS%.1f acknowledgements/s")
+      assert(ingress.flush() == acked)
+      assert(ch.read().count() == acked)
+    } finally { sock.close(); ingress.stop() }
+  }
 }
