@@ -36,6 +36,9 @@ import org.apache.spark.sql.types.StructType
   * Order: a single-partition channel preserves total write order via file
   * sequence numbers (reservation-order parity, lib.rs:555-557). Fanout
   * channels declare `partitions > 1` and waive order (SURVEY §7.4.3).
+  *
+  * The topic directory's layout and name grammar are stated once, in
+  * [[TopicListing]], the only code that lists a topic or parses its names.
   */
 final class Channel private[channel] (
     val spark: SparkSession,
@@ -58,8 +61,8 @@ final class Channel private[channel] (
   private val committedSizes =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  def isDrained: Boolean = Files.exists(dir.resolve(DrainMarker))
-  def isTerminated: Boolean = Files.exists(dir.resolve(TerminateMarker))
+  def isDrained: Boolean = Files.exists(dir.resolve(TopicListing.DrainedFlag))
+  def isTerminated: Boolean = Files.exists(dir.resolve(TopicListing.TerminatedFlag))
 
   /** Total bytes evicted in Drop mode since this handle was opened —
     * surfaced like the reference's ReaderBehind(n) byte count. */
@@ -98,30 +101,31 @@ final class Channel private[channel] (
     * epoch (a restarted streaming sink re-running its last micro-batch)
     * is a no-op, upgrading [[sink]] from at-least-once to exactly-once. */
   def writeEpoch(df: DataFrame, writerId: Int, epochId: Long): Unit = {
-    val marker = s"_w${writerId}_e$epochId"
-    val batches = listBatches(dir)
-    val existing = batches.filter(_.getFileName.toString.endsWith(marker))
+    val tag = s"w${writerId}_e$epochId"
+    val live = TopicListing.of(dir).live
+    val existing = live.filter(_.tag == tag)
     // A batch dir only counts as committed once Spark's job commit wrote
     // _SUCCESS; the directory itself appears before the tasks finish, so a
     // crash mid-write leaves a partial dir that must be replaced on replay,
     // not skipped (skipping would drop the epoch's data on the exact
     // recovery path this idempotence exists for).
-    if (existing.exists(p => Files.exists(p.resolve("_SUCCESS")))) return
+    if (existing.exists(_.committed)) return
     // An epoch absorbed by compact() no longer has its marker dir; the
     // compact dir carries the superseded markers forward (_EPOCHS), so a
     // sink restarted after a maintenance-window compaction still skips its
     // replayed last micro-batch instead of appending duplicates.
-    if (compactedEpochs(batches).contains(marker.drop(1))) return
-    existing.foreach(Channel.deleteRecursively)
+    if (compactedEpochs(live).contains(tag)) return
+    existing.foreach(d => Channel.deleteRecursively(d.path))
     doWrite(df, writerId, s"e$epochId")
   }
 
   private def doWrite(df: DataFrame, writerId: Int, unique: String): Unit = {
-    if (isTerminated) throw ChannelClosed(name, "terminated")
-    if (isDrained) throw ChannelClosed(name, "drained")
+    // The pre-claim listing serves the lifecycle flags, the park check and
+    // the reservation floor.
+    val pre = TopicListing.of(dir)
+    if (pre.terminated) throw ChannelClosed(name, "terminated")
+    if (pre.drained) throw ChannelClosed(name, "drained")
     SchemaRegistry.check(name, schemaHash, df.schema)
-    // One listing serves the park check and the reservation floor.
-    val entries = listDir(dir)
     // Park mode parks BEFORE accepting the frame (reference
     // messaging/src/writer.rs:166-199): a full channel must reject the
     // write without making it visible, or a retrying writer duplicates it.
@@ -130,21 +134,18 @@ final class Channel private[channel] (
     // (other handles/processes write the same topic, so it is the only
     // source of truth); only the sizes of committed dirs are remembered.
     if (!dropMode) synchronized {
-      val current = topicBytes(batchesFrom(entries))
+      val current = topicBytes(pre.live)
       if (current >= capacityBytes) throw ChannelBackpressure(name, current, capacityBytes)
     }
-    // ATOMIC seq reservation (slice-reservation parity upgraded from
-    // "coexist on collision" to true reservation): the `_res_<seq>` marker
-    // is claimed with an atomic createDirectory, so concurrent writers —
-    // other JVMs included — always land on DISTINCT sequence numbers. The
-    // marker lives until the batch commits; the DSv2 stream's visible end
-    // refuses to pass a pending reservation, which closes the
-    // late-visible-same-seq race and makes seq-offset subscriptions
-    // strong for multi-writer topics. A writer that crashes mid-write
-    // leaves its marker and parks the seq cursor for DSv2 streams until
-    // compact() (or sweepStale) clears it — blocked beats silently lossy.
-    val batch = reserveSeq(dir, entries)
-    val target = dir.resolve(f"batch_$batch%012d" + s"_w${writerId}_$unique")
+    // The seq is claimed with an atomic `_res_` create, so concurrent
+    // writers (other JVMs included) land on DISTINCT seqs. The marker
+    // lives until the batch commits and a strict stream's visible end
+    // never passes it, so a late-visible lower seq cannot be skipped. A
+    // writer that crashes mid-write leaves its marker and parks strict
+    // streams until compact() or sweepStale clears it: blocked beats
+    // silently lossy.
+    val batch = reserveSeq(pre)
+    val target = TopicListing.batchPath(dir, batch, writerId, unique)
     try {
       LocalAppend.rowsOf(df) match {
         case Some(rows) => LocalAppend.write(spark, target, df.schema, rows, writerId, batch)
@@ -155,7 +156,7 @@ final class Channel private[channel] (
             .coalesce(math.max(1, partitions))
             .write.mode("errorifexists").parquet(target.toString)
       }
-      Files.deleteIfExists(dir.resolve(f"$ResPrefix$batch%012d"))
+      Files.deleteIfExists(TopicListing.resPath(dir, batch))
     } catch {
       // A failed write leaves no committed dir: tombstone the seq
       // (`_abort_`) so strict DSv2 readers know the hole never held data —
@@ -169,17 +170,17 @@ final class Channel private[channel] (
     // the cursor) — O(1) offset planning for every subscriber. Eviction
     // removes only the oldest batches, so it cannot move the head this
     // listing yields.
-    val committed = listDir(dir)
-    try enforceCapacity(batchesFrom(committed), justWritten = target)
-    finally advanceHead(dir, committed)
+    val committed = TopicListing.of(dir)
+    try enforceCapacity(committed.live, target, batch)
+    finally advanceHead(committed)
   }
 
   /** Bytes held by `batches`, sizing only the dirs not yet known to be
     * committed; names gone from the listing leave the cache. */
-  private def topicBytes(batches: Seq[Path]): Long = {
-    val live = batches.iterator.map(_.getFileName.toString).toSet
+  private def topicBytes(batches: Seq[TopicListing.DataDir]): Long = {
+    val live = batches.iterator.map(_.path.getFileName.toString).toSet
     committedSizes.keySet.removeIf(n => !live(n))
-    batches.iterator.map(batchBytes).sum
+    batches.iterator.map(d => batchBytes(d.path)).sum
   }
 
   /** One batch dir's size: remembered once the dir is committed (checked
@@ -190,14 +191,15 @@ final class Channel private[channel] (
     val known = committedSizes.get(n)
     if (known != null) known.longValue
     else {
-      val committed = Files.exists(p.resolve("_SUCCESS"))
+      val committed = TopicListing.committed(p)
       val size = dirSize(p)
       if (committed) committedSizes.put(n, size)
       size
     }
   }
 
-  private def enforceCapacity(listed: Seq[Path], justWritten: Path): Unit = synchronized {
+  private def enforceCapacity(listed: Seq[TopicListing.DataDir], justWritten: Path,
+                              seq: Long): Unit = synchronized {
     var batches = listed
     var total = topicBytes(batches)
     if (total <= capacityBytes) return
@@ -205,13 +207,10 @@ final class Channel private[channel] (
       // The batch size wasn't knowable before the write ran; un-publish
       // it so the rejected frame is never visible to readers
       // (tombstoned: the un-published seq must read as aborted, not lost).
-      // Tombstone BEFORE deleting: our _res_ marker is already released,
-      // so between a delete and a late tombstone the seq would have no
-      // on-disk trace at all — exactly the window reserveSeq's post-claim
-      // re-check relies on never existing. A rival writer could claim the
-      // seq, commit real data, and then have THIS writer's tombstone land
-      // on top of it, making strict readers skip a committed batch.
-      markAborted(dir, batchSeq(justWritten))
+      // Tombstone BEFORE deleting: the seq's marker is already released,
+      // and a seq must never be left with no trace on disk, or a rival
+      // could claim it, commit, and have this tombstone land on its data.
+      markAborted(dir, seq)
       total -= batchBytes(justWritten)
       committedSizes.remove(justWritten.getFileName.toString)
       deleteRecursively(justWritten)
@@ -223,25 +222,19 @@ final class Channel private[channel] (
     // read+write+move per batch on the write hot path), then deletes
     // follow — the same floor-before-delete discipline as pruneConsumed:
     // snapshot pins below an evicted seq must fail loudly, not shrink.
-    val toEvict = Seq.newBuilder[(Path, Long)]
+    val toEvict = Seq.newBuilder[(TopicListing.DataDir, Long)]
     while (total > capacityBytes && batches.size > 1) {
       val oldest = batches.head
-      val sz = batchBytes(oldest)
+      val sz = batchBytes(oldest.path)
       toEvict += ((oldest, sz))
       batches = batches.tail
       total -= sz
     }
     val evicting = toEvict.result()
-    evicting.lastOption.foreach { case (last, _) =>
-      // a compact_N dir holds seqs < N (N itself is a benign hole), so
-      // its floor is N; a batch_N dir holds seq N, so its floor is N+1
-      val floor = batchSeq(last) +
-        (if (last.getFileName.toString.startsWith("compact_")) 0 else 1)
-      advancePrunedFloor(dir, floor)
-    }
-    evicting.foreach { case (p, sz) =>
-      committedSizes.remove(p.getFileName.toString)
-      deleteRecursively(p)
+    evicting.lastOption.foreach { case (last, _) => advancePrunedFloor(dir, last.end) }
+    evicting.foreach { case (d, sz) =>
+      committedSizes.remove(d.path.getFileName.toString)
+      deleteRecursively(d.path)
       droppedBytesCount += sz
     }
   }
@@ -271,7 +264,7 @@ final class Channel private[channel] (
     * the boundary — with a `nextSeq` cursor it would fall below the
     * tail's start yet outside the snapshot, and be lost silently. */
   def cursor(): Long =
-    Channel.readHead(dir).map(_._1).getOrElse(Channel.committedEnds(dir)._1)
+    Channel.readHead(dir).map(_._1).getOrElse(TopicListing.of(dir).committedEnds._1)
 
   /** Immutable snapshot read of seq range `[startSeq, endSeq)` via the
     * DSv2 connector: re-reads see the identical dataset regardless of
@@ -353,39 +346,35 @@ final class Channel private[channel] (
     * reaching into compacted history fails loudly. Not safe concurrently
     * with writers (call from a maintenance window / drained topic). */
   def compact(): Unit = {
-    val batches = listBatches(dir)
-    if (batches.size <= 1) return
-    val seq = nextSeq(dir)
+    val live = TopicListing.of(dir).live
+    if (live.size <= 1) return
+    val seq = live.last.seq + 1
     val tmp = dir.resolve(s"_compacting")
     read().coalesce(math.max(1, partitions)).write.mode("overwrite").parquet(tmp.toString)
     // Carry every absorbed (writerId, epochId) marker into the compact dir
     // (_EPOCHS, one `w<id>_e<epoch>` per line — an underscore-prefixed file,
     // invisible to parquet scans) so writeEpoch idempotence survives the
     // marker dirs' deletion below; prior compacts' _EPOCHS chain forward.
-    val absorbed = (compactedEpochs(batches) ++ batches.collect {
-      case p if Files.exists(p.resolve("_SUCCESS")) =>
-        EpochMarker.findFirstIn(p.getFileName.toString)
-    }.flatten).toSeq.sorted
+    val absorbed = (compactedEpochs(live) ++
+      live.filter(_.committed).flatMap(_.epochTag)).toSeq.sorted
     if (absorbed.nonEmpty)
       Files.writeString(tmp.resolve(EpochsFile), absorbed.mkString("\n"))
-    Files.move(tmp, dir.resolve(f"compact_$seq%012d"))
-    // Sweep everything the new compact file supersedes — including
-    // leftovers of a previously crashed compaction (listBatches already
-    // filters them, so this is cleanup, not correctness) — and ALL stale
+    Files.move(tmp, TopicListing.compactPath(dir, seq))
+    // Sweep everything the new compact dir supersedes — including
+    // leftovers of a previously crashed compaction (the live set already
+    // excludes them, so this is cleanup, not correctness) — and ALL stale
     // seq reservations: compact() requires no concurrent writers, so any
     // surviving `_res_` marker belongs to a crashed write and would park
     // DSv2 streams forever.
-    Channel.listDir(dir)
-      .filter { p =>
-        val n = p.getFileName.toString
-        ((n.startsWith("batch_") || n.startsWith("compact_")) && batchSeq(p) < seq) ||
-          n.startsWith(ResPrefix) || n.startsWith(AbortPrefix)
-      }
+    val after = TopicListing.of(dir)
+    (after.dirs.filter(_.seq < seq).map(_.path) ++
+      after.reservations.map(TopicListing.resPath(dir, _)) ++
+      after.aborts.map(TopicListing.abortPath(dir, _)))
       .foreach(Channel.deleteRecursively)
     // the compact dir consumed seq N without a batch_* dir: republish the
     // cursor past it (subscribers treat a compact-covered seq as a benign
     // hole, not loss)
-    Channel.advanceHead(dir)
+    Channel.advanceHead(TopicListing.of(dir))
   }
 
   /** Release reservation markers older than `olderThanMs` — the
@@ -429,29 +418,16 @@ final class Channel private[channel] (
     * (exclusive — everything below is durably processed). A lower ack
     * than already recorded is a no-op, so retries and out-of-order acks
     * can never regress a head and resurrect prune eligibility. */
-  def ackReader(reader: String, upTo: Long): Unit = synchronized {
+  def ackReader(reader: String, upTo: Long): Unit = {
     Channel.validReaderName(reader)
-    val f = dir.resolve(s"${Channel.ReaderPrefix}$reader")
-    val current = if (Files.exists(f))
-      try Files.readString(f).trim.toLong catch { case _: Exception => 0L }
-    else -1L
-    if (upTo > current || current < 0) {
-      val tmp = dir.resolve(s"${Channel.ReaderPrefix}$reader.tmp")
-      Files.writeString(tmp, math.max(upTo, math.max(current, 0L)).toString)
-      Files.move(tmp, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
+    Channel.raiseMarker(TopicListing.readerPath(dir, reader), math.max(upTo, 0L))
   }
 
   /** Registered reader heads (reader → next-unread seq). */
-  def readerHeads: Map[String, Long] =
-    Channel.listDir(dir)
-      .filter(_.getFileName.toString.startsWith(Channel.ReaderPrefix))
-      .filterNot(_.getFileName.toString.endsWith(".tmp"))
-      .map { p =>
-        val n = p.getFileName.toString.stripPrefix(Channel.ReaderPrefix)
-        n -> (try Files.readString(p).trim.toLong catch { case _: Exception => 0L })
-      }.toMap
+  def readerHeads: Map[String, Long] = headsIn(TopicListing.of(dir))
+
+  private def headsIn(listing: TopicListing): Map[String, Long] =
+    listing.readers.map { case (r, f) => r -> math.max(Channel.readMarker(f), 0L) }
 
   /** Acknowledge from a subscription's own progress: reads the last
     * committed end offset of the graft-channel source on THIS topic out
@@ -495,11 +471,13 @@ final class Channel private[channel] (
     * `graceMs`: only batches whose `_SUCCESS` is at least this old are
     * eligible. A batch is "committed" the instant `_SUCCESS` exists, but
     * the writer's commit epilogue (checksum perms, etc.) runs for a few
-    * more microseconds — pruning inside that window fails the WRITER
-    * (found by the seeded retention stress). Production retention runs
-    * minutes behind the head anyway; pass 0 only on a quiesced topic. */
+    * more microseconds, and pruning inside that window fails the WRITER,
+    * whose epilogue still touches the dir's files. Production retention
+    * runs minutes behind the head anyway; pass 0 only on a quiesced
+    * topic. */
   def pruneConsumed(graceMs: Long = 5000): Long = synchronized {
-    val heads = readerHeads
+    val listing = TopicListing.of(dir)
+    val heads = headsIn(listing)
     if (heads.isEmpty) return 0L
     val cutoff = System.currentTimeMillis() - graceMs
     // committed AND old enough in one stat (a missing _SUCCESS reads as
@@ -513,28 +491,25 @@ final class Channel private[channel] (
     // than any grace): doWrite releases a batch's _res_ marker only
     // AFTER write.parquet fully returns, so a live reservation marks
     // the commit window exactly; those seqs are never prune-eligible
-    val reserved = Channel.resSeqs(dir).toSet
-    val committed = Channel.listBatches(dir)
-      .filter(p => !p.getFileName.toString.startsWith("compact_") &&
-        !reserved.contains(Channel.batchSeq(p)) && committedAndOld(p))
+    val committed = listing.live.filter(d => !d.compact &&
+      !listing.reservations(d.seq) && committedAndOld(d.path))
     // keep the NEWEST committed batch even when every head passed it —
     // the same invariant Drop-mode eviction holds (batches.size > 1):
     // the on-disk seq history stays anchored for topics whose _HEAD
     // cursor is missing, and a fresh earliest()-start subscriber lands
     // on a real dir instead of a fully bare topic
-    val lastSeq = committed.map(Channel.batchSeq).maxOption.getOrElse(0L)
+    val lastSeq = committed.map(_.seq).maxOption.getOrElse(0L)
     val floor = math.min(heads.values.min, lastSeq)
-    val toDelete = committed.filter(p => Channel.batchSeq(p) < floor)
+    val toDelete = committed.filter(_.seq < floor)
     if (toDelete.isEmpty) return 0L
     // floor BEFORE delete: a crash between the two must leave the floor
     // published, never deleted-but-unrecorded history (a snapshot pinned
     // below it would silently shrink)
-    Channel.advancePrunedFloor(dir,
-      toDelete.map(Channel.batchSeq).max + 1)
+    Channel.advancePrunedFloor(dir, toDelete.map(_.end).max)
     var pruned = 0L
-    toDelete.foreach { p =>
-      pruned += Channel.dirSize(p)
-      Channel.deleteRecursively(p)
+    toDelete.foreach { d =>
+      pruned += Channel.dirSize(d.path)
+      Channel.deleteRecursively(d.path)
     }
     pruned
   }
@@ -543,13 +518,13 @@ final class Channel private[channel] (
     * ReaderBehind accounting, reference messaging/src/lib.rs:106-110). */
   def metrics(): DataFrame = {
     import spark.implicits._
-    val batches = listBatches(dir)
+    val listing = TopicListing.of(dir)
     // retention observability: the pruned floor, the slowest registered
     // head (what gates the next prune), and the head count — the three
     // numbers an operator needs to see WHY history is (not) shrinking
-    val heads = readerHeads
-    Seq((name, batches.size.toLong, topicBytes(batches),
-      droppedBytesCount, isDrained, isTerminated,
+    val heads = headsIn(listing)
+    Seq((name, listing.live.size.toLong, topicBytes(listing.live),
+      droppedBytesCount, listing.drained, listing.terminated,
       (try Channel.prunedFloor(dir) catch { case _: IllegalStateException => -1L }),
       heads.values.minOption.getOrElse(-1L), heads.size.toLong))
       .toDF("channel", "n_batches", "bytes", "dropped_bytes", "drained",
@@ -558,23 +533,18 @@ final class Channel private[channel] (
 
   /** Stop accepting new frames; readers may consume the tail
     * (messaging/src/lib.rs:581-595). */
-  def drain(): Unit = Files.createDirectories(dir.resolve(DrainMarker))
+  def drain(): Unit = Files.createDirectories(dir.resolve(TopicListing.DrainedFlag))
 
   /** Abort: refuse subsequent reads and writes (lib.rs:559-579). */
-  def terminate(): Unit = Files.createDirectories(dir.resolve(TerminateMarker))
+  def terminate(): Unit = Files.createDirectories(dir.resolve(TopicListing.TerminatedFlag))
 }
 
 object Channel {
   val WriterIdCol = "_writer_id"
   val SeqCol = "_seq"
   val OffsetCol = "_offset"
-  private val DrainMarker = "_DRAINED"
-  private val TerminateMarker = "_TERMINATED"
   private val EpochsFile = "_EPOCHS"
-  private val EpochMarker = """w\d+_e\d+$""".r
-  private[graft] val ResPrefix = "_res_"
   private[graft] val HeadFile = "_HEAD"
-  private[graft] val ReaderPrefix = "_rdr_"
   private[graft] val PrunedFile = "_PRUNED"
 
   /** One past the highest seq ever deleted WITHOUT a per-seq trace
@@ -599,44 +569,49 @@ object Channel {
     }
   }
 
-  // per-topic monitors for the floor advance: FileLock is cross-JVM but
-  // throws OverlappingFileLockException for two threads of the SAME JVM,
-  // so intra-JVM racers must serialize on a shared monitor first
-  private val floorMonitors =
+  /** Monotonically raise the pruned floor. */
+  private[graft] def advancePrunedFloor(dir: Path, floor: Long): Unit =
+    raiseMarker(dir.resolve(PrunedFile), floor)
+
+  /** The number a monotone marker file holds; -1 when it is missing or
+    * unreadable. */
+  private[channel] def readMarker(f: Path): Long =
+    try Files.readString(f).trim.toLong
+    catch { case _: java.io.IOException | _: NumberFormatException => -1L }
+
+  // per-path monitors for raiseMarker: FileLock is cross-JVM but throws
+  // OverlappingFileLockException for two threads of the SAME JVM, so
+  // intra-JVM racers must serialize on a shared monitor first
+  private val markerMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Monotonically raise the pruned floor. A retry-loop CAS is NOT
-    * enough here: a racer carrying a lower floor can land its replace
-    * after the higher advancer has verified-and-exited, regressing the
-    * floor with no guaranteed later publish to repair it — and a
-    * regressed floor re-admits snapshot pins over deleted history. So
-    * advances serialize: an intra-JVM monitor per topic, then a
-    * cross-JVM FileLock; inside the critical section read → compare →
-    * write a UNIQUE temp (a fixed tmp name would let racers steal each
-    * other's move) → atomic replace. A corrupt marker reads as -1 and
-    * is repaired by the rewrite. */
-  private[graft] def advancePrunedFloor(dir: Path, floor: Long): Unit = {
-    val monitor = floorMonitors.computeIfAbsent(
-      dir.toAbsolutePath.toString, _ => new Object)
+  /** Raise the number held in marker file `f` (the pruned floor, a
+    * reader head) to `value` when it is lower. Every handle of every JVM
+    * goes through here, so a marker never regresses and is never torn: a
+    * raise runs under a per-path monitor (threads of this JVM) and a
+    * `FileLock` on `<f>.lock` (other JVMs), reads, compares, writes a
+    * UNIQUE temp file (racers never move each other's temp) and replaces
+    * `f` atomically. A retry-loop CAS would not do: a racer carrying a
+    * lower value could land its replace after the higher one was checked.
+    * An unreadable marker counts as -1 and is repaired by the write. */
+  private[channel] def raiseMarker(f: Path, value: Long): Unit = {
+    val monitor = markerMonitors.computeIfAbsent(
+      f.toAbsolutePath.toString, _ => new Object)
     monitor.synchronized {
       val lockCh = java.nio.channels.FileChannel.open(
-        dir.resolve(PrunedFile + ".lock"),
+        f.resolveSibling(f.getFileName.toString + ".lock"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.WRITE)
       try {
         val lock = lockCh.lock()
-        try {
-          val current =
-            try prunedFloor(dir) catch { case _: IllegalStateException => -1L }
-          if (current < floor) {
-            val tmp = Files.createTempFile(dir, PrunedFile, ".tmp")
-            try {
-              Files.writeString(tmp, floor.toString)
-              Files.move(tmp, dir.resolve(PrunedFile),
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            } finally Files.deleteIfExists(tmp)
-          }
+        try if (readMarker(f) < value) {
+          val tmp = Files.createTempFile(f.getParent, f.getFileName.toString, ".tmp")
+          try {
+            Files.writeString(tmp, value.toString)
+            Files.move(tmp, f,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          } finally Files.deleteIfExists(tmp)
         } finally lock.release()
       } finally lockCh.close()
     }
@@ -644,63 +619,13 @@ object Channel {
 
   /** Reader names become marker file names — reject anything that could
     * traverse or collide with topic internals (same hostile-input posture
-    * as the module store's path validation). */
+    * as the module store's path validation); `.tmp` and `.lock` name the
+    * marker writer's own files. */
   private[graft] def validReaderName(reader: String): Unit =
     require(reader.nonEmpty && reader.length <= 128 &&
       reader.forall(c => c.isLetterOrDigit || c == '.' || c == '_' || c == '-') &&
-      !reader.startsWith(".") && !reader.endsWith(".tmp"),
+      !reader.startsWith(".") && !reader.endsWith(".tmp") && !reader.endsWith(".lock"),
       s"invalid reader name '$reader' (allowed: [A-Za-z0-9._-], no leading dot)")
-
-  /** Committed head cursor `(strictEnd, weakEnd)` from a full directory
-    * listing: `weakEnd` = one past the HIGHEST fully committed seq
-    * (every dir at the seq has `_SUCCESS`); gaps — evicted, aborted, or
-    * still in-flight seqs — do not hold it back. `strictEnd`
-    * additionally parks at the lowest still-pending `_res_` reservation
-    * (an in-flight or crashed write — its batch dir may not exist yet,
-    * or exist without `_SUCCESS`). An in-flight batch must only park
-    * STRICT: parking weak on an uncommitted dir made the listing-derived
-    * weak end non-monotone (a writer committing seq k+1 before a rival's
-    * slower seq k materialized its dir advanced weak to k+2, then the
-    * rival's bare dir appeared and a fresh listing regressed it to k —
-    * found by ChannelInterleavingSuite's exhaustive schedule
-    * enumeration; the published head, being max-merged, masked it on
-    * the O(1) path). This is the ONE O(#dirs) computation of streaming
-    * offset planning; it runs on the WRITE path (see [[advanceHead]]) so
-    * triggers read the published cursor in O(1) instead of re-listing a
-    * possibly million-dir topic. */
-  private[graft] def committedEnds(dir: Path): (Long, Long) =
-    committedEnds(dir, listDir(dir))
-
-  /** [[committedEnds]] over one directory listing; `_SUCCESS` is checked
-    * from the highest seq down, so a write stats O(1) dirs, not all. */
-  private[graft] def committedEnds(dir: Path, entries: Seq[Path]): (Long, Long) = {
-    val dirs = entries
-      .filter(_.getFileName.toString.startsWith("batch_"))
-      .groupBy(batchSeq).toSeq.sortBy(_._1)
-    def committed(p: Path) = Files.exists(p.resolve("_SUCCESS"))
-    val pendingRes = seqsWith(entries, ResPrefix)
-    // No-committed-prefix fallback: the end is the LOWEST trace of an
-    // unresolved writer — batch dir OR bare `_res_` reservation. Taking
-    // only the first dir here was order-sensitive: a failed write's
-    // partial dir at seq 1 published weak end 1 while a slower rival's
-    // seq-0 reservation (dir not created yet) was still undecided, and
-    // the rival's dir then regressed a fresh listing to 0 — the
-    // published head overshot the true end (found by the exhaustive
-    // model once aborts became realistic failed writes). Monotone
-    // because every NEW trace lands above all existing ones
-    // (reserveSeq's floor spans batches, markers, tombstones, and the
-    // published cursor).
-    val end = dirs.reverseIterator
-      .collectFirst { case (seq, ds) if ds.forall(committed) => seq + 1 }
-      .getOrElse(
-        (dirs.headOption.map(_._1).toSeq ++ pendingRes.headOption.toSeq)
-          .minOption.getOrElse(nextSeqFrom(entries)))
-    val dirMap = dirs.toMap
-    val strict = pendingRes
-      .filterNot(s => dirMap.get(s).exists(_.forall(committed)))
-      .minOption.map(math.min(end, _)).getOrElse(end)
-    (strict, end)
-  }
 
   /** Read the published head cursor, if any. `None` (no file, or torn
     * foreign content) sends the reader down the full-listing recovery
@@ -714,9 +639,11 @@ object Channel {
     } catch { case _: Exception => None }
   }
 
-  /** Publish the committed head cursor (atomic tmp+rename). Called after
-    * every commit/abort/compact: one listing per publish rides the write
-    * path, leaving offset planning O(1) per trigger.
+  /** Publish the committed head cursor ([[TopicListing.committedEnds]] of
+    * `listing`) with an atomic tmp+rename. Called after every
+    * commit/abort/compact, so one listing per publish rides the write
+    * path and offset planning reads the cursor in O(1) per trigger
+    * instead of re-listing a possibly million-dir topic.
     *
     * The cursor is ADVISORY, not the source of truth — and that is what
     * makes the unsynchronized read-compare-move here safe. Two racing
@@ -729,21 +656,16 @@ object Channel {
     * writer that crashes between commit and publish. Serializing
     * publication (file lock / retry loop) would buy nothing but
     * contention on the hot write path. */
-  private[graft] def advanceHead(dir: Path): Unit = advanceHead(dir, listDir(dir))
-
-  /** [[advanceHead]] over one directory listing (the cursor and the
-    * leaked-tmp sweep both derive from it). */
-  private[graft] def advanceHead(dir: Path, entries: Seq[Path]): Unit = {
-    val (strict, weakEnd) = committedEnds(dir, entries)
+  private[graft] def advanceHead(listing: TopicListing): Unit = {
+    val dir = listing.dir
+    val (strict, weakEnd) = listing.committedEnds
     val cur = readHead(dir)
     val (ns, nw) = (math.max(strict, cur.fold(0L)(_._1)),
       math.max(weakEnd, cur.fold(0L)(_._2)))
     if (cur.forall { case (s, w) => ns > s || nw > w }) {
       // sweep tmp files a crashed writer leaked (age-gated: a LIVE tmp
       // exists for milliseconds between create and move)
-      try entries
-        .filter(_.getFileName.toString.startsWith("_head"))
-        .filter(_.getFileName.toString.endsWith(".tmp"))
+      try listing.headTmps
         .filter { p =>
           try Files.getLastModifiedTime(p).toMillis < System.currentTimeMillis() - 60000
           catch { case _: Exception => false }
@@ -762,76 +684,41 @@ object Channel {
     }
   }
 
-  /** Sequence numbers currently reserved by in-flight (or crashed)
-    * writers. Underscore prefix keeps markers invisible to parquet scans
-    * and listBatches. */
-  private[graft] def resSeqs(dir: Path): Seq[Long] = seqsWith(listDir(dir), ResPrefix)
-
-  /** Sorted seqs of the `prefix<seq>` markers in one listing. */
-  private def seqsWith(entries: Seq[Path], prefix: String): Seq[Long] =
-    entries.map(_.getFileName.toString).filter(_.startsWith(prefix))
-      .map(_.drop(prefix.length).toLong).sorted
-
   /** Claim the next free sequence number with an atomic createDirectory
     * on its `_res_` marker — two writers (any JVMs) can never share a seq.
-    * Scans both committed batches and outstanding reservations so a
-    * crashed writer's marker is skipped over, not reused.
+    * The search starts at the pre-claim listing's [[TopicListing.nextFree]]
+    * (so a crashed writer's marker is skipped over, not reused) or the
+    * published head, whichever is higher: batch dirs below the head may
+    * have been pruned or evicted without tombstones, and a seq below the
+    * committed end must never be re-issued (a subscriber whose offset
+    * already passed it would silently skip the new data). A stale
+    * listing only starts the search low.
     *
-    * The atomic create alone is NOT sufficient: markers are released
-    * after commit, so a writer that listed the directory BEFORE a rival
+    * The atomic create alone does not make a seq fresh: markers are
+    * released after commit, so a writer that listed BEFORE a rival
     * claimed seq `s` can win the marker AFTER that rival committed and
-    * released it — a double-claim that would put two batch dirs on one
-    * seq and reopen the late-visible-same-seq stream race (found by the
-    * seeded interleaving stress, ChannelStressSuite). Hence the
-    * post-claim re-check: every consumer of a seq makes its trace — batch
-    * dir (before `_SUCCESS`→marker-delete), `_abort_` tombstone (before
-    * marker-delete), `compact_` dir (writer-free window) — visible
-    * BEFORE the marker is released, so holding the marker and seeing no
-    * trace proves the seq is genuinely fresh. One extra listing per
-    * reservation. */
-  private[graft] def reserveSeq(dir: Path): Long = reserveSeq(dir, listDir(dir))
-
-  /** [[reserveSeq]] with its floor taken from one listing of `dir` —
-    * the writer's pre-claim snapshot. A stale snapshot only starts the
-    * search low; the post-claim re-check rejects a used seq either way. */
-  private[graft] def reserveSeq(dir: Path, entries: Seq[Path]): Long = {
-    // the published head cursor joins the floor computation: batch dirs
-    // below it may have been pruned/evicted WITHOUT tombstones, and a
-    // seq below the committed end must never be re-issued (a subscriber
-    // whose offset already passed it would silently skip the new data)
-    var s = Seq(nextSeqFrom(entries),
-      seqsWith(entries, ResPrefix).lastOption.map(_ + 1).getOrElse(0L),
-      seqsWith(entries, AbortPrefix).lastOption.map(_ + 1).getOrElse(0L),
-      readHead(dir).map(_._2).getOrElse(0L)).max
+    * released it — two batch dirs on one seq. Hence the post-claim
+    * re-check on a fresh listing: every consumer of a seq makes its
+    * trace — batch dir (before `_SUCCESS`→marker-delete), `_abort_`
+    * tombstone (before marker-delete), `compact_` dir (writer-free
+    * window) — visible BEFORE the marker is released, so holding the
+    * marker and seeing no trace proves the seq was never used. */
+  private[graft] def reserveSeq(pre: TopicListing): Long = {
+    val dir = pre.dir
+    var s = math.max(pre.nextFree, readHead(dir).map(_._2).getOrElse(0L))
     while (true) {
       if (!tryReserve(dir, s)) s += 1
-      else if (seqUsed(dir, s)) {
-        Files.deleteIfExists(dir.resolve(f"$ResPrefix$s%012d"))
+      else if (TopicListing.of(dir).used(s)) {
+        Files.deleteIfExists(TopicListing.resPath(dir, s))
         s += 1
       } else return s
     }
     -1 // unreachable
   }
 
-  /** Any on-disk trace that seq `s` was ever consumed. */
-  private def seqUsed(dir: Path, s: Long): Boolean =
-    listDir(dir).exists { p =>
-      val n = p.getFileName.toString
-      (n.startsWith("batch_") || n.startsWith("compact_") ||
-        n.startsWith(AbortPrefix)) && batchSeq(p) == s
-    }
-
   private def tryReserve(dir: Path, s: Long): Boolean =
-    try { Files.createDirectory(dir.resolve(f"$ResPrefix$s%012d")); true }
+    try { Files.createDirectory(TopicListing.resPath(dir, s)); true }
     catch { case _: java.nio.file.FileAlreadyExistsException => false }
-
-  private[graft] val AbortPrefix = "_abort_"
-
-  /** Seqs whose write failed after reservation: tombstoned holes that
-    * never held data (strict readers skip them; [[reserveSeq]] never
-    * reuses them — a reused aborted seq would sit BEHIND stream offsets
-    * that already passed it). */
-  private[graft] def abortSeqs(dir: Path): Seq[Long] = seqsWith(listDir(dir), AbortPrefix)
 
   /** Static body of [[Channel.sweepStale]] — also invoked by the weak
     * DSv2 planner's age-gated self-sweep ([[graft.sources]]), which has
@@ -841,33 +728,27 @@ object Channel {
   private[graft] def sweepStaleAt(dir: Path, olderThanMs: Long): Int = {
     val cutoff = System.currentTimeMillis() - olderThanMs
     // ONE listing up front: this is the maintenance path for possibly
-    // million-dir topics — a per-marker listBatches would be O(k·n), and
-    // every set below (batches, reservations, tombstones, the orphan
-    // walk) derives from this single snapshot. The orphan pass therefore
-    // sees PRE-sweep reservation/tombstone state: a seq handled by the
-    // marker loop this call is conservatively skipped (its marker still
-    // counts as live) — its dir was already deleted by that loop, and
-    // anything genuinely missed waits one sweep cycle, never leaks.
-    val snapshot = Channel.listDir(dir)
-    def seqsWithPrefix(prefix: String): Seq[Long] = snapshot
-      .filter(_.getFileName.toString.startsWith(prefix))
-      .map(_.getFileName.toString.drop(prefix.length).toLong).sorted
-    // live data dirs via the SHARED compact-supersede rule (dirs below
-    // the newest compact_ seq are superseded leftovers owned by
-    // compact()'s lazy cleanup, not this sweep)
-    val batches = Channel.batchesFrom(snapshot)
-    val batchesBySeq = batches.groupBy(Channel.batchSeq)
-    val resSeqsSnap = seqsWithPrefix(Channel.ResPrefix)
+    // million-dir topics, and every set below (live dirs, reservations,
+    // tombstones, the orphan walk) derives from this single snapshot.
+    // The orphan pass therefore sees PRE-sweep reservation/tombstone
+    // state: a seq handled by the marker loop this call is conservatively
+    // skipped (its marker still counts as live) — its dir was already
+    // deleted by that loop, and anything genuinely missed waits one sweep
+    // cycle, never leaks. Dirs below the newest compact_ seq are
+    // superseded leftovers owned by compact()'s cleanup, not this sweep.
+    val snapshot = TopicListing.of(dir)
+    val live = snapshot.live
+    val liveBySeq = live.groupBy(_.seq)
     var swept = 0
     var markerOnlyDropped = false
-    resSeqsSnap.foreach { s =>
-      val marker = dir.resolve(f"${Channel.ResPrefix}$s%012d")
+    snapshot.reservations.foreach { s =>
+      val marker = TopicListing.resPath(dir, s)
       val stale =
         try Files.getLastModifiedTime(marker).toMillis <= cutoff
         catch { case _: java.io.IOException => false } // resolved mid-check
       if (stale) {
-        val dirs = batchesBySeq.getOrElse(s, Seq.empty)
-        if (dirs.exists(p => Files.exists(p.resolve("_SUCCESS")))) {
+        val dirs = liveBySeq.getOrElse(s, Seq.empty)
+        if (dirs.exists(_.committed)) {
           // writer died between commit and marker release: data is valid,
           // only the marker goes
           Files.deleteIfExists(marker)
@@ -881,13 +762,13 @@ object Channel {
           // partial dir — see committedEnds/planInputPartitions), then
           // markAborted tombstones the seq, releases the marker, and
           // advances the head.
-          dirs.foreach(Channel.deleteRecursively)
+          dirs.foreach(d => Channel.deleteRecursively(d.path))
           Channel.markAborted(dir, s)
         }
         swept += 1
       }
     }
-    if (markerOnlyDropped) Channel.advanceHead(dir) // cursor may move now
+    if (markerOnlyDropped) Channel.advanceHead(TopicListing.of(dir)) // cursor may move now
     // Orphaned-partial cleanup: Channel.write's failure path tombstones
     // its seq and releases the marker, but the half-written batch dir
     // survives (the catch cannot assume the dir is deletable while the
@@ -896,46 +777,38 @@ object Channel {
     // treat the seq as an aborted hole. Age-gated like the marker path:
     // a sweep racing a still-alive writer (tombstoned by an earlier
     // sweep, about to commit) must not delete a dir younger than the
-    // staleness cutoff. All three sets come from the up-front snapshot
-    // (see above) — no re-listing; a dir the marker loop just deleted
-    // fails the mtime stat and is skipped.
-    val tombstoned = seqsWithPrefix(Channel.AbortPrefix).toSet
-    val liveRes = resSeqsSnap.toSet
-    batches.foreach { p =>
-      val s = Channel.batchSeq(p)
-      if (tombstoned(s) && !liveRes(s) && !Files.exists(p.resolve("_SUCCESS"))) {
+    // staleness cutoff. A dir the marker loop just deleted fails the
+    // mtime stat and is skipped.
+    live.foreach { d =>
+      if (snapshot.aborts(d.seq) && !snapshot.reservations(d.seq) && !d.committed) {
         val old =
-          try Files.getLastModifiedTime(p).toMillis <= cutoff
+          try Files.getLastModifiedTime(d.path).toMillis <= cutoff
           catch { case _: java.io.IOException => false }
-        if (old) { Channel.deleteRecursively(p); swept += 1 }
+        if (old) { Channel.deleteRecursively(d.path); swept += 1 }
       }
     }
     swept
   }
 
-  /** Seqs consumed by `compact_*` dirs: each compaction claims a seq that
-    * never holds a `batch_*` dir, so subscriptions must read it as a
-    * benign hole (the compacted CONTENT was already delivered as the
-    * original batches), not as data loss. */
-  private[graft] def compactSeqs(dir: Path): Set[Long] =
-    listDir(dir).filter(_.getFileName.toString.startsWith("compact_"))
-      .map(batchSeq).toSet
-
+  /** Tombstone seq `s` (`_abort_`: a hole that never held data — strict
+    * readers skip it and [[reserveSeq]] never reuses it, since a reused
+    * aborted seq would sit BEHIND stream offsets that already passed it),
+    * then release its reservation. */
   private[graft] def markAborted(dir: Path, s: Long): Unit = {
-    try Files.createDirectory(dir.resolve(f"$AbortPrefix$s%012d"))
+    try Files.createDirectory(TopicListing.abortPath(dir, s))
     catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    Files.deleteIfExists(dir.resolve(f"$ResPrefix$s%012d"))
+    Files.deleteIfExists(TopicListing.resPath(dir, s))
     // an aborted seq is a benign hole: unblock the published cursor so
     // parked strong readers resume without waiting for the next write
-    advanceHead(dir)
+    advanceHead(TopicListing.of(dir))
   }
 
-  /** Epoch markers recorded by compactions still live in `batches`
-    * (superseded compacts are filtered by listBatches, and their markers
-    * were chained into the surviving compact's _EPOCHS). */
-  private[channel] def compactedEpochs(batches: Seq[Path]): Set[String] =
-    batches.iterator
-      .map(_.resolve(EpochsFile))
+  /** Epoch markers recorded by compactions still live in `live`
+    * (superseded compacts are not live, and their markers were chained
+    * into the surviving compact's _EPOCHS). */
+  private[channel] def compactedEpochs(live: Seq[TopicListing.DataDir]): Set[String] =
+    live.iterator
+      .map(_.path.resolve(EpochsFile))
       .filter(Files.exists(_))
       .flatMap(Files.readString(_).split("\n"))
       .filter(_.nonEmpty)
@@ -956,61 +829,13 @@ object Channel {
     s
   }
 
-  private[graft] def batchSeq(p: Path): Long = {
-    val n = p.getFileName.toString
-    n.dropWhile(!_.isDigit).takeWhile(_.isDigit).toLong
-  }
-
-  /** Directory-scan counter (observability + the O(1)-offset-planning
-    * regression test's probe: an idle stream trigger must not list). */
+  /** Topic-dir listings ([[TopicListing.of]]) — observability, and the
+    * probe of the tests that pin how often a write or a trigger lists. */
   private[graft] val listDirCalls = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Batch-dir size walks (the capacity-accounting test's probe: a write
     * sizes only the dirs it has not seen committed). */
   private[graft] val dirSizeCalls = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Files.list with the stream CLOSED (only the iterator is consumed
-    * otherwise, leaking a directory handle per call until GC). */
-  private[graft] def listDir(dir: Path): Seq[Path] = {
-    listDirCalls.incrementAndGet()
-    val s = Files.list(dir)
-    try s.iterator().asScala.toSeq finally s.close()
-  }
-
-  /** All live data directories in seq order. A `compact_N` dir holds every
-    * frame with seq < N, so its rename-into-place atomically supersedes
-    * lower-seq entries: if a crash interrupted compact() between the move
-    * and the source deletes, the leftovers are filtered here (and swept
-    * lazily) rather than double-read. */
-  private[graft] def listBatches(dir: Path): Seq[Path] = {
-    if (!Files.exists(dir)) return Nil
-    batchesFrom(listDir(dir))
-  }
-
-  /** [[listBatches]] over an already-fetched directory listing — THE one
-    * copy of the compact-supersede rule (dirs below the newest compact_
-    * seq are superseded leftovers), shared with [[sweepStaleAt]]'s
-    * single-snapshot walk so the sweep's and the readers' notions of
-    * "live batches" cannot drift. */
-  private[graft] def batchesFrom(entries: Seq[Path]): Seq[Path] = {
-    // seqs parsed once per dir, not once per comparison of the sort
-    val all = entries
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("batch_") || n.startsWith("compact_")
-      }
-      .map(p => (batchSeq(p), p)).sortBy(_._1)
-    val lastCompact = all.collect {
-      case (s, p) if p.getFileName.toString.startsWith("compact_") => s
-    }.maxOption
-    lastCompact.fold(all)(c => all.filter(_._1 >= c)).map(_._2)
-  }
-
-  private[graft] def nextSeq(dir: Path): Long =
-    listBatches(dir).lastOption.map(batchSeq(_) + 1).getOrElse(0L)
-
-  private def nextSeqFrom(entries: Seq[Path]): Long =
-    batchesFrom(entries).lastOption.map(batchSeq(_) + 1).getOrElse(0L)
 
   /** Best-effort recursive size. The capacity walk races concurrent
     * writers by design (other handles commit batches while this one
@@ -1094,11 +919,15 @@ final class ChannelRegistry(spark: SparkSession, root: Path) {
   def list(glob: String = "*"): Seq[String] = {
     val matcher = java.nio.file.FileSystems.getDefault.getPathMatcher(s"glob:$glob")
     if (!Files.exists(root)) Nil
-    else Channel.listDir(root)
-      .filter(p => Files.exists(p.resolve("_SCHEMA")))
-      .map(_.getFileName.toString)
-      .filter(n => matcher.matches(Paths.get(n)))
-      .sorted
+    else {
+      val s = Files.list(root)
+      try s.iterator().asScala
+        .filter(p => Files.exists(p.resolve("_SCHEMA")))
+        .map(_.getFileName.toString)
+        .filter(n => matcher.matches(Paths.get(n)))
+        .toSeq.sorted
+      finally s.close()
+    }
   }
 
   /** SQL surface: register every topic (or a glob subset) as a temp view

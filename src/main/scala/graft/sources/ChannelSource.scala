@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.channel.Channel
+import graft.channel.{Channel, TopicListing}
 
 /** DataSource V2 integration for graft channels: `spark.read.format
   * ("graft-channel").load(topicDir)` and `spark.readStream.format
@@ -68,7 +68,9 @@ import graft.channel.Channel
   * filters any dir lacking `_SUCCESS` as defense-in-depth. Streaming
   * planning reads `batch_*` dirs only — `compact_*` rewrites are
   * invisible to subscriptions (a checkpointed subscriber already
-  * ingested the originals), while batch scans read both.
+  * ingested the originals), while batch scans read both. The topic
+  * directory's grammar is stated in [[TopicListing]]; every planning step
+  * takes one fresh listing of it.
   *
   * Scale: batch scans bin-pack parquet files into input partitions by
   * `spark.sql.files.maxPartitionBytes`, so a long-lived topic with
@@ -102,18 +104,6 @@ private[graft] object ChannelSource {
     org.apache.spark.sql.types.DataType
       .fromJson(Files.readString(meta).split("\n")(0)).asInstanceOf[StructType]
   }
-
-  /** Parquet data files of one batch/compact dir, lexicographic (part
-    * file order = write order within the batch). */
-  def dataFiles(dir: Path): Seq[Path] =
-    Channel.listDir(dir)
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .sortBy(_.getFileName.toString)
-
-  def committed(dir: Path): Boolean = Files.exists(dir.resolve("_SUCCESS"))
 }
 
 final class ChannelTable(schema: StructType, options: CaseInsensitiveStringMap)
@@ -191,10 +181,9 @@ final class ChannelScan(spark: SparkSession, dataSchema: StructType,
       val startSeq = Option(options.get("startSeq")).map(_.toLong)
       val endSeq = Option(options.get("endSeq")).map(_.toLong)
       val snapshot = startSeq.isDefined || endSeq.isDefined
-      val all = Channel.listBatches(dir)
+      val all = TopicListing.of(dir).live
       val batches = if (!snapshot) all else {
-        val compacted = all.filter(_.getFileName.toString.startsWith("compact_"))
-          .map(Channel.batchSeq).maxOption
+        val compacted = all.filter(_.compact).map(_.seq).maxOption
         compacted.filter(c => startSeq.getOrElse(0L) < c).foreach { c =>
           throw new IllegalStateException(
             s"snapshot [${startSeq.getOrElse(0L)}, ${endSeq.fold("∞")(_.toString)}) " +
@@ -212,11 +201,7 @@ final class ChannelScan(spark: SparkSession, dataSchema: StructType,
               s"reaches below the pruned floor $pruned on '$dir' " +
               "(consumption retention or Drop eviction removed that history); " +
               "re-pin the snapshot at or above the floor")
-        all.filter { p =>
-          val s = Channel.batchSeq(p)
-          !p.getFileName.toString.startsWith("compact_") &&
-            startSeq.forall(s >= _) && endSeq.forall(s < _)
-        }
+        all.filter(d => !d.compact && startSeq.forall(d.seq >= _) && endSeq.forall(d.seq < _))
       }
       // Partitions follow the dirs' seq order (one dir per seq) and each
       // batch dir of a single-partition topic holds one file in `_offset`
@@ -224,7 +209,7 @@ final class ChannelScan(spark: SparkSession, dataSchema: StructType,
       // `Channel.read` needs no logical sort (which would keep the
       // metadata columns in the scan under an aggregate: column pruning
       // runs before sort elimination).
-      val files = batches.flatMap(ChannelSource.dataFiles)
+      val files = batches.flatMap(d => TopicListing.dataFiles(d.path))
         .map(p => FileSlice(p.toString, Files.size(p)))
       ChannelScan.binPack(files,
         org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
@@ -312,7 +297,6 @@ final class ChannelMicroBatchStream(dir: Path, factory: PartitionReaderFactory,
                                     maxBatches: Option[Int],
                                     clampSweepMs: Long = 600000L)
     extends MicroBatchStream with SupportsAdmissionControl {
-  import ChannelSource._
 
   // weak-clamp persistence tracking (driver-side, one planner per query —
   // latestOffset is never called concurrently for a given stream)
@@ -324,16 +308,9 @@ final class ChannelMicroBatchStream(dir: Path, factory: PartitionReaderFactory,
     * topic. */
   override def toString: String = s"GraftChannel[$dir]"
 
-  /** Streaming sees only `batch_*` dirs (compaction is invisible to
-    * subscriptions), grouped by seq — concurrent writers may share one. */
-  private def batchDirs(): Seq[(Long, Seq[Path])] =
-    Channel.listDir(dir)
-      .filter(_.getFileName.toString.startsWith("batch_"))
-      .groupBy(Channel.batchSeq).toSeq.sortBy(_._1)
-
   private def earliest(): Long = {
-    val dirs = batchDirs()
-    dirs.headOption.map(_._1).getOrElse(Channel.nextSeq(dir))
+    val listing = TopicListing.of(dir)
+    listing.batches.headOption.fold(listing.nextSeq)(_._1)
   }
 
   /** One past the last seq of the committed prefix: the stream never
@@ -353,15 +330,13 @@ final class ChannelMicroBatchStream(dir: Path, factory: PartitionReaderFactory,
     * /root/reference/subsystem/messaging/src/lib.rs:80-83), so a
     * long-lived topic with 10⁵–10⁶ batch dirs plans each trigger from
     * ONE small-file read instead of a full directory listing. The full
-    * listing ([[Channel.committedEnds]]) remains the recovery path for
-    * topics without a published cursor. */
-  private def visibleEnd(): Long =
-    Channel.readHead(dir) match {
-      case Some((strict, weakEnd)) => if (weak) weakEnd else strict
-      case None =>
-        val (strict, weakEnd) = Channel.committedEnds(dir)
-        if (weak) weakEnd else strict
-    }
+    * listing ([[TopicListing.committedEnds]]) remains the recovery path
+    * for topics without a published cursor. */
+  private def visibleEnd(): Long = {
+    val (strict, weakEnd) =
+      Channel.readHead(dir).getOrElse(TopicListing.of(dir).committedEnds)
+    if (weak) weakEnd else strict
+  }
 
   /** Explicit `startingSeq` (the backfill→tail handoff: batch-read the
     * snapshot `[0, N)`, then subscribe from exactly N — no overlap, no
@@ -378,72 +353,33 @@ final class ChannelMicroBatchStream(dir: Path, factory: PartitionReaderFactory,
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[ChannelSeqOffset].seq
     var end = visibleEnd()
-    // A WEAK advance must never SPAN an in-flight seq: the epoch's
-    // content would be re-decided from live filesystem state on failure
-    // replay (the seq commits in between → the replayed epoch contains
-    // rows the original dropped — non-deterministic replay), and once
-    // the offset passes the seq, its later-committed data is silently
-    // skipped forever (a REAL loss, unlike the evicted/aborted holes
-    // weak semantics advertise). "In-flight" has TWO on-disk shapes,
-    // both clamped at:
-    //  - a batch dir missing `_SUCCESS` (writer mid-parquet-job);
-    //  - a `_res_` reservation whose batch dir does not exist YET (the
-    //    window between reserveSeq and the parquet job creating the
-    //    target dir) — invisible to a batch_*-only listing, so it gets
-    //    its own minimum over the same single listing.
-    // Either way the rival commits (next trigger resumes past it) or
-    // is swept to an `_abort_` tombstone (benign hole — sweepStale
-    // bounds how long a crashed writer can park the clamp). Costs one
-    // listing ONLY on non-idle triggers (idle offset planning stays
-    // O(1) off the published head, pinned by the Dsv2 suite); new
-    // reservations always land at or above the published weak end, so
-    // nothing can appear inside an already-offered range afterwards —
-    // which is what makes planInputPartitions deterministic for a
-    // fixed range.
+    // A WEAK advance must never SPAN an in-flight seq
+    // (TopicListing.firstInFlight: a batch dir without `_SUCCESS`, or a
+    // reservation whose dir does not exist or has not committed yet).
+    // Spanning one would make the epoch's content depend on when it is
+    // read — the seq commits between a run and its failure replay, and
+    // the replay holds rows the original dropped — and once the offset
+    // passes the seq, its later-committed data is skipped forever: a
+    // real loss, unlike the evicted and aborted holes weak semantics
+    // allow. The rival either commits (the next trigger resumes past
+    // it) or is swept to an `_abort_` tombstone. The clamp lists the
+    // topic ONLY on non-idle triggers (idle planning stays O(1) off the
+    // published head); new reservations always land at or above the
+    // published weak end, so nothing can appear inside an offered range
+    // afterwards, which keeps planInputPartitions deterministic for it.
     if (weak && end > from) {
-      val entries = Channel.listDir(dir)
-      val bySeq = entries
-        .filter(_.getFileName.toString.startsWith("batch_"))
-        .groupBy(Channel.batchSeq)
-      def committed(ds: Seq[Path]): Boolean =
-        ds.forall(p => Files.exists(p.resolve("_SUCCESS")))
-      // a TOMBSTONED seq is RESOLVED, not in-flight — Channel.write's
-      // failure path tombstones the seq but may leave its partial dir
-      // behind (only compact/sweep removes it), and parking on that
-      // dir would wedge every weak subscriber FOREVER on a hole that
-      // strict mode (planInputPartitions' benign set) correctly skips
-      val aborted = entries
-        .filter(_.getFileName.toString.startsWith(Channel.AbortPrefix))
-        .map(p => p.getFileName.toString.drop(Channel.AbortPrefix.length).toLong)
-        .toSet
-      val firstInFlightDir = bySeq.toSeq.sortBy(_._1)
-        .find { case (seq, ds) => seq >= from && seq < end &&
-          !committed(ds) && !aborted(seq) }
-        .map(_._1)
-      // reservations whose seq already has a fully committed dir are
-      // release-lagged markers (commit happens before marker delete),
-      // not in-flight writes — same exclusion committedEnds applies;
-      // tombstoned seqs are resolved holes as above
-      val firstPendingRes = entries
-        .filter(_.getFileName.toString.startsWith(Channel.ResPrefix))
-        .map(p => p.getFileName.toString.drop(Channel.ResPrefix.length).toLong)
-        .filter(s0 => s0 >= from && s0 < end)
-        .filterNot(s0 => aborted(s0) || bySeq.get(s0).exists(committed))
-        .minOption
-      val clampAt = (firstInFlightDir.toSeq ++ firstPendingRes).minOption
-      end = (Seq(end) ++ clampAt).min
-      // Self-healing: a weak-ONLY subscriber has no guarantee any
-      // maintenance actor ever runs sweepStale, so a crashed writer's
-      // reservation would park the clamp forever (the r10 clamp traded
-      // silent loss for liveness-by-maintenance). If the clamp has sat
-      // at the SAME seq for longer than clampSweepMs, the planner runs
-      // the age-gated sweep itself with that age as the cutoff — the
-      // same wall-clock judgement an operator cron would make, with the
-      // same documented risk profile (default 10 min; a writer slower
-      // than that is declared dead either way). Re-armed after each
-      // attempt so a sweep that finds nothing (e.g. the marker is
-      // younger than the clamp observation) retries one period later
-      // instead of hammering the listing.
+      val clampAt = TopicListing.of(dir).firstInFlight(from, end)
+      clampAt.foreach(c => end = math.min(end, c))
+      // Liveness without a maintenance actor: a weak-only subscriber has
+      // no guarantee anyone runs sweepStale, so a crashed writer's
+      // reservation would park the clamp forever. When the clamp has
+      // sat at the SAME seq for longer than clampSweepMs, the planner
+      // runs the age-gated sweep itself — the wall-clock judgement an
+      // operator cron would make, with the same documented risk (a
+      // writer slower than the cutoff is declared dead either way).
+      // Re-armed after each attempt, so a sweep that finds nothing (the
+      // marker is younger than the cutoff) retries one period later
+      // instead of on every trigger.
       clampAt match {
         case Some(s) =>
           val now = System.currentTimeMillis()
@@ -484,19 +420,20 @@ final class ChannelMicroBatchStream(dir: Path, factory: PartitionReaderFactory,
     // weak plan drops such a dir as the benign hole weak semantics
     // already tolerate; a strict plan counts it as loss below and fails
     // LOUDLY instead of half-reading a mid-write batch.
-    val planned = batchDirs()
-      .filter { case (seq, ds) => seq >= s && seq < e &&
-        ds.forall(p => Files.exists(p.resolve("_SUCCESS"))) }
+    val listing = TopicListing.of(dir)
+    val planned = listing.batches
+      .filter { case (seq, ds) => seq >= s && seq < e && ds.forall(TopicListing.committed) }
     if (!weak) {
       // `_abort_` tombstones are holes that never held data (failed or
       // capacity-rejected writes), and a `compact_N` dir consumed seq N
       // without a batch (its content was already delivered as the
       // original batches) — neither is loss
-      val benign = Channel.abortSeqs(dir).toSet ++ Channel.compactSeqs(dir)
-      val missing = (s until e).filterNot(planned.map(_._1).toSet ++ benign)
+      val have = planned.map(_._1).toSet
+      val missing = (s until e).filterNot(x =>
+        have(x) || listing.aborts(x) || listing.compactSeqs(x))
       if (missing.nonEmpty) throw ChannelDataLoss(dir.toString, missing)
     }
-    planned.flatMap(_._2).flatMap(dataFiles)
+    planned.flatMap(_._2).flatMap(TopicListing.dataFiles)
       .map(p => ChannelInputPartition(Seq(FileSlice(p.toString, Files.size(p)))))
       .toArray
   }

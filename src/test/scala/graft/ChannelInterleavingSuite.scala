@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import graft.channel.Channel
+import graft.channel.{Channel, TopicListing}
 
 /** EXHAUSTIVE interleaving check over the channel marker protocol's
   * smallest concurrent core — the engine's parity with the reference's
@@ -49,11 +49,9 @@ class ChannelInterleavingSuite extends SparkSpec {
     * later-committed data is stranded behind the cursor forever. */
   private def assertWeakOfferResolved(dir: Path, ctx: => String): Unit = {
     val offered = offeredWeakEnd(dir)
-    val entries = Channel.listDir(dir)
-    val bySeq = entries
-      .filter(_.getFileName.toString.startsWith("batch_"))
-      .groupBy(Channel.batchSeq)
-    val aborted = Channel.abortSeqs(dir).toSet
+    val listing = TopicListing.of(dir)
+    val bySeq = listing.batches.toMap
+    val aborted = listing.aborts
     (0L until offered).foreach { s =>
       val committedSeq =
         bySeq.get(s).exists(ds => ds.forall(p => Files.exists(p.resolve("_SUCCESS"))))
@@ -67,14 +65,14 @@ class ChannelInterleavingSuite extends SparkSpec {
     * the reserve step claimed). */
   private def commitSteps(dir: Path, w: Int,
       claimed: scala.collection.mutable.Map[Int, Long]): Vector[() => Unit] = Vector(
-    () => claimed(w) = Channel.reserveSeq(dir),
+    () => claimed(w) = Channel.reserveSeq(TopicListing.of(dir)),
     () => Files.createDirectories(
       dir.resolve(f"batch_${claimed(w)}%012d_w$w")),
     () => Files.createFile(
       dir.resolve(f"batch_${claimed(w)}%012d_w$w").resolve("_SUCCESS")),
     () => Files.deleteIfExists(
-      dir.resolve(f"${Channel.ResPrefix}${claimed(w)}%012d")),
-    () => Channel.advanceHead(dir))
+      TopicListing.resPath(dir, claimed(w))),
+    () => Channel.advanceHead(TopicListing.of(dir)))
 
   /** A FAILED write, as it really happens: the parquet job creates the
     * target dir, dies before `_SUCCESS`, and the catch path tombstones
@@ -82,7 +80,7 @@ class ChannelInterleavingSuite extends SparkSpec {
     * wedge scenario, now exhaustively scheduled). */
   private def abortSteps(dir: Path, w: Int,
       claimed: scala.collection.mutable.Map[Int, Long]): Vector[() => Unit] = Vector(
-    () => claimed(w) = Channel.reserveSeq(dir),
+    () => claimed(w) = Channel.reserveSeq(TopicListing.of(dir)),
     () => Files.createDirectories(dir.resolve(f"batch_${claimed(w)}%012d_w$w")),
     () => Channel.markAborted(dir, claimed(w)))
 
@@ -118,7 +116,7 @@ class ChannelInterleavingSuite extends SparkSpec {
           for (w <- sched) {
             steps(w)(idx(w))(); idx(w) += 1
             // the 1-reader half: observed at EVERY interleaving point
-            val (strict, weak) = Channel.committedEnds(dir)
+            val (strict, weak) = TopicListing.of(dir).committedEnds
             assert(strict <= weak,
               s"[$label #$k after $sched] strict $strict > weak $weak")
             Channel.readHead(dir).foreach { case (hs, hw) =>
@@ -140,14 +138,13 @@ class ChannelInterleavingSuite extends SparkSpec {
           // quiescent cursor equals the total op count
           assert(claimed(0) != claimed(1), s"[$label #$k] double-claimed seq")
           assert(Set(claimed(0), claimed(1)) == Set(0L, 1L))
-          val batchDirs = Channel.listDir(dir)
-            .filter(_.getFileName.toString.startsWith("batch_"))
+          val batchDirs = TopicListing.of(dir).dirs.filterNot(_.compact)
           val committedSeqs = batchDirs
-            .filter(p => Files.exists(p.resolve("_SUCCESS")))
-            .map(Channel.batchSeq).toSet
+            .filter(d => Files.exists(d.path.resolve("_SUCCESS")))
+            .map(_.seq).toSet
           val partialSeqs = batchDirs
-            .filterNot(p => Files.exists(p.resolve("_SUCCESS")))
-            .map(Channel.batchSeq).toSet
+            .filterNot(d => Files.exists(d.path.resolve("_SUCCESS")))
+            .map(_.seq).toSet
           val wantCommitted =
             (if (c0) Set(claimed(0)) else Set.empty[Long]) ++
               (if (c1) Set(claimed(1)) else Set.empty[Long])
@@ -155,19 +152,19 @@ class ChannelInterleavingSuite extends SparkSpec {
           val wantAborted =
             (if (c0) Set.empty[Long] else Set(claimed(0))) ++
               (if (c1) Set.empty[Long] else Set(claimed(1)))
-          assert(Channel.abortSeqs(dir).toSet == wantAborted,
+          assert(TopicListing.of(dir).aborts == wantAborted,
             s"[$label #$k] abort tombstones drifted")
           // a failed write's debris may only sit at a TOMBSTONED seq —
           // a partial dir anywhere else would be unresolved in-flight
           assert(partialSeqs.subsetOf(wantAborted),
             s"[$label #$k] partial dir outside the aborted set: $partialSeqs")
-          assert(Channel.resSeqs(dir).isEmpty, s"[$label #$k] leaked reservation")
+          assert(TopicListing.of(dir).reservations.isEmpty, s"[$label #$k] leaked reservation")
           // quiescent cursor: strict == weak == one past the last
           // COMMITTED batch (trailing aborts are benign holes past the
           // end; 0 when everything aborted), and the published head has
           // caught up exactly
-          Channel.advanceHead(dir)
-          val (strict, weak) = Channel.committedEnds(dir)
+          Channel.advanceHead(TopicListing.of(dir))
+          val (strict, weak) = TopicListing.of(dir).committedEnds
           val wantWeak = wantCommitted.maxOption.map(_ + 1).getOrElse(0L)
           assert(strict == weak && weak == wantWeak,
             s"[$label #$k] quiescent ends ($strict,$weak) != $wantWeak")
@@ -204,11 +201,11 @@ class ChannelInterleavingSuite extends SparkSpec {
       val ch = reg.create(s"sw$sweepAt", schema)
       val dir = ch.dir
       val claimed = scala.collection.mutable.Map.empty[Int, Long]
-      def marker = dir.resolve(f"${Channel.ResPrefix}${claimed(0)}%012d")
+      def marker = TopicListing.resPath(dir, claimed(0))
       def batch = dir.resolve(f"batch_${claimed(0)}%012d_w0")
       val steps: Vector[() => Unit] = Vector(
         () => {
-          claimed(0) = Channel.reserveSeq(dir)
+          claimed(0) = Channel.reserveSeq(TopicListing.of(dir))
           // the writer has been "stuck" since reservation: age the marker
           // past any sweep threshold
           Files.setLastModifiedTime(marker,
@@ -218,7 +215,7 @@ class ChannelInterleavingSuite extends SparkSpec {
         () => Files.createFile(batch.resolve("part-0.parquet")),
         () => Files.createFile(batch.resolve("_SUCCESS")),
         () => Files.deleteIfExists(marker),
-        () => Channel.advanceHead(dir))
+        () => Channel.advanceHead(TopicListing.of(dir)))
       var failed = false
       for ((st, i) <- steps.zipWithIndex) {
         if (i == sweepAt) ch.sweepStale(3600000) // only the aged marker is stale
@@ -233,19 +230,18 @@ class ChannelInterleavingSuite extends SparkSpec {
       if (sweepAt == steps.length) ch.sweepStale(3600000)
 
       val ctx = s"[sweepAt=$sweepAt]"
-      assert(Channel.resSeqs(dir).isEmpty, s"$ctx leaked reservation")
-      val dirs = Channel.listDir(dir)
-        .filter(_.getFileName.toString.startsWith("batch_"))
-      dirs.foreach { p =>
-        assert(Files.exists(p.resolve("_SUCCESS")),
-          s"$ctx partial batch dir left readable: $p")
+      assert(TopicListing.of(dir).reservations.isEmpty, s"$ctx leaked reservation")
+      val dirs = TopicListing.of(dir).dirs.filterNot(_.compact)
+      dirs.foreach { d =>
+        assert(Files.exists(d.path.resolve("_SUCCESS")),
+          s"$ctx partial batch dir left readable: ${d.path}")
       }
-      val committedHere = dirs.exists(p => Channel.batchSeq(p) == claimed(0))
-      val tombstoned = Channel.abortSeqs(dir).contains(claimed(0))
+      val committedHere = dirs.exists(_.seq == claimed(0))
+      val tombstoned = TopicListing.of(dir).aborts.contains(claimed(0))
       assert(committedHere || tombstoned, s"$ctx trace-free gap at ${claimed(0)}")
       assertWeakOfferResolved(dir, ctx)
-      Channel.advanceHead(dir)
-      val (strict, weak) = Channel.committedEnds(dir)
+      Channel.advanceHead(TopicListing.of(dir))
+      val (strict, weak) = TopicListing.of(dir).committedEnds
       assert(strict <= weak, s"$ctx ends inverted")
       Channel.readHead(dir).foreach { case (hs, hw) =>
         assert(hs <= strict && hw <= weak, s"$ctx head ahead of true ends")
@@ -272,14 +268,14 @@ class ChannelInterleavingSuite extends SparkSpec {
     def batch = dir.resolve(f"batch_${claimed.last._1}%012d_w$w")
     ops.toVector.flatMap { isCommit =>
       if (isCommit) Vector[() => Unit](
-        () => claimed += ((Channel.reserveSeq(dir), true)),
+        () => claimed += ((Channel.reserveSeq(TopicListing.of(dir)), true)),
         () => Files.createDirectories(batch),
         () => Files.createFile(batch.resolve("_SUCCESS")),
         () => Files.deleteIfExists(
-          dir.resolve(f"${Channel.ResPrefix}${claimed.last._1}%012d")),
-        () => Channel.advanceHead(dir))
+          TopicListing.resPath(dir, claimed.last._1)),
+        () => Channel.advanceHead(TopicListing.of(dir)))
       else Vector[() => Unit](
-        () => claimed += ((Channel.reserveSeq(dir), false)),
+        () => claimed += ((Channel.reserveSeq(TopicListing.of(dir)), false)),
         () => Files.createDirectories(batch),
         () => Channel.markAborted(dir, claimed.last._1))
     }
@@ -323,19 +319,18 @@ class ChannelInterleavingSuite extends SparkSpec {
         assert(all.map(_._1).toSet == Set(0L, 1L, 2L),
           s"[#$k] seqs not dense: ${all.toSeq}")
         val committed = all.filter(_._2).map(_._1).toSet
-        val dirsBySuccess = Channel.listDir(dir)
-          .filter(_.getFileName.toString.startsWith("batch_"))
-          .partition(p => Files.exists(p.resolve("_SUCCESS")))
-        assert(dirsBySuccess._1.map(Channel.batchSeq).toSet == committed,
+        val dirsBySuccess = TopicListing.of(dir).dirs.filterNot(_.compact)
+          .partition(d => Files.exists(d.path.resolve("_SUCCESS")))
+        assert(dirsBySuccess._1.map(_.seq).toSet == committed,
           s"[#$k] batch set drifted")
         val wantAborted = all.filterNot(_._2).map(_._1).toSet
-        assert(Channel.abortSeqs(dir).toSet == wantAborted,
+        assert(TopicListing.of(dir).aborts == wantAborted,
           s"[#$k] tombstones drifted")
-        assert(dirsBySuccess._2.map(Channel.batchSeq).toSet.subsetOf(wantAborted),
+        assert(dirsBySuccess._2.map(_.seq).toSet.subsetOf(wantAborted),
           s"[#$k] partial dir outside the aborted set")
-        assert(Channel.resSeqs(dir).isEmpty, s"[#$k] leaked reservation")
-        Channel.advanceHead(dir)
-        val (strict, weak) = Channel.committedEnds(dir)
+        assert(TopicListing.of(dir).reservations.isEmpty, s"[#$k] leaked reservation")
+        Channel.advanceHead(TopicListing.of(dir))
+        val (strict, weak) = TopicListing.of(dir).committedEnds
         assert(strict == weak && weak == committed.max + 1,
           s"[#$k] quiescent ends ($strict,$weak) vs committed $committed")
         assert(Channel.readHead(dir).contains((strict, weak)))

@@ -5,7 +5,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import graft.channel.{Channel, ChannelRegistry}
+import graft.channel.{Channel, ChannelRegistry, TopicListing}
 import org.apache.spark.sql.functions._
 
 /** Randomized interleaving stress over the channel's multi-writer
@@ -45,7 +45,7 @@ class ChannelStressSuite extends SparkSpec {
           start.await()
           var i = 0
           while (i < opsEach) {
-            val s = Channel.reserveSeq(dir)
+            val s = Channel.reserveSeq(TopicListing.of(dir))
             if (rnd.nextInt(4) == 0) Thread.`yield`()
             if (rnd.nextInt(5) == 0) { // ~20% of writes fail after reserving
               Channel.markAborted(dir, s)
@@ -55,8 +55,8 @@ class ChannelStressSuite extends SparkSpec {
               Files.createDirectories(batch)
               if (rnd.nextBoolean()) Thread.`yield`()
               Files.createFile(batch.resolve("_SUCCESS"))
-              Files.deleteIfExists(dir.resolve(f"${Channel.ResPrefix}$s%012d"))
-              Channel.advanceHead(dir)
+              Files.deleteIfExists(TopicListing.resPath(dir, s))
+              Channel.advanceHead(TopicListing.of(dir))
               claimed(w) += ((s, true))
             }
             i += 1
@@ -72,7 +72,7 @@ class ChannelStressSuite extends SparkSpec {
         try {
           start.await()
           while (!stop.get()) {
-            val (strict, weak) = Channel.committedEnds(dir)
+            val (strict, weak) = TopicListing.of(dir).committedEnds
             assert(strict <= weak, s"strict $strict > weak $weak")
             Channel.readHead(dir).foreach { case (hs, hw) =>
               assert(hs <= hw, s"published head strict $hs > weak $hw")
@@ -99,18 +99,16 @@ class ChannelStressSuite extends SparkSpec {
     // no reservation marker survives (every op resolved).
     val committed = all.filter(_._2).map(_._1).toSet
     val aborted = all.filterNot(_._2).map(_._1).toSet
-    val batchSeqs = Channel.listDir(dir)
-      .filter(_.getFileName.toString.startsWith("batch_"))
-      .map(p => p.getFileName.toString.stripPrefix("batch_").take(12).toLong).toSet
+    val batchSeqs = TopicListing.of(dir).batches.map(_._1).toSet
     assert(batchSeqs == committed)
-    assert(Channel.abortSeqs(dir).toSet == aborted)
-    assert(Channel.resSeqs(dir).isEmpty, "leaked reservation markers")
+    assert(TopicListing.of(dir).aborts == aborted)
+    assert(TopicListing.of(dir).reservations.isEmpty, "leaked reservation markers")
 
     // Quiescent cursor: with no pending reservations strict == weak ==
     // one past the last committed batch, and the published head (advisory,
     // may lag under racing publishes) catches up on the next advance.
-    Channel.advanceHead(dir)
-    val (strict, weak) = Channel.committedEnds(dir)
+    Channel.advanceHead(TopicListing.of(dir))
+    val (strict, weak) = TopicListing.of(dir).committedEnds
     assert(strict == weak)
     assert(weak == committed.max + 1 || aborted.max > committed.max,
       s"weak end $weak vs max committed ${committed.max}")
@@ -149,12 +147,13 @@ class ChannelStressSuite extends SparkSpec {
       s"compaction changed the row set: missing=${(before -- after).toSeq.sorted} " +
         s"extra=${(after -- before).toSeq.sorted}")
     val root = regRoot.resolve("stress_compact")
-    assert(Channel.resSeqs(root).isEmpty && Channel.abortSeqs(root).isEmpty,
+    val markers = TopicListing.of(root)
+    assert(markers.reservations.isEmpty && markers.aborts.isEmpty,
       "compaction left stale markers")
     // post-compaction writes keep flowing and the cursor stays published
     ch.write(Seq((999L, "post")).toDF("id", "s"), writerId = 9)
     assert(ch.read().count() == before.size + 1)
-    val (strict, weak) = Channel.committedEnds(root)
+    val (strict, weak) = TopicListing.of(root).committedEnds
     assert(strict == weak && Channel.readHead(root).contains((strict, weak)))
   }
 
@@ -225,9 +224,7 @@ class ChannelStressSuite extends SparkSpec {
     ch.ackReader("r1", ch.cursor())
     pruneHandle.pruneConsumed(0) // quiesced: writers joined
     val root = regRoot.resolve("stress_prune")
-    val remaining = Channel.listDir(root)
-      .filter(_.getFileName.toString.startsWith("batch_"))
-      .map(p => p.getFileName.toString.stripPrefix("batch_").take(12).toLong)
+    val remaining = TopicListing.of(root).dirs.filterNot(_.compact).map(_.seq)
     assert(remaining.nonEmpty, "pruning must keep the newest-batch anchor")
     // both directions of the floor law: nothing below the final floor
     // survives AND nothing at or above it vanished — writers commit a

@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import graft.channel.{Channel, ChannelRegistry, SchemaRegistry}
+import graft.channel.{Channel, ChannelRegistry, SchemaRegistry, TopicListing}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, StructField, IntegerType, StringType}
 
@@ -97,11 +97,11 @@ class ChannelSuite extends SparkSpec {
     // path must leave the same trace discipline reserveSeq's post-claim
     // re-check assumes (trace visible before the marker is gone)
     val dir = root.resolve("t5")
-    assert(Channel.abortSeqs(dir) == Seq(0L))
-    assert(Channel.resSeqs(dir).isEmpty)
-    val next = Channel.reserveSeq(dir)
+    assert(TopicListing.of(dir).aborts.toSeq == Seq(0L))
+    assert(TopicListing.of(dir).reservations.isEmpty)
+    val next = Channel.reserveSeq(TopicListing.of(dir))
     assert(next == 1L, s"aborted seq reissued: $next")
-    java.nio.file.Files.deleteIfExists(dir.resolve(f"${Channel.ResPrefix}$next%012d"))
+    java.nio.file.Files.deleteIfExists(TopicListing.resPath(dir, next))
   }
 
   test("drain refuses writes but serves reads; terminate refuses both") {
@@ -395,9 +395,9 @@ class ChannelSuite extends SparkSpec {
     assert(d.map(_.getAs[Long](Channel.OffsetCol)) == (0L until 50L))
     // the files themselves carry the same parquet schema
     def fileSchema(seq: Long) = {
-      val batch = Channel.listBatches(ch.dir).find(Channel.batchSeq(_) == seq).get
+      val batch = TopicListing.of(ch.dir).live.find(_.seq == seq).get.path
       assert(java.nio.file.Files.exists(batch.resolve("_SUCCESS")))
-      val files = graft.sources.ChannelSource.dataFiles(batch)
+      val files = TopicListing.dataFiles(batch)
       assert(files.size == 1, s"seq $seq: ${files.map(_.getFileName)}")
       spark.read.parquet(files.head.toString).schema
     }
@@ -419,6 +419,49 @@ class ChannelSuite extends SparkSpec {
     assert(listed <= 3, s"a write listed the topic $listed times")
     assert(sized == 1, s"a write sized $sized batch dirs")
     assert(fresh.metrics().collect().head.getAs[Long]("n_batches") == 202)
+  }
+
+  test("two handles acking one reader from several threads keep its head at the max ack") {
+    val reg = new ChannelRegistry(spark, tmpDir("chan_acks"))
+    val ch = reg.create("acks", schema)
+    ch.registerReader("r")
+    // every registry.get is a new handle (QueryManager.autoAck holds its
+    // own), so acks of one reader race across handles
+    val handles = Seq(ch, reg.get("acks"))
+    val (threads, acks) = (4, 300)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      (0 until threads).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until acks).foreach { i =>
+            handles(t % 2).ackReader("r", i.toLong * threads + t)
+          }
+        })
+      }.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    assert(ch.readerHeads == Map("r" -> (acks.toLong * threads - 1)))
+  }
+
+  test("only TopicListing lists a topic dir or parses a topic entry name") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"sources not found at $root")
+    val walk = java.nio.file.Files.walk(root)
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val (listing, others) = files.partition(_.getFileName.toString == "TopicListing.scala")
+    assert(listing.size == 1)
+    // the grammar's name literals and prefixes, the old seq parser, and a
+    // directory listing of a topic dir (named `dir`, or a handle's
+    // `ch.dir`, throughout the channel code)
+    val forbidden = Seq(""""batch_""", """"compact_""", """"_res_""", """"_abort_""",
+      """\bbatchSeq\b""", """\b(Res|Abort)Prefix\b""",
+      """(Files\.list|Files\.newDirectoryStream|listDir)\(\s*(\w+\.)?dir\s*[,)]""").map(_.r)
+    val hits = for {
+      f <- others
+      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if forbidden.exists(_.findFirstIn(line).isDefined)
+    } yield s"${root.relativize(f)}:${n + 1}: ${line.trim}"
+    assert(hits.isEmpty, s"topic listing or name parsing outside TopicListing: ${hits.mkString("; ")}")
   }
 
   test("read() delivers total order with no sort; aggregates scan only used columns") {

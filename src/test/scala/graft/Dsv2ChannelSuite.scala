@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.channel.{Channel, ChannelRegistry}
+import graft.channel.{Channel, ChannelRegistry, TopicListing}
 import graft.sources.{ChannelScan, ChannelSource, FileSlice}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -46,7 +46,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     assert(v2.select("id").as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
     // parity: Channel.read (the connector in total order) returns exactly
     // a plain parquet scan of the topic's batch dirs in that order
-    val reference = spark.read.parquet(Channel.listBatches(ch.dir).map(_.toString): _*)
+    val reference = spark.read.parquet(TopicListing.of(ch.dir).live.map(_.path.toString): _*)
       .orderBy(Channel.SeqCol, Channel.WriterIdCol, Channel.OffsetCol)
     val read = ch.read()
     assert(read.collect().toSeq ==
@@ -180,7 +180,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
     val ch = reg.create("sw1", schema)
     // simulated crashed writer: reserves seq 0, never commits or aborts
-    val dead = Channel.reserveSeq(ch.dir)
+    val dead = Channel.reserveSeq(TopicListing.of(ch.dir))
     assert(dead == 0L)
     ch.write(Seq((1, "a")).toDF("id", "msg"), 1) // lands at seq 1
     sinkN += 1
@@ -195,15 +195,15 @@ class Dsv2ChannelSuite extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table(name).as[Int].collect().toSeq == Seq(1),
         "after the sweep the stream must pass the tombstoned hole")
-      assert(Channel.abortSeqs(ch.dir) == Seq(0L),
+      assert(TopicListing.of(ch.dir).aborts.toSeq == Seq(0L),
         "the swept seq must read as aborted, never as a trace-free gap")
-      assert(Channel.resSeqs(ch.dir).isEmpty)
+      assert(TopicListing.of(ch.dir).reservations.isEmpty)
 
       // the COMMON crash mode: the writer died mid-parquet-write, leaving
       // a partial batch dir (task files, no _SUCCESS) plus its marker —
       // the partial dir parks the committed-prefix walk exactly like the
       // marker, so the sweep must remove it too, not just tombstone
-      val s2 = Channel.reserveSeq(ch.dir)
+      val s2 = Channel.reserveSeq(TopicListing.of(ch.dir))
       val partial = ch.dir.resolve(f"batch_$s2%012d" + "_w9_crashed")
       Files.createDirectories(partial)
       Files.createFile(partial.resolve("part-00000.parquet")) // no _SUCCESS
@@ -216,7 +216,7 @@ class Dsv2ChannelSuite extends SparkSpec {
       assert(spark.table(name).as[Int].collect().sorted.toSeq == Seq(1, 2),
         "after the sweep the stream must pass the partial-dir hole")
       assert(!Files.exists(partial), "the partial batch dir must be removed")
-      assert(Channel.abortSeqs(ch.dir).contains(s2))
+      assert(TopicListing.of(ch.dir).aborts.contains(s2))
     } finally q.stop()
   }
 
@@ -242,7 +242,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     val ch = reg.create("s4", schema)
     (1 to 3).foreach(i => ch.write(Seq((i, s"m$i")).toDF("id", "msg"), 1))
     // evict the middle batch out from under future subscribers
-    val victim = Channel.listBatches(ch.dir)(1)
+    val victim = TopicListing.of(ch.dir).live(1).path
     assert(victim.getFileName.toString.startsWith("batch_0000000000"))
     Channel.deleteRecursively(victim)
 
@@ -269,7 +269,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     // Out-of-band surgery invalidates the published head cursor too (a
     // real crash simply never advances it), so drop it — the stream must
     // recover through the full-listing path.
-    val half = Channel.listBatches(ch.dir)(1)
+    val half = TopicListing.of(ch.dir).live(1).path
     Files.delete(half.resolve("_SUCCESS"))
     Files.delete(ch.dir.resolve("_HEAD"))
 
@@ -294,13 +294,13 @@ class Dsv2ChannelSuite extends SparkSpec {
     val ch = reg.create("s6", schema)
     ch.write(Seq((1, "a")).toDF("id", "msg"), 1)
     ch.write(Seq((2, "b")).toDF("id", "msg"), 2)
-    val b0 = Channel.listBatches(ch.dir).head
+    val b0 = TopicListing.of(ch.dir).live.head.path
     Files.delete(b0.resolve("_SUCCESS"))
-    Files.createDirectory(ch.dir.resolve(f"${Channel.ResPrefix}${0L}%012d"))
+    Files.createDirectory(TopicListing.resPath(ch.dir, 0L))
 
     // listing-derived ends: strict parks at the reservation, weak stays
     // past the in-flight seq (monotone — the r9 committedEnds fix)
-    val (strict, weak) = Channel.committedEnds(ch.dir)
+    val (strict, weak) = TopicListing.of(ch.dir).committedEnds
     assert(strict == 0 && weak == 2, s"ends ($strict,$weak)")
 
     val parked = runToSink(ch.readStreamV2(weak = true).select("id"))
@@ -309,7 +309,7 @@ class Dsv2ChannelSuite extends SparkSpec {
 
     // the rival finishes: commit marker lands, reservation resolves
     Files.createFile(b0.resolve("_SUCCESS"))
-    Files.delete(ch.dir.resolve(f"${Channel.ResPrefix}${0L}%012d"))
+    Files.delete(TopicListing.resPath(ch.dir, 0L))
     val resumed = runToSink(ch.readStreamV2(weak = true).select("id"))
     assert(spark.table(resumed).as[Int].collect().toSeq == Seq(1, 2),
       "weak reader must resume past the committed batch in order")
@@ -320,10 +320,10 @@ class Dsv2ChannelSuite extends SparkSpec {
     val ch = reg.create("s6", schema)
     ch.write(Seq((1, "a")).toDF("id", "msg"), 1)
     // no leftover markers after successful writes
-    assert(Channel.resSeqs(ch.dir).isEmpty)
+    assert(TopicListing.of(ch.dir).reservations.isEmpty)
     // simulate an in-flight concurrent writer that reserved the next seq
     // but has not committed its batch dir yet
-    val next = Channel.reserveSeq(ch.dir)
+    val next = Channel.reserveSeq(TopicListing.of(ch.dir))
     ch.write(Seq((2, "b")).toDF("id", "msg"), 2) // lands BEYOND the reservation
 
     // weak readers skip evicted/aborted HOLES, but a LIVE reservation is
@@ -360,10 +360,10 @@ class Dsv2ChannelSuite extends SparkSpec {
     assert(spark.table(weakResumed).as[Int].collect().sorted.toSeq == Seq(1, 2),
       "weak reader did not resume after the reservation aborted")
     // compact() sweeps stale markers (crashed writers)
-    Channel.reserveSeq(ch.dir)
+    Channel.reserveSeq(TopicListing.of(ch.dir))
     ch.write(Seq((3, "c")).toDF("id", "msg"), 1)
     ch.compact()
-    assert(Channel.resSeqs(ch.dir).isEmpty, "compact left stale reservations")
+    assert(TopicListing.of(ch.dir).reservations.isEmpty, "compact left stale reservations")
   }
 
   test("weak advance never spans a reservation whose batch dir does not exist yet") {
@@ -378,7 +378,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
     val ch = reg.create("s6b", schema)
     ch.write(Seq((1, "a")).toDF("id", "msg"), 1)
-    val rival = Channel.reserveSeq(ch.dir) // marker only; dir not created yet
+    val rival = Channel.reserveSeq(TopicListing.of(ch.dir)) // marker only; dir not created yet
     ch.write(Seq((3, "c")).toDF("id", "msg"), 1) // faster writer commits beyond
     // the published weak end deliberately spans the window (weak ends
     // ignore reservations so stalled writers can't regress the cursor)
@@ -398,8 +398,8 @@ class Dsv2ChannelSuite extends SparkSpec {
       .withColumn(Channel.OffsetCol, monotonically_increasing_id())
       .coalesce(1).write.parquet(stage.toString)
     Files.move(stage, ch.dir.resolve(f"batch_$rival%012d" + "_w9_rival"))
-    Files.delete(ch.dir.resolve(f"${Channel.ResPrefix}$rival%012d"))
-    Channel.advanceHead(ch.dir)
+    Files.delete(TopicListing.resPath(ch.dir, rival))
+    Channel.advanceHead(TopicListing.of(ch.dir))
 
     val resumed = runToSink(ch.readStreamV2(weak = true).select("id"))
     assert(spark.table(resumed).as[Int].collect().toSeq == Seq(1, 2, 3),
@@ -446,11 +446,11 @@ class Dsv2ChannelSuite extends SparkSpec {
     val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
     val ch = reg.create("s6d", schema)
     ch.write(Seq((1, "a")).toDF("id", "msg"), 1)
-    val rival = Channel.reserveSeq(ch.dir) // crashed writer: marker only
+    val rival = Channel.reserveSeq(TopicListing.of(ch.dir)) // crashed writer: marker only
     ch.write(Seq((2, "b")).toDF("id", "msg"), 1) // commits beyond it
     // the marker is genuinely stale (the sweep's cutoff must pass it);
     // the CLAMP persistence gate is what the wait below exercises
-    Files.setLastModifiedTime(ch.dir.resolve(f"${Channel.ResPrefix}$rival%012d"),
+    Files.setLastModifiedTime(TopicListing.resPath(ch.dir, rival),
       java.nio.file.attribute.FileTime.fromMillis(1L))
 
     sinkN += 1
@@ -474,8 +474,8 @@ class Dsv2ChannelSuite extends SparkSpec {
         Thread.sleep(100)
       assert(spark.table(name).as[Int].collect().sorted.toSeq == Seq(1, 2),
         "weak-only subscriber never self-healed the stale clamp")
-      assert(Channel.resSeqs(ch.dir).isEmpty, "stale marker survived the self-sweep")
-      assert(Channel.abortSeqs(ch.dir).contains(rival),
+      assert(TopicListing.of(ch.dir).reservations.isEmpty, "stale marker survived the self-sweep")
+      assert(TopicListing.of(ch.dir).aborts.contains(rival),
         "swept seq must be tombstoned, not a trace-free gap")
     } finally q.stop()
   }
@@ -483,8 +483,8 @@ class Dsv2ChannelSuite extends SparkSpec {
   test("reserved seqs are distinct and monotone across interleaved writers") {
     val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
     val ch = reg.create("s7", schema)
-    val r1 = Channel.reserveSeq(ch.dir)
-    val r2 = Channel.reserveSeq(ch.dir) // second reservation must not collide
+    val r1 = Channel.reserveSeq(TopicListing.of(ch.dir))
+    val r2 = Channel.reserveSeq(TopicListing.of(ch.dir)) // second reservation must not collide
     assert(r2 == r1 + 1)
     ch.write(Seq((1, "a")).toDF("id", "msg"), 1) // skips both reservations
     val seqs = ch.read().select(Channel.SeqCol).as[Long].collect().toSeq
@@ -526,7 +526,7 @@ class Dsv2ChannelSuite extends SparkSpec {
       Files.createDirectories(d)
       Files.createFile(d.resolve("_SUCCESS"))
     }
-    Channel.advanceHead(ch.dir)
+    Channel.advanceHead(TopicListing.of(ch.dir))
     assert(Channel.readHead(ch.dir).contains((10001L, 10001L)))
 
     val stream = new graft.sources.ChannelMicroBatchStream(ch.dir,
@@ -542,6 +542,30 @@ class Dsv2ChannelSuite extends SparkSpec {
     }
     assert(Channel.listDirCalls.get() == before,
       s"idle triggers listed the topic dir ${Channel.listDirCalls.get() - before} times")
+  }
+
+  test("a strict non-idle trigger lists the topic once; a weak one twice") {
+    val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
+    val ch = reg.create("s_lists", schema)
+    val k = 5
+    (0 until k).foreach(i => ch.write(Seq((i, "x")).toDF("id", "msg"), 1))
+    // strict: planning's one listing; weak: the in-flight clamp's listing
+    // in latestOffset, then planning's. Reading the k batch dirs' files
+    // lists those dirs, not the topic.
+    Seq(false -> 1L, true -> 2L).foreach { case (weak, want) =>
+      val stream = new graft.sources.ChannelMicroBatchStream(ch.dir,
+        null, weak = weak, startLatest = false, startSeq = Some(0L), maxBatches = None)
+      val start = stream.initialOffset()
+      val before = Channel.listDirCalls.get()
+      val end = stream.latestOffset(start,
+        org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
+      stream.reportLatestOffset()
+      val parts = stream.planInputPartitions(start, end)
+      val listed = Channel.listDirCalls.get() - before
+      assert(end.asInstanceOf[graft.sources.ChannelSeqOffset].seq == k && parts.length == k)
+      assert(listed == want,
+        s"a ${if (weak) "weak" else "strict"} trigger over $k batches listed the topic $listed times")
+    }
   }
 
   test("strong subscription survives a compaction boundary (benign compact seq)") {
