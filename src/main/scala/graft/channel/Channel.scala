@@ -885,10 +885,10 @@ final class ChannelRegistry(spark: SparkSession, root: Path) {
     val dir = root.resolve(name)
     require(!Files.exists(dir), s"channel '$name' already exists")
     Files.createDirectories(dir)
-    val h = SchemaRegistry.hash(schema)
-    Files.writeString(dir.resolve("_SCHEMA"), schema.json + "\n" + h + "\n" +
-      s"$capacityBytes\n$dropMode\n$partitions")
-    new Channel(spark, name, dir, schema, h, capacityBytes, dropMode, partitions)
+    val m = TopicListing.TopicMeta(schema, SchemaRegistry.hash(schema), capacityBytes,
+      dropMode, partitions)
+    TopicListing.writeMeta(dir, m)
+    open(name, m)
   }
 
   /** Race-free attach-or-create: concurrent first users of a topic must
@@ -903,17 +903,13 @@ final class ChannelRegistry(spark: SparkSession, root: Path) {
 
   /** Attach to an existing channel; schema metadata is reloaded from disk
     * (share/attach parity, reference drivers/channel.rs:265-329). */
-  def get(name: String): Channel = {
-    val dir = root.resolve(name)
-    require(Files.exists(dir.resolve("_SCHEMA")), s"no such channel: $name")
-    val Array(json, h, cap, drop, parts) =
-      Files.readString(dir.resolve("_SCHEMA")).split("\n")
-    new Channel(spark, name, dir,
-      org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType],
-      h, cap.toLong, drop.toBoolean, parts.toInt)
-  }
+  def get(name: String): Channel = open(name, TopicListing.readMeta(root.resolve(name)))
 
-  def exists(name: String): Boolean = Files.exists(root.resolve(name).resolve("_SCHEMA"))
+  private def open(name: String, m: TopicListing.TopicMeta): Channel =
+    new Channel(spark, name, root.resolve(name), m.schema, m.hash, m.capacityBytes,
+      m.dropMode, m.partitions)
+
+  def exists(name: String): Boolean = TopicListing.isTopic(root.resolve(name))
 
   /** Glob listing (Atlas lookup(pattern) parity). */
   def list(glob: String = "*"): Seq[String] = {
@@ -922,7 +918,7 @@ final class ChannelRegistry(spark: SparkSession, root: Path) {
     else {
       val s = Files.list(root)
       try s.iterator().asScala
-        .filter(p => Files.exists(p.resolve("_SCHEMA")))
+        .filter(TopicListing.isTopic)
         .map(_.getFileName.toString)
         .filter(n => matcher.matches(Paths.get(n)))
         .toSeq.sorted

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path}
 import scala.collection.immutable.SortedSet
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.types.{DataType, StructType}
+
 /** One listing of a topic directory, every entry name parsed once — the
   * one owner of the directory's grammar (`<seq>` is a 12-digit
   * zero-padded sequence number):
@@ -23,7 +25,9 @@ import scala.jdk.CollectionConverters._
   *  - `_abort_<seq>`: a tombstone — `<seq>` was claimed and holds no data.
   *  - `_rdr_<reader>`: a registered reader's head (its next unread seq).
   *  - `_DRAINED`, `_TERMINATED`: the lifecycle flags.
-  *  - `_SCHEMA`, `_HEAD` (the published `strict weak` cursor), `_PRUNED`
+  *  - `_SCHEMA`: the topic's settings ([[TopicMeta]]); a dir holding it
+  *    is a topic.
+  *  - `_HEAD` (the published `strict weak` cursor), `_PRUNED`
   *    (the pruned floor), and the marker writers' `*.tmp` and `*.lock`
   *    files carry no seq.
   *
@@ -118,6 +122,26 @@ private[graft] object TopicListing {
   private[channel] val DrainedFlag = "_DRAINED"
   private[channel] val TerminatedFlag = "_TERMINATED"
   private val EpochTag = """w\d+_e\d+""".r
+  private val SchemaFile = "_SCHEMA"
+
+  /** A topic's `_SCHEMA` file: the schema's JSON, its
+    * [[SchemaRegistry.hash]], the capacity in bytes, the drop mode and
+    * the partition count, one per line. */
+  final case class TopicMeta(schema: StructType, hash: String, capacityBytes: Long,
+                             dropMode: Boolean, partitions: Int)
+
+  def isTopic(dir: Path): Boolean = Files.exists(dir.resolve(SchemaFile))
+
+  def writeMeta(dir: Path, m: TopicMeta): Unit =
+    Files.writeString(dir.resolve(SchemaFile), Seq(m.schema.json, m.hash,
+      m.capacityBytes, m.dropMode, m.partitions).mkString("\n"))
+
+  def readMeta(dir: Path): TopicMeta = {
+    require(isTopic(dir), s"not a channel topic (no $SchemaFile): $dir")
+    val Array(json, h, cap, drop, parts) = Files.readString(dir.resolve(SchemaFile)).split("\n")
+    TopicMeta(DataType.fromJson(json).asInstanceOf[StructType], h, cap.toLong,
+      drop.toBoolean, parts.toInt)
+  }
 
   /** A `batch_*` or `compact_*` dir. `tag` is a batch dir's
     * `w<writer>_<unique>` suffix, empty for a compact dir. */

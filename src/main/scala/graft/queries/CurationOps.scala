@@ -1425,10 +1425,8 @@ object CurationOps {
             .groupBy($("h")).agg(count(lit(1)).as("dfp")),
           s"$out/dfs", id)
       } { out =>
-        val paras = s.read.option("recursiveFileLookup", "true")
-          .parquet(s"$out/paras")
-        val dfc = s.read.option("recursiveFileLookup", "true")
-          .parquet(s"$out/dfs")
+        val paras = Staging.readBatches(s, s"$out/paras")
+        val dfc = Staging.readBatches(s, s"$out/dfs")
           .groupBy($("h")).agg(sum($("dfp")).as("dfd"))
         // localize: the ledger dirs die with the temp dir, the ≤corpus
         // answer is doc-scale (same close-out as q_stream_bm25)
@@ -1548,8 +1546,7 @@ object CurationOps {
           // store itself is the compact-able dedup ledger at scale)
           val seenMin =
             if (seenDir.exists)
-              s.read.option("recursiveFileLookup", "true")
-                .parquet(seenDir.toString)
+              Staging.readBatches(s, seenDir.toString)
                 // per-trigger batch-sized broadcast; at very large
                 // triggers drop the hint → shuffled semi-join
                 .join(broadcast(batchMin.select($("h"))), Seq("h"), "left_semi")

@@ -1123,12 +1123,7 @@ object DedupOps {
         |  TRUE AS sketch_ok
         |FROM p JOIN n na ON p.src_a = na.source JOIN n nb ON p.src_b = nb.source
         |ORDER BY src_a, src_b""".stripMargin) { (s, d) =>
-      // localCheckpoint, not persist/unpersist (r19): the construct-time
-      // unpersist ran before the caller's terminal action, so only the
-      // sketch collect below was ever served from cache — the RETURNED
-      // plan re-derived the scan→explode→distinct subtree for each of
-      // its three uses (n + both join legs). Materialized once; blocks
-      // reclaimed with the result (guide §3.3/§5).
+      // checkpointed (see Artifacts): n and both join legs of the returned plan read it
       val sh = Tables.spread(Tables.documents(s, d), col("doc_id"))
         .select(col("source"),
           explode(TextFunctions.shingleHashes(col("text"), 3)).as("s"))
@@ -1242,15 +1237,7 @@ object DedupOps {
           array_join(slice(TextFunctions.tokens(col("text")), lit(1),
             greatest(lit(3), expr("size(split(text, ' ')) div 2"))), " ")
             .as("text"))
-      // localCheckpoint, not persist/unpersist (r19): the construct-time
-      // unpersist ran before the caller's terminal action, so the shared
-      // shingle relation was never actually served from cache — the
-      // executed plan carried FOUR copies of the scan→union→explode→
-      // distinct subtree (plans/r19/containment_dedup_before.txt: 8
-      // parquet scans). An eager localCheckpoint materializes it once
-      // inside the query (guide §3.3/§5: truncate and share a reused
-      // subtree); blocks are reclaimed by the ContextCleaner when the
-      // result is dropped, the repo's standing localCheckpoint posture.
+      // checkpointed (see Artifacts): the candidate groups and candidate-doc sets read it
       val sh = base.union(quotes)
         .select(col("doc_id"),
           explode(TextFunctions.shingleHashes(col("text"), 3)).as("s"))
@@ -1359,13 +1346,7 @@ object DedupOps {
         |  JOIN nm nb ON nb.doc_id = dot.doc_b
         |WHERE round(CAST(dot AS DOUBLE) / (na.nrm * nb.nrm), 6) >= 0.5
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-      // localCheckpoint, not persist/unpersist (r19): the construct-time
-      // unpersist ran before the caller's terminal action, so neither
-      // "cached" relation was ever served from cache — the executed plan
-      // re-derived the tf and weight subtrees per use
-      // (plans/r19/allpairs_sim_before.txt). Materialize each shared
-      // subtree once (guide §3.3/§5), blocks reclaimed by the
-      // ContextCleaner with the result.
+      // checkpointed (see Artifacts): the df counts, candidates and weights read it
       val sh = Tables.spread(Tables.documents(s, d), col("doc_id"))
         .select(col("doc_id"),
           explode(TextFunctions.shingleHashes(col("text"), 3)).as("s"))

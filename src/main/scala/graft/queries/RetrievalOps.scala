@@ -409,10 +409,8 @@ object RetrievalOps {
           .agg(count(lit(1)).as("tf")),
           s"$out/postings", id)
       } { out =>
-        val doclens = s.read.option("recursiveFileLookup", "true")
-          .parquet(s"$out/doclens")
-        val postings = s.read.option("recursiveFileLookup", "true")
-          .parquet(s"$out/postings")
+        val doclens = Staging.readBatches(s, s"$out/doclens")
+        val postings = Staging.readBatches(s, s"$out/postings")
         val Row(avgdl: Double, nDocs: Long) = doclens
           .agg((sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
             count(lit(1)).as("n"))

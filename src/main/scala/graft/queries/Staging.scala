@@ -190,7 +190,7 @@ private[queries] object Staging {
     * one row per entity the streaming query emitted. THE one copy of
     * the drain contract for the ledger form's finishing functions. */
   def drainParquet(s: SparkSession, dir: String, order: Column*): DataFrame = {
-    val read = s.read.option("recursiveFileLookup", "true").parquet(dir)
+    val read = readBatches(s, dir)
     val res = if (order.isEmpty) read else read.orderBy(order: _*)
     s.createDataFrame(res.collectAsList(), res.schema)
   }
@@ -199,8 +199,13 @@ private[queries] object Staging {
     * its own deterministic subdirectory, so a batch replayed after a
     * failure/restart rewrites the same files instead of appending
     * duplicates (plain `mode("append")` is not idempotent under
-    * foreachBatch's at-least-once contract). [[drainParquet]] reads the
-    * subdirectories back recursively. */
+    * foreachBatch's at-least-once contract). [[readBatches]] reads the
+    * subdirectories back. */
   def writeBatch(df: DataFrame, dir: String, batchId: Long): Unit =
     df.write.mode("overwrite").parquet(s"$dir/b$batchId")
+
+  /** Every batch [[writeBatch]] wrote under `dir`, as one parquet scan:
+    * the one reader of a staged ledger. */
+  def readBatches(s: SparkSession, dir: String): DataFrame =
+    s.read.option("recursiveFileLookup", "true").parquet(dir)
 }

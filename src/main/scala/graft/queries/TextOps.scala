@@ -820,11 +820,7 @@ object TextOps {
         |  round((n*sxy - sx*sy) * (n*sxy - sx*sy)
         |    / ((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) AS r2
         |FROM sums CROSS JOIN v""".stripMargin) { (s, d) =>
-      // localCheckpoint, not cache/unpersist (r19): the construct-time
-      // unpersist ran before the caller's terminal action, so the
-      // returned plan re-ran the corpus token groupBy after nVocab's
-      // count already had. Materialized once; blocks reclaimed with the
-      // result (guide §3.3/§5).
+      // checkpointed (see Artifacts): nVocab's count and the returned ranking read it
       val tf = Tables.documents(s, d)
         .select(explode(TextFunctions.tokens(col("text"))).as("word"))
         .filter(col("word") =!= "")

@@ -1202,8 +1202,7 @@ object VectorOps {
             col("vec_id").as("nbr"), unitNorm(col("v")).as("vbn")),
             s"$out/postings", id)
         } { out =>
-          val postings = s.read.option("recursiveFileLookup", "true")
-            .parquet(s"$out/postings")
+          val postings = Staging.readBatches(s, s"$out/postings")
           val probes = e.filter(col("vec_id") < 100)
             .select(col("vec_id").as("src"), col("v").as("va"))
           val probed = probes.withColumn("probe_cells",
@@ -1352,10 +1351,8 @@ object VectorOps {
           if (mon == null) mon = new DriftMonitorState(s, centroids, out)
           mon.tick(batch, id)
         } { out =>
-          val verdicts = s.read.option("recursiveFileLookup", "true")
-            .parquet(s"$out/verdicts")
-          val postings = s.read.option("recursiveFileLookup", "true")
-            .parquet(s"$out/postings")
+          val verdicts = Staging.readBatches(s, s"$out/verdicts")
+          val postings = Staging.readBatches(s, s"$out/postings")
           // the ORACLED verdict pools hits across triggers: a 12-probe
           // single trigger puts the trip threshold inside small-sample
           // noise (observed per-trigger minima 7-11/12 across SFs and

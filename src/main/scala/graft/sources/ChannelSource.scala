@@ -12,11 +12,10 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
-import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.channel.{Channel, TopicListing}
 
@@ -72,19 +71,24 @@ import graft.channel.{Channel, TopicListing}
   * directory's grammar is stated in [[TopicListing]]; every planning step
   * takes one fresh listing of it.
   *
-  * Scale: batch scans bin-pack parquet files into input partitions by
-  * `spark.sql.files.maxPartitionBytes`, so a long-lived topic with
-  * thousands of micro-batch files plans a bounded task count instead of
-  * one task per tiny file. Files are packed in seq order, so a
-  * single-partition topic's batch scan returns rows in its total
-  * `(_seq, _writer_id, _offset)` order with no sort in the plan.
+  * Scale: every scan — batch, snapshot and micro-batch — is planned by
+  * [[ChannelSource.planFiles]] with the policy of Spark's own file scans
+  * (`FilePartition`): whole files, each charged
+  * `spark.sql.files.openCostInBytes`, packed up to a split size that
+  * spreads the scan over the session's parallelism
+  * (`spark.sql.files.minPartitionNum`) and never exceeds
+  * `spark.sql.files.maxPartitionBytes`. A topic of thousands of tiny
+  * batch files plans about one task per core, not one per file, and a
+  * small scan is still spread across cores. Files are packed in seq
+  * order, so a single-partition topic's batch scan returns rows in its
+  * total `(_seq, _writer_id, _offset)` order with no sort in the plan.
   */
 final class ChannelSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-channel"
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Channel.withWriterId(ChannelSource.storedSchema(ChannelSource.topicDir(options)))
+    Channel.withWriterId(TopicListing.readMeta(ChannelSource.topicDir(options)).schema)
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
@@ -98,11 +102,17 @@ private[graft] object ChannelSource {
     Paths.get(p)
   }
 
-  def storedSchema(dir: Path): StructType = {
-    val meta = dir.resolve("_SCHEMA")
-    require(Files.exists(meta), s"not a channel topic (no _SCHEMA): $dir")
-    org.apache.spark.sql.types.DataType
-      .fromJson(Files.readString(meta).split("\n")(0)).asInstanceOf[StructType]
+  /** The one scan planner: the parquet files of `dataDirs`, in the given
+    * (seq) order, packed into input partitions exactly as Spark packs a
+    * native parquet scan — whole files, `FilePartition.maxSplitBytes` over
+    * the files' lengths plus one open cost each, then
+    * `FilePartition.getFilePartitions`, which keeps the file order. */
+  def planFiles(spark: SparkSession, dataDirs: Seq[Path]): Array[InputPartition] = {
+    val files = dataDirs.flatMap(TopicListing.dataFiles).map(p =>
+      PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p.toString), 0, Files.size(p)))
+    val openCost = GraftSqlBridge.sqlConf(spark).filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark, files.map(_.length + openCost).sum)
+    FilePartition.getFilePartitions(spark, files, maxSplit).toArray
   }
 }
 
@@ -209,17 +219,13 @@ final class ChannelScan(spark: SparkSession, dataSchema: StructType,
       // `Channel.read` needs no logical sort (which would keep the
       // metadata columns in the scan under an aggregate: column pruning
       // runs before sort elimination).
-      val files = batches.flatMap(d => TopicListing.dataFiles(d.path))
-        .map(p => FileSlice(p.toString, Files.size(p)))
-      ChannelScan.binPack(files,
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")))
+      ChannelSource.planFiles(spark, batches.map(_.path))
     }
     override def createReaderFactory(): PartitionReaderFactory = factory()
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new ChannelMicroBatchStream(dir, factory(),
+    new ChannelMicroBatchStream(spark, dir, factory(),
       weak = options.getBoolean("weak", false),
       startLatest = Option(options.get("startingOffsets")).exists(_.equalsIgnoreCase("latest")),
       startSeq = Option(options.get("startingSeq")).map(_.toLong),
@@ -228,48 +234,14 @@ final class ChannelScan(spark: SparkSession, dataSchema: StructType,
         .getOrElse(600000L))
 }
 
-private[graft] object ChannelScan {
-  /** First-fit bin-packing of whole files into partitions of ≤ target
-    * bytes (files ordered by batch seq, so each partition stays roughly
-    * offset-contiguous). One oversized file still gets its own partition —
-    * parquet row groups inside it are skipped via pushed filters. */
-  def binPack(files: Seq[FileSlice], target: Long): Array[InputPartition] = {
-    val parts = Seq.newBuilder[ChannelInputPartition]
-    var cur = Vector.empty[FileSlice]
-    var bytes = 0L
-    for (f <- files) {
-      if (cur.nonEmpty && bytes + f.length > target) {
-        parts += ChannelInputPartition(cur); cur = Vector.empty; bytes = 0L
-      }
-      cur :+= f; bytes += f.length
-    }
-    if (cur.nonEmpty) parts += ChannelInputPartition(cur)
-    parts.result().toArray
-  }
-}
-
-final case class FileSlice(path: String, length: Long)
-
-final case class ChannelInputPartition(files: Seq[FileSlice]) extends InputPartition
-
+/** Reads a planned [[FilePartition]]'s files in order through Spark's
+  * parquet reader, which yields rows (`returning_batch` is pinned false). */
 final class ChannelReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val files = partition.asInstanceOf[ChannelInputPartition].files
+    val rows = partition.asInstanceOf[FilePartition].files.iterator.flatMap(readFunc)
     new PartitionReader[InternalRow] {
-      private val rows: Iterator[InternalRow] = files.iterator.flatMap { f =>
-        readFunc(PartitionedFile(
-          InternalRow.empty, SparkPath.fromPathString(f.path), 0, f.length))
-      }.flatMap { r =>
-        // returning_batch is pinned false, but stay defensive about the
-        // cast-smuggled ColumnarBatch the parquet reader CAN emit (the
-        // static element type is InternalRow, hence the Any indirection)
-        (r: Any) match {
-          case b: ColumnarBatch => b.rowIterator().asScala
-          case row: org.apache.spark.sql.catalyst.InternalRow => Iterator.single(row)
-        }
-      }
       private var current: InternalRow = _
       override def next(): Boolean =
         if (rows.hasNext) { current = rows.next(); true } else false
@@ -291,7 +263,8 @@ final case class ChannelDataLoss(dir: String, missing: Seq[Long])
       s"channel '$dir' lost seq(s) ${missing.mkString(",")} (evicted by Drop-mode " +
         "capacity or compacted mid-subscription); use weak=true to skip ahead")
 
-final class ChannelMicroBatchStream(dir: Path, factory: PartitionReaderFactory,
+final class ChannelMicroBatchStream(spark: SparkSession, dir: Path,
+                                    factory: PartitionReaderFactory,
                                     weak: Boolean, startLatest: Boolean,
                                     startSeq: Option[Long],
                                     maxBatches: Option[Int],
@@ -433,9 +406,7 @@ final class ChannelMicroBatchStream(dir: Path, factory: PartitionReaderFactory,
         have(x) || listing.aborts(x) || listing.compactSeqs(x))
       if (missing.nonEmpty) throw ChannelDataLoss(dir.toString, missing)
     }
-    planned.flatMap(_._2).flatMap(TopicListing.dataFiles)
-      .map(p => ChannelInputPartition(Seq(FileSlice(p.toString, Files.size(p)))))
-      .toArray
+    ChannelSource.planFiles(spark, planned.flatMap(_._2))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = factory

@@ -28,6 +28,10 @@ object GraftSqlBridge {
   def newHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 
+  /** The session's SQL configuration, typed. */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
   /** EAGER Column → Expression conversion. `toExpression` can return a
     * lazy wrapper still holding `sql.internal` ColumnNodes — fine inside
     * Spark's own operators, but not serializable into task closures of

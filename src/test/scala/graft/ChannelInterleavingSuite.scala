@@ -33,7 +33,7 @@ class ChannelInterleavingSuite extends SparkSpec {
     * path, driven directly so the clamp logic is model-checked at every
     * interleaving point. */
   private def offeredWeakEnd(dir: Path): Long = {
-    val stream = new graft.sources.ChannelMicroBatchStream(dir, null,
+    val stream = new graft.sources.ChannelMicroBatchStream(spark, dir, null,
       weak = true, startLatest = false, startSeq = None, maxBatches = None)
     stream.latestOffset(graft.sources.ChannelSeqOffset(0L),
         org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
@@ -248,7 +248,7 @@ class ChannelInterleavingSuite extends SparkSpec {
       }
       // a strict plan over the full strict range must not raise loss —
       // every hole in it is a tombstone the planner knows is benign
-      val stream = new graft.sources.ChannelMicroBatchStream(dir, null,
+      val stream = new graft.sources.ChannelMicroBatchStream(spark, dir, null,
         weak = false, startLatest = false, startSeq = None, maxBatches = None)
       stream.planInputPartitions(graft.sources.ChannelSeqOffset(0L),
         graft.sources.ChannelSeqOffset(strict)) // throws ChannelDataLoss on a bad hole

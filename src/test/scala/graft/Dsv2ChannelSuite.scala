@@ -3,8 +3,8 @@ package graft
 import java.nio.file.Files
 
 import graft.channel.{Channel, ChannelRegistry, TopicListing}
-import graft.sources.{ChannelScan, ChannelSource, FileSlice}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
@@ -529,7 +529,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     Channel.advanceHead(TopicListing.of(ch.dir))
     assert(Channel.readHead(ch.dir).contains((10001L, 10001L)))
 
-    val stream = new graft.sources.ChannelMicroBatchStream(ch.dir,
+    val stream = new graft.sources.ChannelMicroBatchStream(spark, ch.dir,
       null, weak = false, startLatest = false, startSeq = None, maxBatches = None)
     val start = stream.initialOffset() // may list (once, at query start)
     val before = Channel.listDirCalls.get()
@@ -553,7 +553,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     // in latestOffset, then planning's. Reading the k batch dirs' files
     // lists those dirs, not the topic.
     Seq(false -> 1L, true -> 2L).foreach { case (weak, want) =>
-      val stream = new graft.sources.ChannelMicroBatchStream(ch.dir,
+      val stream = new graft.sources.ChannelMicroBatchStream(spark, ch.dir,
         null, weak = weak, startLatest = false, startSeq = Some(0L), maxBatches = None)
       val start = stream.initialOffset()
       val before = Channel.listDirCalls.get()
@@ -562,7 +562,9 @@ class Dsv2ChannelSuite extends SparkSpec {
       stream.reportLatestOffset()
       val parts = stream.planInputPartitions(start, end)
       val listed = Channel.listDirCalls.get() - before
-      assert(end.asInstanceOf[graft.sources.ChannelSeqOffset].seq == k && parts.length == k)
+      // 5 files of about one open cost each, spread over local[4]: a split
+      // of 5/4 open costs holds 2 files, so 3 partitions
+      assert(end.asInstanceOf[graft.sources.ChannelSeqOffset].seq == k && parts.length == 3)
       assert(listed == want,
         s"a ${if (weak) "weak" else "strict"} trigger over $k batches listed the topic $listed times")
     }
@@ -592,12 +594,45 @@ class Dsv2ChannelSuite extends SparkSpec {
     } finally q.stop()
   }
 
-  test("binPack groups small files and isolates oversized ones") {
-    def f(n: String, len: Long) = FileSlice(n, len)
-    val parts = ChannelScan.binPack(
-      Seq(f("a", 40), f("b", 40), f("c", 40), f("d", 500), f("e", 10)), target = 100)
-    val grouped = parts.map(_.asInstanceOf[graft.sources.ChannelInputPartition]
-      .files.map(_.path).toSeq).toSeq
-    assert(grouped == Seq(Seq("a", "b"), Seq("c"), Seq("d"), Seq("e")))
+  test("a micro-batch over many tiny batches plans at most one partition per core") {
+    val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
+    val ch = reg.create("s_width", schema)
+    val k = 20
+    (0 until k).foreach(i => ch.write(Seq((i, "x")).toDF("id", "msg"), 1))
+    val stream = new graft.sources.ChannelMicroBatchStream(spark, ch.dir,
+      null, weak = false, startLatest = false, startSeq = Some(0L), maxBatches = None)
+    val parts = stream.planInputPartitions(graft.sources.ChannelSeqOffset(0L),
+      graft.sources.ChannelSeqOffset(k))
+    assert(parts.length <= spark.sparkContext.defaultParallelism,
+      s"a trigger over $k tiny batches planned ${parts.length} partitions")
+    // every batch's file, in seq order
+    assert(parts.toSeq.flatMap(_.asInstanceOf[FilePartition].files.map(_.toPath.getParent.getName))
+      == TopicListing.of(ch.dir).batches.map(_._2.head.getFileName.toString))
+  }
+
+  test("a batch scan of a many-batch topic packs files up to maxPartitionBytes, in order") {
+    val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
+    val ch = reg.create("b_width", schema)
+    val k = 12
+    (0 until k).foreach(i => ch.write(Seq((2 * i, "a"), (2 * i + 1, "b")).toDF("id", "msg"), i % 3))
+    val openCost = GraftSqlBridge.sqlConf(spark).filesOpenCostInBytes
+    val maxBytes = 2 * openCost
+    val cost = TopicListing.of(ch.dir).live
+      .flatMap(d => TopicListing.dataFiles(d.path)).map(Files.size(_) + openCost).sum
+    val prior = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", maxBytes.toString)
+    try {
+      val df = ch.read()
+      val n = df.rdd.getNumPartitions
+      assert(n > 1 && n <= (cost + maxBytes - 1) / maxBytes,
+        s"$k batches (cost $cost B) planned $n partitions at maxPartitionBytes=$maxBytes")
+      val key = Seq(Channel.SeqCol, Channel.WriterIdCol, Channel.OffsetCol)
+      val rows = df.select("id", key: _*).collect().toSeq
+      assert(rows.map(_.getInt(0)) == (0 until 2 * k))
+      assert(rows.map(r => (r.getLong(1), r.getInt(2), r.getLong(3))) ==
+        rows.map(r => (r.getLong(1), r.getInt(2), r.getLong(3))).sorted)
+      assert(df.queryExecution.optimizedPlan.collectFirst {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s }.isEmpty)
+    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prior)
   }
 }

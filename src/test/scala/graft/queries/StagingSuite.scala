@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -163,5 +165,12 @@ class StagingSuite extends graft.SparkSpec {
     } yield s"${f.getName}: $p"
     assert(files.exists(_.getName == "Staging.scala"))
     assert(hits.isEmpty, s"stream scaffolds outside Staging: ${hits.mkString("; ")}")
+    // a staged ledger is read back only through Staging.readBatches
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val recursive = try walk.iterator().asScala.toList
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Staging.scala")
+      .filter(p => java.nio.file.Files.readString(p).contains("\"recursiveFileLookup\""))
+      finally walk.close()
+    assert(recursive.isEmpty, s"recursiveFileLookup set outside Staging: ${recursive.mkString("; ")}")
   }
 }
