@@ -13,10 +13,15 @@ import org.apache.spark.sql.Column
   */
 object Tables {
 
-  /** Confs that must hold for correctness parity with the DuckDB oracle.
-    * All of these are runtime-settable (no session restart needed).
+  /** Confs that must hold for correctness parity with the DuckDB oracle,
+    * plus the spawn-free `file:` filesystem ([[graft.fs.LocalFs]]). All of
+    * these are runtime-settable (no session restart needed), so a session
+    * graft did not build gets them too: the filesystem keys flow into
+    * every `newHadoopConf()`, which Spark's offset log, commit log and
+    * state-store files open their FileContext from.
     */
   def ensureConf(spark: SparkSession): Unit = {
+    graft.fs.LocalFs.applyTo(spark.conf.set)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // events.parquet stores INT64 TIMESTAMP(NANOS); Spark has no ns
     // timestamp type and rejects the file outright. Reading the raw
@@ -33,7 +38,9 @@ object Tables {
     * `SPARK_GRAFT_CPUS` (default: the host's available processors),
     * shuffle width n, UI off, plus [[ensureConf]]. A `spark.master` Spark
     * was already given (spark-submit `--master`, `-Dspark.master`) wins —
-    * the master is a deployment setting, not a per-main choice. */
+    * the master is a deployment setting, not a per-main choice. The
+    * filesystem keys also go in as `spark.hadoop.*`, so the JVM-wide
+    * cached `file:` FileSystem is the spawn-free one from the start. */
   def localSession(): SparkSession = {
     val n = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
@@ -48,6 +55,7 @@ object Tables {
       // fresh JIT — cpu inflation with flat gc. Sized to hold the whole
       // session's stages.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+    graft.fs.LocalFs.applyTo((k, v) => builder.config(s"spark.hadoop.$k", v))
     if (!sys.props.contains("spark.master")) builder.master(s"local[$n]")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -74,8 +75,8 @@ final class Channel private[channel] (
     * mode: evicts oldest batches to make room and records dropped bytes.
     *
     * Two write paths, one on-disk result. Rows already on the driver
-    * (`df`'s plan is a `LocalRelation`: ingress flushes, publishes built
-    * from a local `Seq`) are written by the driver with Spark's parquet
+    * (`df`'s plan is a `LocalRelation`: publishes built from a local
+    * `Seq`) are written by the driver with Spark's parquet
     * writer and run no Spark job ([[LocalAppend]]); any other DataFrame
     * is written by a Spark job through the Hadoop committer.
     *
@@ -92,10 +93,19 @@ final class Channel private[channel] (
     * topic (other JVMs included) always land on distinct seqs and can
     * never clobber each other; the batch directory name additionally
     * carries a per-write unique suffix. */
-  def write(df: DataFrame, writerId: Int): Unit =
-    // "u" prefix keeps a random hex suffix from ever parsing as an epoch
-    // marker (`_e<digits>`) in compact()'s _EPOCHS bookkeeping.
-    doWrite(df, writerId, "u" + java.util.UUID.randomUUID().toString.take(8))
+  def write(df: DataFrame, writerId: Int): Unit = doWrite(df, writerId, freshTag())
+
+  /** [[write]] for rows already serialized on the driver, laid out as
+    * `payload` (an ingress flush): the driver-local append without
+    * building a DataFrame around them. */
+  private[graft] def writeLocal(payload: StructType, rows: Seq[InternalRow], writerId: Int): Unit =
+    appendBatch(payload, writerId, freshTag()) { (target, seq) =>
+      LocalAppend.write(spark, target, payload, rows, writerId, seq)
+    }
+
+  // "u" prefix keeps a random hex suffix from ever parsing as an epoch
+  // marker (`_e<digits>`) in compact()'s _EPOCHS bookkeeping.
+  private def freshTag(): String = "u" + java.util.UUID.randomUUID().toString.take(8)
 
   /** Idempotent append keyed on (writerId, epochId): replaying the same
     * epoch (a restarted streaming sink re-running its last micro-batch)
@@ -119,13 +129,29 @@ final class Channel private[channel] (
     doWrite(df, writerId, s"e$epochId")
   }
 
-  private def doWrite(df: DataFrame, writerId: Int, unique: String): Unit = {
+  private def doWrite(df: DataFrame, writerId: Int, unique: String): Unit =
+    appendBatch(df.schema, writerId, unique) { (target, batch) =>
+      LocalAppend.rowsOf(df) match {
+        case Some(rows) => LocalAppend.write(spark, target, df.schema, rows, writerId, batch)
+        case None =>
+          df.withColumn(WriterIdCol, lit(writerId))
+            .withColumn(SeqCol, lit(batch))
+            .withColumn(OffsetCol, monotonically_increasing_id())
+            .coalesce(math.max(1, partitions))
+            .write.mode("errorifexists").parquet(target.toString)
+      }
+    }
+
+  /** The write protocol around `body`, which writes the batch dir it is
+    * given under the claimed seq. */
+  private def appendBatch(schema: StructType, writerId: Int, unique: String)(
+      body: (Path, Long) => Unit): Unit = {
     // The pre-claim listing serves the lifecycle flags, the park check and
     // the reservation floor.
     val pre = TopicListing.of(dir)
     if (pre.terminated) throw ChannelClosed(name, "terminated")
     if (pre.drained) throw ChannelClosed(name, "drained")
-    SchemaRegistry.check(name, schemaHash, df.schema)
+    SchemaRegistry.check(name, schemaHash, schema)
     // Park mode parks BEFORE accepting the frame (reference
     // messaging/src/writer.rs:166-199): a full channel must reject the
     // write without making it visible, or a retrying writer duplicates it.
@@ -147,15 +173,7 @@ final class Channel private[channel] (
     val batch = reserveSeq(pre)
     val target = TopicListing.batchPath(dir, batch, writerId, unique)
     try {
-      LocalAppend.rowsOf(df) match {
-        case Some(rows) => LocalAppend.write(spark, target, df.schema, rows, writerId, batch)
-        case None =>
-          df.withColumn(WriterIdCol, lit(writerId))
-            .withColumn(SeqCol, lit(batch))
-            .withColumn(OffsetCol, monotonically_increasing_id())
-            .coalesce(math.max(1, partitions))
-            .write.mode("errorifexists").parquet(target.toString)
-      }
+      body(target, batch)
       Files.deleteIfExists(TopicListing.resPath(dir, batch))
     } catch {
       // A failed write leaves no committed dir: tombstone the seq

@@ -2,6 +2,8 @@ package graft.channel
 
 import java.nio.file.Path
 
+import graft.fs.LocalFs
+
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -13,8 +15,9 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** The job-free append path of [[Channel.write]]: a batch whose rows are
-  * already on the driver (see [[rowsOf]] — every ingress flush, a
-  * `Switchboard` publish built from a local `Seq`) is written by the
+  * already on the driver (see [[rowsOf]] — a `Switchboard` publish built
+  * from a local `Seq`; an ingress flush hands its serialized rows to
+  * [[Channel.writeLocal]]) is written by the
   * driver itself with Spark's own parquet `OutputWriter`
   * (`ParquetFileFormat.prepareWrite`, the writer a write task uses),
   * through the session's Hadoop `FileSystem`. No Spark job, no output
@@ -28,7 +31,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * job path may write several; readers take any number. The part file is written under a hidden `_` name and
   * renamed into place, so a concurrent batch scan of the topic never
   * opens a half-written file. Thread-safe: every call builds its own
-  * Hadoop configuration, job and writer. */
+  * Hadoop configuration, job and writer. The configuration takes the
+  * spawn-free `file:` filesystem ([[LocalFs]]) past the JVM-wide
+  * FileSystem cache, which may hold a stock instance in a session graft
+  * did not build; the call closes the filesystem it opens. */
 private[channel] object LocalAppend {
 
   /** The rows of `df` when they are already on the driver: its plan is
@@ -56,11 +62,12 @@ private[channel] object LocalAppend {
       StructField(Channel.WriterIdCol, IntegerType, nullable = false),
       StructField(Channel.SeqCol, LongType, nullable = false),
       StructField(Channel.OffsetCol, LongType, nullable = false)))
-    val job = Job.getInstance(GraftSqlBridge.newHadoopConf(spark))
+    val conf = GraftSqlBridge.newHadoopConf(spark)
+    LocalFs.applyTo(conf.set, bypassCache = true)
+    val job = Job.getInstance(conf)
     val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
     val dir = new HPath(target.toUri)
-    val fs = dir.getFileSystem(job.getConfiguration)
     val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
     val hidden = new HPath(dir, "_" + name)
     val out = factory.newInstance(hidden.toString, schema, ctx)
@@ -76,8 +83,11 @@ private[channel] object LocalAppend {
         offset += 1
       }
     } finally out.close()
-    if (!fs.rename(hidden, new HPath(dir, name)))
-      throw new java.io.IOException(s"could not publish $name in $target")
-    fs.create(new HPath(dir, "_SUCCESS")).close()
+    val fs = dir.getFileSystem(job.getConfiguration)
+    try {
+      if (!fs.rename(hidden, new HPath(dir, name)))
+        throw new java.io.IOException(s"could not publish $name in $target")
+      fs.create(new HPath(dir, "_SUCCESS")).close()
+    } finally fs.close()
   }
 }

@@ -73,7 +73,8 @@ object HttpIngress {
     * `subsystem/net-hyper/src/tls.rs` + `examples/load-balancer-https/`);
     * build the context with [[Tls.sslContext]]. Everything behind the
     * handshake — record flow, reply policy, flush semantics — is
-    * identical to the plain listener. */
+    * identical to the plain listener. `spark` is unused (a flush
+    * appends through `channel`); it stays for existing callers. */
   def start(spark: SparkSession, channel: Channel, port: Int = 0,
             writerId: Int = 100, reply: Reply = AcceptAll,
             tls: Option[SSLContext] = None): Ingress = {
@@ -85,17 +86,16 @@ object HttpIngress {
         s
       case None => HttpServer.create(addr, 64)
     }
-    val ingress = new Ingress(spark, channel, server, writerId, reply)
+    val ingress = new Ingress(channel, server, writerId, reply)
     server.createContext("/", (exchange: HttpExchange) => ingress.handle(exchange))
     server.setExecutor(null) // serial: preserves arrival order like a channel
     server.start()
     ingress
   }
 
-  final class Ingress(spark: SparkSession, channel: Channel,
-                      server: HttpServer, writerId: Int,
+  final class Ingress(channel: Channel, server: HttpServer, writerId: Int,
                       reply: HttpIngress.Reply) {
-    private val buffer = new IngressBuffer[HttpRequest](spark, channel, writerId, enc)
+    private val buffer = new IngressBuffer[HttpRequest](channel, writerId, enc)
     private val ids = new AtomicLong(0)
 
     def port: Int = server.getAddress.getPort

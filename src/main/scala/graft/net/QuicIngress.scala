@@ -30,26 +30,27 @@ object QuicIngress {
     * accepted stream runs a server-side [[QuicTls]] handshake before the
     * request is read — the reference's TLS-native net-quinn contract at
     * the payload level; a stream whose handshake fails (untrusting or
-    * plaintext client) never reaches the channel. */
+    * plaintext client) never reaches the channel. `spark` is unused (a
+    * flush appends through `channel`); it stays for existing callers. */
   def start(spark: SparkSession, channel: Channel, domain: String,
             endpoint: QuicLite.QuicEndpoint = null, writerId: Int = 101,
             reply: Array[Byte] => Array[Byte] = _ => "accepted".getBytes("UTF-8"),
             tls: Option[javax.net.ssl.SSLContext] = None)
       : Ingress = {
     val ep = Option(endpoint).getOrElse(QuicLite.endpoint())
-    val ingress = new Ingress(spark, channel, ep, ep.bind(domain), writerId, reply,
+    val ingress = new Ingress(channel, ep, ep.bind(domain), writerId, reply,
       ownsEndpoint = endpoint == null, tls = tls)
     ingress.start()
     ingress
   }
 
-  final class Ingress(spark: SparkSession, channel: Channel,
+  final class Ingress(channel: Channel,
                       val endpoint: QuicLite.QuicEndpoint,
                       listener: QuicLite.ListenerHandle, writerId: Int,
                       reply: Array[Byte] => Array[Byte],
                       ownsEndpoint: Boolean,
                       tls: Option[javax.net.ssl.SSLContext] = None) {
-    private val buffer = new IngressBuffer[QuicRequest](spark, channel, writerId, enc)
+    private val buffer = new IngressBuffer[QuicRequest](channel, writerId, enc)
     private val ids = new AtomicLong(0)
     private val stopped = new AtomicBoolean(false)
 
