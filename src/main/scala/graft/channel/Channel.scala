@@ -1,6 +1,6 @@
 package graft.channel
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -82,14 +82,15 @@ final class Channel private[channel] (
     *
     * Capacity accounting does not walk the topic: the handle sizes each
     * committed batch dir once (committed dirs are immutable), so a write
-    * lists the topic's names three times — the pre-claim snapshot, the
-    * post-claim re-check and the post-commit listing — and sizes only its
-    * own batch (and dirs other handles committed since its last write).
+    * lists the topic's names twice — the claim's listing and the
+    * post-commit listing — and sizes only its own batch (and dirs other
+    * handles committed since its last write).
     *
     * Sequence allocation is slice-reservation parity
     * (messaging/src/lib.rs:491-519) adapted to shared directories: the
-    * sequence number is CLAIMED with an atomic `_res_` marker create
-    * (see [[Channel.reserveSeq]]) so independent handles on the same
+    * sequence number is CLAIMED in one critical section under the topic
+    * lock, which lists the topic and creates the seq's `_res_` marker
+    * (see [[Channel.reserveSeq]]), so independent handles on the same
     * topic (other JVMs included) always land on distinct seqs and can
     * never clobber each other; the batch directory name additionally
     * carries a per-write unique suffix. */
@@ -146,35 +147,34 @@ final class Channel private[channel] (
     * given under the claimed seq. */
   private def appendBatch(schema: StructType, writerId: Int, unique: String)(
       body: (Path, Long) => Unit): Unit = {
-    // The pre-claim listing serves the lifecycle flags, the park check and
-    // the reservation floor.
-    val pre = TopicListing.of(dir)
-    if (pre.terminated) throw ChannelClosed(name, "terminated")
-    if (pre.drained) throw ChannelClosed(name, "drained")
-    SchemaRegistry.check(name, schemaHash, schema)
-    // Park mode parks BEFORE accepting the frame (reference
-    // messaging/src/writer.rs:166-199): a full channel must reject the
-    // write without making it visible, or a retrying writer duplicates it.
-    // Synchronized with enforceCapacity so two same-handle writers can't
-    // both pass a nearly-full check. The names come from the directory
-    // (other handles/processes write the same topic, so it is the only
-    // source of truth); only the sizes of committed dirs are remembered.
-    if (!dropMode) synchronized {
-      val current = topicBytes(pre.live)
-      if (current >= capacityBytes) throw ChannelBackpressure(name, current, capacityBytes)
-    }
-    // The seq is claimed with an atomic `_res_` create, so concurrent
-    // writers (other JVMs included) land on DISTINCT seqs. The marker
-    // lives until the batch commits and a strict stream's visible end
-    // never passes it, so a late-visible lower seq cannot be skipped. A
-    // writer that crashes mid-write leaves its marker and parks strict
-    // streams until compact() or sweepStale clears it: blocked beats
-    // silently lossy.
-    val batch = reserveSeq(pre)
+    // The claim's one listing serves the lifecycle flags, the park check
+    // and the reservation floor. The seq is claimed under the topic lock,
+    // so concurrent writers (other JVMs included) land on DISTINCT seqs.
+    // The marker lives until the batch commits and a strict stream's
+    // visible end never passes it, so a late-visible lower seq cannot be
+    // skipped. A writer that crashes mid-write leaves its marker and parks
+    // strict streams until compact() or sweepStale clears it: blocked
+    // beats silently lossy.
+    val batch = reserveSeq(dir, listing => {
+      if (listing.terminated) throw ChannelClosed(name, "terminated")
+      if (listing.drained) throw ChannelClosed(name, "drained")
+      SchemaRegistry.check(name, schemaHash, schema)
+      // Park mode parks BEFORE accepting the frame (reference
+      // messaging/src/writer.rs:166-199): a full channel must reject the
+      // write without making it visible, or a retrying writer duplicates
+      // it. The topic lock serializes the check with every other writer's
+      // claim. The names come from the directory (other handles/processes
+      // write the same topic, so it is the only source of truth); only
+      // the sizes of committed dirs are remembered.
+      if (!dropMode) {
+        val current = topicBytes(listing.live)
+        if (current >= capacityBytes) throw ChannelBackpressure(name, current, capacityBytes)
+      }
+    })
     val target = TopicListing.batchPath(dir, batch, writerId, unique)
     try {
       body(target, batch)
-      Files.deleteIfExists(TopicListing.resPath(dir, batch))
+      releaseSeq(dir, batch)
     } catch {
       // A failed write leaves no committed dir: tombstone the seq
       // (`_abort_`) so strict DSv2 readers know the hole never held data —
@@ -228,6 +228,8 @@ final class Channel private[channel] (
       // Tombstone BEFORE deleting: the seq's marker is already released,
       // and a seq must never be left with no trace on disk, or a rival
       // could claim it, commit, and have this tombstone land on its data.
+      // markAborted takes the topic lock after the tombstone exists, so no
+      // claim listing that might miss the tombstone overlaps the delete.
       markAborted(dir, seq)
       total -= batchBytes(justWritten)
       committedSizes.remove(justWritten.getFileName.toString)
@@ -281,8 +283,7 @@ final class Channel private[channel] (
     * concurrent writer's in-flight lower-seq batch must stay AHEAD of
     * the boundary — with a `nextSeq` cursor it would fall below the
     * tail's start yet outside the snapshot, and be lost silently. */
-  def cursor(): Long =
-    Channel.readHead(dir).map(_._1).getOrElse(TopicListing.of(dir).committedEnds._1)
+  def cursor(): Long = Channel.committedEnds(dir)._1
 
   /** Immutable snapshot read of seq range `[startSeq, endSeq)` via the
     * DSv2 connector: re-reads see the identical dataset regardless of
@@ -438,7 +439,7 @@ final class Channel private[channel] (
     * can never regress a head and resurrect prune eligibility. */
   def ackReader(reader: String, upTo: Long): Unit = {
     Channel.validReaderName(reader)
-    Channel.raiseMarker(TopicListing.readerPath(dir, reader), math.max(upTo, 0L))
+    Channel.raiseCursor(TopicListing.readerPath(dir, reader), Vector(math.max(upTo, 0L)))
   }
 
   /** Registered reader heads (reader → next-unread seq). */
@@ -589,56 +590,60 @@ object Channel {
 
   /** Monotonically raise the pruned floor. */
   private[graft] def advancePrunedFloor(dir: Path, floor: Long): Unit =
-    raiseMarker(dir.resolve(PrunedFile), floor)
+    raiseCursor(dir.resolve(PrunedFile), Vector(floor))
 
-  /** The number a monotone marker file holds; -1 when it is missing or
+  /** The numbers a cursor file holds (`_HEAD`: `strict weak`; `_PRUNED`
+    * and `_rdr_*`: one number); `None` when it is missing or unreadable.
+    * Reads take no lock: a cursor file is only ever replaced whole. */
+  private def readCursor(f: Path): Option[Vector[Long]] =
+    try Some(Files.readString(f).trim.split(' ').toVector.map(_.toLong))
+    catch { case _: java.io.IOException | _: NumberFormatException => None }
+
+  /** The number a one-number cursor file holds; -1 when it is missing or
     * unreadable. */
   private[channel] def readMarker(f: Path): Long =
-    try Files.readString(f).trim.toLong
-    catch { case _: java.io.IOException | _: NumberFormatException => -1L }
+    readCursor(f).collect { case Vector(v) => v }.getOrElse(-1L)
 
-  // per-path monitors for raiseMarker: FileLock is cross-JVM but throws
-  // OverlappingFileLockException for two threads of the SAME JVM, so
-  // intra-JVM racers must serialize on a shared monitor first
-  private val markerMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Raise the number held in marker file `f` (the pruned floor, a
-    * reader head) to `value` when it is lower. Every handle of every JVM
-    * goes through here, so a marker never regresses and is never torn: a
-    * raise runs under a per-path monitor (threads of this JVM) and a
-    * `FileLock` on `<f>.lock` (other JVMs), reads, compares, writes a
-    * UNIQUE temp file (racers never move each other's temp) and replaces
-    * `f` atomically. A retry-loop CAS would not do: a racer carrying a
-    * lower value could land its replace after the higher one was checked.
-    * An unreadable marker counts as -1 and is repaired by the write. */
-  private[channel] def raiseMarker(f: Path, value: Long): Unit = {
-    val monitor = markerMonitors.computeIfAbsent(
-      f.toAbsolutePath.toString, _ => new Object)
-    monitor.synchronized {
-      val lockCh = java.nio.channels.FileChannel.open(
-        f.resolveSibling(f.getFileName.toString + ".lock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val lock = lockCh.lock()
-        try if (readMarker(f) < value) {
-          val tmp = Files.createTempFile(f.getParent, f.getFileName.toString, ".tmp")
-          try {
-            Files.writeString(tmp, value.toString)
-            Files.move(tmp, f,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          } finally Files.deleteIfExists(tmp)
-        } finally lock.release()
-      } finally lockCh.close()
+  /** Raise cursor file `f` of a topic to the componentwise max of its
+    * numbers and `value`: the one writer of `_HEAD`, `_PRUNED` and
+    * `_rdr_*`. Under the topic lock it reads, compares, writes
+    * `<f>.tmp` (a fixed name: no other writer runs) and replaces `f`
+    * atomically, so a cursor never regresses and is never torn. An
+    * unreadable file counts as absent and is repaired by the write. */
+  private[channel] def raiseCursor(f: Path, value: Vector[Long]): Unit =
+    withTopicLock(f.getParent) {
+      val cur = readCursor(f).filter(_.size == value.size)
+      val next = cur.fold(value)(_.lazyZip(value).map((a, b) => math.max(a, b)))
+      if (!cur.contains(next)) {
+        val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
+        Files.writeString(tmp, next.mkString(" "))
+        Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
+          StandardCopyOption.ATOMIC_MOVE)
+      }
     }
-  }
+
+  // Topic monitors by real path: a FileLock excludes other JVMs, but two
+  // threads of one JVM locking one file get OverlappingFileLockException,
+  // so the threads of this JVM serialize on the topic's monitor first.
+  private val topicMonitors = new java.util.concurrent.ConcurrentHashMap[Path, Object]()
+
+  /** Run `body` holding topic `dir`'s lock: its JVM monitor, then a
+    * `FileLock` on its `_LOCK` file. Every read-modify-write of topic
+    * metadata (a seq claim, a cursor raise) runs in one such section.
+    * Sections never nest; a handle's monitor may be held while taking the
+    * topic lock, never the reverse. */
+  private def withTopicLock[T](dir: Path)(body: => T): T =
+    topicMonitors.computeIfAbsent(dir.toRealPath(), _ => new Object).synchronized {
+      val ch = java.nio.channels.FileChannel.open(dir.resolve(TopicListing.LockFile),
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      try { ch.lock(); body } finally ch.close() // closing releases the lock
+    }
 
   /** Reader names become marker file names — reject anything that could
     * traverse or collide with topic internals (same hostile-input posture
-    * as the module store's path validation); `.tmp` and `.lock` name the
-    * marker writer's own files. */
+    * as the module store's path validation); `.tmp` names the cursor
+    * writer's temp file, and `.lock` the per-marker lock files of older
+    * topics. */
   private[graft] def validReaderName(reader: String): Unit =
     require(reader.nonEmpty && reader.length <= 128 &&
       reader.forall(c => c.isLetterOrDigit || c == '.' || c == '_' || c == '-') &&
@@ -648,95 +653,63 @@ object Channel {
   /** Read the published head cursor, if any. `None` (no file, or torn
     * foreign content) sends the reader down the full-listing recovery
     * path. */
-  private[graft] def readHead(dir: Path): Option[(Long, Long)] = {
-    val f = dir.resolve(HeadFile)
-    if (!Files.exists(f)) None
-    else try {
-      val Array(s, w) = Files.readString(f).trim.split(" ")
-      Some((s.toLong, w.toLong))
-    } catch { case _: Exception => None }
-  }
+  private[graft] def readHead(dir: Path): Option[(Long, Long)] =
+    readCursor(dir.resolve(HeadFile)).collect { case Vector(s, w) => (s, w) }
+
+  /** The topic's committed ends `(strict, weak)`: the published head, or
+    * a full listing's [[TopicListing.committedEnds]] for a topic with no
+    * published head. */
+  private[graft] def committedEnds(dir: Path): (Long, Long) =
+    readHead(dir).getOrElse(TopicListing.of(dir).committedEnds)
 
   /** Publish the committed head cursor ([[TopicListing.committedEnds]] of
-    * `listing`) with an atomic tmp+rename. Called after every
-    * commit/abort/compact, so one listing per publish rides the write
-    * path and offset planning reads the cursor in O(1) per trigger
-    * instead of re-listing a possibly million-dir topic.
-    *
-    * The cursor is ADVISORY, not the source of truth — and that is what
-    * makes the unsynchronized read-compare-move here safe. Two racing
-    * writers can interleave so that a staler (lower) cursor lands last:
-    * that is mere LAG, never corruption, because any historical cursor
-    * stays a valid committed prefix (new reservations always land at ≥
-    * the published end and evictions only create gaps below it), readers
-    * fall back to the full listing when the cursor trails, and the next
-    * write or compact() re-publishes the true maximum. Same story for a
-    * writer that crashes between commit and publish. Serializing
-    * publication (file lock / retry loop) would buy nothing but
-    * contention on the hot write path. */
+    * `listing`), raised componentwise so it never regresses. Called after
+    * every commit/abort/compact, so one listing per publish rides the
+    * write path and offset planning reads the cursor in O(1) per trigger
+    * instead of re-listing a possibly million-dir topic. Any historical
+    * head is a valid committed prefix (new reservations always land at ≥
+    * its weak end and evictions only create gaps below it), so a stale
+    * listing only makes the head lag. Publication is best-effort: an I/O
+    * error here is the same benign lag as a crash before it, and never
+    * fails a write that has already committed. */
   private[graft] def advanceHead(listing: TopicListing): Unit = {
-    val dir = listing.dir
     val (strict, weakEnd) = listing.committedEnds
-    val cur = readHead(dir)
-    val (ns, nw) = (math.max(strict, cur.fold(0L)(_._1)),
-      math.max(weakEnd, cur.fold(0L)(_._2)))
-    if (cur.forall { case (s, w) => ns > s || nw > w }) {
-      // sweep tmp files a crashed writer leaked (age-gated: a LIVE tmp
-      // exists for milliseconds between create and move)
-      try listing.headTmps
-        .filter { p =>
-          try Files.getLastModifiedTime(p).toMillis < System.currentTimeMillis() - 60000
-          catch { case _: Exception => false }
-        }.foreach(p => Files.deleteIfExists(p))
-      catch { case _: Exception => () }
-      val tmp = Files.createTempFile(dir, "_head", ".tmp")
-      Files.writeString(tmp, s"$ns $nw")
-      try Files.move(tmp, dir.resolve(HeadFile),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      catch { case _: Exception =>
-        // publication is best-effort: a lost move (e.g. our tmp swept by
-        // an aggressive cleaner) is the same benign lag as a crash here
-        Files.deleteIfExists(tmp)
-      }
-    }
+    try raiseCursor(listing.dir.resolve(HeadFile), Vector(strict, weakEnd))
+    catch { case _: java.io.IOException => () }
   }
 
-  /** Claim the next free sequence number with an atomic createDirectory
-    * on its `_res_` marker — two writers (any JVMs) can never share a seq.
-    * The search starts at the pre-claim listing's [[TopicListing.nextFree]]
-    * (so a crashed writer's marker is skipped over, not reused) or the
-    * published head, whichever is higher: batch dirs below the head may
-    * have been pruned or evicted without tombstones, and a seq below the
-    * committed end must never be re-issued (a subscriber whose offset
-    * already passed it would silently skip the new data). A stale
-    * listing only starts the search low.
+  /** Claim the next free sequence number. Under the topic lock, list the
+    * topic once, let `admit` refuse the claim (lifecycle flags, park
+    * check), and create the `_res_` marker of the floor: the listing's
+    * [[TopicListing.nextFree]] (so a crashed writer's marker is skipped
+    * over, not reused) or the published head's weak end, whichever is
+    * higher. Batch dirs below the head may have been pruned or evicted
+    * without tombstones, and a seq below the committed end must never be
+    * re-issued (a subscriber whose offset already passed it would
+    * silently skip the new data).
     *
-    * The atomic create alone does not make a seq fresh: markers are
-    * released after commit, so a writer that listed BEFORE a rival
-    * claimed seq `s` can win the marker AFTER that rival committed and
-    * released it — two batch dirs on one seq. Hence the post-claim
-    * re-check on a fresh listing: every consumer of a seq makes its
-    * trace — batch dir (before `_SUCCESS`→marker-delete), `_abort_`
-    * tombstone (before marker-delete), `compact_` dir (writer-free
-    * window) — visible BEFORE the marker is released, so holding the
-    * marker and seeing no trace proves the seq was never used. */
-  private[graft] def reserveSeq(pre: TopicListing): Long = {
-    val dir = pre.dir
-    var s = math.max(pre.nextFree, readHead(dir).map(_._2).getOrElse(0L))
-    while (true) {
-      if (!tryReserve(dir, s)) s += 1
-      else if (TopicListing.of(dir).used(s)) {
-        Files.deleteIfExists(TopicListing.resPath(dir, s))
-        s += 1
-      } else return s
+    * Every claim is one critical section, and every consumer of a seq
+    * makes its next trace — batch dir (before `_SUCCESS`→marker-delete),
+    * `_abort_` tombstone (before marker-delete), `compact_` dir
+    * (writer-free window) — before it releases the marker under the lock
+    * ([[releaseSeq]]), so no listing taken under the lock misses a
+    * claimed seq. */
+  private[graft] def reserveSeq(dir: Path, admit: TopicListing => Unit = _ => ()): Long =
+    withTopicLock(dir) {
+      val listing = TopicListing.of(dir)
+      admit(listing)
+      val s = math.max(listing.nextFree, readHead(dir).fold(0L)(_._2))
+      Files.createDirectory(TopicListing.resPath(dir, s))
+      s
     }
-    -1 // unreachable
-  }
 
-  private def tryReserve(dir: Path, s: Long): Boolean =
-    try { Files.createDirectory(TopicListing.resPath(dir, s)); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+  /** Release seq `s`'s `_res_` marker once its next trace (a committed
+    * batch dir or a tombstone) exists. Under the topic lock: a directory
+    * listing is not a snapshot (an entry created or deleted while it runs
+    * may be missed), so a claim's listing must never run across the
+    * handoff from one trace to the next, or it could see neither. */
+  private[graft] def releaseSeq(dir: Path, s: Long): Unit =
+    withTopicLock(dir)(Files.deleteIfExists(TopicListing.resPath(dir, s)))
 
   /** Static body of [[Channel.sweepStale]] — also invoked by the weak
     * DSv2 planner's age-gated self-sweep ([[graft.sources]]), which has
@@ -769,7 +742,7 @@ object Channel {
         if (dirs.exists(_.committed)) {
           // writer died between commit and marker release: data is valid,
           // only the marker goes
-          Files.deleteIfExists(marker)
+          releaseSeq(dir, s)
           markerOnlyDropped = true
         } else {
           // the common crash: a PARTIAL batch dir (task files, no
@@ -815,7 +788,7 @@ object Channel {
   private[graft] def markAborted(dir: Path, s: Long): Unit = {
     try Files.createDirectory(TopicListing.abortPath(dir, s))
     catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    Files.deleteIfExists(TopicListing.resPath(dir, s))
+    releaseSeq(dir, s)
     // an aborted seq is a benign hole: unblock the published cursor so
     // parked strong readers resume without waiting for the next write
     advanceHead(TopicListing.of(dir))

@@ -19,17 +19,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    seq below `<seq>` and supersedes every data dir below its seq; seq
   *    `<seq>` itself holds no data. Its `_EPOCHS` file lists the
   *    `w<writer>_e<epoch>` tags of the sink writes it absorbed.
-  *  - `_res_<seq>`: a writer's claim on `<seq>`, made before its batch dir
-  *    exists and released only after the dir commits or the seq is
-  *    tombstoned ([[Channel.reserveSeq]]).
+  *  - `_res_<seq>`: a writer's claim on `<seq>`, made under the topic lock
+  *    before its batch dir exists and released only after the dir commits
+  *    or the seq is tombstoned ([[Channel.reserveSeq]]).
   *  - `_abort_<seq>`: a tombstone — `<seq>` was claimed and holds no data.
   *  - `_rdr_<reader>`: a registered reader's head (its next unread seq).
   *  - `_DRAINED`, `_TERMINATED`: the lifecycle flags.
   *  - `_SCHEMA`: the topic's settings ([[TopicMeta]]); a dir holding it
   *    is a topic.
-  *  - `_HEAD` (the published `strict weak` cursor), `_PRUNED`
-  *    (the pruned floor), and the marker writers' `*.tmp` and `*.lock`
-  *    files carry no seq.
+  *  - `_LOCK`: the topic lock's file. Every seq claim and every cursor
+  *    raise runs holding a `FileLock` on it.
+  *  - `_HEAD` (the published `strict weak` cursor), `_PRUNED` (the pruned
+  *    floor), the cursor writer's `<cursor>.tmp` files, and the
+  *    `_rdr_*.lock` and `_head*.tmp` files older topics hold carry no seq.
   *
   * A listing is one moment of a directory that other handles and JVMs
   * write concurrently, so it is never kept across calls: each step of the
@@ -43,9 +45,7 @@ private[graft] final class TopicListing private (
     /** Registered readers' head files, by reader name. */
     val readers: Map[String, Path],
     val drained: Boolean,
-    val terminated: Boolean,
-    /** Temp files of head publications (`_head*.tmp`). */
-    private[channel] val headTmps: Seq[Path]) {
+    val terminated: Boolean) {
   import TopicListing.committed
 
   /** The `batch_*` dirs grouped by seq, ascending — what a subscription
@@ -72,9 +72,6 @@ private[graft] final class TopicListing private (
   def nextFree: Long =
     (Iterator(nextSeq) ++ reservations.lastOption.map(_ + 1) ++
       aborts.lastOption.map(_ + 1)).max
-
-  /** Whether seq `s` was ever consumed: a data dir or a tombstone. */
-  def used(s: Long): Boolean = aborts(s) || dirs.exists(_.seq == s)
 
   private def done(s: Long): Boolean = batchAt.get(s).exists(_.forall(committed))
 
@@ -121,6 +118,7 @@ private[graft] object TopicListing {
   private val ReaderPrefix = "_rdr_"
   private[channel] val DrainedFlag = "_DRAINED"
   private[channel] val TerminatedFlag = "_TERMINATED"
+  private[channel] val LockFile = "_LOCK"
   private val EpochTag = """w\d+_e\d+""".r
   private val SchemaFile = "_SCHEMA"
 
@@ -160,7 +158,6 @@ private[graft] object TopicListing {
     val dirs = Vector.newBuilder[DataDir]
     val res, aborts = SortedSet.newBuilder[Long]
     val readers = Map.newBuilder[String, Path]
-    val headTmps = Seq.newBuilder[Path]
     var drained, terminated = false
     val names = try entries(dir) catch { case _: java.nio.file.NoSuchFileException => Nil }
     names.foreach { p =>
@@ -180,12 +177,11 @@ private[graft] object TopicListing {
         if (!n.endsWith(".tmp") && !n.endsWith(".lock"))
           readers += n.stripPrefix(ReaderPrefix) -> p
       }
-      else if (n.startsWith("_head") && n.endsWith(".tmp")) headTmps += p
       else if (n == DrainedFlag) drained = true
       else if (n == TerminatedFlag) terminated = true
     }
     new TopicListing(dir, dirs.result().sortBy(_.seq), res.result(), aborts.result(),
-      readers.result(), drained, terminated, headTmps.result())
+      readers.result(), drained, terminated)
   }
 
   def batchPath(dir: Path, seq: Long, writerId: Int, unique: String): Path =

@@ -1,12 +1,11 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.channel.Channel
 import graft.functions.{SignLsh, VectorFunctions}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import scala.jdk.CollectionConverters._
 
 /** Similarity search over the `embeddings` table (`array<float>` vectors).
   * Brute-force cosine is the correctness baseline; the LSH-bucketed query
@@ -1421,8 +1420,11 @@ object VectorOps {
       compactEvery: Int = 64) {
     private val perBatch = scala.collection.mutable.LinkedHashMap[Long, DataFrame]()
     private var base: Option[DataFrame] = None
-    private var baseDir: Option[java.nio.file.Path] = None
+    private var baseDir: Option[HPath] = None
     @volatile private[graft] var dirsListedLastTick = 0
+    // `out` is reached only through the Hadoop filesystem Spark writes it
+    // with, so the monitor runs on any store the session can write
+    private val fs = new HPath(out).getFileSystem(GraftSqlBridge.newHadoopConf(s))
 
     // a DataFrameReader resolves schema + file list eagerly at creation:
     // exactly one listing of exactly this batch's dir
@@ -1433,23 +1435,19 @@ object VectorOps {
       * the root + one per-dir resolution), then the cursor takes over. */
     private var recovered = false
     private def recover(): Int = {
-      val root = java.nio.file.Paths.get(out, "postings")
       recovered = true
       // a prior run's compacted base is a pure cache over the per-batch
       // dirs — drop any stale copy and rebuild the union from the
       // authoritative b$id dirs (compaction re-fires as ticks accumulate)
-      val staleBase = java.nio.file.Paths.get(out, "postings_base")
-      if (java.nio.file.Files.isDirectory(staleBase)) Channel.deleteRecursively(staleBase)
-      if (!java.nio.file.Files.isDirectory(root)) return 0
-      val ids = {
-        val st = java.nio.file.Files.list(root)
-        try st.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(_.startsWith("b"))
-          .flatMap(n => scala.util.Try(n.drop(1).toLong).toOption)
-          .toVector.sorted
-        finally st.close()
-      }
+      fs.delete(new HPath(out, "postings_base"), true)
+      val listed =
+        try fs.listStatus(new HPath(out, "postings"))
+        catch { case _: java.io.FileNotFoundException => return 0 }
+      val ids = listed.iterator
+        .map(_.getPath.getName)
+        .filter(_.startsWith("b"))
+        .flatMap(n => n.drop(1).toLongOption)
+        .toVector.sorted
       ids.foreach(id => perBatch(id) = relationFor(id))
       ids.size
     }
@@ -1474,12 +1472,12 @@ object VectorOps {
         // idempotent under replay — a re-run tick overwrites c$id — and
         // the superseded compact dir is deleted only after the new one
         // is fully written
-        val next = java.nio.file.Paths.get(out, "postings_base", s"c$id")
+        val next = new HPath(out, s"postings_base/c$id")
         (base.toSeq ++ perBatch.values).reduce(_.union(_))
           .write.mode("overwrite").parquet(next.toString)
         base = Some(s.read.parquet(next.toString))
         listed += 1 // the re-read of the fresh compact dir (1/compactEvery ticks)
-        baseDir.filter(_ != next).foreach(Channel.deleteRecursively)
+        baseDir.filter(_ != next).foreach(fs.delete(_, true))
         baseDir = Some(next)
         perBatch.clear()
       }

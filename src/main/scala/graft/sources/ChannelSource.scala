@@ -303,11 +303,10 @@ final class ChannelMicroBatchStream(spark: SparkSession, dir: Path,
     * /root/reference/subsystem/messaging/src/lib.rs:80-83), so a
     * long-lived topic with 10⁵–10⁶ batch dirs plans each trigger from
     * ONE small-file read instead of a full directory listing. The full
-    * listing ([[TopicListing.committedEnds]]) remains the recovery path
-    * for topics without a published cursor. */
+    * listing remains the recovery path for topics without a published
+    * cursor ([[Channel.committedEnds]]). */
   private def visibleEnd(): Long = {
-    val (strict, weakEnd) =
-      Channel.readHead(dir).getOrElse(TopicListing.of(dir).committedEnds)
+    val (strict, weakEnd) = Channel.committedEnds(dir)
     if (weak) weakEnd else strict
   }
 

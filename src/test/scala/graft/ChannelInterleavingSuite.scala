@@ -10,22 +10,27 @@ import graft.channel.{Channel, TopicListing}
   * (/root/reference/subsystem/messaging/src/lib.rs:1174-1199), where
   * loom enumerates every schedule of a small model rather than sampling.
   *
-  * The topic's shared structure is a DIRECTORY and its claimed atomicity
-  * unit is the single filesystem operation (atomic marker create /
-  * rename / delete). A writer's protocol is therefore a SEQUENCE of
-  * atomic steps, and exhaustively enumerating all interleavings of two
-  * writers' step sequences — executing steps one at a time in the
-  * enumerated order — explores exactly the schedules real threads could
-  * produce at that granularity. The 1-reader half of the model runs as
-  * an invariant check after EVERY step (equivalent to a reader observing
-  * at every interleaving point).
+  * The topic's shared structure is a DIRECTORY. Its atomicity unit is a
+  * single filesystem operation (marker create / rename / delete) or one
+  * critical section under the topic lock (`_LOCK`): a seq claim (list
+  * the topic, create the `_res_` marker), a marker release and a head
+  * publish (raise `_HEAD`) are one section each. A writer's protocol is therefore a
+  * SEQUENCE of atomic steps, and exhaustively enumerating all
+  * interleavings of two writers' step sequences — executing steps one at
+  * a time in the enumerated order — explores exactly the schedules real
+  * threads could produce at that granularity. The 1-reader half of the
+  * model runs as an invariant check after EVERY step (equivalent to a
+  * reader observing at every interleaving point).
   *
   * Model: 2 writers × 1 op each, all four (commit|abort)² mixes.
   * Commit = 5 steps (reserve, mkdir batch, _SUCCESS, drop reservation,
-  * advance head); abort = 2 steps (reserve, tombstone). Schedules:
-  * C(10,5) + 2·C(7,5) + C(4,2) = 300, each on a fresh directory.
-  * The randomized thread stress (ChannelStressSuite) keeps covering the
-  * large/racy end; this suite proves the small core has NO bad schedule.
+  * advance head); a failed write = 3 steps (reserve, mkdir batch,
+  * tombstone). Schedules: C(10,5) + 2·C(8,5) + C(6,3) = 384, each on a
+  * fresh directory. A second model runs multi-op writers (1 287
+  * schedules) and a third a stale sweep racing one writer. The randomized
+  * thread stress (ChannelStressSuite) keeps covering the large/racy end
+  * and the cross-JVM claim; this suite proves the small core has NO bad
+  * schedule.
   */
 class ChannelInterleavingSuite extends SparkSpec {
 
@@ -65,13 +70,12 @@ class ChannelInterleavingSuite extends SparkSpec {
     * the reserve step claimed). */
   private def commitSteps(dir: Path, w: Int,
       claimed: scala.collection.mutable.Map[Int, Long]): Vector[() => Unit] = Vector(
-    () => claimed(w) = Channel.reserveSeq(TopicListing.of(dir)),
+    () => claimed(w) = Channel.reserveSeq(dir),
     () => Files.createDirectories(
       dir.resolve(f"batch_${claimed(w)}%012d_w$w")),
     () => Files.createFile(
       dir.resolve(f"batch_${claimed(w)}%012d_w$w").resolve("_SUCCESS")),
-    () => Files.deleteIfExists(
-      TopicListing.resPath(dir, claimed(w))),
+    () => Channel.releaseSeq(dir, claimed(w)),
     () => Channel.advanceHead(TopicListing.of(dir)))
 
   /** A FAILED write, as it really happens: the parquet job creates the
@@ -80,7 +84,7 @@ class ChannelInterleavingSuite extends SparkSpec {
     * wedge scenario, now exhaustively scheduled). */
   private def abortSteps(dir: Path, w: Int,
       claimed: scala.collection.mutable.Map[Int, Long]): Vector[() => Unit] = Vector(
-    () => claimed(w) = Channel.reserveSeq(TopicListing.of(dir)),
+    () => claimed(w) = Channel.reserveSeq(dir),
     () => Files.createDirectories(dir.resolve(f"batch_${claimed(w)}%012d_w$w")),
     () => Channel.markAborted(dir, claimed(w)))
 
@@ -205,7 +209,7 @@ class ChannelInterleavingSuite extends SparkSpec {
       def batch = dir.resolve(f"batch_${claimed(0)}%012d_w0")
       val steps: Vector[() => Unit] = Vector(
         () => {
-          claimed(0) = Channel.reserveSeq(TopicListing.of(dir))
+          claimed(0) = Channel.reserveSeq(dir)
           // the writer has been "stuck" since reservation: age the marker
           // past any sweep threshold
           Files.setLastModifiedTime(marker,
@@ -214,7 +218,7 @@ class ChannelInterleavingSuite extends SparkSpec {
         () => Files.createDirectories(batch),
         () => Files.createFile(batch.resolve("part-0.parquet")),
         () => Files.createFile(batch.resolve("_SUCCESS")),
-        () => Files.deleteIfExists(marker),
+        () => Channel.releaseSeq(dir, claimed(0)),
         () => Channel.advanceHead(TopicListing.of(dir)))
       var failed = false
       for ((st, i) <- steps.zipWithIndex) {
@@ -268,14 +272,13 @@ class ChannelInterleavingSuite extends SparkSpec {
     def batch = dir.resolve(f"batch_${claimed.last._1}%012d_w$w")
     ops.toVector.flatMap { isCommit =>
       if (isCommit) Vector[() => Unit](
-        () => claimed += ((Channel.reserveSeq(TopicListing.of(dir)), true)),
+        () => claimed += ((Channel.reserveSeq(dir), true)),
         () => Files.createDirectories(batch),
         () => Files.createFile(batch.resolve("_SUCCESS")),
-        () => Files.deleteIfExists(
-          TopicListing.resPath(dir, claimed.last._1)),
+        () => Channel.releaseSeq(dir, claimed.last._1),
         () => Channel.advanceHead(TopicListing.of(dir)))
       else Vector[() => Unit](
-        () => claimed += ((Channel.reserveSeq(TopicListing.of(dir)), false)),
+        () => claimed += ((Channel.reserveSeq(dir), false)),
         () => Files.createDirectories(batch),
         () => Channel.markAborted(dir, claimed.last._1))
     }

@@ -45,7 +45,7 @@ class ChannelStressSuite extends SparkSpec {
           start.await()
           var i = 0
           while (i < opsEach) {
-            val s = Channel.reserveSeq(TopicListing.of(dir))
+            val s = Channel.reserveSeq(dir)
             if (rnd.nextInt(4) == 0) Thread.`yield`()
             if (rnd.nextInt(5) == 0) { // ~20% of writes fail after reserving
               Channel.markAborted(dir, s)
@@ -55,7 +55,7 @@ class ChannelStressSuite extends SparkSpec {
               Files.createDirectories(batch)
               if (rnd.nextBoolean()) Thread.`yield`()
               Files.createFile(batch.resolve("_SUCCESS"))
-              Files.deleteIfExists(TopicListing.resPath(dir, s))
+              Channel.releaseSeq(dir, s)
               Channel.advanceHead(TopicListing.of(dir))
               claimed(w) += ((s, true))
             }
@@ -66,16 +66,21 @@ class ChannelStressSuite extends SparkSpec {
     }
     // Readers race the writers: the published cursor and the full-listing
     // ends must stay CONSISTENT (strict ≤ weak; cursor within the true
-    // ends' eventual range) and never throw, at any interleaving.
+    // ends' eventual range) and never throw, at any interleaving, and the
+    // published head never decreases between one reader's reads.
     val readers = (0 until 2).map { r =>
       new Thread(() => {
         try {
           start.await()
+          var last = (0L, 0L)
           while (!stop.get()) {
             val (strict, weak) = TopicListing.of(dir).committedEnds
             assert(strict <= weak, s"strict $strict > weak $weak")
             Channel.readHead(dir).foreach { case (hs, hw) =>
               assert(hs <= hw, s"published head strict $hs > weak $hw")
+              assert(hs >= last._1 && hw >= last._2,
+                s"published head regressed $last -> ($hs,$hw)")
+              last = (hs, hw)
             }
           }
         } catch { case t: Throwable => failures.add(t) }
@@ -105,8 +110,8 @@ class ChannelStressSuite extends SparkSpec {
     assert(TopicListing.of(dir).reservations.isEmpty, "leaked reservation markers")
 
     // Quiescent cursor: with no pending reservations strict == weak ==
-    // one past the last committed batch, and the published head (advisory,
-    // may lag under racing publishes) catches up on the next advance.
+    // one past the last committed batch, and the published head (which
+    // may lag a publish behind) catches up on the next advance.
     Channel.advanceHead(TopicListing.of(dir))
     val (strict, weak) = TopicListing.of(dir).committedEnds
     assert(strict == weak)
@@ -241,5 +246,64 @@ class ChannelStressSuite extends SparkSpec {
     ch.write(Seq((999L, "post")).toDF("id", "s"), writerId = 9)
     assert(ch.cursor() == endBefore + 1, "pruned history must not recycle seqs")
     assert(ch.read().select("id").as[Long].collect().contains(999L))
+  }
+
+  test("two JVMs claiming one topic get distinct, dense seqs and leave no marker") {
+    // the FileLock half of the topic lock: a child JVM and this one each
+    // claim, commit and release 200 seqs on one topic at the same time
+    val dir = tmpDir("chan_xjvm")
+    val each = 200
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java")
+    val child = new ProcessBuilder(javaBin.toString, "-Xmx64m",
+        "-cp", System.getProperty("java.class.path"),
+        ChannelClaimChild.getClass.getName.stripSuffix("$"), dir.toString, each.toString)
+      .redirectErrorStream(true).start()
+    val out = new java.io.BufferedReader(new java.io.InputStreamReader(child.getInputStream))
+    try {
+      assert(Iterator.continually(out.readLine()).takeWhile(_ != null).contains("ready"),
+        "the child JVM did not start")
+      child.getOutputStream.write('\n'); child.getOutputStream.flush() // go
+      (0 until each).foreach(i => ChannelClaimChild.claimCommitRelease(dir, writer = 0, i))
+      assert(child.waitFor(120, TimeUnit.SECONDS), "the child JVM did not finish")
+      val rest = Iterator.continually(out.readLine()).takeWhile(_ != null).mkString("\n")
+      assert(child.exitValue() == 0, s"the child JVM failed: $rest")
+    } finally {
+      child.destroyForcibly()
+      child.waitFor(30, TimeUnit.SECONDS)
+      out.close()
+    }
+    assert(!child.isAlive, "the child JVM is still running")
+    val listing = TopicListing.of(dir)
+    val seqs = listing.dirs.map(_.seq)
+    assert(seqs.size == 2 * each && seqs.distinct.size == 2 * each, "a seq was double-claimed")
+    assert(seqs == (0L until 2L * each), "the claimed seqs are not dense")
+    assert(listing.dirs.count(_.tag.startsWith("w1_")) == each, "the child's batches are missing")
+    assert(listing.reservations.isEmpty, "leaked reservation markers")
+    val writers = listing.dirs.map(_.tag.takeWhile(_ != '_'))
+    info(s"writer changes along the seq order: ${writers.sliding(2).count(w => w(0) != w(1))}")
+  }
+}
+
+/** The child JVM of the cross-JVM claim test: prints `ready`, waits for
+  * a line on stdin, then claims, commits and releases `<n>` seqs on
+  * topic `<dir>` as writer 1. Usage: `ChannelClaimChild <dir> <n>`. */
+object ChannelClaimChild {
+  def main(args: Array[String]): Unit = {
+    val dir = java.nio.file.Paths.get(args(0))
+    println("ready")
+    System.out.flush()
+    scala.io.StdIn.readLine()
+    (0 until args(1).toInt).foreach(i => claimCommitRelease(dir, writer = 1, i))
+  }
+
+  /** One write at the marker level, as Channel.write does it: claim a
+    * seq, commit its batch dir, release the marker, publish the head. */
+  def claimCommitRelease(dir: java.nio.file.Path, writer: Int, i: Int): Unit = {
+    val s = Channel.reserveSeq(dir)
+    val batch = TopicListing.batchPath(dir, s, writer, s"u$i")
+    Files.createDirectories(batch)
+    Files.createFile(batch.resolve("_SUCCESS"))
+    Channel.releaseSeq(dir, s)
+    Channel.advanceHead(TopicListing.of(dir))
   }
 }

@@ -94,12 +94,12 @@ class ChannelSuite extends SparkSpec {
     }
     // the un-published seq is tombstoned (a reader must see an aborted
     // hole, not data loss) and is never handed out again — the capacity
-    // path must leave the same trace discipline reserveSeq's post-claim
-    // re-check assumes (trace visible before the marker is gone)
+    // path must leave the same trace discipline reserveSeq's one listing
+    // relies on (trace visible before the marker is gone)
     val dir = root.resolve("t5")
     assert(TopicListing.of(dir).aborts.toSeq == Seq(0L))
     assert(TopicListing.of(dir).reservations.isEmpty)
-    val next = Channel.reserveSeq(TopicListing.of(dir))
+    val next = Channel.reserveSeq(dir)
     assert(next == 1L, s"aborted seq reissued: $next")
     java.nio.file.Files.deleteIfExists(TopicListing.resPath(dir, next))
   }
@@ -404,7 +404,7 @@ class ChannelSuite extends SparkSpec {
     assert(fileSchema(0) == fileSchema(1))
   }
 
-  test("a write on a 200-batch topic lists it 3 times and sizes only its own batch") {
+  test("a write on a 200-batch topic lists it 2 times and sizes only its own batch") {
     val reg = new ChannelRegistry(spark, tmpDir("chan_o1"))
     val ch = reg.create("o1", schema)
     (0 until 200).foreach(i => ch.write(Seq((i, "x")).toDF("id", "msg"), 0))
@@ -416,7 +416,7 @@ class ChannelSuite extends SparkSpec {
     fresh.write(Seq((201, "x")).toDF("id", "msg"), 0)
     val listed = Channel.listDirCalls.get() - lists
     val sized = Channel.dirSizeCalls.get() - sizes
-    assert(listed <= 3, s"a write listed the topic $listed times")
+    assert(listed <= 2, s"a write listed the topic $listed times")
     assert(sized == 1, s"a write sized $sized batch dirs")
     assert(fresh.metrics().collect().head.getAs[Long]("n_batches") == 202)
   }
@@ -462,6 +462,28 @@ class ChannelSuite extends SparkSpec {
       if forbidden.exists(_.findFirstIn(line).isDefined)
     } yield s"${root.relativize(f)}:${n + 1}: ${line.trim}"
     assert(hits.isEmpty, s"topic listing or name parsing outside TopicListing: ${hits.mkString("; ")}")
+  }
+
+  test("only the topic-lock helper opens a FileChannel or takes a file lock") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"sources not found at $root")
+    val walk = java.nio.file.Files.walk(root)
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val locking = Seq("FileChannel", ".lock(")
+    val channel = root.resolve("graft/channel/Channel.scala")
+    // the helper: from its `def` to the first blank line after it
+    val src = java.nio.file.Files.readAllLines(channel).asScala.toVector
+    val start = src.indexWhere(_.contains("def withTopicLock"))
+    assert(start >= 0, "the topic-lock helper withTopicLock is gone")
+    val end = src.indexWhere(_.trim.isEmpty, start)
+    val hits = for {
+      f <- files
+      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if locking.exists(line.contains)
+      if !(f == channel && n > start && n < end)
+    } yield s"${root.relativize(f)}:${n + 1}: ${line.trim}"
+    assert(hits.isEmpty, s"file locking outside the topic lock: ${hits.mkString("; ")}")
   }
 
   test("read() delivers total order with no sort; aggregates scan only used columns") {

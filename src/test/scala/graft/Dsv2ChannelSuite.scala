@@ -180,7 +180,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
     val ch = reg.create("sw1", schema)
     // simulated crashed writer: reserves seq 0, never commits or aborts
-    val dead = Channel.reserveSeq(TopicListing.of(ch.dir))
+    val dead = Channel.reserveSeq(ch.dir)
     assert(dead == 0L)
     ch.write(Seq((1, "a")).toDF("id", "msg"), 1) // lands at seq 1
     sinkN += 1
@@ -203,7 +203,7 @@ class Dsv2ChannelSuite extends SparkSpec {
       // a partial batch dir (task files, no _SUCCESS) plus its marker —
       // the partial dir parks the committed-prefix walk exactly like the
       // marker, so the sweep must remove it too, not just tombstone
-      val s2 = Channel.reserveSeq(TopicListing.of(ch.dir))
+      val s2 = Channel.reserveSeq(ch.dir)
       val partial = ch.dir.resolve(f"batch_$s2%012d" + "_w9_crashed")
       Files.createDirectories(partial)
       Files.createFile(partial.resolve("part-00000.parquet")) // no _SUCCESS
@@ -323,7 +323,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     assert(TopicListing.of(ch.dir).reservations.isEmpty)
     // simulate an in-flight concurrent writer that reserved the next seq
     // but has not committed its batch dir yet
-    val next = Channel.reserveSeq(TopicListing.of(ch.dir))
+    val next = Channel.reserveSeq(ch.dir)
     ch.write(Seq((2, "b")).toDF("id", "msg"), 2) // lands BEYOND the reservation
 
     // weak readers skip evicted/aborted HOLES, but a LIVE reservation is
@@ -360,7 +360,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     assert(spark.table(weakResumed).as[Int].collect().sorted.toSeq == Seq(1, 2),
       "weak reader did not resume after the reservation aborted")
     // compact() sweeps stale markers (crashed writers)
-    Channel.reserveSeq(TopicListing.of(ch.dir))
+    Channel.reserveSeq(ch.dir)
     ch.write(Seq((3, "c")).toDF("id", "msg"), 1)
     ch.compact()
     assert(TopicListing.of(ch.dir).reservations.isEmpty, "compact left stale reservations")
@@ -378,7 +378,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
     val ch = reg.create("s6b", schema)
     ch.write(Seq((1, "a")).toDF("id", "msg"), 1)
-    val rival = Channel.reserveSeq(TopicListing.of(ch.dir)) // marker only; dir not created yet
+    val rival = Channel.reserveSeq(ch.dir) // marker only; dir not created yet
     ch.write(Seq((3, "c")).toDF("id", "msg"), 1) // faster writer commits beyond
     // the published weak end deliberately spans the window (weak ends
     // ignore reservations so stalled writers can't regress the cursor)
@@ -446,7 +446,7 @@ class Dsv2ChannelSuite extends SparkSpec {
     val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
     val ch = reg.create("s6d", schema)
     ch.write(Seq((1, "a")).toDF("id", "msg"), 1)
-    val rival = Channel.reserveSeq(TopicListing.of(ch.dir)) // crashed writer: marker only
+    val rival = Channel.reserveSeq(ch.dir) // crashed writer: marker only
     ch.write(Seq((2, "b")).toDF("id", "msg"), 1) // commits beyond it
     // the marker is genuinely stale (the sweep's cutoff must pass it);
     // the CLAMP persistence gate is what the wait below exercises
@@ -483,8 +483,8 @@ class Dsv2ChannelSuite extends SparkSpec {
   test("reserved seqs are distinct and monotone across interleaved writers") {
     val reg = new ChannelRegistry(spark, tmpDir("dsv2"))
     val ch = reg.create("s7", schema)
-    val r1 = Channel.reserveSeq(TopicListing.of(ch.dir))
-    val r2 = Channel.reserveSeq(TopicListing.of(ch.dir)) // second reservation must not collide
+    val r1 = Channel.reserveSeq(ch.dir)
+    val r2 = Channel.reserveSeq(ch.dir) // second reservation must not collide
     assert(r2 == r1 + 1)
     ch.write(Seq((1, "a")).toDF("id", "msg"), 1) // skips both reservations
     val seqs = ch.read().select(Channel.SeqCol).as[Long].collect().toSeq
