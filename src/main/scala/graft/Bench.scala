@@ -11,6 +11,14 @@ package graft
   * reclaim note in `time`).
   */
 object Bench {
+  /** Column names of the per-query rows of `bench_queries.json` and the
+    * `BENCH_DETAIL` line. */
+  private val DetailCols: Seq[String] =
+    Seq("wall", "cpu", "gc", "load", "jit_sec", "codecache_mb", "build_sec", "build_jobs")
+
+  /** The local property that tags jobs started while a query is built. */
+  private val BuildPhase = "graft.bench.build"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Tables.localSession()
@@ -82,18 +90,43 @@ object Bench {
     def loadAvg1m(): Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
 
-    /** (wall, cpu, gc, load, jit, codecache) for one run — seconds,
-      * seconds, seconds, 1-min load at start, JIT-compile seconds in
-      * window, CodeHeap used MB at end; wall/cpu/gc −1 on failure. */
-    def time(name: String): (Double, Double, Double, Double, Double, Double) = {
+    // Build attribution: the seconds spent in the
+    // `SparkEntry.queries(name)` call itself and the Spark jobs started
+    // inside it — eager checkpoints, driver collects and counts. Jobs are
+    // tagged by a local property set around the build and counted by a
+    // listener; the count is read after the listener bus drains.
+    val sc = spark.sparkContext
+    val buildJobs = new java.util.concurrent.atomic.AtomicInteger()
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(BuildPhase) != null)
+          buildJobs.incrementAndGet()
+    })
+    def build(name: String): org.apache.spark.sql.DataFrame = {
+      sc.setLocalProperty(BuildPhase, name)
+      try SparkEntry.queries(name)(spark, sfDir)
+      finally sc.setLocalProperty(BuildPhase, null)
+    }
+
+    /** (wall, cpu, gc, load, jit, codecache, build, build jobs) for one
+      * run — seconds, seconds, seconds, 1-min load at start, JIT-compile
+      * seconds in window, CodeHeap used MB at end, seconds of the wall
+      * spent building the DataFrame, jobs started while building;
+      * wall/cpu/gc/build −1 on failure. */
+    def time(name: String): (Double, Double, Double, Double, Double, Double, Double, Double) = {
       val l0 = loadAvg1m()
       val j0 = jitMillis()
       val g0 = gcMillis()
       val c0 = cpuNanos()
       val t0 = System.nanoTime()
+      var tb = -1.0
+      buildJobs.set(0)
       val ok =
-        try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
+        try {
+          val df = build(name)
+          tb = (System.nanoTime() - t0) / 1e9
+          df.count(); true
+        } catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
       val dc = if (c0 < 0) -1.0 else (cpuNanos() - c0) / 1e9
       val dg = (gcMillis() - g0) / 1e3
@@ -107,7 +140,10 @@ object Bench {
       // (shuffle/broadcast cleanup is GC-triggered), so every timed
       // window starts from a reclaimed heap.
       System.gc()
-      if (ok) (dt, dc, dg, l0, dj, cc) else (-1.0, -1.0, -1.0, l0, dj, cc)
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc)
+      val bj = buildJobs.get.toDouble
+      if (ok) (dt, dc, dg, l0, dj, cc, tb, bj)
+      else (-1.0, -1.0, -1.0, l0, dj, cc, -1.0, bj)
     }
 
     // warmup at the smallest sf (JIT + parquet footer caches)
@@ -130,25 +166,27 @@ object Bench {
     val resultsFull = names.map { name =>
       val a = passA(name)
       val b = time(name)
-      name -> (if (a._1 < 0 || b._1 < 0) (-1.0, -1.0, -1.0, a._4, a._5, a._6)
+      name -> (if (a._1 < 0 || b._1 < 0) (-1.0, -1.0, -1.0, a._4, a._5, a._6, -1.0, b._8)
                else if (a._1 <= b._1) a else b)
     }.sortBy(_._1)
     val results = resultsFull.map { case (k, t) => k -> ((t._1, t._2, t._3)) }
-    // ONE row builder for both 6-element emissions (the stdout
+    // ONE row builder for both 8-element emissions (the stdout
     // BENCH_DETAIL line and the bench_queries.json artifact) — they must
     // stay structurally identical, differing only in value formatting.
-    // Rows are [wall, cpu, gc, load@start, jit_sec, codecache_mb].
-    def rows6(fmt: Double => String): String = resultsFull
-      .map { case (k, (w, c, g, l, j, cc)) =>
-        "\"" + k + "\":[" + Seq(w, c, g, l, j, cc).map(fmt).mkString(",") + "]" }
+    // Rows are [wall, cpu, gc, load@start, jit_sec, codecache_mb,
+    // build_sec, build_jobs] (`DetailCols`).
+    def rows8(fmt: Double => String): String = resultsFull
+      .map { case (k, (w, c, g, l, j, cc, b, bj)) =>
+        "\"" + k + "\":[" + Seq(w, c, g, l, j, cc, b, bj).map(fmt).mkString(",") + "]" }
       .mkString("{", ",", "}")
+    val detailCols = DetailCols.map("\"" + _ + "\"").mkString("[", ",", "]")
     // fixed 6-decimal format on the (non-final) log line — NOT
     // Double.toString, whose scientific notation (1.0E-4) trips naive
     // decimal-regex line parsers and diverges from the r3-formatted
     // artifact rows (ADVICE r15 #4); 6dp loses nothing at seconds/MB scale
     def r6d(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
-    println(s"""BENCH_DETAIL {"queries":${rows6(r6d)},"sf":"$sfDir"}""")
+    println(s"""BENCH_DETAIL {"detail_cols":$detailCols,"queries":${rows8(r6d)},"sf":"$sfDir"}""")
 
     // The driver captures only the last ~2000 chars of output and parses the
     // final JSON line from it. Keep that line comfortably under the window:
@@ -193,15 +231,15 @@ object Bench {
     // Machine-parseable artifact with the FULL per-query table (the
     // stdout line is budgeted to the driver's tail window and may drop
     // fast queries): one JSON object at a stable path in the repo root.
-    // Rows here carry the full 6-element attribution detail
-    // [wall, cpu, gc, load@start, jit_sec, codecache_mb] — the stdout
+    // Rows here carry the full 8-element attribution detail
+    // (`DetailCols`) — the stdout
     // BENCH_DETAIL line is truncated by the driver's 2000-char capture,
     // so this file is the artifact that makes a builder-vs-driver bench
     // disagreement self-diagnosing (r14's q_allpairs_sim breach had no
     // surviving load/JIT columns to attribute it with).
-    val fullRows = rows6(r3)
+    val fullRows = rows8(r3)
     val full =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","cpu_total":${r3(cpuTotal)},"gc_total":${r3(gcTotal)},"cores":$cores,"load_avg":${r3(loadAvg)},"n_queries":${results.size},"detail_cols":["wall","cpu","gc","load","jit_sec","codecache_mb"],"queries":$fullRows,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","cpu_total":${r3(cpuTotal)},"gc_total":${r3(gcTotal)},"cores":$cores,"load_avg":${r3(loadAvg)},"n_queries":${results.size},"detail_cols":$detailCols,"queries":$fullRows,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_queries.json"),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -19,9 +19,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "built-in") // full ctor: the 5-arg one is deprecated
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    // whole-operator planning (TopKPerKey) — sessions built with these
-    // extensions don't need the runtime experimental-strategy injection
+    // whole-operator planning (TopKPerKey) and the shared-subplan marker
+    // — sessions built with these extensions don't need the runtime
+    // experimental-strategy injection
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.SharedStrategy)
     e.injectFunction((FunctionIdentifier("cosine_sim"),
       info("cosine_sim", "cosine_sim(array<double>, array<double>) - cosine similarity"),
       (args: Seq[Expression]) => CosineSim(args(0), args(1))))

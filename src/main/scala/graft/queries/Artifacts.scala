@@ -6,13 +6,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The one owner of materialization in the query layer: every
   * `persist`/`unpersist` under `src/main` lives in this file, and no
   * query leaves an entry in the session's `CacheManager` once its `run`
-  * returns. A query that needs a relation held gets it one of three ways:
+  * returns. A query that needs a relation read more than once gets it one
+  * of four ways:
+  *  - [[shared]]: nothing is materialized while the plan is built; the
+  *    returned plan's branches read one marked subtree, and the action
+  *    computes it once. The rule: a shared subtree runs once per
+  *    execution when it ends in an exchange (an aggregate, a distinct, a
+  *    repartition); otherwise each reader recomputes it. This is the
+  *    default for a subtree that only branches of the returned plan
+  *    read — building such a query starts no Spark job;
   *  - [[scoped]]: persisted for the driver actions of one block (counts,
   *    collects, training passes, a stream run), released at block end;
-  *  - `localCheckpoint()`, called directly: materialized and
-  *    lineage-free, for a returned plan whose branches re-read an
-  *    expensive subtree; the ContextCleaner frees its blocks when the
-  *    plan is garbage-collected, and it never enters `CacheManager`;
+  *  - `localCheckpoint()`, called directly: materialized eagerly and
+  *    lineage-free, which runs a job while the query is built. Each
+  *    remaining site says why in an `// eager:` comment: a driver action
+  *    also reads it, an iterative loop needs its lineage cut, a plan test
+  *    pins it as materialized, or the subtree ends in no exchange its
+  *    readers could share. The ContextCleaner
+  *    frees its blocks when the plan is garbage-collected, and it never
+  *    enters `CacheManager`;
   *  - [[parquet]]: staged once per (context, sfDir) as a parquet artifact
   *    that many queries share (below).
   * The tokenizer trainers' round loops go through [[rounds]].
@@ -43,6 +55,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * non-default root including the failed-derivation sweep there.
   */
 private[queries] object Artifacts {
+
+  /** `df` marked as one subtree that several branches of the returned
+    * plan read (`graft.plans.Shared`): the optimizer does not rewrite
+    * through the mark, so every branch plans the same exchange and the
+    * action runs it once. No job runs here. */
+  def shared(df: DataFrame): DataFrame = graft.plans.Shared(df)
 
   /** `body` over `df` persisted, released when `body` returns or throws.
     * A lazy plan that `body` returns and that reads the relation again
@@ -84,6 +102,7 @@ private[queries] object Artifacts {
       while (more && r <= n) {
         step(r, w) match {
           case Some(next) =>
+            // eager: an iterative loop; each round is cut from its lineage
             val done = next.localCheckpoint()
             release(w)
             w = done
@@ -91,13 +110,19 @@ private[queries] object Artifacts {
         }
         r += 1
       }
+      // eager: the loop's result outlives the persisted seed it may be
       if (w eq seed) seed.localCheckpoint() else w
     } catch { case e: Throwable => release(w); throw e }
     finally { seed.unpersist(); () }
   }
 
-  private val staged = new java.util.concurrent.ConcurrentHashMap[
-    (Long, String), (org.apache.spark.SparkContext, java.nio.file.Path)]()
+  /** A staged artifact: its context, its directory, and the schema it
+    * was written with — a hit reads with that schema, so serving an
+    * artifact runs no parquet footer-inference job. */
+  private case class Staged(sc: org.apache.spark.SparkContext,
+      dir: java.nio.file.Path, schema: org.apache.spark.sql.types.StructType)
+
+  private val staged = new java.util.concurrent.ConcurrentHashMap[(Long, String), Staged]()
   // one monitor PER KEY: a first-time derivation of artifact X must not
   // block an unrelated artifact Y's first request (each derivation is a
   // whole Spark job); double-derivation of the SAME key stays bounded
@@ -107,7 +132,7 @@ private[queries] object Artifacts {
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       staged.forEach((_, v) =>
-        try Channel.deleteRecursively(v._2)
+        try Channel.deleteRecursively(v.dir)
         catch { case _: java.io.IOException => () })))
   }
 
@@ -121,9 +146,9 @@ private[queries] object Artifacts {
     // stopped contexts' keys can never hit again (startTime differs) —
     // sweep their directories so session churn doesn't leak temp trees
     staged.forEach { (k, v) =>
-      if (v._1.isStopped && staged.remove(k, v)) {
+      if (v.sc.isStopped && staged.remove(k, v)) {
         keyLocks.remove(k)
-        try Channel.deleteRecursively(v._2)
+        try Channel.deleteRecursively(v.dir)
         catch { case _: java.io.IOException => () }
       }
     }
@@ -143,11 +168,11 @@ private[queries] object Artifacts {
     // but before a consumer job executes still fails that job — closing
     // it would require eager materialization per call, and the gate's
     // oracle hash-compare keeps any such failure loud, never wrong.
-    def live(v: (org.apache.spark.SparkContext, java.nio.file.Path)): Boolean =
-      java.nio.file.Files.exists(v._2.resolve("_SUCCESS"))
-    def tryRead(v: (org.apache.spark.SparkContext, java.nio.file.Path)): Option[DataFrame] =
+    def live(v: Staged): Boolean =
+      java.nio.file.Files.exists(v.dir.resolve("_SUCCESS"))
+    def tryRead(v: Staged): Option[DataFrame] =
       if (!live(v)) None
-      else try Some(s.read.parquet(v._2.toString))
+      else try Some(s.read.schema(v.schema).parquet(v.dir.toString))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     val hit = staged.get(key)
     val fast = if (hit == null) None else {
@@ -172,8 +197,9 @@ private[queries] object Artifacts {
           catch { case _: java.io.IOException => () }
           throw e
         }
-        staged.put(key, (s.sparkContext, dir))
-        s.read.parquet(dir.toString)
+        val out = s.read.parquet(dir.toString)
+        staged.put(key, Staged(s.sparkContext, dir, out.schema))
+        out
       }
     })
   }

@@ -114,6 +114,8 @@ object CodecOps {
           .select(col("event_id"), col("event_type"), col("value"))
         val ch = reg.create("rt", slice.schema)
         ch.write(slice, writerId = 1)
+        // eager: the channel's temp dir is deleted when the build returns,
+        // so the driver materializes the rows first
         ch.read()
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), Tables.exactSum(col("value")).as("total"))

@@ -183,9 +183,9 @@ object DedupOps {
   private[graft] def refreshVerifiedPairs(histBands: DataFrame,
       newBatch: DataFrame, corpus: DataFrame): DataFrame = {
     // the new batch's bands feed two consumers (the stored-index probe
-    // and the batch self-collision join): checkpoint so the batch is
-    // signed ONCE — batch-scale, the same eager-materialize pattern as
-    // deriveVerifiedPairs
+    // and the batch self-collision join), signed ONCE — batch-scale.
+    // eager: PlanSuite pins the incremental family's new batch as
+    // materialized
     val newBands = bandIndex(Tables.spread(newBatch, col("doc_id")))
       .localCheckpoint()
     val cands = incrementalCandidatePairs(histBands, newBands)
@@ -245,6 +245,8 @@ object DedupOps {
       .union(e.select(col("b").as("node")))
       .union(newDocs.select(col("node")))
       .distinct()
+    // eager: the output of the components loop, whose rounds already ran
+    // as jobs; its consumers would re-embed the loop's lineage
     ConnectedComponents.components(e, miniNodes)
       .select(col("node").as("grp"), col("component").as("merged"))
       .localCheckpoint()
@@ -275,9 +277,9 @@ object DedupOps {
     * q_ngram_jaccard (pair listing) and q_dedup_clusters (grouping).
     * Shape notes live on q_ngram_jaccard below. */
   private def ngramJaccardPairs(s: SparkSession, d: String): DataFrame = {
-    // checkpointed: the per-doc counts and the pair emission each finish
-    // the distinct over the shared exchange otherwise
-    val sh = shingleRel(s, d).localCheckpoint()
+    // shared (see Artifacts): the per-doc counts and the pair emission
+    // read it
+    val sh = Artifacts.shared(shingleRel(s, d))
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // pair generation per shingle GROUP, not a self-join: one shuffle on
     // the shingle key, each group emits its ordered doc pairs in place
@@ -319,6 +321,8 @@ object DedupOps {
       .agg(graft.functions.MinHashSignature.minhashSig(col("s"), 64).as("sig"))
     val cands = MinHash.candidates(
       MinHash.bands(sig, "doc_id", numBands = 16, numHashes = 64), "doc_id")
+    // eager: the driver holds it as a cross-query artifact
+    // (`minhashVerifiedPairs`), so its lineage must be cut
     exactJaccard(sh, cands).filter(col("jaccard") >= 0.8).localCheckpoint()
   }
 
@@ -832,7 +836,9 @@ object DedupOps {
         |SELECT doc_id, cluster FROM lab ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       // pair-scale: sever lineage so the mini graph below reads a
-      // materialized relation, not the whole candidate derivation twice
+      // materialized relation, not the whole candidate derivation twice.
+      // eager: the components loop's driver-side rounds read it, and
+      // PlanSuite pins the incremental family's pairs as materialized
       val newPairs = incrementalVerifiedPairs(s, d)
         .select(col("doc_a"), col("doc_b")).localCheckpoint()
       val newDocs = docs.filter(isNewDoc)
@@ -879,6 +885,8 @@ object DedupOps {
           .join(docs.filter(!isNew).select(col("doc_id"), col("n_chars")), "doc_id")
       }
       val stats = Artifacts.parquet(s, d, "inc_keep_stats") { keeperRows(ledger) }
+      // eager: the components loop's driver-side rounds read it, and
+      // PlanSuite pins the incremental family's pairs as materialized
       val newPairs = incrementalVerifiedPairs(s, d)
         .select(col("doc_a"), col("doc_b")).localCheckpoint()
       val newDocs = docs.filter(isNew).select(col("doc_id").as("node"))
@@ -1123,7 +1131,8 @@ object DedupOps {
         |  TRUE AS sketch_ok
         |FROM p JOIN n na ON p.src_a = na.source JOIN n nb ON p.src_b = nb.source
         |ORDER BY src_a, src_b""".stripMargin) { (s, d) =>
-      // checkpointed (see Artifacts): n and both join legs of the returned plan read it
+      // eager: the driver's bottom-k sketch collect reads it, besides n
+      // and both join legs of the returned plan
       val sh = Tables.spread(Tables.documents(s, d), col("doc_id"))
         .select(col("source"),
           explode(TextFunctions.shingleHashes(col("text"), 3)).as("s"))
@@ -1237,25 +1246,24 @@ object DedupOps {
           array_join(slice(TextFunctions.tokens(col("text")), lit(1),
             greatest(lit(3), expr("size(split(text, ' ')) div 2"))), " ")
             .as("text"))
-      // checkpointed (see Artifacts): the candidate groups and candidate-doc sets read it
-      val sh = base.union(quotes)
+      // shared (see Artifacts): the candidate groups and the candidate-doc
+      // sets read it; without the mark the optimizer pushes the
+      // candidate-doc left_semi below the distinct and the explode, and
+      // the explode runs once per reader
+      val sh = Artifacts.shared(base.union(quotes)
         .select(col("doc_id"),
           explode(TextFunctions.shingleHashes(col("text"), 3)).as("s"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       // rare-shingle candidate pairs, emitted per shingle GROUP in
       // place (the q_ngram_jaccard kernel) — the df gate both caps the
       // fan-out and IS the index: common shingles never group-emit.
-      // Deliberately NOT checkpointed: it is one groupBy over the
-      // checkpointed shingle relation, recomputing it for its two uses
-      // is cheap, and the pair-emission kernel stays visible in the
-      // returned plan (PlanSuite pins ordered_pairs there).
-      val cands = sh.groupBy(col("s"))
+      // Shared: the candidate-doc ids and the verify join read it.
+      val cands = Artifacts.shared(sh.groupBy(col("s"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
         .filter(size(col("ds")).between(2, 10))
         .select(explode(graft.functions.OrderedPairs(col("ds"))).as("p"))
         .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-        .distinct()
+        .distinct())
       // Verify on PER-DOC SHINGLE SETS of CANDIDATE DOCS ONLY (r19,
       // guide §2.3/§2.4/§8 "decide with small rows"): the r18 shape
       // expanded every candidate pair by all of doc_a's shingles and
@@ -1275,10 +1283,9 @@ object DedupOps {
       // size — AQE picks broadcast at bench scale, hash beyond).
       val candDocs = cands.select(col("doc_a").as("doc_id"))
         .union(cands.select(col("doc_b").as("doc_id"))).distinct()
-      val docSets = sh.join(candDocs, Seq("doc_id"), "left_semi")
+      val docSets = Artifacts.shared(sh.join(candDocs, Seq("doc_id"), "left_semi")
         .groupBy(col("doc_id"))
-        .agg(collect_list(col("s")).as("ss"), count(lit(1)).as("n"))
-        .localCheckpoint()
+        .agg(collect_list(col("s")).as("ss"), count(lit(1)).as("n")))
       cands
         .join(docSets.select(col("doc_id").as("doc_a"),
           col("ss").as("sa"), col("n").as("n_a")), "doc_a")
@@ -1346,21 +1353,21 @@ object DedupOps {
         |  JOIN nm nb ON nb.doc_id = dot.doc_b
         |WHERE round(CAST(dot AS DOUBLE) / (na.nrm * nb.nrm), 6) >= 0.5
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-      // checkpointed (see Artifacts): the df counts, candidates and weights read it
-      val sh = Tables.spread(Tables.documents(s, d), col("doc_id"))
+      // shared (see Artifacts): the df counts, candidates and weights read it
+      val sh = Artifacts.shared(Tables.spread(Tables.documents(s, d), col("doc_id"))
         .select(col("doc_id"),
           explode(TextFunctions.shingleHashes(col("text"), 3)).as("s"))
-        .groupBy(col("doc_id"), col("s")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
-      val nDocs = Tables.documents(s, d).count().toDouble
+        .groupBy(col("doc_id"), col("s")).agg(count(lit(1)).as("tf")))
+      // |documents| as a scalar subquery (the oracle's `n`), run by the action
+      val nDocs = Tables.documents(s, d).agg(count(lit(1)).cast("double")).scalar()
       // dfc is vocab-scale — un-hinted (AQE broadcasts at bench scale);
-      // checkpointed: read twice (weights + candidate gate), and the df
+      // shared: read twice (weights + candidate gate), and the df
       // GATE must see the FULL corpus's document frequencies
-      val dfc = sh.groupBy(col("s")).agg(count(lit(1)).as("dfd"))
-        .localCheckpoint()
+      val dfc = Artifacts.shared(sh.groupBy(col("s")).agg(count(lit(1)).as("dfd")))
       // rare-shingle candidates, emitted per shingle group in place
-      // (the q_ngram_jaccard kernel), then pruned to ≥4 shared
-      val cands = sh.join(dfc, "s").filter(col("dfd").between(2, 10))
+      // (the q_ngram_jaccard kernel), then pruned to ≥4 shared; shared:
+      // the candidate-doc ids and the dot-product join read it
+      val cands = Artifacts.shared(sh.join(dfc, "s").filter(col("dfd").between(2, 10))
         .groupBy(col("s"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
         .filter(size(col("ds")) >= 2)
@@ -1368,8 +1375,7 @@ object DedupOps {
         .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
         .agg(count(lit(1)).as("nsh"))
         .filter(col("nsh") >= 4)
-        .select(col("doc_a"), col("doc_b"))
-        .localCheckpoint()
+        .select(col("doc_a"), col("doc_b")))
       // Weights for CANDIDATE DOCS ONLY (r19, guide §3.2/§8 "decide with
       // small rows, then move only what survives"): every downstream use
       // of the weight relation — norms, both dot-product sides — is
@@ -1381,12 +1387,12 @@ object DedupOps {
       // bit-identical to the unfiltered form.
       val candDocs = cands.select(col("doc_a").as("doc_id"))
         .union(cands.select(col("doc_b").as("doc_id"))).distinct()
-      val w = sh.join(candDocs, Seq("doc_id"), "left_semi")
+      // shared: the norms and both dot-product sides read it
+      val w = Artifacts.shared(sh.join(candDocs, Seq("doc_id"), "left_semi")
         .join(dfc, "s")
         .select(col("doc_id"), col("s"),
-          round(col("tf").cast("double") * log(lit(nDocs) / col("dfd")), 6)
-            .cast("decimal(18,6)").as("w"))
-        .localCheckpoint()
+          round(col("tf").cast("double") * log(nDocs / col("dfd")), 6)
+            .cast("decimal(18,6)").as("w")))
       val nm = w.groupBy(col("doc_id"))
         .agg(sqrt(sum(col("w") * col("w")).cast("double")).as("nrm"))
       // cands is candidate-pair-scale (data-dependent) — un-hinted;

@@ -252,7 +252,9 @@ object MultimodalOps {
       }
       // decode + hash the new batch ONCE (it feeds the stored-index probe
       // and the self-collision join) — the q_incremental_dedup newBands
-      // pattern
+      // pattern.
+      // eager: PlanSuite pins the incremental family's new batch as
+      // materialized
       val newChunks = mediaChunks(s, docs.filter(isNew)).localCheckpoint()
       mediaRefreshPairs(hist, newChunks)
         .orderBy(col("media_a"), col("media_b"))

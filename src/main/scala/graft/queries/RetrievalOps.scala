@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{TextFunctions, VectorFunctions}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * codegen before any shuffle, so the aggregated relation is
   * O(docs-containing-a-query-term × |query|), not corpus-token-scale;
   * document-length stats are one map-only pass (no explode, no shuffle)
-  * reduced to a single driver row. RRF fuses bounded top-k lists (the
+  * reduced to a single row. RRF fuses bounded top-k lists (the
   * production shape: rank fusion is defined on retrieved lists, not
   * corpora), so its windows run over ≤k rows.
   */
@@ -66,21 +66,24 @@ object RetrievalOps {
   private def nonEmptyTokens =
     filter(TextFunctions.tokens(col("text")), t => t =!= lit(""))
 
+  /** One term's IDF, with the SAME double ops the oracle's
+    * `ln((n-df+0.5)/(df+0.5)+1)` states — long subtraction, then the
+    * +0.5/divide/+1.0 in doubles, then Math.log — bit-equal results. */
+  private def idfOf(nDocs: Long, df: Long): Double =
+    math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0)
+  private val idfUdf = udf((nDocs: Long, df: Long) => idfOf(nDocs, df))
+  /** Per-term IDF literals from driver-side stats. */
+  private def idfLits(nDocs: Long, df: Map[String, Long]): Map[String, Column] =
+    df.map { case (t, n) => t -> lit(idfOf(nDocs, n)) }
+
   /** Score a `(doc_id, dl, word, tf)` relation to `(doc_id, bm25)` given
-    * the corpus stats and the per-term document frequencies. `df` is a
-    * driver map bounded by |QueryTerms| (each IDF precomputed with the
-    * SAME double ops the oracle's `ln((n-df+0.5)/(df+0.5)+1)` states —
-    * long subtraction, then the +0.5/divide/+1.0 in doubles, then
-    * Math.log — bit-equal results), folded into a codegen'd when-chain:
-    * the tf relation is consumed exactly ONCE, so nothing needs caching
-    * (the previous cache+self-derived-df form left an executor-cache
-    * residue per run and paid a join this shape doesn't). Per-term
-    * contributions round to 6dp and sum as DECIMAL(18,6)
-    * (order-independent exact sum). */
-  private def scoreTf(tf: DataFrame, avgdl: Double, nDocs: Long,
-      df: Map[String, Long]): DataFrame = {
-    val idf = df.map { case (w, n) =>
-      w -> math.log((nDocs - n + 0.5) / (n + 0.5) + 1.0) }
+    * the corpus mean length and each query term's IDF — literals, or
+    * columns of a one-row stats relation joined onto `tf` — folded into a
+    * codegen'd when-chain: the tf relation is consumed exactly ONCE, so
+    * nothing needs caching. Per-term contributions round to 6dp and sum
+    * as DECIMAL(18,6) (order-independent exact sum). */
+  private def scoreTf(tf: DataFrame, avgdl: Column,
+      idf: Map[String, Column]): DataFrame = {
     // terms with df = 0 never appear in tf rows; the fold's lit(0.0)
     // base is unreachable by construction
     val idfCol = QueryTerms.filter(idf.contains).foldLeft(lit(0.0)) {
@@ -136,7 +139,7 @@ object RetrievalOps {
       .map { case (t, i) => t -> srow.getLong(2 + i) }
       .filter(_._2 > 0).toMap
     scoreTf(allTf.filter(col("word").isin(dfMap.keys.toSeq: _*)),
-        avgdl, nDocs, dfMap)
+        lit(avgdl), idfLits(nDocs, dfMap))
       .orderBy(col("bm25").desc, col("doc_id"))
       .limit(20)
   }
@@ -144,41 +147,26 @@ object RetrievalOps {
   /** (doc_id, bm25) for every document containing ≥1 query term. One
     * corpus pass for length stats AND per-term document frequencies
     * (map-only, no explode — `array_contains` flags per query term —
-    * reduced to a single driver row), one for term frequencies (explode
-    * filtered to |QueryTerms| inside codegen). */
+    * reduced to a single row), one for term frequencies (explode
+    * filtered to |QueryTerms| inside codegen). The stats row joins onto
+    * the term frequencies as a one-row broadcast (the oracle's
+    * `CROSS JOIN stats`), so building the plan runs no job. */
   private def bm25Scores(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.spread(Tables.documents(s, d), col("doc_id"))
-    // corpus stats: no explode, no shuffle — reduced to one row
-    // (metadata-scale driver collect, the q_tfidf_top posture). dl > 0
+    // corpus stats: no explode, no shuffle — reduced to one row. dl > 0
     // matches the oracle's `ww`-derived stats: a document with no
     // non-empty token contributes to NEITHER n nor avgdl (its absence
     // would otherwise shift every IDF and length norm on corpora with
     // empty/whitespace-only docs). df per term rides the same pass: a
     // token-less doc contains no query term, so the dl > 0 gate cannot
     // change any df.
-    val dfAggs = QueryTerms.map(t =>
-      sum(when(array_contains(col("tk"), t), 1L).otherwise(0L)).as(s"df_$t"))
-    val statsRow = docs
-      .select(nonEmptyTokens.as("tk"))
-      .select(size(col("tk")).as("dl"), col("tk"))
-      .filter(col("dl") > 0)
-      .agg((sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
-        (count(lit(1)).as("n") +: dfAggs): _*)
-      .head()
-    val avgdl = statsRow.getDouble(0)
-    val nDocs = statsRow.getLong(1)
-    val dfMap = QueryTerms.zipWithIndex
-      .map { case (t, i) => t -> statsRow.getLong(2 + i) }
-      .filter(_._2 > 0).toMap
+    val stats = bm25SnapshotStats(docs)
+      .select(col("avgdl") +: QueryTerms.map(t =>
+        idfUdf(col("n"), col(s"df_$t")).as(s"idf_$t")): _*)
     // dl rides the tf groupBy as a grouping column (functionally dependent
     // on doc_id) — no separate per-doc join
-    scoreTf(docs
-      .select(col("doc_id"), size(nonEmptyTokens).as("dl"),
-        explode(TextFunctions.tokens(col("text"))).as("word"))
-      .filter(col("word").isin(QueryTerms: _*))
-      .groupBy(col("doc_id"), col("dl"), col("word"))
-      .agg(count(lit(1)).as("tf")),
-      avgdl, nDocs, dfMap)
+    scoreTf(bm25QueryTf(docs).crossJoin(broadcast(stats)),
+      col("avgdl"), QueryTerms.map(t => t -> col(s"idf_$t")).toMap)
   }
 
   val all: Seq[Q] = Seq(
@@ -424,7 +412,7 @@ object RetrievalOps {
         // broadcasts it onto the doc-length table
         val top = scoreTf(postings.join(doclens, "doc_id")
             .select(col("doc_id"), col("dl"), col("word"), col("tf")),
-            avgdl, nDocs, dfMap)
+            lit(avgdl), idfLits(nDocs, dfMap))
           .orderBy(col("bm25").desc, col("doc_id")).limit(20)
         // the index tree dies with the temp dir — copy the bounded
         // top-k out as a LOCAL relation

@@ -295,10 +295,9 @@ object TextOps {
   private def knModel(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     // vocab-scale type table feeding FOUR consumers (ctx, left, the type
-    // total, the model join) — lineage-free materialization, not 4
-    // re-aggregations of the corpus-scale artifact scan
-    val c12 = bilmDbc(s, d).groupBy(col("g")).agg(sum(col("n")).as("c12"))
-      .localCheckpoint()
+    // total, the model join) — shared (see Artifacts): one aggregation of
+    // the corpus-scale artifact scan, not 4
+    val c12 = Artifacts.shared(bilmDbc(s, d).groupBy(col("g")).agg(sum(col("n")).as("c12")))
     val ctx = c12.groupBy(split(col("g"), " ").getItem(0).as("w1"))
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1c"))
     val left = c12.groupBy(split(col("g"), " ").getItem(1).as("w2"))
@@ -820,14 +819,14 @@ object TextOps {
         |  round((n*sxy - sx*sy) * (n*sxy - sx*sy)
         |    / ((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) AS r2
         |FROM sums CROSS JOIN v""".stripMargin) { (s, d) =>
-      // checkpointed (see Artifacts): nVocab's count and the returned ranking read it
-      val tf = Tables.documents(s, d)
+      // shared (see Artifacts): the vocabulary count and the ranking read it
+      val tf = Artifacts.shared(Tables.documents(s, d)
         .select(explode(TextFunctions.tokens(col("text"))).as("word"))
         .filter(col("word") =!= "")
-        .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-        .localCheckpoint()
+        .groupBy(col("word")).agg(count(lit(1)).as("freq")))
       locally {
-        val nVocab = tf.count()
+        // |vocabulary| as a scalar subquery (the oracle's `v`), run by the action
+        val nVocab = tf.agg(count(lit(1))).scalar()
         val top = tf.orderBy(col("freq").desc, col("word")).limit(1000)
           .withColumn("rnk", row_number().over(
             Window.orderBy(col("freq").desc, col("word"))))
@@ -843,7 +842,7 @@ object TextOps {
           dsum(round(col("y") * col("y"), 6)).as("syy"))
         val beta = (col("n") * col("sxy") - col("sx") * col("sy")) /
           (col("n") * col("sxx") - col("sx") * col("sx"))
-        sums.select(lit(nVocab).as("n_vocab"), col("n").as("n_fit"),
+        sums.select(nVocab.as("n_vocab"), col("n").as("n_fit"),
           round(beta, 6).as("slope"),
           round((col("sy") - beta * col("sx")) / col("n"), 6).as("intercept"),
           round((col("n") * col("sxy") - col("sx") * col("sy")) *
@@ -875,14 +874,16 @@ object TextOps {
         |    ln(CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) / df), 6) AS tfidf
         |FROM r WHERE rn <= 3 ORDER BY doc_id, word""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
-      val nDocs = docs.count().toDouble // O(1) scalar, parquet row-count only
+      // |documents| as a scalar subquery (the oracle's), run by the action
+      val nDocs = docs.agg(count(lit(1)).cast("double")).scalar()
       val words = docs
         .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("word"))
         .filter(col("word") =!= "")
-      // checkpointed: the df branch prunes the count column, so the two
-      // branches share no exchange and would each re-run the explode
-      val tf = words.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
+      // shared (see Artifacts): unmarked, the df branch prunes the count
+      // column, so the two branches share no exchange and would each
+      // re-run the explode
+      val tf = Artifacts.shared(
+        words.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf")))
       // tf rows are already one-per-(doc,word): df is a plain count over
       // them — no second corpus explode, no COUNT DISTINCT expand
       val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
@@ -891,7 +892,7 @@ object TextOps {
         tf.join(df, "word"), Seq("doc_id"),
         Seq(col("tf").desc, col("df").asc, col("word").asc), k = 3)
       top.select(col("doc_id"), col("word"), col("tf"), col("df"),
-          round(col("tf").cast("double") * log(lit(nDocs) / col("df")), 6).as("tfidf"))
+          round(col("tf").cast("double") * log(nDocs / col("df")), 6).as("tfidf"))
         .orderBy(col("doc_id"), col("word"))
     },
 
@@ -1003,8 +1004,9 @@ object TextOps {
         .select(col("doc_id"), col("text"),
           splitTag.as("split")))
       // benchmark side: distinct (doc, shingle-hash) pairs — metadata-scale
-      // in production. Checkpointed: the bloom-building jobs AND the
-      // returned verify join read it, and it is derived once.
+      // in production.
+      // eager: the driver-side bloom build AND the returned verify join
+      // read it, and it is derived once.
       val te = docs.filter(col("split") === "test")
         .select(col("doc_id"),
           explode(TextFunctions.shingleHashes(col("text"), 13)).as("s"))
@@ -1498,7 +1500,9 @@ object TextOps {
     // batch oracle: a dropped/replayed trigger or any train/serve
     // feature skew shifts the drawn sample and hash-mismatches.
     Q("q_stream_dsir", dsirSql) { (s, d) =>
-      val lam = dsirLambda(s, d).localCheckpoint() // trained once, offline
+      // eager: trained once, offline; every micro-batch's job reads it,
+      // and a lazy model would be retrained per trigger
+      val lam = dsirLambda(s, d).localCheckpoint()
       Staging.ledger(Tables.documents(s, d).select("doc_id", "lang", "text"),
           "doc_id", 3) { (batch, id, out) =>
         Staging.writeBatch(
@@ -1531,6 +1535,8 @@ object TextOps {
       val hist = Artifacts.parquet(s, d, "inc_dsir_db") {
         dsirBuckets(Tables.spread(docs.filter(!isNew), col("doc_id")))
       }
+      // eager: PlanSuite pins the incremental family's new batch as
+      // materialized (zero documents scans in the returned plan)
       val newDb = dsirBuckets(Tables.spread(docs.filter(isNew), col("doc_id")))
         .localCheckpoint()
       val db = hist.union(newDb)
@@ -2335,8 +2341,9 @@ object TextOps {
          |  CAST(SUM(n_tok) AS BIGINT) AS n_tok,
          |  MIN(xent) AS xent_min, MAX(xent) AS xent_max
          |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin) { (s, d) =>
-      // checkpointed: three branches (histogram, count, bucketing) read it
-      val scored = lmScored(s, d).localCheckpoint()
+      // shared (see Artifacts): three branches (histogram, count,
+      // bucketing) read it
+      val scored = Artifacts.shared(lmScored(s, d))
       val h = scored.groupBy(col("xent")).agg(count(lit(1)).as("cnt"))
       val nn = scored.agg(count(lit(1)).as("n"))
       // bounded single-partition window: one histogram row per DISTINCT
@@ -2373,7 +2380,7 @@ object TextOps {
     // themselves (groupBy prefix — never a second corpus pass), the model
     // broadcasts onto the exploded scan (AQE; shuffles only if Σ³
     // outgrows the cap), the per-doc score is one map-side-combinable
-    // aggregate, and |Σ| is a driver scalar over the vocab-scale model.
+    // aggregate, and |Σ| is a one-row aggregate over the vocab-scale model.
     // No shuffle carries corpus text. Determinism: per-trigram costs
     // round to 6dp then sum as DECIMAL (order-independent), the corpus
     // mean is an exact decimal sum of already-rounded doubles — the
@@ -2413,15 +2420,19 @@ object TextOps {
             explode(TextFunctions.charGrams(col("text"), 3)).as("g"))
           .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("n"))
       }
-      // trigram totals: alphabet-bounded (≤|Σ|³, vocab-scale)
-      val c3 = dgc.groupBy(col("g")).agg(sum(col("n")).as("c3"))
+      // trigram totals: alphabet-bounded (≤|Σ|³, vocab-scale); shared
+      // (see Artifacts): the context totals, the alphabet size and the
+      // model join read it
+      val c3 = Artifacts.shared(dgc.groupBy(col("g")).agg(sum(col("n")).as("c3")))
       val c2 = c3.groupBy(substring(col("g"), 1, 2).as("ctx"))
         .agg(sum(col("c3")).as("c2"))
-      val nv = c3.select(substring(col("g"), 3, 1)).distinct().count().toDouble
+      // |Σ| as a one-row broadcast (the oracle's `CROSS JOIN v`)
+      val nv = c3.agg(countDistinct(substring(col("g"), 3, 1)).cast("double").as("nv"))
       val model = c3.join(c2, substring(col("g"), 1, 2) === col("ctx"))
+        .crossJoin(broadcast(nv))
         .select(col("g"),
           round(-log((col("c3").cast("double") + 0.5) /
-            (col("c2").cast("double") + lit(0.5) * nv)), 6).as("cost"))
+            (col("c2").cast("double") + lit(0.5) * col("nv"))), 6).as("cost"))
       // model is vocab-scale — un-hinted (AQE broadcasts at bench scale,
       // degrades to a shuffled join only if |Σ|³ outgrows the cap).
       // n × DECIMAL(cost) is exact, so summing per-GRAM weights equals
@@ -2703,15 +2714,16 @@ object TextOps {
         |FROM h CROSS JOIN m ORDER BY doc_id""".stripMargin) { (s, d) =>
       // the native one-pass kernel (functions/CharEntropy.scala): the
       // per-char terms replicate Spark's own log2/round bit-for-bit, so
-      // this is the HOF chain's exact output at O(n) per row. Checkpointed:
-      // the subtree is map-only, so there is no exchange for the mean and
-      // the flag branches to share, and each would re-run the kernel
+      // this is the HOF chain's exact output at O(n) per row.
       val h = Tables.documents(s, d)
         .select(col("doc_id"),
           graft.functions.CharEntropyMicroBits(col("text")).as("st"))
         .select(col("doc_id"), col("st.n_chars").as("n_chars"),
           col("st.em").as("em"))
         .filter(col("n_chars") > 0)
+        // eager: the subtree is map-only, so there is no exchange for the
+        // mean and the flag branches to share, and each would re-run the
+        // kernel
         .localCheckpoint()
       val m = h.agg(count(lit(1)).as("k"), sum(col("em")).as("tem"))
       h.crossJoin(broadcast(m))
@@ -2813,6 +2825,8 @@ object TextOps {
       val hist = Artifacts.parquet(s, d, "inc_quality_features") {
         qualityFeatures(Tables.spread(docs.filter(!isNew), col("doc_id")))
       }
+      // eager: the driver-side gradient steps and the scorer read it, and
+      // PlanSuite pins the incremental family's new batch as materialized
       val newFeats = qualityFeatures(
         Tables.spread(docs.filter(isNew), col("doc_id"))).localCheckpoint()
       val feats = hist.union(newFeats)

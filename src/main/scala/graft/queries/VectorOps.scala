@@ -74,8 +74,9 @@ object VectorOps {
     // its query returns, so it shared nothing across them (~70
     // combined cpu-s of re-derivation at sf0.1). Every consumer's
     // oracle still states the full derivation, so a stale artifact
-    // hash-mismatches. The derive materializes via localCheckpoint so
-    // the corpus scope can close before the artifact write runs.
+    // hash-mismatches.
+    // eager: the driver's artifact write reads it after the corpus
+    // scope has closed
     Artifacts.parquet(s, d, "sem_components") {
       Artifacts.scoped(embedRel(s, d)) { e =>
         componentsCells(e, quantCentroids(e)).localCheckpoint()
@@ -221,6 +222,8 @@ object VectorOps {
         .as("k"))
       .select((-col("k.nc")).as("cluster"), col("vec_id"),
         col("k.c").as("cent_cos"))
+      // eager: PlanSuite pins the incremental family's absorbed batch as
+      // materialized; the keeper decision reads it twice
       .localCheckpoint()
   }
 
@@ -716,6 +719,8 @@ object VectorOps {
       // scoped (exploded, dims×corpus, held for scd's checkpoint job
       // only); scd is checkpointed (one narrow row per vector — the
       // decision relation a production run materializes anyway).
+      // eager: the scope's one driver action — x is released when the
+      // scope closes, and a lazy scd would re-derive it
       Artifacts.scoped(embedComponents(s, d)
           .select(col("cluster"), col("vec_id"),
             posexplode(col("v")).as(Seq("i", "x")))) { x =>
@@ -790,6 +795,7 @@ object VectorOps {
         // artifact and the clustering so the first snapshot build pays
         // one count + collect
         lazy val histCents = quantCentroids(hist)
+        // eager: the driver's artifact writes read it inside the scope
         lazy val comp = componentsCells(hist, histCents).localCheckpoint()
         def explodeX(c: DataFrame): DataFrame =
           c.select(col("cluster"), col("vec_id"),
@@ -901,8 +907,8 @@ object VectorOps {
         |        round(list_cosine_similarity(v, cv), 6) AS cent_sim
         |      FROM asg)
         |WHERE cent_sim < 0.2 ORDER BY vec_id""".stripMargin) { (s, d) =>
-      // checkpointed: the count, the centroid collect and the returned
-      // plan all read the cast vectors
+      // eager: a driver count, the driver's centroid collect and the
+      // returned plan all read the cast vectors
       val e = embedRel(s, d).localCheckpoint()
       val k = math.max(1L, e.count() / 32L).toInt
       val cents = e.filter(col("vec_id") < k).orderBy(col("vec_id"))
@@ -1686,6 +1692,8 @@ object VectorOps {
       indexRows(embedRel(s, d).filter(!DedupOps.isNewId("vec_id")),
         "vec_id", "v", cent0)
     }
+    // eager: the driver's retraining rounds and the returned plan read
+    // it, and PlanSuite pins the rebuild's batch as materialized
     val newB = embedRel(s, d).filter(DedupOps.isNewId("vec_id"))
       .select(col("vec_id"), col("v")).localCheckpoint()
     val index = histPost.union(indexRows(newB, "vec_id", "v", cent0))
@@ -1723,8 +1731,10 @@ object VectorOps {
       // embeddings NEED more probes than clustered real ones because cell
       // boundaries carry little structure). All 16 distances evaluate
       // in ONE fused pass per vector (NearestCells); the stored side's
-      // home cell is probe_cells[0]. Checkpointed: both join sides below
-      // read it, and NearestCells would otherwise run twice per vector.
+      // home cell is probe_cells[0].
+      // eager: both join sides below read it, the subtree is map-only (no
+      // exchange to share), and NearestCells would otherwise run twice
+      // per vector
       e.withColumn("probe_cells",
           graft.functions.VectorExpressions.nearestCells(col("v"), centroids, 6))
         .withColumn("vn", unitNorm(col("v"))).localCheckpoint()
@@ -1753,7 +1763,7 @@ object VectorOps {
   /** PQ ANN top-10 `(vec_id, sim)` for query vector 0 — the operator
     * behind q_ann_pq; public so recall regression tests probe it. */
   def annPqTopk(s: SparkSession, d: String): DataFrame = {
-    // checkpointed: codebook training, the query-vector fetch, the
+    // eager: driver-side codebook training, the query-vector fetch, the
     // count and the returned plan all read the cast vectors
     val e = embedRel(s, d).localCheckpoint()
     val cb = graft.functions.ProductQuantizer.train(e, "v", "vec_id", m = 16)

@@ -86,12 +86,42 @@ class ChannelStressSuite extends SparkSpec {
         } catch { case t: Throwable => failures.add(t) }
       }, s"stress-reader-$r")
     }
-    (writers ++ readers).foreach(_.start())
+    // Strict-end readers: a strict end promises that every seq below it is
+    // resolved — committed (`_SUCCESS`), tombstoned or compacted — and
+    // resolution is permanent (nothing is evicted or pruned here), so a
+    // listing taken AFTER the end was read must show every seq below it
+    // resolved. Checked for the full-listing end and the published head.
+    val strictChecks = new java.util.concurrent.atomic.AtomicInteger()
+    val strictReaders = (0 until 2).map { r =>
+      new Thread(() => {
+        try {
+          start.await()
+          while (!stop.get()) {
+            val ends = ("listing" -> TopicListing.of(dir).committedEnds._1) +:
+              Channel.readHead(dir).map(h => "published head" -> h._1).toSeq
+            val after = TopicListing.of(dir)
+            val committed = after.dirs.filterNot(_.compact).groupBy(_.seq)
+              .collect { case (s, ds) if ds.forall(_.committed) => s }.toSet
+            def resolved(s: Long): Boolean =
+              committed(s) || after.aborts(s) || after.compactSeqs.exists(_ > s)
+            ends.foreach { case (src, end) =>
+              val open = (0L until end).filterNot(resolved)
+              assert(open.isEmpty,
+                s"$src strict end $end passes unresolved seqs ${open.take(5)}")
+            }
+            strictChecks.incrementAndGet()
+          }
+        } catch { case t: Throwable => failures.add(t) }
+      }, s"stress-strict-reader-$r")
+    }
+    (writers ++ readers ++ strictReaders).foreach(_.start())
     start.countDown()
     writers.foreach(_.join(120000))
     stop.set(true)
-    readers.foreach(_.join(10000))
+    (readers ++ strictReaders).foreach(_.join(10000))
     assert(failures.isEmpty, s"stress failures: ${failures.asScala.toList}")
+    assert(strictChecks.get > 0, "the strict-end readers checked nothing")
+    info(s"strict-end checks: ${strictChecks.get}")
 
     // Core invariant: every claimed seq is GLOBALLY unique — two writers
     // (or a writer and its own abort path) never share one.

@@ -21,6 +21,10 @@ class MaterializationSuite extends SparkSpec {
 
   private def cacheManager = spark.sharedState.cacheManager
 
+  /** `localCheckpoint(` call sites under `src/main`: 36 before the
+    * shared-subplan marker, this many after. */
+  private val MaxEagerSites = 25
+
   test("persist, cache and unpersist appear in src/main only in Artifacts") {
     val root = Paths.get("src/main/scala")
     val site = """\.persist\(|\.cache\(\)|unpersist\(""".r
@@ -50,6 +54,53 @@ class MaterializationSuite extends SparkSpec {
       !cacheManager.isEmpty
     }
     assert(leaked.isEmpty, s"builds left CacheManager entries: $leaked")
+  }
+
+  // perfbench's batch gate (perfbench `Gate.BatchQueries`) and the jobs a
+  // warm build of each may start: none, except the tokenizer trainer,
+  // whose merge rounds are data-dependent and run as jobs by design
+  private val gateBuildJobs = Seq(
+    "q_containment_dedup" -> 0, "q_char_lm_perplexity" -> 0, "q_skew_join" -> 0,
+    "q6_forecast_revenue" -> 0, "q_unigram_tokenizer" -> 13, "q_pii_redact" -> 0,
+    "q_embed_knn" -> 0, "q_bm25" -> 0, "q_media_dedup" -> 0,
+    "q_codec_roundtrip" -> 0, "q_wasm_map" -> 0)
+
+  test("a warm build of a gate query starts no job; the tokenizer's are capped") {
+    val sf001 = Paths.get(sys.props("user.home"), "testdata", "sf0.01").toString
+    val over = gateBuildJobs.flatMap { case (n, cap) =>
+      SparkEntry.queries(n)(spark, sf001).collect() // warm: artifacts, schemas
+      val (_, jobs) = jobsDuring(SparkEntry.queries(n)(spark, sf001))
+      if (jobs > cap) Some(s"$n: $jobs > $cap") else None
+    }
+    assert(over.isEmpty, s"builds over their job ceiling: $over")
+  }
+
+  test("localCheckpoint( sites under src/main do not grow, and each says why it is eager") {
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    // a site is a code line calling it; its reason is an `// eager: …`
+    // comment (a driver action reads it, an iterative loop, a plan test
+    // pins it, or no exchange the readers could share)
+    // on that line or within the 8 lines above it
+    val reason = """// eager: \S""".r
+    val sites = sources.flatMap { p =>
+      val lines = Files.readAllLines(p).asScala.toIndexedSeq
+      lines.indices.collect {
+        case i if lines(i).contains("localCheckpoint(") &&
+            !lines(i).trim.startsWith("*") && !lines(i).trim.startsWith("//") =>
+          val why = lines.slice(math.max(0, i - 8), i + 1)
+            .exists(l => reason.findFirstIn(l).isDefined)
+          (s"${root.relativize(p)}:${i + 1}", why)
+      }
+    }
+    assert(sites.size <= MaxEagerSites,
+      s"${sites.size} localCheckpoint( sites (at most $MaxEagerSites): " +
+      "mark a subtree several branches read with Artifacts.shared instead")
+    val unexplained = sites.filterNot(_._2).map(_._1)
+    assert(unexplained.isEmpty, s"eager sites without an `// eager:` reason: $unexplained")
   }
 
   test("scoped releases its relation when the body returns and when it throws") {

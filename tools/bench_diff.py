@@ -3,6 +3,9 @@
 
 Usage: bench_diff.py BEFORE.json AFTER.json [N]
 Prints totals and the N biggest wall deltas both ways (default 20).
+When both artifacts carry the build columns (`build_sec`, `build_jobs`
+in `detail_cols`), also prints build totals (seconds, jobs, queries that
+start a job while building) and the N largest build-job deltas.
 """
 import json
 import sys
@@ -15,6 +18,38 @@ def load(p):
 
 def pct(new, old):
     return f"({(new - old) / old * 100:+.1f}%)" if old else "(n/a)"
+
+
+def col_index(art, name):
+    cols = art.get("detail_cols", [])
+    return cols.index(name) if name in cols else None
+
+
+def build_section(a, b, common, n):
+    ia, ib = col_index(a, "build_sec"), col_index(b, "build_sec")
+    ja, jb = col_index(a, "build_jobs"), col_index(b, "build_jobs")
+    if None in (ia, ib, ja, jb):
+        return
+    qa, qb = a["queries"], b["queries"]
+
+    def total(q, i, keys):
+        return sum(q[k][i] for k in keys if q[k][i] >= 0)
+
+    sa, sb = total(qa, ia, common), total(qb, ib, common)
+    na, nb = total(qa, ja, common), total(qb, jb, common)
+    ka = sum(1 for k in common if qa[k][ja] > 0)
+    kb = sum(1 for k in common if qb[k][jb] > 0)
+    print(f"\nbuild s:    {sa:8.1f} -> {sb:8.1f}  {pct(sb, sa)}")
+    print(f"build jobs: {na:8.0f} -> {nb:8.0f}  {pct(nb, na)}")
+    print(f"queries with build jobs: {ka} -> {kb}")
+    moved = [k for k in common if qa[k][ja] != qb[k][jb]]
+    moved.sort(key=lambda k: (qb[k][jb] - qa[k][ja], k))
+    if not moved:
+        return
+    print(f"\n{'query':34s} {'build jobs':>11s} {'build s':>13s}")
+    for k in moved[:n] + [k for k in moved[-n:] if k not in moved[:n]]:
+        print(f"{k:34s} {qa[k][ja]:4.0f}->{qb[k][jb]:<4.0f} "
+              f"{qa[k][ia]:5.2f}->{qb[k][ib]:5.2f}")
 
 
 def main():
@@ -49,6 +84,7 @@ def main():
         print("  ...")
         for k in deltas[-n:]:
             row(k)
+    build_section(a, b, common, n)
 
 
 if __name__ == "__main__":
