@@ -34,17 +34,17 @@ object ConnectedComponents {
     * reachable from `node` (isolated nodes map to themselves). Node ids
     * must be non-null and orderable (use longs). */
   def components(edges: DataFrame, nodes: DataFrame, maxIter: Int = 25): DataFrame = {
-    // eager: an iterative loop — each round reads the last one and the
-    // round count depends on the data, so lineage is cut per round.
-    // LAZY localCheckpoint: the signature aggregate right after is the
-    // materializing action, so each round costs ONE job (checkpoint write
-    // + convergence probe fused) instead of two.
+    // eager: (lazy checkpoint) an iterative loop — each round reads the
+    // last one and the round count depends on the data, so lineage is cut
+    // per round. The checkpoint is LAZY: the signature aggregate right
+    // after is the materializing action, so each round costs ONE job
+    // (checkpoint write + convergence probe fused) instead of two.
     var e = canon(edges).localCheckpoint(false)
     var prev = signature(e)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      // eager: one loop round, cut from its lineage
+      // eager: (lazy checkpoint) one loop round, cut from its lineage
       val next = canon(smallStar(largeStar(e))).localCheckpoint(false)
       val cur = signature(next)
       converged = cur == prev

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
@@ -31,17 +31,8 @@ object Shared {
 
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    inject(spark)
+    inject(spark, SharedStrategy)
     GraftSqlBridge.ofRows(spark, SharedNode(GraftSqlBridge.planOf(df)))
-  }
-
-  /** Runtime strategy injection: works on any session (the driver's
-    * vanilla smoke session included); sessions built with
-    * [[graft.GraftExtensions]] already have it. Idempotent. */
-  private def inject(spark: SparkSession): Unit = spark.synchronized {
-    if (!spark.experimental.extraStrategies.contains(SharedStrategy))
-      spark.experimental.extraStrategies =
-        SharedStrategy +: spark.experimental.extraStrategies
   }
 }
 

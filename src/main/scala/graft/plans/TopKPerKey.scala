@@ -38,11 +38,7 @@ object TopKPerKey {
   def apply(df: DataFrame, keys: Seq[String], orderBy: Seq[Column], k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
-    // runtime strategy injection: works on any session (the driver's
-    // vanilla smoke session included) — idempotent
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        TopKStrategy +: spark.experimental.extraStrategies
+    inject(spark, TopKStrategy)
     val child = GraftSqlBridge.planOf(df)
     val keyExprs = keys.map(n => GraftSqlBridge.toEagerExpression(df(n)))
     val order = orderBy.map(GraftSqlBridge.toEagerExpression(_) match {

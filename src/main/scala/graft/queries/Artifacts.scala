@@ -21,10 +21,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    lineage-free, which runs a job while the query is built. Each
   *    remaining site says why in an `// eager:` comment: a driver action
   *    also reads it, an iterative loop needs its lineage cut, a plan test
-  *    pins it as materialized, or the subtree ends in no exchange its
-  *    readers could share. The ContextCleaner
-  *    frees its blocks when the plan is garbage-collected, and it never
-  *    enters `CacheManager`;
+  *    pins it as materialized, the subtree ends in no exchange its
+  *    readers could share, or the lazy form measured slower under
+  *    `graft.Bench`. The ContextCleaner frees its blocks when the plan
+  *    is garbage-collected, and it never enters `CacheManager`;
   *  - [[parquet]]: staged once per (context, sfDir) as a parquet artifact
   *    that many queries share (below).
   * The tokenizer trainers' round loops go through [[rounds]].

@@ -1353,21 +1353,25 @@ object DedupOps {
         |  JOIN nm nb ON nb.doc_id = dot.doc_b
         |WHERE round(CAST(dot AS DOUBLE) / (na.nrm * nb.nrm), 6) >= 0.5
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-      // shared (see Artifacts): the df counts, candidates and weights read it
-      val sh = Artifacts.shared(Tables.spread(Tables.documents(s, d), col("doc_id"))
+      // eager: the lazy form lost wall under graft.Bench (947 -> 1 635 ms,
+      // sf0.01, 4 cores): the weights end in a join, and their three
+      // readers repartition them three ways, so each would recompute
+      // them. `sh` is read by the df counts, candidates and weights.
+      val sh = Tables.spread(Tables.documents(s, d), col("doc_id"))
         .select(col("doc_id"),
           explode(TextFunctions.shingleHashes(col("text"), 3)).as("s"))
-        .groupBy(col("doc_id"), col("s")).agg(count(lit(1)).as("tf")))
-      // |documents| as a scalar subquery (the oracle's `n`), run by the action
-      val nDocs = Tables.documents(s, d).agg(count(lit(1)).cast("double")).scalar()
-      // dfc is vocab-scale — un-hinted (AQE broadcasts at bench scale);
-      // shared: read twice (weights + candidate gate), and the df
-      // GATE must see the FULL corpus's document frequencies
-      val dfc = Artifacts.shared(sh.groupBy(col("s")).agg(count(lit(1)).as("dfd")))
+        .groupBy(col("doc_id"), col("s")).agg(count(lit(1)).as("tf"))
+        .localCheckpoint()
+      val nDocs = Tables.documents(s, d).count().toDouble
+      // dfc is vocab-scale — un-hinted (AQE broadcasts at bench scale).
+      // eager: see `sh`; read twice (weights + candidate gate), and the
+      // df GATE must see the FULL corpus's document frequencies
+      val dfc = sh.groupBy(col("s")).agg(count(lit(1)).as("dfd"))
+        .localCheckpoint()
       // rare-shingle candidates, emitted per shingle group in place
-      // (the q_ngram_jaccard kernel), then pruned to ≥4 shared; shared:
-      // the candidate-doc ids and the dot-product join read it
-      val cands = Artifacts.shared(sh.join(dfc, "s").filter(col("dfd").between(2, 10))
+      // (the q_ngram_jaccard kernel), then pruned to ≥4 shared; the
+      // candidate-doc ids and the dot-product join read it
+      val cands = sh.join(dfc, "s").filter(col("dfd").between(2, 10))
         .groupBy(col("s"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
         .filter(size(col("ds")) >= 2)
@@ -1375,7 +1379,9 @@ object DedupOps {
         .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
         .agg(count(lit(1)).as("nsh"))
         .filter(col("nsh") >= 4)
-        .select(col("doc_a"), col("doc_b")))
+        .select(col("doc_a"), col("doc_b"))
+        // eager: see `sh`
+        .localCheckpoint()
       // Weights for CANDIDATE DOCS ONLY (r19, guide §3.2/§8 "decide with
       // small rows, then move only what survives"): every downstream use
       // of the weight relation — norms, both dot-product sides — is
@@ -1387,12 +1393,13 @@ object DedupOps {
       // bit-identical to the unfiltered form.
       val candDocs = cands.select(col("doc_a").as("doc_id"))
         .union(cands.select(col("doc_b").as("doc_id"))).distinct()
-      // shared: the norms and both dot-product sides read it
-      val w = Artifacts.shared(sh.join(candDocs, Seq("doc_id"), "left_semi")
+      // eager: see `sh`; the norms and both dot-product sides read it
+      val w = sh.join(candDocs, Seq("doc_id"), "left_semi")
         .join(dfc, "s")
         .select(col("doc_id"), col("s"),
-          round(col("tf").cast("double") * log(nDocs / col("dfd")), 6)
-            .cast("decimal(18,6)").as("w")))
+          round(col("tf").cast("double") * log(lit(nDocs) / col("dfd")), 6)
+            .cast("decimal(18,6)").as("w"))
+        .localCheckpoint()
       val nm = w.groupBy(col("doc_id"))
         .agg(sqrt(sum(col("w") * col("w")).cast("double")).as("nrm"))
       // cands is candidate-pair-scale (data-dependent) — un-hinted;

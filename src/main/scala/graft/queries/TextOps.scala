@@ -2341,9 +2341,12 @@ object TextOps {
          |  CAST(SUM(n_tok) AS BIGINT) AS n_tok,
          |  MIN(xent) AS xent_min, MAX(xent) AS xent_max
          |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin) { (s, d) =>
-      // shared (see Artifacts): three branches (histogram, count,
-      // bucketing) read it
-      val scored = Artifacts.shared(lmScored(s, d))
+      // eager: the lazy form loses wall under graft.Bench (542 -> 655 ms
+      // median over 10 runs at sf0.01, 4 cores): the thresholds wait on
+      // the histogram and the count, and the bucketing re-reads the
+      // scores after them. Three branches (histogram, count, bucketing)
+      // read it.
+      val scored = lmScored(s, d).localCheckpoint()
       val h = scored.groupBy(col("xent")).agg(count(lit(1)).as("cnt"))
       val nn = scored.agg(count(lit(1)).as("n"))
       // bounded single-partition window: one histogram row per DISTINCT
@@ -2426,13 +2429,12 @@ object TextOps {
       val c3 = Artifacts.shared(dgc.groupBy(col("g")).agg(sum(col("n")).as("c3")))
       val c2 = c3.groupBy(substring(col("g"), 1, 2).as("ctx"))
         .agg(sum(col("c3")).as("c2"))
-      // |Σ| as a one-row broadcast (the oracle's `CROSS JOIN v`)
-      val nv = c3.agg(countDistinct(substring(col("g"), 3, 1)).cast("double").as("nv"))
+      // |Σ| as a scalar subquery (the oracle's `v`), run by the action
+      val nv = c3.agg(countDistinct(substring(col("g"), 3, 1)).cast("double")).scalar()
       val model = c3.join(c2, substring(col("g"), 1, 2) === col("ctx"))
-        .crossJoin(broadcast(nv))
         .select(col("g"),
           round(-log((col("c3").cast("double") + 0.5) /
-            (col("c2").cast("double") + lit(0.5) * col("nv"))), 6).as("cost"))
+            (col("c2").cast("double") + lit(0.5) * nv)), 6).as("cost"))
       // model is vocab-scale — un-hinted (AQE broadcasts at bench scale,
       // degrades to a shuffled join only if |Σ|³ outgrows the cap).
       // n × DECIMAL(cost) is exact, so summing per-GRAM weights equals

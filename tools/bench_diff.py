@@ -6,14 +6,72 @@ Prints totals and the N biggest wall deltas both ways (default 20).
 When both artifacts carry the build columns (`build_sec`, `build_jobs`
 in `detail_cols`), also prints build totals (seconds, jobs, queries that
 start a job while building) and the N largest build-job deltas.
+
+BEFORE and AFTER may each name several artifacts of repeated runs,
+joined with commas (`b1.json,b2.json,...`). Every per-query value is
+then the median over the runs that side has, and a per-query table
+follows: wall median and quartiles of BEFORE, wall median of AFTER
+(flagged `ABOVE` when it exceeds BEFORE's upper quartile), cpu medians.
 """
 import json
+import statistics
 import sys
 
 
-def load(p):
+def load_one(p):
     with open(p) as f:
         return json.load(f)
+
+
+def quartiles(xs):
+    """(q1, median, q3) by linear interpolation (numpy's default)."""
+    xs = sorted(xs)
+
+    def at(f):
+        i = f * (len(xs) - 1)
+        lo = int(i)
+        hi = min(lo + 1, len(xs) - 1)
+        return xs[lo] + (xs[hi] - xs[lo]) * (i - lo)
+    return at(0.25), at(0.5), at(0.75)
+
+
+def load(arg):
+    """One artifact, or the per-query medians of several (see usage);
+    the raw runs ride along under `runs`."""
+    arts = [load_one(p) for p in arg.split(",")]
+    if len(arts) == 1:
+        return dict(arts[0], runs=arts)
+    names = set.intersection(*(set(a["queries"]) for a in arts))
+    width = min(len(a["queries"][k]) for a in arts for k in names)
+    queries = {}
+    for k in names:
+        rows = [a["queries"][k] for a in arts]
+        if any(r[0] < 0 for r in rows):
+            queries[k] = [-1.0] * width
+        else:
+            queries[k] = [statistics.median(r[i] for r in rows)
+                          for i in range(width)]
+    return dict(arts[0], queries=queries, runs=arts,
+                load_avg=statistics.median(a.get("load_avg", 0) for a in arts))
+
+
+def spread_section(a, b, common):
+    if len(a["runs"]) < 2:
+        return
+    print(f"\nper query over {len(a['runs'])} -> {len(b['runs'])} runs "
+          "(wall ms: before median [q1, q3] -> after median; cpu s medians)")
+    for k in common:
+        wa = [r["queries"][k][0] for r in a["runs"] if r["queries"][k][0] >= 0]
+        wb = [r["queries"][k][0] for r in b["runs"] if r["queries"][k][0] >= 0]
+        if not wa or not wb:
+            print(f"{k:34s} failed in some run")
+            continue
+        q1, med, q3 = quartiles(wa)
+        mb = statistics.median(wb)
+        flag = "  ABOVE" if mb > q3 else ""
+        print(f"{k:34s} {med * 1e3:6.0f} [{q1 * 1e3:5.0f}, {q3 * 1e3:5.0f}]"
+              f" -> {mb * 1e3:6.0f} {pct(mb, med):>9s}   "
+              f"cpu {a['queries'][k][1]:5.2f} -> {b['queries'][k][1]:5.2f}{flag}")
 
 
 def pct(new, old):
@@ -85,6 +143,7 @@ def main():
         for k in deltas[-n:]:
             row(k)
     build_section(a, b, common, n)
+    spread_section(a, b, common)
 
 
 if __name__ == "__main__":
