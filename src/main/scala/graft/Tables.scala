@@ -163,8 +163,4 @@ object Tables {
     * 1.7e18 epoch-nanos. */
   def tsDay(tsCol: String): Column =
     expr(s"date_format(timestamp_micros($tsCol div 1000), 'yyyy-MM-dd')")
-
-  /** `ts` nanos → 'yyyy-MM-dd HH' hour string in UTC. */
-  def tsHour(tsCol: String): Column =
-    expr(s"date_format(timestamp_micros($tsCol div 1000), 'yyyy-MM-dd HH')")
 }

@@ -9,12 +9,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expressions for the vector hot path. The higher-order
   * `zip_with`/`aggregate` forms evaluate an interpreted lambda per array
-  * element (~dim × 3 closures per row); these expressions generate a tight
-  * primitive loop INSIDE WholeStageCodegen, reading `ArrayData` elements
-  * in place — no per-pair array materialization. (The first cut used
-  * CodegenFallback + toDoubleArray; at 4M candidate pairs that copied two
-  * 64-double arrays per pair and dominated the ANN queries.) Measured ~8×
-  * on the kNN join for the eval form; codegen removes the remaining copy.
+  * element (~dim × 3 closures per row); each expression here is one Scala
+  * kernel that reads the `ArrayData` elements in place — no per-pair
+  * array copy (a first cut copied both sides with `toDoubleArray`, and at
+  * 4M candidate pairs the copies dominated the ANN queries). Eval calls
+  * the kernel directly; generated code calls the same kernel through a
+  * reference object, so the enclosing WholeStageCodegen stage stays fused
+  * and both paths give bit-identical results.
   */
 abstract class VectorBinaryExpression extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -31,86 +32,54 @@ abstract class VectorBinaryExpression extends BinaryExpression {
         s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
   }
 
-  protected def compute(x: Array[Double], y: Array[Double]): Double
+  /** Public for the generated code path (called through a reference obj).
+    * Accumulates left to right, so the result equals a left fold. */
+  def kernel(a: ArrayData, b: ArrayData): Double
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData].toDoubleArray()
-    val y = b.asInstanceOf[ArrayData].toDoubleArray()
-    require(x.length == y.length,
-      s"vector length mismatch: ${x.length} vs ${y.length}")
-    compute(x, y)
+  override def nullSafeEval(a: Any, b: Any): Any =
+    kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.kernel($a, $b);")
   }
 
-  /** Java loop body: given ArrayData vars `a`/`b` and length `n`, assign
-    * the result to `out`. Element access must use `.getDouble(i)`. */
-  protected def loopCode(a: String, b: String, n: String, out: String,
-                         ctx: CodegenContext): String
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "vector length mismatch: " + $n + " vs " + $b.numElements());
-         |}
-         |${loopCode(a, b, n, ev.value, ctx)}
-       """.stripMargin
-    })
+  /** The common length of `a` and `b`; throws when they differ. */
+  protected final def length(a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements()
+    if (n != b.numElements()) throw new IllegalArgumentException(
+      s"vector length mismatch: $n vs ${b.numElements()}")
+    n
+  }
 }
 
 /** Sequential-order dot product (bit-parity with a left fold). */
 case class DotProduct(left: Expression, right: Expression)
     extends VectorBinaryExpression {
-  override protected def compute(x: Array[Double], y: Array[Double]): Double = {
+  override def kernel(a: ArrayData, b: ArrayData): Double = {
+    val n = length(a, b)
     var dot = 0.0
     var i = 0
-    while (i < x.length) { dot += x(i) * y(i); i += 1 }
+    while (i < n) { dot += a.getDouble(i) * b.getDouble(i); i += 1 }
     dot
-  }
-  override protected def loopCode(a: String, b: String, n: String, out: String,
-                                  ctx: CodegenContext): String = {
-    val i = ctx.freshName("i")
-    val acc = ctx.freshName("dot")
-    s"""
-       |double $acc = 0.0;
-       |for (int $i = 0; $i < $n; $i++) {
-       |  $acc += $a.getDouble($i) * $b.getDouble($i);
-       |}
-       |$out = $acc;
-     """.stripMargin
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
 }
 
 /** Cosine similarity: dot / (‖x‖·‖y‖), all three accumulations
-  * left-to-right (same result as the HOF formulation it replaces). */
+  * left-to-right. */
 case class CosineSim(left: Expression, right: Expression)
     extends VectorBinaryExpression {
-  override protected def compute(x: Array[Double], y: Array[Double]): Double = {
+  override def kernel(a: ArrayData, b: ArrayData): Double = {
+    val n = length(a, b)
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
-    while (i < x.length) {
-      dot += x(i) * y(i); na += x(i) * x(i); nb += y(i) * y(i); i += 1
+    while (i < n) {
+      val x = a.getDouble(i); val y = b.getDouble(i)
+      dot += x * y; na += x * x; nb += y * y; i += 1
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-  override protected def loopCode(a: String, b: String, n: String, out: String,
-                                  ctx: CodegenContext): String = {
-    val i = ctx.freshName("i")
-    val (dot, na, nb) = (ctx.freshName("dot"), ctx.freshName("na"), ctx.freshName("nb"))
-    val (x, y) = (ctx.freshName("x"), ctx.freshName("y"))
-    s"""
-       |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-       |for (int $i = 0; $i < $n; $i++) {
-       |  final double $x = $a.getDouble($i);
-       |  final double $y = $b.getDouble($i);
-       |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-       |}
-       |$out = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-     """.stripMargin
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
@@ -119,25 +88,12 @@ case class CosineSim(left: Expression, right: Expression)
 /** Squared Euclidean distance (IVF assignment metric). */
 case class SqDist(left: Expression, right: Expression)
     extends VectorBinaryExpression {
-  override protected def compute(x: Array[Double], y: Array[Double]): Double = {
+  override def kernel(a: ArrayData, b: ArrayData): Double = {
+    val n = length(a, b)
     var acc = 0.0
     var i = 0
-    while (i < x.length) { val d = x(i) - y(i); acc += d * d; i += 1 }
+    while (i < n) { val d = a.getDouble(i) - b.getDouble(i); acc += d * d; i += 1 }
     acc
-  }
-  override protected def loopCode(a: String, b: String, n: String, out: String,
-                                  ctx: CodegenContext): String = {
-    val i = ctx.freshName("i")
-    val acc = ctx.freshName("acc")
-    val d = ctx.freshName("d")
-    s"""
-       |double $acc = 0.0;
-       |for (int $i = 0; $i < $n; $i++) {
-       |  final double $d = $a.getDouble($i) - $b.getDouble($i);
-       |  $acc += $d * $d;
-       |}
-       |$out = $acc;
-     """.stripMargin
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
@@ -152,11 +108,10 @@ case class SqDist(left: Expression, right: Expression)
   * dim × totalPlanes fused multiply-adds; the plane matrix rides along as
   * a plain constructor value, not a literal subtree.
   *
-  * Real `doGenCode` (round 7): the kernel is one virtual call per input
-  * row, but a CodegenFallback here split the banding stage's
-  * scan->project->posexplode span out of WholeStageCodegen (same
-  * rationale as `WordShingleHashes`); the generated code calls the
-  * kernel through a reference object, keeping the stage fused.
+  * The generated code calls the kernel through a reference object: one
+  * virtual call per input row, and the banding stage's
+  * scan->project->posexplode span stays fused (a CodegenFallback would
+  * split it out of WholeStageCodegen, as for `WordShingleHashes`).
   */
 case class SignLshBuckets(child: Expression,
                           planes: IndexedSeq[IndexedSeq[Double]],

@@ -3,9 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Embedding-vector primitives over `array<double>` columns, composed from
-  * codegen'd higher-order functions (zip_with / aggregate) — no UDFs, so
-  * the dot products stay inside WholeStageCodegen.
+/** Embedding-vector primitives over `array<double>` columns, backed by
+  * the native expressions of [[VectorExpressions]] (one Scala kernel each,
+  * which generated code calls in place) — no UDFs, so the enclosing
+  * stages stay inside WholeStageCodegen.
   *
   * Scale path: brute-force cosine is the correctness baseline; ANN via
   * sign-random-projection LSH (`SignLsh`) buckets vectors so the
@@ -13,8 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  /** Sequential dot product — native expression ([[VectorExpressions]]);
-    * same accumulation order as a left fold over zip_with. */
+  /** Sequential dot product — same accumulation order as a left fold. */
   def dot(a: Column, b: Column): Column = VectorExpressions.dot(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -23,13 +23,6 @@ object VectorFunctions {
 
   /** Euclidean distance (squared), for IVF-style assignment. */
   def sqDist(a: Column, b: Column): Column = VectorExpressions.sqDist(a, b)
-
-  /** The HOF formulations, kept for plans that must stay pure-builtin
-    * (e.g. when shipping SQL text instead of a library call). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / (sqrt(dotHof(a, a)) * sqrt(dotHof(b, b)))
 }
 
 /** Coarse-quantizer training for IVF: one Lloyd (k-means) step refines a

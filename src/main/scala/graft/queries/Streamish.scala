@@ -464,14 +464,14 @@ object Streamish {
     Q("q_stream_dedup",
       """SELECT DISTINCT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day
         |FROM events ORDER BY user_id, day""".stripMargin) { (s, d) =>
+      import graft.streaming.StreamingDedup
       // one staged file → one trigger: nothing arrives behind the watermark
       Staging.replay(Tables.events(s, d).select(col("user_id"), col("ts")),
         Seq(col("ts")), 1) { src =>
-        Staging.view(src
+        val keyed = src
           .withColumn("ets", expr("timestamp_micros(ts div 1000)"))
           .withColumn("day", Tables.tsDay("ts"))
-          .withWatermark("ets", "1 hour")
-          .dropDuplicatesWithinWatermark(Seq("user_id", "day"))
+        Staging.view(StreamingDedup.dedup(keyed, "ets", "1 hour", "user_id", "day")
           .select(col("user_id"), col("day")))(
           _.orderBy(col("user_id"), col("day")))
       }

